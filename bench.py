@@ -129,9 +129,10 @@ def _cpu_scaling_probe(spark, timings: dict) -> None:
     nothing demonstrated parallel speedup. This row is JVM-CPU-bound by
     construction: MinHash signatures (the real dedup kernel —
     doc_shingles + minhash_signatures, md5 per (perm, shingle)) over
-    200k synthetic 40-token docs on 64 input partitions. ~120M md5
-    evaluations of embarrassingly parallel whole-stage-codegen work,
-    one map-side-combining aggregation, no heavy shuffle — wall should
+    N = 250k synthetic 16-token docs on 64 input partitions, 16
+    permutations each: md5 evaluations of embarrassingly parallel
+    whole-stage-codegen work, one map-side-combining aggregation, no
+    heavy shuffle — wall should
     track core count until memory bandwidth. (A tiled-GEMM candidate
     was rejected measured: its Arrow/np.stack boundary made the
     8-vs-32 ratio read 1.17 — boundary-bound, not CPU-bound.)
@@ -636,7 +637,7 @@ def _graph_scale_probes(spark, timings: dict) -> None:
         # Leiden burst treatment, VERDICT r11 #2): this row's history
         # swung 15.1/8.7/12.1/21.3 across r8-r11 with NO job-count or
         # plan change (solo probe: jobs pinned at 41 every rep, warm
-        # median ~11s, scripts/ab_bench_synthetic_solo.py) — the swing
+        # median ~11s) — the swing
         # is host-burst sampling, so the artifact now carries its own
         # attribution: a burst inflates one rep, not the median, and
         # the per-rep spread is visible in the JSON.
@@ -876,7 +877,7 @@ def _interarrival_scale_probe(spark, timings: dict) -> None:
     window-function family's at-scale evidence row. (r11 watch item
     closed: the r10->r11 doublings of both rows here — 1.7->2.5s and
     2.5->4.5s — reproduce at ~1.95s/~2.35s warm solo with job counts
-    pinned at 3, scripts/ab_bench_synthetic_solo.py, i.e. mid-run
+    pinned at 3, i.e. mid-run
     host/session drift, not plan changes.) 100k users x 100
     events each; user u's cadence is exactly (u % 7 + 1) seconds and
     the later event's type cycles seq % 3, so every aggregate has a

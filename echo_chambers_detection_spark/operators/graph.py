@@ -7,8 +7,11 @@ distributed joins/aggregations:
 
 - every iteration is a handful of shuffles on (node) or (node, dim) keys,
   which partition evenly at any scale;
-- `localCheckpoint` truncates lineage each round so plans don't grow
-  unboundedly (the classic iterative-Spark failure mode);
+- each round's state is a checkpoint generation (`_materialize`) that
+  truncates lineage so plans don't grow unboundedly (the classic
+  iterative-Spark failure mode). One ownership rule covers its blocks:
+  a loop's generations belong to its scope (`_generations`); only what
+  `result()` hands over outlives it;
 - driver-side state is O(1) scalars (round counters, change counts) —
   never node/edge collections.
 
@@ -24,7 +27,11 @@ canonicalized to the minimum member node id.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 try:  # the only failure modes _materialize's fallback should absorb are
@@ -198,8 +205,6 @@ def _traversal_local_tbl(edges: DataFrame, weighted: bool = False):
 def _traversal_result(spark, pdf, cols_types):
     """Assemble a local-mirror result DataFrame with the distributed
     loop's exact schema (node/seed columns keep the input id dtype)."""
-    from pyspark.sql.types import StructField, StructType
-
     schema = StructType(
         [StructField(c, t, True) for c, t in cols_types]
     )
@@ -248,6 +253,24 @@ def _nodes_of_sym(sym: DataFrame) -> DataFrame:
     return sym.select(F.col("src").alias("node")).distinct()
 
 
+def tracked_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint with its block ids recorded on the result
+    (so `_release_checkpoint`/`carry_ckpt` can free it), but WITHOUT
+    `_materialize`'s stats-free leaf rebuild — for one-shot frames whose
+    Catalyst size estimate should keep steering downstream join
+    planning. Loops must keep using `_materialize` (the stats rebuild is
+    what stops checkpoint-stat compounding there)."""
+    sc = df.sparkSession.sparkContext
+
+    def pinned():
+        return [int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()]
+
+    before = set(pinned())
+    out = df.localCheckpoint(eager=True)
+    out._ckpt_rdd_ids = [i for i in pinned() if i not in before]
+    return out
+
+
 def _materialize(df: DataFrame) -> DataFrame:
     """Cut lineage + force computation (iterative-loop hygiene).
 
@@ -268,21 +291,15 @@ def _materialize(df: DataFrame) -> DataFrame:
     regression is visible instead of silent (ADVICE r2).
 
     The ids of the checkpoint's persisted RDDs are recorded on the
-    returned DataFrame (`_ckpt_rdd_ids`) so loops can free DEAD
-    generations deterministically via `_release_checkpoint` — a
-    100-round loop must not pin 100 generations of blocks in the block
-    manager (at cluster scale that is executor-memory death by a
-    thousand tiny frames).
+    returned DataFrame (`_ckpt_rdd_ids`, via `tracked_checkpoint`), so
+    the frame owns its blocks until they are freed. Ownership rule: a
+    loop's generations belong to its scope (`_generations`); only what
+    `result()` hands over outlives it — a 100-round loop must not pin
+    100 generations of blocks in the block manager (at cluster scale
+    that is executor-memory death by a thousand tiny frames).
     """
     global _MATERIALIZE_FALLBACK_WARNED
-    sc = df.sparkSession.sparkContext
-    before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    out = df.localCheckpoint(eager=True)
-    new_ids = [
-        int(i)
-        for i in sc._jsc.getPersistentRDDs().keySet().toArray()
-        if int(i) not in before
-    ]
+    out = tracked_checkpoint(df)
     try:
         jdf = out._jdf
         jspark = out.sparkSession._jsparkSession
@@ -305,9 +322,8 @@ def _materialize(df: DataFrame) -> DataFrame:
                 RuntimeWarning,
                 stacklevel=2,
             )
-        result = out
-    result._ckpt_rdd_ids = new_ids
-    return result
+        return out
+    return carry_ckpt(result, out)
 
 
 _MATERIALIZE_FALLBACK_WARNED = False
@@ -327,24 +343,6 @@ def _materialize_wide(df: DataFrame) -> DataFrame:
     return _materialize(df.repartition(n))
 
 
-def tracked_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint with its block ids recorded on the result
-    (so `_release_checkpoint`/`carry_ckpt` can free it), but WITHOUT
-    `_materialize`'s stats-free leaf rebuild — for one-shot frames whose
-    Catalyst size estimate should keep steering downstream join
-    planning. Loops must keep using `_materialize` (the stats rebuild is
-    what stops checkpoint-stat compounding there)."""
-    sc = df.sparkSession.sparkContext
-    before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    out = df.localCheckpoint(eager=True)
-    out._ckpt_rdd_ids = [
-        int(i)
-        for i in sc._jsc.getPersistentRDDs().keySet().toArray()
-        if int(i) not in before
-    ]
-    return out
-
-
 def carry_ckpt(out: DataFrame, *inners: DataFrame) -> DataFrame:
     """Transfer checkpoint-block ownership from internal frames onto the
     frame a function RETURNS, so a caller's single
@@ -352,7 +350,10 @@ def carry_ckpt(out: DataFrame, *inners: DataFrame) -> DataFrame:
     ops (select/withColumn/alias) mint new DataFrame objects and drop
     the `_ckpt_rdd_ids` attribute — every wrapper that post-processes an
     operator result needs this to stay release-clean (round 9 leak
-    census: 37/134 catalog queries left pinned blocks behind)."""
+    census: 37/134 catalog queries left pinned blocks behind). Inside a
+    loop the same hand-over is `_generations.result`: a loop's
+    generations belong to its scope; only what `result()` hands over
+    outlives it."""
     ids = list(getattr(out, "_ckpt_rdd_ids", []))
     for f in inners:
         if f is None:
@@ -389,6 +390,101 @@ def _release_checkpoint(*dfs: DataFrame) -> None:
         df._ckpt_rdd_ids = []
 
 
+def _scalars(df: DataFrame, **aggs) -> tuple:
+    """A round's loop-control scalars from ONE agg job over `df`, in
+    keyword order. An aggregate over no rows reads 0; an agg passed as
+    None is skipped and reads None (no job when all are None)."""
+    live = {k: e for k, e in aggs.items() if e is not None}
+    row = df.agg(*(e.alias(k) for k, e in live.items())).first() if live else {}
+    return tuple(
+        None if aggs[k] is None else (0 if row[k] is None else row[k])
+        for k in aggs
+    )
+
+
+class _Generations:
+    """The checkpoint generations of one loop; see `_generations`."""
+
+    def __init__(self):
+        self._owned: list[DataFrame] = []
+
+    def _free(self, df: DataFrame | None) -> None:
+        # only ever frees what this scope owns: a caller's frame passed
+        # as `prev` by mistake is left alone, not destroyed
+        if df is not None and any(o is df for o in self._owned):
+            self._owned = [o for o in self._owned if o is not df]
+            _release_checkpoint(df)
+
+    def keep(self, df: DataFrame, wide: bool = False) -> DataFrame:
+        """Materialize `df` (through `_materialize_wide` when `wide`)
+        and own it until the scope exits or a step() supersedes it."""
+        out = (_materialize_wide if wide else _materialize)(df)
+        self._owned.append(out)
+        return out
+
+    def step(self, df: DataFrame, cols=None, prev: DataFrame | None = None, **aggs):
+        """One generation: materialize `df`, free `prev` (the generation
+        it supersedes) now that the new one is on storage, project to
+        `cols` with ownership kept, and read `aggs` over the new leaf in
+        one `_scalars` job. Returns the frame, or (frame, *scalars) when
+        aggs are given."""
+        leaf = _materialize(df)
+        out = leaf if cols is None else carry_ckpt(leaf.select(*cols), leaf)
+        self._owned.append(out)
+        self._free(prev)
+        return (out, *_scalars(leaf, **aggs)) if aggs else out
+
+    def result(self, out: DataFrame, *frames: DataFrame) -> DataFrame:
+        """Hand `frames` (and `out` itself, when it is a generation) to
+        the returned frame: those blocks outlive the scope, freed by
+        the caller's `_release_checkpoint(out)`."""
+        carry_ckpt(out, *frames)
+        self._owned = [o for o in self._owned if o is not out]
+        return out
+
+
+@contextmanager
+def _generations():
+    """Scope that owns a loop's checkpoint generations, in the spirit of
+    Pregelix's superstep driver: `keep()` materializes loop-invariant
+    frames (edge lists, node sets), `step()` materializes each new
+    generation and frees the one it supersedes, and `result()` hands
+    generations to the returned frame. A loop's generations belong to
+    its scope; only what `result()` hands over outlives it — on normal
+    exit and on an exception alike (a raise mid-loop pins nothing)."""
+    g = _Generations()
+    try:
+        yield g
+    finally:
+        _release_checkpoint(*g._owned)
+        g._owned = []
+
+
+def _traversal_mirror(
+    edges: DataFrame, kernel: str, schema, weighted: bool = False, **kw
+):
+    """Traversal-mirror dispatch: gate + collect the edge list
+    (`_traversal_local_tbl`), run `localgraph.<kernel>(tbl, **kw)` and
+    return its frame with `schema`, a list of (column, type) where a
+    None type means the input's id type. Returns None — run the
+    distributed loop — when the gate declines or the kernel does (its
+    op/wedge budget returns None)."""
+    tbl = _traversal_local_tbl(edges, weighted=weighted)
+    if tbl is None:
+        return None
+    from echo_chambers_detection_spark.operators import localgraph
+
+    pdf = getattr(localgraph, kernel)(tbl, **kw)
+    if pdf is None:
+        return None
+    node_t = edges.schema["u1"].dataType
+    return _traversal_result(
+        edges.sparkSession,
+        pdf,
+        [(c, node_t if t is None else t) for c, t in schema],
+    )
+
+
 # ---------------------------------------------------------------------------
 # G4 — k-core decomposition (reference gds.kcore.stream,
 # project/metrics/community_detection.py:56-58)
@@ -404,79 +500,66 @@ def kcore(edges: DataFrame, max_rounds: int = 10_000) -> DataFrame:
     levels) finish in a handful of rounds. Each round is one degree
     aggregation + two anti-joins. Returns (node, core_value).
     """
-    sym = _materialize_wide(_symmetrize(edges, weighted=False).select("src", "dst"))
-    if _local_path_ok(edges, sym.count()):
-        from echo_chambers_detection_spark.operators.localgraph import (
-            kcore_local,
+    with _generations() as g:
+        sym = g.keep(
+            _symmetrize(edges, weighted=False).select("src", "dst"), wide=True
         )
-
-        rows = sym.toPandas()
-        _release_checkpoint(sym)
-        result = kcore_local(rows)
-        return edges.sparkSession.createDataFrame(
-            [(node, int(c)) for node, c in result.items()],
-            "node string, core_value bigint",
-        )
-    # Peel over the ALIVE node set, not just nodes that still have edges:
-    # a node orphaned by its neighbors' removal (star center) must peel
-    # at the current k with degree 0, or it would silently never be
-    # assigned a core (regression: tests/test_graph_algorithms.py star
-    # fixture). deg left-joins from `alive` so orphans surface as deg=0,
-    # which also pins mind=0 and stops k jumping past them.
-    alive = _materialize(_nodes_of_sym(sym))
-    hint = _state_hint(_probe_small(alive))
-    assigned: list[DataFrame] = []
-    lows: list[DataFrame] = []
-    k = 0
-    for _ in range(max_rounds):
-        deg = alive.join(
-            sym.groupBy(F.col("src").alias("node")).agg(
-                F.count("*").alias("deg")
-            ),
-            "node",
-            "left",
-        ).na.fill({"deg": 0})
-        row = deg.agg(
-            F.min("deg").alias("mind"), F.count("*").alias("n")
-        ).first()
-        if row["n"] == 0:
-            break
-        k = max(k, int(row["mind"]))
-        # materialize the peeled set: every later frame (including the
-        # returned union) reads only these small checkpointed leaves, so
-        # the big per-round sym/alive generations can be retired in-loop
-        low = _materialize(deg.where(F.col("deg") <= k).select("node"))
-        lows.append(low)
-        assigned.append(
-            low.select("node", F.lit(k).cast("bigint").alias("core_value"))
-        )
-        new_alive = _materialize(alive.join(hint(low), "node", "leftanti"))
-        _release_checkpoint(alive)
-        alive = new_alive
-        new_sym = _materialize(
-            sym.join(
-                hint(low.withColumnRenamed("node", "src")), "src", "leftanti"
-            ).join(
-                hint(low.withColumnRenamed("node", "dst")), "dst", "leftanti"
+        if _local_path_ok(edges, sym.count()):
+            from echo_chambers_detection_spark.operators.localgraph import (
+                kcore_local,
             )
-        )
-        _release_checkpoint(sym)
-        sym = new_sym
-    _release_checkpoint(alive, sym)
-    if not assigned:
-        return edges.sparkSession.createDataFrame(
-            [], "node string, core_value bigint"
-        )
-    out = assigned[0]
-    for part in assigned[1:]:
-        out = out.unionAll(part)
-    # transfer block ownership of the peeled leaves to the result
-    out._ckpt_rdd_ids = [
-        rid for low in lows for rid in getattr(low, "_ckpt_rdd_ids", [])
-    ]
-    for low in lows:
-        low._ckpt_rdd_ids = []
-    return out
+
+            result = kcore_local(sym.toPandas())
+            return edges.sparkSession.createDataFrame(
+                [(node, int(c)) for node, c in result.items()],
+                "node string, core_value bigint",
+            )
+        # Peel over the ALIVE node set, not just nodes that still have
+        # edges: a node orphaned by its neighbors' removal (star center)
+        # must peel at the current k with degree 0, or it would silently
+        # never be assigned a core (regression:
+        # tests/test_graph_algorithms.py star fixture). deg left-joins
+        # from `alive` so orphans surface as deg=0, which also pins
+        # mind=0 and stops k jumping past them.
+        alive = g.keep(_nodes_of_sym(sym))
+        hint = _state_hint(_probe_small(alive))
+        lows: list[DataFrame] = []
+        assigned: list[DataFrame] = []
+        k = 0
+        for _ in range(max_rounds):
+            deg = alive.join(
+                sym.groupBy(F.col("src").alias("node")).agg(
+                    F.count("*").alias("deg")
+                ),
+                "node",
+                "left",
+            ).na.fill({"deg": 0})
+            mind, n = _scalars(deg, mind=F.min("deg"), n=F.count("*"))
+            if n == 0:
+                break
+            k = max(k, int(mind))
+            # materialize the peeled set: every later frame (including
+            # the returned union) reads only these small checkpointed
+            # leaves, so the big per-round sym/alive generations retire
+            low = g.keep(deg.where(F.col("deg") <= k).select("node"))
+            lows.append(low)
+            assigned.append(
+                low.select("node", F.lit(k).cast("bigint").alias("core_value"))
+            )
+            alive = g.step(alive.join(hint(low), "node", "leftanti"), prev=alive)
+            sym = g.step(
+                sym.join(
+                    hint(low.withColumnRenamed("node", "src")), "src", "leftanti"
+                ).join(
+                    hint(low.withColumnRenamed("node", "dst")), "dst", "leftanti"
+                ),
+                prev=sym,
+            )
+        if not assigned:
+            return edges.sparkSession.createDataFrame(
+                [], "node string, core_value bigint"
+            )
+        return g.result(reduce(DataFrame.unionAll, assigned), *lows)
 
 
 # ---------------------------------------------------------------------------
@@ -508,79 +591,69 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     non-convergence must be loud. With the doubling step the default
     budget covers any graph a cluster can hold.
     """
-    sym = _materialize_wide(_symmetrize(edges, weighted=False).select("src", "dst"))
-    if _local_path_ok(edges, sym.count()):
-        from echo_chambers_detection_spark.operators.localgraph import (
-            connected_components_local,
+    with _generations() as g:
+        sym = g.keep(
+            _symmetrize(edges, weighted=False).select("src", "dst"), wide=True
         )
+        if _local_path_ok(edges, sym.count()):
+            from echo_chambers_detection_spark.operators.localgraph import (
+                connected_components_local,
+            )
 
-        # collect each undirected edge ONCE (src <= dst keeps self-loop
-        # nodes in the id set): halves the driver transfer, and the
-        # union-find mirror only walks the src < dst half anyway
-        rows = sym.where(F.col("src") <= F.col("dst")).toPandas()
-        _release_checkpoint(sym)
-        result = connected_components_local(rows)
-        return edges.sparkSession.createDataFrame(
-            list(result.items()), "node string, component string"
-        )
-    labels = _materialize(_nodes_of_sym(sym).withColumn("component", F.col("node")))
-    hint = _state_hint(_probe_small(labels))
-    changed = 0
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(hint(labels.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        hooked = labels.join(nbr_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("component"), F.coalesce("nbr_component", "component")
-            ).alias("_c1"),
-            F.col("component").alias("_c0"),
-        )
-        # shortcut: follow the label one more hop (labels are node ids,
-        # so every _c1 value exists as a node row). The join probes on
-        # _c1 — hot toward convergence (many nodes share a label); the
-        # mapping side is hinted broadcast when small, and AQE
-        # skew-splits otherwise.
-        jump = hooked.select(
-            F.col("node").alias("_c1"), F.col("_c1").alias("_c2")
-        )
-        # carry the changed flag inside the materialized frame: the
-        # convergence check becomes a cheap agg on the checkpointed leaf
-        # instead of a second distributed join job per round
-        new_labels = _materialize(
-            hooked.join(hint(jump), "_c1", "left").select(
+            # collect each undirected edge ONCE (src <= dst keeps
+            # self-loop nodes in the id set): halves the driver transfer,
+            # and the union-find mirror only walks the src < dst half
+            result = connected_components_local(
+                sym.where(F.col("src") <= F.col("dst")).toPandas()
+            )
+            return edges.sparkSession.createDataFrame(
+                list(result.items()), "node string, component string"
+            )
+        labels = g.keep(_nodes_of_sym(sym).withColumn("component", F.col("node")))
+        hint = _state_hint(_probe_small(labels))
+        changed = 0
+        for _ in range(max_iter):
+            nbr_min = (
+                sym.join(hint(labels.withColumnRenamed("node", "src")), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("component").alias("nbr_component"))
+            )
+            hooked = labels.join(nbr_min, "node", "left").select(
                 "node",
                 F.least(
-                    F.col("_c1"), F.coalesce("_c2", "_c1")
-                ).alias("component"),
-                (
-                    F.least(F.col("_c1"), F.coalesce("_c2", "_c1"))
-                    < F.col("_c0")
-                ).alias("_chg"),
+                    F.col("component"), F.coalesce("nbr_component", "component")
+                ).alias("_c1"),
+                F.col("component").alias("_c0"),
             )
-        )
-        changed = int(
-            new_labels.agg(F.sum(F.col("_chg").cast("long")).alias("c"))
-            .first()["c"]
-            or 0
-        )
-        _release_checkpoint(labels)
-        labels = new_labels.select("node", "component")
-        labels._ckpt_rdd_ids = getattr(new_labels, "_ckpt_rdd_ids", [])
-        new_labels._ckpt_rdd_ids = []
-        if changed == 0:
-            break
-    _release_checkpoint(sym)
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still moving) — the graph's diameter "
-            "exceeds the round budget; pass a larger max_iter"
-        )
-    return labels
+            # shortcut: follow the label one more hop (labels are node
+            # ids, so every _c1 value exists as a node row). The join
+            # probes on _c1 — hot toward convergence (many nodes share a
+            # label); the mapping side is hinted broadcast when small,
+            # and AQE skew-splits otherwise.
+            jump = hooked.select(
+                F.col("node").alias("_c1"), F.col("_c1").alias("_c2")
+            )
+            # carry the changed flag inside the materialized frame: the
+            # convergence check is a cheap agg on the checkpointed leaf
+            # instead of a second distributed join job per round
+            c = F.least(F.col("_c1"), F.coalesce("_c2", "_c1"))
+            labels, changed = g.step(
+                hooked.join(hint(jump), "_c1", "left").select(
+                    "node", c.alias("component"), (c < F.col("_c0")).alias("_chg")
+                ),
+                ["node", "component"],
+                prev=labels,
+                changed=F.sum(F.col("_chg").cast("long")),
+            )
+            if changed == 0:
+                break
+        if changed != 0:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                f"({changed} labels still moving) — the graph's diameter "
+                "exceeds the round budget; pass a larger max_iter"
+            )
+        return g.result(labels)
 
 
 # ---------------------------------------------------------------------------
@@ -598,74 +671,108 @@ def label_propagation(
     implementation is not. Stops at fixpoint or max_iter.
     Returns (node, community).
     """
-    sym = _materialize_wide(_symmetrize(edges, weighted=weighted))
-    labels = _materialize(_nodes_of_sym(sym).withColumn("community", F.col("node")))
-    hint = _state_hint(_probe_small(labels))
-    for _ in range(max_iter):
-        # Each node's own previous label rides the message stream as a
-        # zero-weight self-message: it contributes nothing to any label
-        # score (weights are strictly positive, so a 0-score label can
-        # never win or tie the argmax), but it (a) guarantees every node
-        # appears downstream — the old labels⋈top join existed only for
-        # that totality — and (b) carries the OLD label into the same
-        # aggregation that picks the NEW one, so the convergence flag
-        # costs no extra join. The argmax itself is min_by over
-        # struct(-score, community): lexicographic struct ordering gives
-        # highest score first, then the binary-smallest label — the
-        # exact tie-break the old row_number window used, without the
-        # window's per-node sort exchange. Two map-side-combining aggs
-        # replace agg + window sort + join (round-10: LPA was the one
-        # loop still paying a per-round window AND a per-round join).
-        msgs = sym.join(
-            hint(labels.withColumnRenamed("node", "src")), "src"
-        ).select(
-            F.col("dst").alias("node"),
-            "community",
-            "weight",
-            F.lit(False).alias("own"),
-        ).unionByName(
-            labels.select(
-                "node",
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=weighted), wide=True)
+        labels = g.keep(_nodes_of_sym(sym).withColumn("community", F.col("node")))
+        hint = _state_hint(_probe_small(labels))
+        for _ in range(max_iter):
+            # Each node's own previous label rides the message stream as
+            # a zero-weight self-message: it contributes nothing to any
+            # label score (weights are strictly positive, so a 0-score
+            # label can never win or tie the argmax), but it (a)
+            # guarantees every node appears downstream — the old
+            # labels⋈top join existed only for that totality — and (b)
+            # carries the OLD label into the same aggregation that picks
+            # the NEW one, so the convergence flag costs no extra join.
+            # The argmax itself is min_by over struct(-score, community):
+            # lexicographic struct ordering gives highest score first,
+            # then the binary-smallest label — the exact tie-break the
+            # old row_number window used, without the window's per-node
+            # sort exchange. Two map-side-combining aggs replace agg +
+            # window sort + join (round-10: LPA was the one loop still
+            # paying a per-round window AND a per-round join).
+            msgs = sym.join(
+                hint(labels.withColumnRenamed("node", "src")), "src"
+            ).select(
+                F.col("dst").alias("node"),
                 "community",
-                F.lit(0.0).alias("weight"),
-                F.lit(True).alias("own"),
-            )
-        )
-        counts = msgs.groupBy("node", "community").agg(
-            F.sum("weight").alias("score"), F.max("own").alias("own")
-        )
-        new_labels = _materialize(
-            counts.groupBy("node")
-            .agg(
-                F.min_by(
+                "weight",
+                F.lit(False).alias("own"),
+            ).unionByName(
+                labels.select(
+                    "node",
                     "community",
-                    F.struct(
-                        (-F.col("score")).alias("ns"), F.col("community")
+                    F.lit(0.0).alias("weight"),
+                    F.lit(True).alias("own"),
+                )
+            )
+            counts = msgs.groupBy("node", "community").agg(
+                F.sum("weight").alias("score"), F.max("own").alias("own")
+            )
+            labels, changed = g.step(
+                counts.groupBy("node")
+                .agg(
+                    F.min_by(
+                        "community",
+                        F.struct(
+                            (-F.col("score")).alias("ns"), F.col("community")
+                        ),
+                    ).alias("community"),
+                    F.max(F.when(F.col("own"), F.col("community"))).alias(
+                        "_old"
                     ),
-                ).alias("community"),
-                F.max(F.when(F.col("own"), F.col("community"))).alias(
-                    "_old"
+                )
+                .select(
+                    "node",
+                    "community",
+                    (F.col("community") != F.col("_old")).alias("_chg"),
                 ),
+                ["node", "community"],
+                prev=labels,
+                changed=F.sum(F.col("_chg").cast("long")),
             )
+            if changed == 0:
+                break
+        return g.result(labels)
+
+
+def _frontier_loop(g, sym, dist, keys, max_iter):
+    """The BFS loop of `bfs_distances` (keys ["node"]) and
+    `bfs_landmark_distances` (keys ["seed", "node"]): `dist` holds 0
+    at the sources and NULL elsewhere; round d joins the level-(d-1)
+    frontier against `sym`, stamps newly reached keys with d, and stops
+    once a round reaches nothing. Per round: one frontier join against
+    the edge frame plus one left-join update of the state frame; the
+    growth count is an agg on the materialized generation. Returns the
+    reached (*keys, dist: bigint) rows, owning the last generation."""
+    seed = keys[:-1]
+    hint = _state_hint(_probe_small(dist))
+    for d in range(1, max_iter + 1):
+        frontier = dist.where(F.col("dist") == d - 1).select(
+            *seed, F.col("node").alias("src")
+        )
+        reached = (
+            sym.join(hint(frontier), "src")
+            .select(*seed, F.col("dst").alias("node"))
+            .distinct()
+        )
+        dist, grew = g.step(
+            dist.join(hint(reached.withColumn("_r", F.lit(1))), keys, "left")
             .select(
-                "node",
-                "community",
-                (F.col("community") != F.col("_old")).alias("_chg"),
-            )
+                *keys,
+                F.coalesce(
+                    "dist", F.when(F.col("_r") == 1, F.lit(d)).cast("int")
+                ).alias("dist"),
+            ),
+            prev=dist,
+            grew=F.sum((F.col("dist") == d).cast("long")),
         )
-        changed = int(
-            new_labels.agg(F.sum(F.col("_chg").cast("long")).alias("c"))
-            .first()["c"]
-            or 0
-        )
-        _release_checkpoint(labels)
-        labels = new_labels.select("node", "community")
-        labels._ckpt_rdd_ids = getattr(new_labels, "_ckpt_rdd_ids", [])
-        new_labels._ckpt_rdd_ids = []
-        if changed == 0:
+        if grew == 0:
             break
-    _release_checkpoint(sym)
-    return labels
+    out = dist.where(F.col("dist").isNotNull()).select(
+        *keys, F.col("dist").cast("bigint").alias("dist")
+    )
+    return g.result(out, dist)
 
 
 def bfs_distances(
@@ -695,66 +802,25 @@ def bfs_distances(
     otherwise pay ~diameter serialized Spark rounds of pure scheduling
     latency; the distributed loop stays primary above the bound.
     """
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            bfs_local,
-        )
-        from pyspark.sql.types import LongType
-
-        return _traversal_result(
-            edges.sparkSession,
-            bfs_local(tbl, seeds=seeds, max_iter=max_iter),
-            [
-                ("node", edges.schema["u1"].dataType),
-                ("dist", LongType()),
-            ],
-        )
-    sym = _materialize_wide(_symmetrize(edges, weighted=False))
-    nodes = _nodes_of_sym(sym)
-    if seeds is None:
-        seeds = [sym.agg(F.min("src")).first()[0]]
-    dist = _materialize(
-        nodes.select(
-            "node",
-            F.when(F.col("node").isin(list(seeds)), F.lit(0))
-            .cast("int")
-            .alias("dist"),
-        )
+    out = _traversal_mirror(
+        edges, "bfs_local", [("node", None), ("dist", LongType())],
+        seeds=seeds, max_iter=max_iter,
     )
-    hint = _state_hint(_probe_small(dist))
-    for d in range(1, max_iter + 1):
-        frontier = dist.where(F.col("dist") == d - 1).select(
-            F.col("node").alias("src")
-        )
-        reached = (
-            sym.join(hint(frontier), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        new_dist = _materialize(
-            dist.join(hint(reached.withColumn("_r", F.lit(1))), "node", "left")
-            .select(
+    if out is not None:
+        return out
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=False), wide=True)
+        if seeds is None:
+            seeds = [sym.agg(F.min("src")).first()[0]]
+        dist = g.keep(
+            _nodes_of_sym(sym).select(
                 "node",
-                F.coalesce(
-                    "dist", F.when(F.col("_r") == 1, F.lit(d)).cast("int")
-                ).alias("dist"),
+                F.when(F.col("node").isin(list(seeds)), F.lit(0))
+                .cast("int")
+                .alias("dist"),
             )
         )
-        grew = int(
-            new_dist.agg(F.sum((F.col("dist") == d).cast("long")).alias("c"))
-            .first()["c"]
-            or 0
-        )
-        _release_checkpoint(dist)
-        dist = new_dist
-        if grew == 0:
-            break
-    _release_checkpoint(sym)
-    out = dist.where(F.col("dist").isNotNull()).select(
-        "node", F.col("dist").cast("bigint").alias("dist")
-    )
-    return carry_ckpt(out, dist)
+        return _frontier_loop(g, sym, dist, ["node"], max_iter)
 
 
 def bfs_landmark_distances(
@@ -775,87 +841,42 @@ def bfs_landmark_distances(
     Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
     (localgraph.landmark_bfs_local) answers driver-side.
     """
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            landmark_bfs_local,
-        )
-        from pyspark.sql.types import LongType
-
-        node_t = edges.schema["u1"].dataType
-        return _traversal_result(
-            edges.sparkSession,
-            landmark_bfs_local(
-                tbl, n_landmarks=n_landmarks, max_iter=max_iter
-            ),
-            [("seed", node_t), ("node", node_t), ("dist", LongType())],
-        )
-    sym = _materialize_wide(_symmetrize(edges, weighted=False))
-    nodes = _nodes_of_sym(sym)
-    seeds = [
-        r["node"]
-        for r in nodes.orderBy("node").limit(n_landmarks).collect()
-    ]
-    # seed column type must FOLLOW the node id type (ADVICE r10: a
-    # hardcoded 'seed string' breaks the node == seed comparison for
-    # long ids, which bench.py's layered fixture uses)
-    from pyspark.sql.types import StructField, StructType
-
-    seed_schema = StructType(
-        [StructField("seed", nodes.schema["node"].dataType)]
+    out = _traversal_mirror(
+        edges, "landmark_bfs_local",
+        [("seed", None), ("node", None), ("dist", LongType())],
+        n_landmarks=n_landmarks, max_iter=max_iter,
     )
-    dist = _materialize(
-        nodes.crossJoin(
-            F.broadcast(
-                nodes.sparkSession.createDataFrame(
-                    [(s,) for s in seeds], seed_schema
+    if out is not None:
+        return out
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=False), wide=True)
+        nodes = _nodes_of_sym(sym)
+        seeds = [
+            r["node"]
+            for r in nodes.orderBy("node").limit(n_landmarks).collect()
+        ]
+        # seed column type must FOLLOW the node id type (ADVICE r10: a
+        # hardcoded 'seed string' breaks the node == seed comparison for
+        # long ids, which bench.py's layered fixture uses)
+        seed_schema = StructType(
+            [StructField("seed", nodes.schema["node"].dataType)]
+        )
+        dist = g.keep(
+            nodes.crossJoin(
+                F.broadcast(
+                    nodes.sparkSession.createDataFrame(
+                        [(s,) for s in seeds], seed_schema
+                    )
                 )
-            )
-        ).select(
-            "seed",
-            "node",
-            F.when(F.col("node") == F.col("seed"), F.lit(0))
-            .cast("int")
-            .alias("dist"),
-        )
-    )
-    hint = _state_hint(_probe_small(dist))
-    for d in range(1, max_iter + 1):
-        frontier = dist.where(F.col("dist") == d - 1).select(
-            "seed", F.col("node").alias("src")
-        )
-        reached = (
-            sym.join(hint(frontier), "src")
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        new_dist = _materialize(
-            dist.join(
-                hint(reached.withColumn("_r", F.lit(1))),
-                ["seed", "node"],
-                "left",
             ).select(
                 "seed",
                 "node",
-                F.coalesce(
-                    "dist", F.when(F.col("_r") == 1, F.lit(d)).cast("int")
-                ).alias("dist"),
+                F.when(F.col("node") == F.col("seed"), F.lit(0))
+                .cast("int")
+                .alias("dist"),
             )
         )
-        grew = int(
-            new_dist.agg(F.sum((F.col("dist") == d).cast("long")).alias("c"))
-            .first()["c"]
-            or 0
-        )
-        _release_checkpoint(dist)
-        dist = new_dist
-        if grew == 0:
-            break
-    _release_checkpoint(sym)
-    out = dist.where(F.col("dist").isNotNull()).select(
-        "seed", "node", F.col("dist").cast("bigint").alias("dist")
-    )
-    return carry_ckpt(out, dist)
+        return _frontier_loop(g, sym, dist, ["seed", "node"], max_iter)
 
 
 def landmark_closeness(
@@ -909,6 +930,53 @@ def landmark_closeness(
     return carry_ckpt(out, d)
 
 
+def _min_plus_loop(g, sym, dist, keys, k):
+    """The Bellman-Ford relaxation of `bellman_ford_khop` (keys
+    ["node"]) and `bellman_ford_landmark` (keys ["seed", "node"]):
+    `dist` holds cost 0 at the sources and NULL elsewhere; each round
+    relaxes every edge out of the reached set (one join against the
+    state frame, one min-combining groupBy, one least-merge update) and
+    stops early on a round that changes nothing — sound because
+    min-plus relaxation is a monotone fixpoint. After r rounds the
+    frame holds the exact min cost over paths of <= r edges. Returns
+    the reached (*keys, cost: bigint) rows, owning the last
+    generation."""
+    seed = keys[:-1]
+    hint = _state_hint(_probe_small(dist))
+    for _ in range(k):
+        best = (
+            sym.join(
+                hint(
+                    dist.where(F.col("cost").isNotNull()).select(
+                        *seed, F.col("node").alias("src"), "cost"
+                    )
+                ),
+                "src",
+            )
+            .select(
+                *seed,
+                F.col("dst").alias("node"),
+                (F.col("cost") + F.col("weight").cast("bigint")).alias("nc"),
+            )
+            .groupBy(*keys)
+            .agg(F.min("nc").alias("nc"))
+        )
+        cost = F.least("cost", "nc")
+        dist, changed = g.step(
+            dist.join(hint(best), keys, "left").select(
+                *keys,
+                cost.alias("cost"),
+                (~cost.eqNullSafe(F.col("cost"))).alias("_chg"),
+            ),
+            [*keys, "cost"],
+            prev=dist,
+            changed=F.sum(F.col("_chg").cast("long")),
+        )
+        if changed == 0:
+            break
+    return g.result(dist.where(F.col("cost").isNotNull()), dist)
+
+
 def bellman_ford_landmark(
     edges: DataFrame, n_landmarks: int = 4, k: int = 10
 ) -> DataFrame:
@@ -927,92 +995,42 @@ def bellman_ford_landmark(
     LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
     (localgraph.bellman_ford_landmark_local) answers driver-side.
     """
-    tbl = _traversal_local_tbl(edges, weighted=True)
-    if tbl is not None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            bellman_ford_landmark_local,
-        )
-        from pyspark.sql.types import LongType
-
-        node_t = edges.schema["u1"].dataType
-        return _traversal_result(
-            edges.sparkSession,
-            bellman_ford_landmark_local(
-                tbl, n_landmarks=n_landmarks, k=k
-            ),
-            [("seed", node_t), ("node", node_t), ("cost", LongType())],
-        )
-    sym = _materialize_wide(_symmetrize(edges, weighted=True))
-    nodes = _nodes_of_sym(sym)
-    seeds_df = F.broadcast(
-        nodes.orderBy("node").limit(n_landmarks).withColumnRenamed(
-            "node", "seed"
-        )
+    out = _traversal_mirror(
+        edges, "bellman_ford_landmark_local",
+        [("seed", None), ("node", None), ("cost", LongType())],
+        weighted=True, n_landmarks=n_landmarks, k=k,
     )
-    dist = _materialize(
-        nodes.crossJoin(seeds_df).select(
-            "seed",
-            "node",
-            F.when(F.col("node") == F.col("seed"), F.lit(0))
-            .cast("bigint")
-            .alias("cost"),
-        )
-    )
-    hint = _state_hint(_probe_small(dist))
-    for _ in range(k):
-        best = (
-            sym.join(
-                hint(
-                    dist.where(F.col("cost").isNotNull()).select(
-                        "seed", F.col("node").alias("src"), "cost"
-                    )
-                ),
-                "src",
+    if out is not None:
+        return out
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=True), wide=True)
+        nodes = _nodes_of_sym(sym)
+        seeds_df = F.broadcast(
+            nodes.orderBy("node").limit(n_landmarks).withColumnRenamed(
+                "node", "seed"
             )
-            .select(
-                "seed",
-                F.col("dst").alias("node"),
-                (F.col("cost") + F.col("weight").cast("bigint")).alias("nc"),
-            )
-            .groupBy("seed", "node")
-            .agg(F.min("nc").alias("nc"))
         )
-        new_dist = _materialize(
-            dist.join(hint(best), ["seed", "node"], "left").select(
+        dist = g.keep(
+            nodes.crossJoin(seeds_df).select(
                 "seed",
                 "node",
-                F.least("cost", "nc").alias("cost"),
-                (~F.least("cost", "nc").eqNullSafe(F.col("cost"))).alias(
-                    "_chg"
-                ),
+                F.when(F.col("node") == F.col("seed"), F.lit(0))
+                .cast("bigint")
+                .alias("cost"),
             )
         )
-        changed = int(
-            new_dist.agg(F.sum(F.col("_chg").cast("long")).alias("c"))
-            .first()["c"]
-            or 0
-        )
-        _release_checkpoint(dist)
-        dist = new_dist
-        if changed == 0:
-            break
-    _release_checkpoint(sym)
-    out = dist.where(F.col("cost").isNotNull()).select(
-        "seed", "node", F.col("cost").cast("bigint").alias("cost")
-    )
-    return carry_ckpt(out, dist)
+        return _min_plus_loop(g, sym, dist, ["seed", "node"], k)
 
 
-def _sigma_forward(sym, seeds_df, max_iter, hint):
+def _sigma_forward(g, sym, seeds_df, max_iter, hint):
     """Brandes forward pass, vectorized over seeds: state frame
     (seed, node, dist, sigma) where sigma = number of shortest
     s->node paths (exact bigint — sums of path counts, no floats).
     Per round: one frontier join + one (seed, node) sum-combining
     groupBy + one O(n·k) left-join update, the module's standard loop
     shape. Returns (state, D) with D = deepest populated level."""
-    nodes = _nodes_of_sym(sym)
-    state = _materialize(
-        nodes.crossJoin(F.broadcast(seeds_df)).select(
+    state = g.keep(
+        _nodes_of_sym(sym).crossJoin(F.broadcast(seeds_df)).select(
             "seed",
             "node",
             F.when(F.col("node") == F.col("seed"), F.lit(0))
@@ -1033,7 +1051,7 @@ def _sigma_forward(sym, seeds_df, max_iter, hint):
             .groupBy("seed", F.col("dst").alias("node"))
             .agg(F.sum("sigma").alias("_s"))
         )
-        new_state = _materialize(
+        state, grew = g.step(
             state.join(hint(contrib), ["seed", "node"], "left").select(
                 "seed",
                 "node",
@@ -1042,16 +1060,10 @@ def _sigma_forward(sym, seeds_df, max_iter, hint):
                     F.when(F.col("_s").isNotNull(), F.lit(d)).cast("int"),
                 ).alias("dist"),
                 F.coalesce("sigma", "_s").alias("sigma"),
-            )
+            ),
+            prev=state,
+            grew=F.sum((F.col("dist") == d).cast("long")),
         )
-        grew = int(
-            new_state.agg(
-                F.sum((F.col("dist") == d).cast("long")).alias("c")
-            ).first()["c"]
-            or 0
-        )
-        _release_checkpoint(state)
-        state = new_state
         if grew == 0:
             break
         depth = d
@@ -1079,43 +1091,31 @@ def shortest_path_counts(
     Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
     (localgraph.path_counts_local) answers driver-side.
     """
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            path_counts_local,
-        )
-        from pyspark.sql.types import LongType
-
-        node_t = edges.schema["u1"].dataType
-        return _traversal_result(
-            edges.sparkSession,
-            path_counts_local(
-                tbl, n_sources=n_sources, max_iter=max_iter
-            ),
-            [
-                ("seed", node_t),
-                ("node", node_t),
-                ("dist", LongType()),
-                ("sigma", LongType()),
-            ],
-        )
-    sym = _materialize_wide(_symmetrize(edges, weighted=False))
-    nodes = _nodes_of_sym(sym)
-    seeds_df = F.broadcast(
-        nodes.orderBy("node").limit(n_sources).withColumnRenamed(
-            "node", "seed"
-        )
+    out = _traversal_mirror(
+        edges, "path_counts_local",
+        [("seed", None), ("node", None), ("dist", LongType()),
+         ("sigma", LongType())],
+        n_sources=n_sources, max_iter=max_iter,
     )
-    hint = _state_hint(_probe_small(nodes))
-    state, _ = _sigma_forward(sym, seeds_df, max_iter, hint)
-    out = state.where(F.col("dist").isNotNull()).select(
-        "seed",
-        "node",
-        F.col("dist").cast("bigint").alias("dist"),
-        F.col("sigma").cast("bigint").alias("sigma"),
-    )
-    _release_checkpoint(sym)
-    return carry_ckpt(out, state)
+    if out is not None:
+        return out
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=False), wide=True)
+        nodes = _nodes_of_sym(sym)
+        seeds_df = F.broadcast(
+            nodes.orderBy("node").limit(n_sources).withColumnRenamed(
+                "node", "seed"
+            )
+        )
+        hint = _state_hint(_probe_small(nodes))
+        state, _ = _sigma_forward(g, sym, seeds_df, max_iter, hint)
+        out = state.where(F.col("dist").isNotNull()).select(
+            "seed",
+            "node",
+            F.col("dist").cast("bigint").alias("dist"),
+            F.col("sigma").cast("bigint").alias("sigma"),
+        )
+        return g.result(out, state)
 
 
 def brandes_betweenness(
@@ -1147,112 +1147,116 @@ def brandes_betweenness(
     (localgraph.betweenness_local, below LOCAL_TRAVERSAL_EDGE_LIMIT)
     matches bit-for-bit — tests pin that plus closed forms.
     """
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            betweenness_local,
-        )
-        from pyspark.sql.types import DoubleType
-
-        return _traversal_result(
-            edges.sparkSession,
-            betweenness_local(
-                tbl, n_sources=n_sources, max_iter=max_iter
-            ),
-            [
-                ("node", edges.schema["u1"].dataType),
-                ("betweenness", DoubleType()),
-            ],
-        )
-    sym = _materialize_wide(_symmetrize(edges, weighted=False))
-    nodes = _materialize(_nodes_of_sym(sym))
-    seeds_df = F.broadcast(
-        nodes.orderBy("node").limit(n_sources).withColumnRenamed(
-            "node", "seed"
-        )
+    out = _traversal_mirror(
+        edges, "betweenness_local",
+        [("node", None), ("betweenness", DoubleType())],
+        n_sources=n_sources, max_iter=max_iter,
     )
-    hint = _state_hint(_probe_small(nodes))
-    state, depth = _sigma_forward(sym, seeds_df, max_iter, hint)
-    # DAG edges (v at dist, w at dist+1) with both endpoints' sigma —
-    # one materialized join; every backward round is a filter on it
-    sv = state.where(F.col("dist").isNotNull()).select(
-        "seed",
-        F.col("node").alias("src"),
-        F.col("dist").alias("_dv"),
-        F.col("sigma").alias("_sv"),
-    )
-    sw = state.where(F.col("dist").isNotNull()).select(
-        "seed",
-        F.col("node").alias("dst"),
-        F.col("dist").alias("_dw"),
-        F.col("sigma").alias("_sw"),
-    )
-    dag = _materialize(
-        sym.join(hint(sv), "src")
-        .join(hint(sw), ["seed", "dst"])
-        .where(F.col("_dw") == F.col("_dv") + 1)
-        .select(
-            "seed",
-            F.col("src").alias("v"),
-            F.col("dst").alias("w"),
-            "_dv",
-            "_sv",
-            "_sw",
-        )
-    )
-    delta_prev = None  # δ of the level just computed (starts: deepest = 0)
-    bc_parts = []
-    for d in range(depth, 0, -1):
-        lvl = dag.where(F.col("_dv") == d - 1)
-        if delta_prev is not None:
-            lvl = lvl.join(
-                hint(
-                    delta_prev.select(
-                        "seed", F.col("node").alias("w"), "_delta"
-                    )
-                ),
-                ["seed", "w"],
-                "left",
-            ).na.fill({"_delta": 0.0})
-        else:
-            lvl = lvl.withColumn("_delta", F.lit(0.0))
-        contrib = _materialize(
-            lvl.groupBy("seed", F.col("v").alias("node")).agg(
-                F.sum(
-                    (F.col("_sv") / F.col("_sw"))
-                    * (F.lit(1.0) + F.col("_delta"))
-                ).alias("_delta")
+    if out is not None:
+        return out
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=False), wide=True)
+        nodes = g.keep(_nodes_of_sym(sym))
+        seeds_df = F.broadcast(
+            nodes.orderBy("node").limit(n_sources).withColumnRenamed(
+                "node", "seed"
             )
         )
-        # NOTE: delta_prev frames are NOT released in-loop — every one
-        # except the final level-0 output is also a bc_parts member the
-        # closing union still reads; all are freed together below.
-        delta_prev = contrib
-        if d - 1 >= 1:
-            # level-0 nodes are the pivots themselves: δ_s(s) is
-            # excluded from bc by definition, and d=1's output is the
-            # last round anyway
-            bc_parts.append(contrib)
-    acc = None
-    for p in bc_parts:
-        q = p.select("node", "_delta")
-        acc = q if acc is None else acc.unionByName(q)
-    if acc is None:
-        out = nodes.select("node", F.lit(0.0).alias("betweenness"))
-    else:
-        bc = acc.groupBy("node").agg(F.sum("_delta").alias("_bc"))
-        out = (
-            nodes.join(hint(bc), "node", "left")
-            .na.fill({"_bc": 0.0})
-            .select("node", F.col("_bc").alias("betweenness"))
+        hint = _state_hint(_probe_small(nodes))
+        state, depth = _sigma_forward(g, sym, seeds_df, max_iter, hint)
+        # DAG edges (v at dist, w at dist+1) with both endpoints' sigma —
+        # one materialized join; every backward round is a filter on it
+        sv = state.where(F.col("dist").isNotNull()).select(
+            "seed",
+            F.col("node").alias("src"),
+            F.col("dist").alias("_dv"),
+            F.col("sigma").alias("_sv"),
         )
-    out = tracked_checkpoint(out)
-    _release_checkpoint(sym, state, dag, nodes)
-    if delta_prev is not None:
-        _release_checkpoint(delta_prev)
-    for p in bc_parts:
-        _release_checkpoint(p)
-    return out
+        sw = state.where(F.col("dist").isNotNull()).select(
+            "seed",
+            F.col("node").alias("dst"),
+            F.col("dist").alias("_dw"),
+            F.col("sigma").alias("_sw"),
+        )
+        dag = g.keep(
+            sym.join(hint(sv), "src")
+            .join(hint(sw), ["seed", "dst"])
+            .where(F.col("_dw") == F.col("_dv") + 1)
+            .select(
+                "seed",
+                F.col("src").alias("v"),
+                F.col("dst").alias("w"),
+                "_dv",
+                "_sv",
+                "_sw",
+            )
+        )
+        delta_prev = None  # δ of the level just computed (deepest = 0)
+        bc_parts = []
+        for d in range(depth, 0, -1):
+            lvl = dag.where(F.col("_dv") == d - 1)
+            if delta_prev is not None:
+                lvl = lvl.join(
+                    hint(
+                        delta_prev.select(
+                            "seed", F.col("node").alias("w"), "_delta"
+                        )
+                    ),
+                    ["seed", "w"],
+                    "left",
+                ).na.fill({"_delta": 0.0})
+            else:
+                lvl = lvl.withColumn("_delta", F.lit(0.0))
+            # every level stays pinned until the scope exits: all but the
+            # final level-0 output are bc_parts members the closing union
+            # still reads
+            delta_prev = g.keep(
+                lvl.groupBy("seed", F.col("v").alias("node")).agg(
+                    F.sum(
+                        (F.col("_sv") / F.col("_sw"))
+                        * (F.lit(1.0) + F.col("_delta"))
+                    ).alias("_delta")
+                )
+            )
+            if d - 1 >= 1:
+                # level-0 nodes are the pivots themselves: δ_s(s) is
+                # excluded from bc by definition, and d=1's output is the
+                # last round anyway
+                bc_parts.append(delta_prev.select("node", "_delta"))
+        if not bc_parts:
+            out = nodes.select("node", F.lit(0.0).alias("betweenness"))
+        else:
+            bc = reduce(DataFrame.unionByName, bc_parts).groupBy("node").agg(
+                F.sum("_delta").alias("_bc")
+            )
+            out = (
+                nodes.join(hint(bc), "node", "left")
+                .na.fill({"_bc": 0.0})
+                .select("node", F.col("_bc").alias("betweenness"))
+            )
+        return tracked_checkpoint(out)
+
+
+def _walk_step(sym, cur, s, weighted, hint):
+    """Step s of `seeded_random_walks`: (wid, node) after one move of
+    every walker in `cur`."""
+    stepped = sym.join(
+        hint(cur.select("wid", F.col("node").alias("src"))), "src"
+    )
+    key_parts = [F.col("wid"), F.lit(s), F.col("dst")]
+    if weighted:
+        # sequence(1, 0) in Spark is the DESCENDING [1, 0] — a
+        # zero-weight (or <1 fractional) edge would silently get
+        # TWO replicas instead of none (ADVICE r10). Guard here so
+        # sub-unit weights contribute nothing, matching the
+        # oracle's range(1, w + 1) which is empty for w < 1.
+        stepped = stepped.where(F.col("weight") >= 1).withColumn(
+            "_j",
+            F.explode(F.sequence(F.lit(1), F.col("weight").cast("int"))),
+        )
+        key_parts.append(F.col("_j"))
+    key = F.concat_ws("|", F.md5(F.concat_ws("|", *key_parts)), F.col("dst"))
+    return stepped.groupBy("wid").agg(F.min_by("dst", key).alias("node"))
 
 
 def seeded_random_walks(
@@ -1357,62 +1361,30 @@ def seeded_random_walks(
                 seeds = spark.createDataFrame(seed_tbl)
     finally:
         pinned.unpersist(False)
-    sym = _materialize_wide(_symmetrize(edges, weighted=weighted))
-    if seeds is None:
-        cur = _nodes_of_sym(sym).select(
-            F.col("node").alias("wid"), F.col("node").alias("node")
-        )
-    else:
-        cur = seeds.select("wid", "node")
-    cur = _materialize(cur)
-    hint = _state_hint(_probe_small(cur))
-    gens = [cur]
-    for s in range(1, length + 1):
-        stepped = sym.join(
-            hint(cur.select("wid", F.col("node").alias("src"))), "src"
-        )
-        if weighted:
-            # sequence(1, 0) in Spark is the DESCENDING [1, 0] — a
-            # zero-weight (or <1 fractional) edge would silently get
-            # TWO replicas instead of none (ADVICE r10). Guard here so
-            # sub-unit weights contribute nothing, matching the
-            # oracle's range(1, w + 1) which is empty for w < 1.
-            stepped = stepped.where(F.col("weight") >= 1).withColumn(
-                "_j",
-                F.explode(
-                    F.sequence(F.lit(1), F.col("weight").cast("int"))
-                ),
-            )
-            key = F.concat_ws(
-                "|",
-                F.md5(
-                    F.concat_ws(
-                        "|", F.col("wid"), F.lit(s), F.col("dst"), F.col("_j")
-                    )
-                ),
-                F.col("dst"),
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=weighted), wide=True)
+        if seeds is None:
+            cur = _nodes_of_sym(sym).select(
+                F.col("node").alias("wid"), F.col("node").alias("node")
             )
         else:
-            key = F.concat_ws(
-                "|",
-                F.md5(
-                    F.concat_ws("|", F.col("wid"), F.lit(s), F.col("dst"))
-                ),
-                F.col("dst"),
-            )
-        nxt = _materialize(
-            stepped.groupBy("wid").agg(F.min_by("dst", key).alias("node"))
+            cur = seeds.select("wid", "node")
+        cur = g.keep(cur)
+        hint = _state_hint(_probe_small(cur))
+        gens = [cur]
+        for s in range(1, length + 1):
+            cur = g.keep(_walk_step(sym, cur, s, weighted, hint))
+            gens.append(cur)
+        out = reduce(
+            DataFrame.unionByName,
+            [
+                gen.select(
+                    "wid", F.lit(step).cast("bigint").alias("step"), "node"
+                )
+                for step, gen in enumerate(gens)
+            ],
         )
-        gens.append(nxt)
-        cur = nxt
-    out = None
-    for step, g in enumerate(gens):
-        part = g.select(
-            "wid", F.lit(step).cast("bigint").alias("step"), "node"
-        )
-        out = part if out is None else out.unionByName(part)
-    _release_checkpoint(sym)
-    return carry_ckpt(out, *gens)
+        return g.result(out, *gens)
 
 
 def bellman_ford_khop(
@@ -1439,75 +1411,25 @@ def bellman_ford_khop(
     Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
     (localgraph.bellman_ford_local) answers driver-side.
     """
-    tbl = _traversal_local_tbl(edges, weighted=True)
-    if tbl is not None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            bellman_ford_local,
-        )
-        from pyspark.sql.types import LongType
-
-        return _traversal_result(
-            edges.sparkSession,
-            bellman_ford_local(tbl, seeds=seeds, k=k),
-            [
-                ("node", edges.schema["u1"].dataType),
-                ("cost", LongType()),
-            ],
-        )
-    sym = _materialize_wide(_symmetrize(edges, weighted=True))
-    nodes = _nodes_of_sym(sym)
-    if seeds is None:
-        seeds = [sym.agg(F.min("src")).first()[0]]
-    dist = _materialize(
-        nodes.select(
-            "node",
-            F.when(F.col("node").isin(list(seeds)), F.lit(0))
-            .cast("bigint")
-            .alias("cost"),
-        )
+    out = _traversal_mirror(
+        edges, "bellman_ford_local", [("node", None), ("cost", LongType())],
+        weighted=True, seeds=seeds, k=k,
     )
-    hint = _state_hint(_probe_small(dist))
-    for _ in range(k):
-        best = (
-            sym.join(
-                hint(
-                    dist.where(F.col("cost").isNotNull()).select(
-                        F.col("node").alias("src"), "cost"
-                    )
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("cost") + F.col("weight").cast("bigint")).alias("nc"),
-            )
-            .groupBy("node")
-            .agg(F.min("nc").alias("nc"))
-        )
-        new_dist = _materialize(
-            dist.join(hint(best), "node", "left").select(
+    if out is not None:
+        return out
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges, weighted=True), wide=True)
+        if seeds is None:
+            seeds = [sym.agg(F.min("src")).first()[0]]
+        dist = g.keep(
+            _nodes_of_sym(sym).select(
                 "node",
-                F.least("cost", "nc").alias("cost"),
-                (~F.least("cost", "nc").eqNullSafe(F.col("cost"))).alias(
-                    "_chg"
-                ),
+                F.when(F.col("node").isin(list(seeds)), F.lit(0))
+                .cast("bigint")
+                .alias("cost"),
             )
         )
-        changed = int(
-            new_dist.agg(F.sum(F.col("_chg").cast("long")).alias("c")).first()[
-                "c"
-            ]
-            or 0
-        )
-        _release_checkpoint(dist)
-        dist = new_dist.select("node", "cost")
-        dist._ckpt_rdd_ids = getattr(new_dist, "_ckpt_rdd_ids", [])
-        new_dist._ckpt_rdd_ids = []
-        if changed == 0:
-            break
-    _release_checkpoint(sym)
-    out = dist.where(F.col("cost").isNotNull())
-    return carry_ckpt(out, dist)
+        return _min_plus_loop(g, sym, dist, ["node"], k)
 
 
 # ---------------------------------------------------------------------------
@@ -1517,6 +1439,21 @@ def bellman_ford_khop(
 # companion centrality over that projection and the influence signal an
 # echo-chamber analysis wants next)
 # ---------------------------------------------------------------------------
+
+
+def _teleport(seeds: list | None, n: int):
+    """PageRank's per-node teleport weight `_s`: uniform 1/n, or mass
+    1/len(seeds) on each seed node (personalized)."""
+    if not seeds:
+        return F.lit(1.0 / n).cast("double")
+    return (
+        F.when(
+            F.col("node").isin([str(s) for s in seeds]),
+            F.lit(1.0 / len(seeds)),
+        )
+        .otherwise(F.lit(0.0))
+        .cast("double")
+    )
 
 
 def pagerank(
@@ -1563,125 +1500,104 @@ def pagerank(
     retired in-loop. Returns (node, rank); Σ rank = 1 when every seed
     is present (or no seeds given).
     """
-    if directed:
-        w = (
-            F.col("weight").cast("double")
-            if weighted and "weight" in edges.columns
-            else F.lit(1.0)
-        )
-        sym = _materialize_wide(
-            edges.select(
-                F.col("u1").alias("src"),
-                F.col("u2").alias("dst"),
-                w.alias("weight"),
+    with _generations() as g:
+        if directed:
+            w = (
+                F.col("weight").cast("double")
+                if weighted and "weight" in edges.columns
+                else F.lit(1.0)
             )
-        )
-        all_nodes = (
-            sym.select(F.col("src").alias("node"))
-            .unionAll(sym.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-    else:
-        sym = _materialize_wide(_symmetrize(edges, weighted=weighted))
-        all_nodes = _nodes_of_sym(sym)
-    if _local_path_ok(edges, sym.count()):
-        from echo_chambers_detection_spark.operators.localgraph import (
-            pagerank_local,
-        )
-
-        rows = sym.toPandas()
-        _release_checkpoint(sym)
-        ranks = pagerank_local(rows, damping, max_iter, tol, seeds=seeds)
-        return edges.sparkSession.createDataFrame(
-            list(ranks.items()), "node string, rank double"
-        )
-    out_strength = sym.groupBy("src").agg(F.sum("weight").alias("_wdeg"))
-    shares = _materialize_wide(
-        sym.join(out_strength, "src").select(
-            "src", "dst", (F.col("weight") / F.col("_wdeg")).alias("share")
-        )
-    )
-    n = all_nodes.count()
-    if n == 0:
-        _release_checkpoint(sym)
-        return edges.sparkSession.createDataFrame([], "node string, rank double")
-    if seeds:
-        sv = (
-            F.when(
-                F.col("node").isin([str(s) for s in seeds]),
-                F.lit(1.0 / len(seeds)),
+            sym = g.keep(
+                edges.select(
+                    F.col("u1").alias("src"),
+                    F.col("u2").alias("dst"),
+                    w.alias("weight"),
+                ),
+                wide=True,
             )
-            .otherwise(F.lit(0.0))
-            .cast("double")
-        )
-    else:
-        sv = F.lit(1.0 / n).cast("double")
-    ranks = _materialize(
-        all_nodes.withColumn("_s", sv).withColumn("rank", F.col("_s"))
-    )
-    # all_nodes is a lazy view over sym — only now is sym's checkpoint dead
-    _release_checkpoint(sym)
-    hint = _state_hint(_probe_small(ranks))
-    # sources that emit mass; in the directed case sinks are absent here
-    # and their rank is re-injected uniformly each round
-    src_set = shares.select(F.col("src").alias("node")).distinct()
-    has_dangling = directed and src_set.count() < n
-    for _ in range(max_iter):
-        if has_dangling:
-            dangling = (
-                ranks.join(src_set, "node", "left_anti")
-                .agg(F.sum("rank").alias("s"))
-                .first()["s"]
-                or 0.0
+            all_nodes = (
+                sym.select(F.col("src").alias("node"))
+                .unionAll(sym.select(F.col("dst").alias("node")))
+                .distinct()
             )
         else:
+            sym = g.keep(_symmetrize(edges, weighted=weighted), wide=True)
+            all_nodes = _nodes_of_sym(sym)
+        if _local_path_ok(edges, sym.count()):
+            from echo_chambers_detection_spark.operators.localgraph import (
+                pagerank_local,
+            )
+
+            ranks = pagerank_local(
+                sym.toPandas(), damping, max_iter, tol, seeds=seeds
+            )
+            return edges.sparkSession.createDataFrame(
+                list(ranks.items()), "node string, rank double"
+            )
+        out_strength = sym.groupBy("src").agg(F.sum("weight").alias("_wdeg"))
+        shares = g.keep(
+            sym.join(out_strength, "src").select(
+                "src", "dst", (F.col("weight") / F.col("_wdeg")).alias("share")
+            ),
+            wide=True,
+        )
+        n = all_nodes.count()
+        if n == 0:
+            return edges.sparkSession.createDataFrame(
+                [], "node string, rank double"
+            )
+        # all_nodes is a lazy view over sym: the first rank generation
+        # supersedes sym's checkpoint
+        ranks = g.step(
+            all_nodes.withColumn("_s", _teleport(seeds, n))
+            .withColumn("rank", F.col("_s")),
+            prev=sym,
+        )
+        hint = _state_hint(_probe_small(ranks))
+        # sources that emit mass; in the directed case sinks are absent
+        # here and their rank is re-injected uniformly each round
+        src_set = shares.select(F.col("src").alias("node")).distinct()
+        has_dangling = directed and src_set.count() < n
+        for _ in range(max_iter):
             dangling = 0.0
-        incoming = (
-            shares.join(
-                hint(
-                    ranks.select(
-                        F.col("node").alias("src"), F.col("rank")
-                    )
+            if has_dangling:
+                (d,) = _scalars(
+                    ranks.join(src_set, "node", "left_anti"), s=F.sum("rank")
+                )
+                dangling = float(d)
+            incoming = (
+                shares.join(
+                    hint(
+                        ranks.select(
+                            F.col("node").alias("src"), F.col("rank")
+                        )
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum(F.col("share") * F.col("rank")).alias("_in"))
+            )
+            new_rank = F.lit(1.0 - damping) * F.col("_s") + F.lit(damping) * (
+                F.coalesce("_in", F.lit(0.0)) + F.lit(dangling) * F.col("_s")
+            )
+            ranks, delta = g.step(
+                ranks.join(incoming, "node", "left").select(
+                    "node",
+                    "_s",
+                    new_rank.alias("rank"),
+                    F.abs(new_rank - F.col("rank")).alias("_d"),
                 ),
-                "src",
+                ["node", "_s", "rank"],
+                prev=ranks,
+                # tol=0.0 pins an exact round count (the oracle
+                # fixtures) — the L1-delta aggregation is then a
+                # pure-overhead extra job per round; skip it and let
+                # max_iter terminate the loop
+                delta=F.sum("_d") if tol > 0.0 else None,
             )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("share") * F.col("rank")).alias("_in"))
-        )
-        new_rank_expr = F.lit(1.0 - damping) * F.col("_s") + F.lit(
-            damping
-        ) * (
-            F.coalesce("_in", F.lit(0.0))
-            + F.lit(dangling) * F.col("_s")
-        )
-        new_ranks = _materialize(
-            ranks.join(incoming, "node", "left").select(
-                "node",
-                "_s",
-                new_rank_expr.alias("rank"),
-                F.abs(new_rank_expr - F.col("rank")).alias("_d"),
-            )
-        )
-        # tol=0.0 pins an exact round count (the oracle fixtures) — the
-        # L1-delta aggregation is then a pure-overhead extra job per
-        # round; skip it and let max_iter terminate the loop
-        delta = (
-            float(new_ranks.agg(F.sum("_d").alias("d")).first()["d"] or 0.0)
-            if tol > 0.0
-            else float("inf")
-        )
-        _release_checkpoint(ranks)
-        ranks = new_ranks.select("node", "_s", "rank")
-        ranks._ckpt_rdd_ids = getattr(new_ranks, "_ckpt_rdd_ids", [])
-        new_ranks._ckpt_rdd_ids = []
-        if delta <= tol:
-            break
-    _release_checkpoint(shares)
-    out = ranks.select("node", "rank")
-    # transfer block ownership so callers can release the final frame
-    out._ckpt_rdd_ids = getattr(ranks, "_ckpt_rdd_ids", [])
-    ranks._ckpt_rdd_ids = []
-    return out
+            if delta is not None and delta <= tol:
+                break
+        return g.result(ranks.select("node", "rank"), ranks)
 
 
 def pagerank_coengagement(
@@ -1722,85 +1638,63 @@ def pagerank_coengagement(
     same contract as the localgraph mirrors
     (tests/test_graph_algorithms.py pins parity).
     """
-    B = _materialize_wide(
-        eng.select(
-            F.col(user_col).alias("node"), F.col(item_col).alias("item")
-        ).distinct()
-    )
-    cnt = B.groupBy("item").agg(F.count("*").alias("_c"))
-    stats = (
-        B.join(cnt, "item")
-        .groupBy("node")
-        .agg(
-            F.count("*").alias("_np"),
-            F.sum(F.col("_c") - 1).cast("double").alias("_wd"),
+    with _generations() as g:
+        B = g.keep(
+            eng.select(
+                F.col(user_col).alias("node"), F.col(item_col).alias("item")
+            ).distinct(),
+            wide=True,
         )
-        .where(F.col("_wd") > 0)
-    )
-    n = stats.count()
-    spark = eng.sparkSession
-    if n == 0:
-        _release_checkpoint(B)
-        return spark.createDataFrame([], "node string, rank double")
-    if seeds:
-        sv = (
-            F.when(
-                F.col("node").isin([str(s) for s in seeds]),
-                F.lit(1.0 / len(seeds)),
+        cnt = B.groupBy("item").agg(F.count("*").alias("_c"))
+        stats = (
+            B.join(cnt, "item")
+            .groupBy("node")
+            .agg(
+                F.count("*").alias("_np"),
+                F.sum(F.col("_c") - 1).cast("double").alias("_wd"),
             )
-            .otherwise(F.lit(0.0))
-            .cast("double")
+            .where(F.col("_wd") > 0)
         )
-    else:
-        sv = F.lit(1.0 / n).cast("double")
-    ranks = _materialize(
-        stats.withColumn("_s", sv).withColumn("rank", F.col("_s"))
-    )
-    hint = _state_hint(_probe_small(ranks))
-    for _ in range(max_iter):
-        q = ranks.select(
-            "node", (F.col("rank") / F.col("_wd")).alias("_q")
+        n = stats.count()
+        if n == 0:
+            return eng.sparkSession.createDataFrame([], "node string, rank double")
+        ranks = g.keep(
+            stats.withColumn("_s", _teleport(seeds, n))
+            .withColumn("rank", F.col("_s"))
         )
-        t = (
-            B.join(hint(q), "node")
-            .groupBy("item")
-            .agg(F.sum("_q").alias("_t"))
-        )
-        s = B.join(t, "item").groupBy("node").agg(F.sum("_t").alias("_st"))
-        new_rank_expr = F.lit(1.0 - damping) * F.col("_s") + F.lit(
-            damping
-        ) * (
-            F.coalesce("_st", F.lit(0.0))
-            - F.col("_np") * (F.col("rank") / F.col("_wd"))
-        )
-        new_ranks = _materialize(
-            ranks.join(s, "node", "left").select(
-                "node",
-                "_np",
-                "_wd",
-                "_s",
-                new_rank_expr.alias("rank"),
-                F.abs(new_rank_expr - F.col("rank")).alias("_d"),
+        hint = _state_hint(_probe_small(ranks))
+        for _ in range(max_iter):
+            q = ranks.select(
+                "node", (F.col("rank") / F.col("_wd")).alias("_q")
             )
-        )
-        # tol=0.0 pins an exact round count — skip the delta job (see
-        # pagerank)
-        delta = (
-            float(new_ranks.agg(F.sum("_d").alias("d")).first()["d"] or 0.0)
-            if tol > 0.0
-            else float("inf")
-        )
-        _release_checkpoint(ranks)
-        ranks = new_ranks.select("node", "_np", "_wd", "_s", "rank")
-        ranks._ckpt_rdd_ids = getattr(new_ranks, "_ckpt_rdd_ids", [])
-        new_ranks._ckpt_rdd_ids = []
-        if delta <= tol:
-            break
-    _release_checkpoint(B)
-    out = ranks.select("node", "rank")
-    out._ckpt_rdd_ids = getattr(ranks, "_ckpt_rdd_ids", [])
-    ranks._ckpt_rdd_ids = []
-    return out
+            t = (
+                B.join(hint(q), "node")
+                .groupBy("item")
+                .agg(F.sum("_q").alias("_t"))
+            )
+            st = B.join(t, "item").groupBy("node").agg(F.sum("_t").alias("_st"))
+            new_rank = F.lit(1.0 - damping) * F.col("_s") + F.lit(damping) * (
+                F.coalesce("_st", F.lit(0.0))
+                - F.col("_np") * (F.col("rank") / F.col("_wd"))
+            )
+            ranks, delta = g.step(
+                ranks.join(st, "node", "left").select(
+                    "node",
+                    "_np",
+                    "_wd",
+                    "_s",
+                    new_rank.alias("rank"),
+                    F.abs(new_rank - F.col("rank")).alias("_d"),
+                ),
+                ["node", "_np", "_wd", "_s", "rank"],
+                prev=ranks,
+                # tol=0.0 pins an exact round count — skip the delta job
+                # (see pagerank)
+                delta=F.sum("_d") if tol > 0.0 else None,
+            )
+            if delta is not None and delta <= tol:
+                break
+        return g.result(ranks.select("node", "rank"), ranks)
 
 
 # ---------------------------------------------------------------------------

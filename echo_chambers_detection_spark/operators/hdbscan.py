@@ -46,6 +46,7 @@ import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 # merges at distance 0 (identical vectors) would give lambda = 1/w = inf;
 # distances are rounded to 1e-6 upstream, so half an ulp is a safe floor
@@ -370,6 +371,7 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
     small-graph bound, distributed Borůvka (per-component min out-edge,
     contract, repeat) above it.
     """
+    from echo_chambers_detection_spark.operators import graph as _G
     from echo_chambers_detection_spark.operators.graph import (
         _local_path_ok,
         _materialize,
@@ -432,10 +434,6 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
             .join(lab2, "u2")
             .select(F.col("c1").alias("u1"), F.col("c2").alias("u2"))
         )
-        from pyspark.sql.types import StringType
-
-        from echo_chambers_detection_spark.operators import graph as _G
-
         spark_s = edges.sparkSession
         if n_picked <= _G.LOCAL_GRAPH_EDGE_LIMIT and isinstance(
             comp.schema["comp"].dataType, StringType

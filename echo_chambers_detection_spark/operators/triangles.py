@@ -29,7 +29,19 @@ hash-exact against DuckDB with zero float plumbing.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType
+
+from echo_chambers_detection_spark.operators.graph import (
+    _generations,
+    _materialize,
+    _traversal_mirror,
+    carry_ckpt,
+)
+
+log = logging.getLogger(__name__)
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:
@@ -71,8 +83,6 @@ def triangle_vertices(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
     would re-run its groupBy per reference."""
     own_deg = None
     if deg is None:
-        from echo_chambers_detection_spark.operators.graph import _materialize
-
         deg = own_deg = _materialize(node_degrees(edges))
     oe = _oriented(edges, deg)
     l = oe.select(
@@ -89,11 +99,7 @@ def triangle_vertices(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
     )
     closure = oe.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     out = wedges.join(closure, ["b", "c"]).select("a", "b", "c")
-    if own_deg is not None:
-        # transfer block ownership so callers can release the frame
-        out._ckpt_rdd_ids = getattr(own_deg, "_ckpt_rdd_ids", [])
-        own_deg._ckpt_rdd_ids = []
-    return out
+    return carry_ckpt(out, own_deg)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -106,33 +112,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     mirror (localgraph.tricount_local) answers driver-side with no
     move-schedule parity concerns; the oriented wedge+closure joins
     stay the at-scale plan."""
-    from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _traversal_local_tbl,
-        _traversal_result,
+    out = _traversal_mirror(
+        edges, "tricount_local",
+        [("node", None), ("triangles", LongType()), ("deg", LongType()),
+         ("wedges", LongType())],
     )
-
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from pyspark.sql.types import LongType
-
-        from echo_chambers_detection_spark.operators.localgraph import (
-            tricount_local,
-        )
-
-        pdf = tricount_local(tbl)
-        if pdf is not None:
-            node_t = edges.schema["u1"].dataType
-            return _traversal_result(
-                edges.sparkSession,
-                pdf,
-                [
-                    ("node", node_t),
-                    ("triangles", LongType()),
-                    ("deg", LongType()),
-                    ("wedges", LongType()),
-                ],
-            )
+    if out is not None:
+        return out
     deg = _materialize(node_degrees(edges))
     tri = triangle_vertices(edges, deg)
     # one explode, not a 3-way unionAll of tri: Catalyst does not reuse
@@ -151,41 +137,19 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         "deg",
         F.expr("deg * (deg - 1) DIV 2").alias("wedges"),
     )
-    out._ckpt_rdd_ids = getattr(deg, "_ckpt_rdd_ids", [])
-    deg._ckpt_rdd_ids = []
-    return out
+    return carry_ckpt(out, deg)
 
 
 def transitivity_stats(edges: DataFrame) -> DataFrame:
     """One-row global summary: n_nodes, n_edges, n_triangles, n_wedges
     (global transitivity = 3*n_triangles/n_wedges, derivable from the
     exact integers). Same mirror crossover as triangle_counts."""
-    from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _traversal_local_tbl,
-        _traversal_result,
+    out = _traversal_mirror(
+        edges, "transitivity_local",
+        [(c, LongType()) for c in ("n_nodes", "n_edges", "n_triangles", "n_wedges")],
     )
-
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from pyspark.sql.types import LongType
-
-        from echo_chambers_detection_spark.operators.localgraph import (
-            transitivity_local,
-        )
-
-        pdf = transitivity_local(tbl)
-        if pdf is not None:
-            return _traversal_result(
-                edges.sparkSession,
-                pdf,
-                [
-                    ("n_nodes", LongType()),
-                    ("n_edges", LongType()),
-                    ("n_triangles", LongType()),
-                    ("n_wedges", LongType()),
-                ],
-            )
+    if out is not None:
+        return out
     deg = _materialize(node_degrees(edges))
     tri_n = triangle_vertices(edges, deg).agg(
         F.count("*").alias("n_triangles")
@@ -198,9 +162,7 @@ def transitivity_stats(edges: DataFrame) -> DataFrame:
     out = base.crossJoin(tri_n).select(
         "n_nodes", "n_edges", "n_triangles", "n_wedges"
     )
-    out._ckpt_rdd_ids = getattr(deg, "_ckpt_rdd_ids", [])
-    deg._ckpt_rdd_ids = []
-    return out
+    return carry_ckpt(out, deg)
 
 
 def degree_assortativity_moments(edges: DataFrame) -> DataFrame:
@@ -212,8 +174,6 @@ def degree_assortativity_moments(edges: DataFrame) -> DataFrame:
     (m2*s_xy - s_x^2) / (m2*s_xx - s_x^2) — a driver-side division over
     exact bigints, so the distributed part (this one aggregation pass)
     never touches a float."""
-    from echo_chambers_detection_spark.operators.graph import _materialize
-
     deg = _materialize(node_degrees(edges))
     both = edges.select("u1", "u2").unionAll(
         edges.select(F.col("u2").alias("u1"), F.col("u1").alias("u2"))
@@ -228,9 +188,7 @@ def degree_assortativity_moments(edges: DataFrame) -> DataFrame:
         F.sum(F.expr("dx * dx")).alias("s_xx"),
         F.sum(F.expr("dx * dy")).alias("s_xy"),
     )
-    out._ckpt_rdd_ids = getattr(deg, "_ckpt_rdd_ids", [])
-    deg._ckpt_rdd_ids = []
-    return out
+    return carry_ckpt(out, deg)
 
 
 def strong_tie_backbone(
@@ -317,150 +275,93 @@ def ktruss_edges(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     -> 37 jobs on the bench cascade (3-round 1.84M-edge fixture),
     identical output (multigraph duplicate rows included:
     an anti-join on the edge pair and a support filter classify
-    duplicate rows identically). Frames materialize through
-    graph._materialize with dead-generation retirement (including the
-    one-shot degree frame), the standing loop hygiene of the community
-    detectors.
+    duplicate rows identically). Frames are generations of a
+    graph._generations scope, which retires each dead one (the one-shot
+    degree frame included) and frees the rest if the loop raises.
     """
-    import logging
-
-    from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _release_checkpoint,
-        _traversal_local_tbl,
-        _traversal_result,
-    )
-
     # The k-truss is the UNIQUE maximal subgraph with per-edge support
     # >= k-2, so the numpy mirror (localgraph.ktruss_local: enumerate
     # once, then boolean-mask support recounts) needs correctness
     # only — below the traversal gate + wedge budget it answers
     # driver-side; the incremental distributed loop stays the at-scale
     # plan (and the forced-distributed bench probe keeps exercising it).
-    tbl = _traversal_local_tbl(edges)
-    if tbl is not None:
-        from pyspark.sql.types import LongType
+    out = _traversal_mirror(
+        edges, "ktruss_local",
+        [("u1", None), ("u2", None), ("support", LongType())],
+        k=k, max_rounds=max_rounds,
+    )
+    if out is not None:
+        return out
 
-        from echo_chambers_detection_spark.operators.localgraph import (
-            ktruss_local,
-        )
-
-        pdf = ktruss_local(tbl, k, max_rounds=max_rounds)
-        if pdf is not None:
-            node_t = edges.schema["u1"].dataType
-            return _traversal_result(
-                edges.sparkSession,
-                pdf,
-                [
-                    ("u1", node_t),
-                    ("u2", node_t),
-                    ("support", LongType()),
-                ],
+    with _generations() as g:
+        cur = g.keep(edges.select("u1", "u2"))
+        n_cur = n_start = cur.count()
+        deg = g.keep(node_degrees(cur))
+        tri = g.step(triangle_vertices(cur, deg), prev=deg)
+        leaf = cur  # the generation `cur` reads
+        for rounds in range(1, max_rounds + 1):
+            pairs = tri.select(
+                F.explode(
+                    F.array(
+                        *(
+                            F.struct(
+                                F.least(a, b).alias("u1"),
+                                F.greatest(a, b).alias("u2"),
+                            )
+                            for a, b in (("a", "b"), ("a", "c"), ("b", "c"))
+                        )
+                    )
+                ).alias("e")
+            ).select("e.u1", "e.u2")
+            sup = pairs.groupBy("u1", "u2").agg(F.count("*").alias("support"))
+            # ONE materialized frame per round: every current edge with
+            # its recounted support. keep and dropped are opposite
+            # FILTERS over this leaf (see docstring), and one agg job
+            # reads the kept count; the previous leaf is dead once this
+            # one is on storage.
+            flagged, n_keep = g.step(
+                cur.join(sup, ["u1", "u2"], "left").select(
+                    "u1",
+                    "u2",
+                    F.coalesce("support", F.lit(0)).alias("support"),
+                ),
+                prev=leaf,
+                n_keep=F.sum((F.col("support") >= k - 2).cast("long")),
             )
-
-    log = logging.getLogger(__name__)
-    cur = _materialize(edges.select("u1", "u2"))
-    n_cur = cur.count()
-    n_start = n_cur
-    deg = _materialize(node_degrees(cur))
-    tri = _materialize(triangle_vertices(cur, deg))
-    _release_checkpoint(deg)
-    prev_flagged = None
-    out = None
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        rounds += 1
-        pairs = tri.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("a", "b").alias("u1"),
-                        F.greatest("a", "b").alias("u2"),
-                    ),
-                    F.struct(
-                        F.least("a", "c").alias("u1"),
-                        F.greatest("a", "c").alias("u2"),
-                    ),
-                    F.struct(
-                        F.least("b", "c").alias("u1"),
-                        F.greatest("b", "c").alias("u2"),
-                    ),
+            leaf = flagged
+            keep = flagged.where(F.col("support") >= k - 2)
+            if n_keep == n_cur:
+                # fixpoint: no drops this round, so `support` was
+                # computed on exactly the surviving subgraph
+                log.info(
+                    "ktruss k=%d converged in %d rounds: %d -> %d edges",
+                    k, rounds, n_start, n_keep,
                 )
-            ).alias("e")
-        ).select("e.u1", "e.u2")
-        sup = pairs.groupBy("u1", "u2").agg(F.count("*").alias("support"))
-        # ONE materialized frame per round: every current edge with its
-        # recounted support. keep and dropped are opposite FILTERS over
-        # this leaf (see docstring) — no separate keep checkpoint, no
-        # cur-vs-keep anti-join subplan for the dropped side.
-        flagged = _materialize(
-            cur.join(sup, ["u1", "u2"], "left").select(
-                "u1",
-                "u2",
-                F.coalesce("support", F.lit(0)).alias("support"),
+                return g.result(keep, flagged)
+            # incremental maintenance: retire every triangle that
+            # contains a dropped edge (three broadcast anti-joins in one
+            # pass over tri; the dropped set is a filter of the flagged
+            # leaf — small, and never re-derives a join)
+            dropped = flagged.where(F.col("support") < k - 2).select(
+                F.col("u1").alias("_du1"), F.col("u2").alias("_du2")
             )
-        )
-        keep = flagged.where(F.col("support") >= k - 2)
-        # one agg job for both loop-control scalars (the old shape paid
-        # a separate count job on the keep checkpoint)
-        n_keep = int(
-            flagged.agg(
-                F.sum(
-                    (F.col("support") >= k - 2).cast("long")
-                ).alias("nk")
-            ).first()["nk"]
-            or 0
-        )
-        if n_keep == n_cur:
-            # fixpoint: no drops this round, so `support` was computed
-            # on exactly the surviving subgraph
-            _release_checkpoint(cur, prev_flagged)
-            out = keep
-            out._ckpt_rdd_ids = getattr(flagged, "_ckpt_rdd_ids", [])
-            flagged._ckpt_rdd_ids = []
-            converged = True
-            log.info(
-                "ktruss k=%d converged in %d rounds: %d -> %d edges",
-                k, rounds, n_start, n_keep,
-            )
-            break
-        # incremental maintenance: retire every triangle that contains a
-        # dropped edge (three broadcast anti-joins in one pass over tri;
-        # the dropped set is a filter of the flagged leaf — small, and
-        # never re-derives a join)
-        dropped = flagged.where(F.col("support") < k - 2).select(
-            F.col("u1").alias("_du1"), F.col("u2").alias("_du2")
-        )
-        tri_new = tri
-        for ca, cb in (("a", "b"), ("a", "c"), ("b", "c")):
-            tri_new = tri_new.join(
-                dropped,
-                (F.least(ca, cb) == F.col("_du1"))
-                & (F.greatest(ca, cb) == F.col("_du2")),
-                "left_anti",
-            )
-        tri_new = _materialize(tri_new)
-        # new generations (flagged, tri_new) are materialized: the
-        # previous cur / flagged / tri frames are provably dead
-        _release_checkpoint(tri)
-        tri = tri_new
-        _release_checkpoint(cur, prev_flagged)
-        prev_flagged = flagged
-        out = keep
-        cur, n_cur = keep.select("u1", "u2"), n_keep
-    _release_checkpoint(tri)
-    if not converged:
-        # connected_components raises in the analogous case for the
-        # same reason (ADVICE r9): a silently-partial result corrupts
+            tri_new = tri
+            for ca, cb in (("a", "b"), ("a", "c"), ("b", "c")):
+                tri_new = tri_new.join(
+                    dropped,
+                    (F.least(ca, cb) == F.col("_du1"))
+                    & (F.greatest(ca, cb) == F.col("_du2")),
+                    "left_anti",
+                )
+            tri = g.step(tri_new, prev=tri)
+            cur, n_cur = keep.select("u1", "u2"), n_keep
+        # connected_components raises in the analogous case for the same
+        # reason (ADVICE r9): a silently-partial result corrupts
         # downstream contracts, and callers have no programmatic way to
-        # detect it from the returned frame. `out` is a filter over the
-        # last flagged leaf (tracked as prev_flagged), plus cur's blocks.
-        _release_checkpoint(prev_flagged, cur)
+        # detect it from the returned frame.
         raise RuntimeError(
             f"ktruss k={k} exhausted max_rounds={max_rounds} WITHOUT "
             f"reaching a fixpoint ({n_start} -> {n_cur} edges): the "
             f"subgraph at this point is not a k-truss. Raise max_rounds "
             f"(each round is one support recount + one anti-join)."
         )
-    return out

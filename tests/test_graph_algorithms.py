@@ -34,6 +34,14 @@ def _clique(names):
     return [(a, b) for a, b in itertools.combinations(sorted(names), 2)]
 
 
+def _pinned(spark):
+    """Ids of the session's persisted RDDs (checkpoint blocks included)."""
+    return {
+        int(i)
+        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
 @pytest.fixture(scope="module")
 def planted(spark):
     """Three 6-cliques with single bridges: communities are obvious,
@@ -332,8 +340,12 @@ def test_connected_components_raises_on_nonconvergence(spark):
     old = G.LOCAL_GRAPH_EDGE_LIMIT
     G.LOCAL_GRAPH_EDGE_LIMIT = 0  # force the distributed loop
     try:
+        base = _pinned(spark)
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(edges, max_iter=2)
+        # the raise must not strand the last label generation (or sym)
+        leaked = _pinned(spark) - base
+        assert not leaked, f"non-convergence leaked {sorted(leaked)}"
         # and with budget >= diameter it converges to one component
         out = connected_components(edges, max_iter=30)
         assert {r["component"] for r in out.collect()} == {"n00"}
@@ -598,6 +610,54 @@ def test_refine_chain_move_resolves_through_rep(spark):
     )
 
 
+def test_generation_scope_bounds_pinned_blocks(spark):
+    """The loop scope keeps at most the kept frames plus two generations
+    pinned while it steps, frees everything it still owns on exit, and
+    leaves only what result() handed over."""
+    from echo_chambers_detection_spark.operators.graph import (
+        _generations,
+        _release_checkpoint,
+    )
+
+    base = _pinned(spark)
+    with _generations() as g:
+        kept = g.keep(spark.range(8).toDF("x"), wide=True)
+        state = g.keep(spark.range(8).toDF("x"))
+        per_gen = len(_pinned(spark) - base) // 2
+        assert per_gen >= 1
+        for i in range(20):
+            state, total, n = g.step(
+                state.select((F.col("x") + 1).alias("x"), F.lit(i).alias("_i")),
+                ["x"],
+                prev=state,
+                total=F.sum("x"),
+                n=F.count("*"),
+            )
+            assert state.columns == ["x"]
+            assert (total, n) == (sum(range(8)) + 8 * (i + 1), 8)
+            assert len(_pinned(spark) - base) <= 3 * per_gen
+        out = g.result(state.where(F.col("x") > 20), state)
+    # only the handed-over generation outlives the scope
+    assert 0 < len(_pinned(spark) - base) <= per_gen
+    assert sorted(r["x"] for r in out.collect()) == list(range(21, 28))
+    assert not kept._ckpt_rdd_ids
+    _release_checkpoint(out)
+    assert _pinned(spark) == base
+
+
+def test_generation_scope_frees_on_exception(spark):
+    from echo_chambers_detection_spark.operators.graph import _generations
+
+    base = _pinned(spark)
+    with pytest.raises(ValueError, match="mid-loop"):
+        with _generations() as g:
+            g.keep(spark.range(4).toDF("x"), wide=True)
+            state = g.keep(spark.range(4).toDF("x"))
+            state = g.step(state.select((F.col("x") * 2).alias("x")), prev=state)
+            raise ValueError("mid-loop")
+    assert _pinned(spark) == base
+
+
 def test_loop_operators_release_all_checkpoints(spark):
     """Checkpoint-leak regression (round 9): the flagship loop operators
     must leave ZERO pinned RDD blocks behind once the caller releases
@@ -605,8 +665,9 @@ def test_loop_operators_release_all_checkpoints(spark):
     leiden call leaked 5 frames (comm0, last selfw, mapping, sub2comm,
     comps_u) for the life of the session, and bench's between-query
     sweep exempted locally-checkpointed blocks so they accumulated
-    across all 133 queries. Forces the distributed path on a small
-    planted graph and asserts the pinned-RDD set returns to baseline
+    across all 133 queries. Covers every loop operator, with both
+    driver mirrors disabled so the distributed loops run on a small
+    planted graph, and asserts the pinned-RDD set returns to baseline
     after _release_checkpoint(result)."""
     import echo_chambers_detection_spark.operators.graph as G
     from echo_chambers_detection_spark.operators.graph import (
@@ -615,31 +676,54 @@ def test_loop_operators_release_all_checkpoints(spark):
     from echo_chambers_detection_spark.operators.planted import (
         planted_partition_edges,
     )
-
-    def pinned():
-        return {
-            int(i)
-            for i in spark.sparkContext._jsc.getPersistentRDDs()
-            .keySet()
-            .toArray()
-        }
+    from echo_chambers_detection_spark.operators.triangles import ktruss_edges
 
     e = planted_partition_edges(spark, 4, 60, 5, bridges=True, partitions=4)
-    old = G.LOCAL_GRAPH_EDGE_LIMIT
-    G.LOCAL_GRAPH_EDGE_LIMIT = 0  # force the distributed loops
+    u = e.select("u1", "u2")
+    # both endpoints of each edge engage post "p<u2>"
+    post = F.concat(F.lit("p"), "u2").alias("post_uri")
+    eng = u.select(F.col("u1").alias("user_did"), post).unionAll(
+        u.select(F.col("u2").alias("user_did"), post)
+    )
+    old = G.LOCAL_GRAPH_EDGE_LIMIT, G.LOCAL_TRAVERSAL_EDGE_LIMIT
+    # force the distributed loops
+    G.LOCAL_GRAPH_EDGE_LIMIT = G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
     try:
         for name, fn in [
             ("louvain", lambda: G.louvain(e, max_levels=2, max_rounds=2)),
             ("leiden", lambda: G.leiden(e, max_levels=2, max_rounds=2)),
-            ("pagerank", lambda: G.pagerank(
-                e.select("u1", "u2"), max_iter=3, tol=0.0
+            ("pagerank", lambda: G.pagerank(u, max_iter=3, tol=0.0)),
+            ("pagerank_directed", lambda: G.pagerank(
+                u, max_iter=3, tol=1e-12, directed=True
             )),
+            ("pagerank_coengagement", lambda: G.pagerank_coengagement(
+                eng, max_iter=2, tol=1e-12
+            )),
+            ("kcore", lambda: G.kcore(u)),
+            ("connected_components", lambda: G.connected_components(u)),
+            ("label_propagation", lambda: G.label_propagation(u, max_iter=2)),
+            ("bfs_distances", lambda: G.bfs_distances(u, max_iter=3)),
+            ("bfs_landmark_distances", lambda: G.bfs_landmark_distances(
+                u, n_landmarks=2, max_iter=3
+            )),
+            ("bellman_ford_khop", lambda: G.bellman_ford_khop(e, k=3)),
+            ("bellman_ford_landmark", lambda: G.bellman_ford_landmark(
+                e, n_landmarks=2, k=3
+            )),
+            ("shortest_path_counts", lambda: G.shortest_path_counts(
+                u, n_sources=2, max_iter=3
+            )),
+            ("brandes_betweenness", lambda: G.brandes_betweenness(
+                u, n_sources=2, max_iter=3
+            )),
+            ("seeded_random_walks", lambda: G.seeded_random_walks(u, length=2)),
+            ("ktruss_edges", lambda: ktruss_edges(u, k=4)),
         ]:
-            base = pinned()
+            base = _pinned(spark)
             out = fn()
             out.count()  # materialize like a caller would
             _release_checkpoint(out)
-            leaked = pinned() - base
+            leaked = _pinned(spark) - base
             assert not leaked, f"{name} leaked pinned RDDs: {sorted(leaked)}"
     finally:
-        G.LOCAL_GRAPH_EDGE_LIMIT = old
+        G.LOCAL_GRAPH_EDGE_LIMIT, G.LOCAL_TRAVERSAL_EDGE_LIMIT = old
