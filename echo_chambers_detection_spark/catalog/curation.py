@@ -24,6 +24,7 @@ from echo_chambers_detection_spark.catalog.vector import (
     _ORACLE_EMB_EXPLODED,
     _emb,
 )
+from echo_chambers_detection_spark.session import driver_frame
 
 # ===========================================================================
 # Training-data pipeline ops (SURVEY.md M6 / BASELINE.json north star):
@@ -2776,9 +2777,7 @@ def q_url_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         curl.alias("curl"),
         F.regexp_extract(curl, "^[^/]+", 0).alias("host"),
     )
-    bl = spark.createDataFrame(
-        [(h,) for h in _URL_BLOCKLIST], "bhost string"
-    )
+    bl = driver_frame(spark, [(h,) for h in _URL_BLOCKLIST], "bhost string")
     joined = hosts.join(
         F.broadcast(bl), hosts.host == bl.bhost, "left"
     )

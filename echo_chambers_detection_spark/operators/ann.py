@@ -24,6 +24,7 @@ from echo_chambers_detection_spark.functions.vector import (
     cosine_similarity,
     l2_normalize,
 )
+from echo_chambers_detection_spark.session import driver_frame
 
 
 def with_query_vector(embeddings: DataFrame, query: DataFrame) -> DataFrame:
@@ -678,8 +679,8 @@ def ivf_index_build(
     cent_rows = [
         (i, [float(x) for x in cent[i]]) for i in range(cent.shape[0])
     ]
-    spark.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
+    driver_frame(
+        spark, cent_rows, "cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
     )
@@ -1021,8 +1022,8 @@ def pq_index_build(
         for s in range(books.shape[0])
         for c in range(books.shape[1])
     ]
-    spark.createDataFrame(
-        rows, "sub int, cell int, centroid array<double>"
+    driver_frame(
+        spark, rows, "sub int, cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebooks")
     )

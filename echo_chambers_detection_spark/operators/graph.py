@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from echo_chambers_detection_spark.session import driver_frame
+
 try:  # the only failure modes _materialize's fallback should absorb are
     # "API removed/renamed" (AttributeError/TypeError) and py4j
     # PROTOCOL errors (missing method). Py4JJavaError — a real JVM
@@ -200,15 +202,6 @@ def _traversal_local_tbl(edges: DataFrame, weighted: bool = False):
         ):
             return None
     return tbl
-
-
-def _traversal_result(spark, pdf, cols_types):
-    """Assemble a local-mirror result DataFrame with the distributed
-    loop's exact schema (node/seed columns keep the input id dtype)."""
-    schema = StructType(
-        [StructField(c, t, True) for c, t in cols_types]
-    )
-    return spark.createDataFrame(pdf, schema)
 
 
 def _state_hint(small_state: bool):
@@ -477,11 +470,15 @@ def _traversal_mirror(
     pdf = getattr(localgraph, kernel)(tbl, **kw)
     if pdf is None:
         return None
+    # the distributed loop's exact schema: node/seed columns keep the
+    # input id dtype
     node_t = edges.schema["u1"].dataType
-    return _traversal_result(
+    return driver_frame(
         edges.sparkSession,
         pdf,
-        [(c, node_t if t is None else t) for c, t in schema],
+        StructType(
+            [StructField(c, node_t if t is None else t) for c, t in schema]
+        ),
     )
 
 
@@ -510,8 +507,9 @@ def kcore(edges: DataFrame, max_rounds: int = 10_000) -> DataFrame:
             )
 
             result = kcore_local(sym.toPandas())
-            return edges.sparkSession.createDataFrame(
-                [(node, int(c)) for node, c in result.items()],
+            return driver_frame(
+                edges.sparkSession,
+                result.items(),
                 "node string, core_value bigint",
             )
         # Peel over the ALIVE node set, not just nodes that still have
@@ -556,8 +554,8 @@ def kcore(edges: DataFrame, max_rounds: int = 10_000) -> DataFrame:
                 prev=sym,
             )
         if not assigned:
-            return edges.sparkSession.createDataFrame(
-                [], "node string, core_value bigint"
+            return driver_frame(
+                edges.sparkSession, [], "node string, core_value bigint"
             )
         return g.result(reduce(DataFrame.unionAll, assigned), *lows)
 
@@ -606,8 +604,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             result = connected_components_local(
                 sym.where(F.col("src") <= F.col("dst")).toPandas()
             )
-            return edges.sparkSession.createDataFrame(
-                list(result.items()), "node string, component string"
+            return driver_frame(
+                edges.sparkSession,
+                result.items(),
+                "node string, component string",
             )
         labels = g.keep(_nodes_of_sym(sym).withColumn("component", F.col("node")))
         hint = _state_hint(_probe_small(labels))
@@ -864,8 +864,8 @@ def bfs_landmark_distances(
         dist = g.keep(
             nodes.crossJoin(
                 F.broadcast(
-                    nodes.sparkSession.createDataFrame(
-                        [(s,) for s in seeds], seed_schema
+                    driver_frame(
+                        nodes.sparkSession, [(s,) for s in seeds], seed_schema
                     )
                 )
             ).select(
@@ -1341,14 +1341,16 @@ def seeded_random_walks(
                         if seeds is None
                         else seeds.schema["wid"].dataType
                     )
-                    return _traversal_result(
+                    return driver_frame(
                         edges.sparkSession,
                         pdf,
-                        [
-                            ("wid", wid_t),
-                            ("step", LongType()),
-                            ("node", node_t),
-                        ],
+                        StructType(
+                            [
+                                StructField("wid", wid_t),
+                                StructField("step", LongType()),
+                                StructField("node", node_t),
+                            ]
+                        ),
                     )
             # Mirror declined (walker-skew budget) but the edge list is
             # ALREADY collected and bounded — replay it (and the
@@ -1531,8 +1533,8 @@ def pagerank(
             ranks = pagerank_local(
                 sym.toPandas(), damping, max_iter, tol, seeds=seeds
             )
-            return edges.sparkSession.createDataFrame(
-                list(ranks.items()), "node string, rank double"
+            return driver_frame(
+                edges.sparkSession, ranks.items(), "node string, rank double"
             )
         out_strength = sym.groupBy("src").agg(F.sum("weight").alias("_wdeg"))
         shares = g.keep(
@@ -1543,8 +1545,8 @@ def pagerank(
         )
         n = all_nodes.count()
         if n == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "node string, rank double"
+            return driver_frame(
+                edges.sparkSession, [], "node string, rank double"
             )
         # all_nodes is a lazy view over sym: the first rank generation
         # supersedes sym's checkpoint
@@ -1657,7 +1659,7 @@ def pagerank_coengagement(
         )
         n = stats.count()
         if n == 0:
-            return eng.sparkSession.createDataFrame([], "node string, rank double")
+            return driver_frame(eng.sparkSession, [], "node string, rank double")
         ranks = g.keep(
             stats.withColumn("_s", _teleport(seeds, n))
             .withColumn("rank", F.col("_s"))
@@ -2015,8 +2017,8 @@ def louvain(
         rows = sym.toPandas()
         _release_checkpoint(sym)
         result = louvain_local(rows, m, max_levels, max_rounds)
-        return spark.createDataFrame(
-            list(result.items()), "node string, community string"
+        return driver_frame(
+            spark, result.items(), "node string, community string"
         )
 
     # one distinct over the edge frame: selfw shares mapping's
@@ -2080,8 +2082,8 @@ def louvain(
             coarse = louvain_local(
                 rows, m, remaining, max_rounds, selfw_rows=selfw_rows
             )
-            coarse_df = spark.createDataFrame(
-                list(coarse.items()), "community string, _next string"
+            coarse_df = driver_frame(
+                spark, coarse.items(), "community string, _next string"
             )
             base_mapping = mapping  # keep the checkpoint ref for release
             mapping = base_mapping.join(
@@ -2124,8 +2126,8 @@ def modularity_optimization(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
         rows = sym.toPandas()
         _release_checkpoint(sym)
         result = modularity_local(rows, m, max_rounds)
-        return edges.sparkSession.createDataFrame(
-            list(result.items()), "node string, community string"
+        return driver_frame(
+            edges.sparkSession, result.items(), "node string, community string"
         )
     nodes = _nodes_of_sym(sym)
     selfw = nodes.select("node", F.lit(0.0).alias("w_self"))
@@ -2642,8 +2644,8 @@ def leiden(
         rows = sym.toPandas()
         _release_checkpoint(sym)
         result = leiden_local(rows, m, max_levels, max_rounds, gamma=gamma)
-        return edges.sparkSession.createDataFrame(
-            list(result.items()), "node string, community string"
+        return driver_frame(
+            edges.sparkSession, result.items(), "node string, community string"
         )
 
     sym0 = sym
@@ -2772,8 +2774,10 @@ def leiden(
                     max_rounds,
                     gamma=gamma,
                 )
-                lab_df = edges.sparkSession.createDataFrame(
-                    list(labels.items()), "agg string, community string"
+                lab_df = driver_frame(
+                    edges.sparkSession,
+                    labels.items(),
+                    "agg string, community string",
                 )
                 out = _materialize(
                     mapping.join(F.broadcast(lab_df), "agg").select(
@@ -2837,8 +2841,8 @@ def leiden(
             max_rounds,
             gamma=gamma,
         )
-        lab_df = edges.sparkSession.createDataFrame(
-            list(labels.items()), "agg string, community string"
+        lab_df = driver_frame(
+            edges.sparkSession, labels.items(), "agg string, community string"
         )
         out = _materialize(
             mapping.join(F.broadcast(lab_df), "agg").select(

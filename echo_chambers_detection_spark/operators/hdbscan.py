@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from echo_chambers_detection_spark.session import driver_frame
+
 # merges at distance 0 (identical vectors) would give lambda = 1/w = inf;
 # distances are rounded to 1e-6 upstream, so half an ulp is a safe floor
 _MIN_W = 1e-7
@@ -83,12 +85,66 @@ def _rowwise_topk(d, rows_ids, cols_ids, kk):
     )
 
 
+# Row cap of one k-NN tile (a <=128 MB pair matrix): it sizes the derived
+# block count, and an input of at most this many rows runs its tiles on
+# the driver instead of in a pandas UDF.
+KNN_TILE_ROWS = 4096
+
+
+def _tile_topk(pdf, k: int):
+    """One (bi, bj) tile of `knn_graph`: per-row top-(k+4) candidates of
+    the rows of block bi against those of block bj, both directions.
+    `pdf` holds the tile's rows (_id, _vec, _b) and its bi, bj keys."""
+    import numpy as np
+    import pandas as pd
+
+    bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
+    left = pdf[pdf["_b"] == bi]
+    right = pdf[pdf["_b"] == bj]
+    if left.empty or right.empty:
+        return pd.DataFrame({"src": [], "dst": [], "dist": []})
+    lx = np.stack(left["_vec"].to_numpy()).astype("float64")
+    rx = np.stack(right["_vec"].to_numpy()).astype("float64")
+    ln = np.linalg.norm(lx, axis=1)
+    rn = np.linalg.norm(rx, axis=1)
+    denom = np.outer(ln, rn)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        raw = np.where(
+            denom > 0, 1.0 - (lx @ rx.T) / denom, np.inf
+        )
+    lid = left["_id"].to_numpy()
+    rid = right["_id"].to_numpy()
+    if bi == bj:
+        raw[lid[:, None] == rid[None, :]] = np.inf  # no self edges
+    # tile-local preselection keeps k+4 per row; the engine rounding
+    # (F.round, the repo's oracle-matched convention) and the
+    # (dist, dst) tie-break happen in knn_graph's global window, so
+    # rounding-induced ties near the cutoff still resolve the same way
+    # in both engines. The +4 pad covers candidates a 1e-6 rounding
+    # could promote across the raw boundary. Tie sets are pruned under
+    # the SAME (dist, dst) order the global window uses (see
+    # _rowwise_topk) — raw argpartition alone dropped an arbitrary,
+    # shuffle-order-dependent subset when >k+4 candidates tied (e.g.
+    # many duplicate vectors at dist 0).
+    parts = [_rowwise_topk(raw, lid, rid, k + 4)]
+    if bi != bj:
+        parts.append(_rowwise_topk(raw.T, rid, lid, k + 4))
+    return pd.DataFrame(
+        {
+            "src": np.concatenate([p[0] for p in parts]),
+            "dst": np.concatenate([p[1] for p in parts]),
+            "dist": np.concatenate([p[2] for p in parts]),
+        }
+    )
+
+
 def knn_graph(
     embeddings: DataFrame,
     k: int,
     num_blocks: int | None = 8,
     id_col: str = "node",
     vec_col: str = "vector",
+    n: int | None = None,
 ) -> DataFrame:
     """(src, dst, dist) — each node's k nearest neighbors by cosine
     distance (1 - cosine, rounded 1e-6). Same tile shape as
@@ -99,15 +155,19 @@ def knn_graph(
     num_blocks=None derives the block count from n (one count job): the
     fixed-8 default keeps tile ROW counts growing with n, so the pair
     matrix of one tile is (n/8)² doubles — fine at 77k nodes, executor
-    death at 100×. Derived tiles cap at ~4096 rows (≤128 MB pair
-    matrix) regardless of n. FLOPs stay O(n²) either way — this is the
-    exact path; `knn_graph_ann` is the scale path that prunes the pair
-    space itself."""
-    import pandas as pd
+    death at 100×. Derived tiles cap at KNN_TILE_ROWS rows regardless
+    of n. FLOPs stay O(n²) either way — this is the exact path;
+    `knn_graph_ann` is the scale path that prunes the pair space itself.
 
+    `n` is the input's row count when the caller already has it. When
+    it is known and at most KNN_TILE_ROWS, the rows are collected over
+    Arrow and the same tiles run on the driver: no pandas UDF, so no
+    Python worker. The candidates take the same rounding and window
+    either way, so both paths give the same rows."""
     if num_blocks is None:
-        n = embeddings.count()
-        num_blocks = max(8, -(-n // 4096))
+        if n is None:
+            n = embeddings.count()
+        num_blocks = max(8, -(-n // KNN_TILE_ROWS))
 
     blocked = embeddings.select(
         F.col(id_col).alias("_id"),
@@ -116,68 +176,33 @@ def knn_graph(
         .cast("int")
         .alias("_b"),
     )
-    tile_keys = F.array(
-        *[
-            F.struct(
-                F.least(F.col("_b"), F.lit(j)).alias("bi"),
-                F.greatest(F.col("_b"), F.lit(j)).alias("bj"),
-            )
-            for j in range(num_blocks)
-        ]
-    )
-    replicated = blocked.select(
-        "_id",
-        "_vec",
-        "_b",
-        F.explode(F.array_distinct(tile_keys)).alias("_tile"),
-    ).select("_id", "_vec", "_b", "_tile.bi", "_tile.bj")
-
-    def tile_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
-        left = pdf[pdf["_b"] == bi]
-        right = pdf[pdf["_b"] == bj]
-        if left.empty or right.empty:
-            return pd.DataFrame({"src": [], "dst": [], "dist": []})
-        lx = np.stack(left["_vec"].to_numpy()).astype("float64")
-        rx = np.stack(right["_vec"].to_numpy()).astype("float64")
-        ln = np.linalg.norm(lx, axis=1)
-        rn = np.linalg.norm(rx, axis=1)
-        denom = np.outer(ln, rn)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            raw = np.where(
-                denom > 0, 1.0 - (lx @ rx.T) / denom, np.inf
-            )
-        lid = left["_id"].to_numpy()
-        rid = right["_id"].to_numpy()
-        if bi == bj:
-            raw[lid[:, None] == rid[None, :]] = np.inf  # no self edges
-        # tile-local preselection keeps k+4 per row; the engine rounding
-        # (F.round, the repo's oracle-matched convention) and the
-        # (dist, dst) tie-break happen in the global window below, so
-        # rounding-induced ties near the cutoff still resolve the same
-        # way in both engines. The +4 pad covers candidates a 1e-6
-        # rounding could promote across the raw boundary. Tie sets are
-        # pruned under the SAME (dist, dst) order the global window
-        # uses (see _rowwise_topk) — raw argpartition alone dropped an
-        # arbitrary, shuffle-order-dependent subset when >k+4
-        # candidates tied (e.g. many duplicate vectors at dist 0).
-        parts = [_rowwise_topk(raw, lid, rid, k + 4)]
-        if bi != bj:
-            parts.append(_rowwise_topk(raw.T, rid, lid, k + 4))
-        return pd.DataFrame(
-            {
-                "src": np.concatenate([p[0] for p in parts]),
-                "dst": np.concatenate([p[1] for p in parts]),
-                "dist": np.concatenate([p[2] for p in parts]),
-            }
-        )
-
     id_type = dict(embeddings.dtypes)[id_col]
-    cand = replicated.groupBy("bi", "bj").applyInPandas(
-        tile_topk, schema=f"src {id_type}, dst {id_type}, dist double"
-    )
+    cand_schema = f"src {id_type}, dst {id_type}, dist double"
+    if n is not None and n <= KNN_TILE_ROWS:
+        cand = driver_frame(
+            embeddings.sparkSession,
+            _driver_tiles(blocked.toArrow().to_pandas(), num_blocks, k),
+            cand_schema,
+        )
+    else:
+        tile_keys = F.array(
+            *[
+                F.struct(
+                    F.least(F.col("_b"), F.lit(j)).alias("bi"),
+                    F.greatest(F.col("_b"), F.lit(j)).alias("bj"),
+                )
+                for j in range(num_blocks)
+            ]
+        )
+        replicated = blocked.select(
+            "_id",
+            "_vec",
+            "_b",
+            F.explode(F.array_distinct(tile_keys)).alias("_tile"),
+        ).select("_id", "_vec", "_b", "_tile.bi", "_tile.bj")
+        cand = replicated.groupBy("bi", "bj").applyInPandas(
+            lambda pdf: _tile_topk(pdf, k), schema=cand_schema
+        )
     # decimal rounding JVM-side (HALF_UP) — same engine and convention as
     # every other oracle-checked similarity operator; np.round's
     # scaled-float half-even can disagree with SQL ROUND at boundaries
@@ -190,6 +215,23 @@ def knn_graph(
         .where(F.col("_rn") <= k)
         .drop("_rn")
     )
+
+
+def _driver_tiles(pdf, num_blocks: int, k: int):
+    """`knn_graph`'s tiles over its collected (_id, _vec, _b) rows: every
+    (bi, bj) group of the UDF path whose two blocks both hold rows,
+    through the same `_tile_topk`. Empty tiles are skipped, which also
+    keeps their untyped empty frames from widening the id dtype."""
+    import pandas as pd
+
+    present = set(pdf["_b"].tolist())
+    parts = [
+        _tile_topk(pdf[pdf["_b"].isin((bi, bj))].assign(bi=bi, bj=bj), k)
+        for bi in range(num_blocks)
+        for bj in range(bi, num_blocks)
+        if bi in present and bj in present
+    ]
+    return pd.concat(parts, ignore_index=True) if parts else []
 
 
 def knn_graph_ann(
@@ -387,12 +429,9 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
         picked = _kruskal_local(
             list(zip(rows["u1"], rows["u2"], rows["w"]))
         )
-        spark = edges.sparkSession
-        if not picked:
-            return spark.createDataFrame(
-                [], "u1 string, u2 string, w double"
-            )
-        return spark.createDataFrame(picked, "u1 string, u2 string, w double")
+        return driver_frame(
+            edges.sparkSession, picked, "u1 string, u2 string, w double"
+        )
 
     comp = _materialize(
         e.select(F.col("u1").alias("node"))
@@ -454,11 +493,11 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
             )
 
             labels = connected_components_local(c_edges.toPandas())
-            remap_df = spark_s.createDataFrame(
-                list(labels.items()), "comp string, component string"
+            remap_df = driver_frame(
+                spark_s, labels.items(), "comp string, component string"
             )
             new_comp = _materialize(
-                comp.join(F.broadcast(remap_df), "comp", "left").select(
+                comp.join(remap_df, "comp", "left").select(
                     "node",
                     F.coalesce("component", F.col("comp")).alias("comp"),
                 )
@@ -485,9 +524,10 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
             _release_checkpoint(comp, remap)
         comp = new_comp
     _release_checkpoint(comp, e)
-    spark = edges.sparkSession
     if not mst_parts:
-        return spark.createDataFrame([], "u1 string, u2 string, w double")
+        return driver_frame(
+            edges.sparkSession, [], "u1 string, u2 string, w double"
+        )
     out = mst_parts[0]
     for p in mst_parts[1:]:
         out = out.unionAll(p)
@@ -1762,8 +1802,8 @@ def condense_two_level(
                 .count()
                 .join(
                     F.broadcast(
-                        spark.createDataFrame(
-                            [(c,) for c in touched], "comp string"
+                        driver_frame(
+                            spark, [(c,) for c in touched], "comp string"
                         )
                     ),
                     "comp",
@@ -1825,8 +1865,8 @@ def condense_two_level(
         node_comp = node_comp_fine
         comp_edges = comp_edges_fine
     else:
-        map_df = spark.createDataFrame(
-            list(mapping.items()) or [("", "")], "comp string, root string"
+        map_df = driver_frame(
+            spark, mapping.items(), "comp string, root string"
         )
         node_comp = _materialize(
             node_comp_fine.join(F.broadcast(map_df), "comp", "left").select(
@@ -1852,8 +1892,8 @@ def condense_two_level(
     # per-component condense of every enterable (>= mcs) component:
     # group = the component's internal edges with both endpoints' attrs
     enterable = {c for c, s in comp_sizes.items() if s >= min_cluster_size}
-    ent_df = spark.createDataFrame(
-        [(c,) for c in sorted(enterable)] or [("",)], "comp string"
+    ent_df = driver_frame(
+        spark, [(c,) for c in sorted(enterable)], "comp string"
     )
     grp = (
         comp_edges.join(F.broadcast(ent_df), "comp", "leftsemi")
@@ -2001,14 +2041,14 @@ def condense_two_level(
     ]
     parts = []
     if whole:
-        whole_df = spark.createDataFrame(whole, "comp string, _lab string")
+        whole_df = driver_frame(spark, whole, "comp string, _lab string")
         parts.append(
             node_comp.join(F.broadcast(whole_df), "comp").select(
                 F.col("node").alias("snode"), "_lab"
             )
         )
     if internal_comps:
-        int_df = spark.createDataFrame(internal_comps, "comp string")
+        int_df = driver_frame(spark, internal_comps, "comp string")
         parts.append(
             comp_out.where(F.col("kind") == "n")
             .join(F.broadcast(int_df), "comp", "leftsemi")
@@ -2016,7 +2056,7 @@ def condense_two_level(
         )
     _release_checkpoint(e, attrs, comp_edges)
     if not parts:
-        return spark.createDataFrame([], "snode string, _lab string")
+        return driver_frame(spark, [], "snode string, _lab string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2150,12 +2190,12 @@ def hdbscan_cluster(
         knn = _materialize(
             knn_graph(
                 embeddings, k=k, num_blocks=num_blocks,
-                id_col=id_col, vec_col=vec_col,
+                id_col=id_col, vec_col=vec_col, n=n,
             )
         )
     core = core_distances(knn, min_pts)
     mre = mutual_reachability_edges(knn, core)
-    # (forest is either a local createDataFrame or a union of
+    # (forest is either a driver_frame or a union of
     # checkpointed Borůvka parts — the gate count below re-reads
     # cached blocks, not the k-NN pipeline)
     forest = minimum_spanning_forest(mre)
@@ -2228,8 +2268,8 @@ def hdbscan_cluster(
         )
 
         if labels:
-            lab_sn = spark.createDataFrame(
-                list(labels.items()), "snode string, _lab string"
+            lab_sn = driver_frame(
+                spark, labels.items(), "snode string, _lab string"
             )
             lab_df = member_map.join(lab_sn, "snode").select(
                 F.col("member").alias(id_col), "_lab"
@@ -2256,8 +2296,8 @@ def hdbscan_cluster(
     from echo_chambers_detection_spark.operators.graph import carry_ckpt
 
     if labels:
-        lab_df = spark.createDataFrame(
-            list(labels.items()), f"{id_col} string, _lab string"
+        lab_df = driver_frame(
+            spark, labels.items(), f"{id_col} string, _lab string"
         )
         return carry_ckpt(
             embeddings.select(id_col)

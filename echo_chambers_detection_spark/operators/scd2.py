@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from echo_chambers_detection_spark.session import driver_frame
+
 # The six algorithm names the reference seeds
 # (project/postgres/community.py:12-19).
 ALGORITHM_NAMES = (
@@ -129,9 +131,7 @@ def seed_algorithms(spark, existing: DataFrame | None = None) -> DataFrame:
     (project/postgres/community.py:51-59; SURVEY.md J8/S15): insert the six
     names that are not already present, ids deterministic (md5 of name —
     the engine's uuid5 stand-in, SURVEY.md F2)."""
-    names = spark.createDataFrame(
-        [(n,) for n in ALGORITHM_NAMES], "name string"
-    )
+    names = driver_frame(spark, [(n,) for n in ALGORITHM_NAMES], "name string")
     if existing is not None:
         names = names.join(existing.select("name"), "name", "leftanti")
     return names.select(F.md5(F.col("name")).alias("id"), "name")

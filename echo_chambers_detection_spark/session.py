@@ -10,13 +10,24 @@ scale decision:
   which makes the static number much less load-bearing).
 - Arrow enabled: every pandas_udf / applyInPandas boundary is batched.
 - UTC session timezone: deterministic timestamp semantics vs the oracle.
+
+Arrow hand-off rule: every frame the driver builds from Python data
+(mirror results, small lookup tables, empty results) goes through
+`driver_frame`, which hands Spark a typed `pyarrow.Table`. That path is
+JVM-only at any row count, including 0, whatever
+`spark.sql.execution.arrow.pyspark.enabled` says. A Python list or a
+pandas frame passed to `createDataFrame` instead goes through
+`sc.parallelize`, whose PythonRDD starts a Python daemon plus a worker
+per slice (pandas takes that path at 0 rows or with Arrow off).
+`tests/test_arrow_handoff.py` holds the package to this rule.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -101,3 +112,33 @@ def get_spark(
     except Exception:
         pass  # cosmetic only — never fail session construction over it
     return spark
+
+
+def driver_frame(spark: SparkSession, data, schema: str | StructType) -> DataFrame:
+    """A Spark frame of driver-side `data` with exactly `schema` (a DDL
+    string or StructType), built as a typed Arrow table (module
+    docstring: the Arrow hand-off rule).
+
+    `data` is a pandas DataFrame, whose columns map to the schema by
+    position as in `createDataFrame(pdf, schema)`, or an iterable of row
+    tuples."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    )
+    arrow_schema = to_arrow_schema(struct)
+    if hasattr(data, "iloc"):
+        cols = [
+            pa.Array.from_pandas(data.iloc[:, i], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ]
+    else:
+        rows = list(data)
+        cols = [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ]
+    table = pa.Table.from_arrays(cols, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)

@@ -35,6 +35,8 @@ from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from echo_chambers_detection_spark.session import driver_frame
+
 PROFILE_SCHEMA = "did string, handle string, display_name string, description string"
 POST_SCHEMA = "uri string, cid string, text string, author string"
 LIKE_SCHEMA = "user_did string, uri string, type string"
@@ -278,9 +280,7 @@ def crawl_like_graph(
     next-wave discovery — the reference's invariants."""
     import pandas as pd  # noqa: F401  (executor dependency, fail fast)
 
-    seeds = spark.createDataFrame(
-        [(d,) for d in seed_dids], "did string"
-    ).distinct()
+    seeds = driver_frame(spark, [(d,) for d in seed_dids], "did string").distinct()
 
     # --- step 1: seed's liked posts -> likers = first frontier --------
     def seed_fn(batches):
@@ -317,9 +317,9 @@ def crawl_like_graph(
         .localCheckpoint(eager=True)
     )
 
-    empty_prof = spark.createDataFrame([], PROFILE_SCHEMA)
-    empty_post = spark.createDataFrame([], POST_SCHEMA)
-    empty_like = spark.createDataFrame([], LIKE_SCHEMA)
+    empty_prof = driver_frame(spark, [], PROFILE_SCHEMA)
+    empty_post = driver_frame(spark, [], POST_SCHEMA)
+    empty_like = driver_frame(spark, [], LIKE_SCHEMA)
     profiles_acc, posts_acc, likes_acc = empty_prof, empty_post, empty_like
 
     for _ in range(cfg.max_iterations):

@@ -19,6 +19,7 @@ from echo_chambers_detection_spark.operators.planted import (
     planted_arc_embeddings,
     planted_partition_edges,
 )
+from tests.conftest import SF_ORACLE
 
 
 def _jobs_so_far(spark) -> int:
@@ -283,3 +284,31 @@ def test_pagerank_tol_distributed_job_count(spark, monkeypatch):
     )
     e.unpersist()
     assert n <= 76, f"distributed pagerank(tol>0) grew to {n} jobs (was 73)"
+
+
+# The paper's Run-analysis press, on the oracle tables. Counts are with
+# the driver hand-offs on Arrow and the small k-NN on the driver; they
+# move by up to 2 between runs of one session (local[4], [8] and [16]),
+# so the bounds sit 3 above the highest.
+
+
+def _analysis_jobs(spark, query) -> int:
+    return _count_jobs(spark, lambda: query(spark, SF_ORACLE).collect())
+
+
+def test_analysis_run_metrics_job_count(spark):
+    from echo_chambers_detection_spark.catalog.metrics import (
+        q_analysis_run_metrics,
+    )
+
+    n = _analysis_jobs(spark, q_analysis_run_metrics)
+    assert n <= 57, f"analysis_run_metrics grew to {n} jobs (was 52-54)"
+
+
+def test_analysis_run_hdbscan_job_count(spark):
+    from echo_chambers_detection_spark.catalog.metrics import (
+        q_analysis_run_hdbscan,
+    )
+
+    n = _analysis_jobs(spark, q_analysis_run_hdbscan)
+    assert n <= 91, f"analysis_run_hdbscan grew to {n} jobs (was 86-88)"
