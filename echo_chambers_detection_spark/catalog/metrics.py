@@ -28,15 +28,11 @@ from echo_chambers_detection_spark.catalog.graph import (
 # convention then filtered (P4), vectors = embeddings.embedding.
 
 
-def _metric_world(spark: SparkSession, sf_dir: str):
-    from echo_chambers_detection_spark.operators.graph import (
-        _release_checkpoint,
-        tracked_checkpoint,
-    )
-    from echo_chambers_detection_spark.operators.metrics import restrict_to_members
-
+def _metric_inputs(spark: SparkSession, sf_dir: str):
+    """(pg, edges, labels, emb) of the metric world: the post graph,
+    which owns the engagement checkpoint, its (u1, u2) edges, the
+    noise-filtered labels and the vectors."""
     pg = _post_graph(spark, sf_dir)
-    edges = pg.select("u1", "u2")
     raw = _t(spark, sf_dir, "embeddings")
     labels = (
         raw.select(
@@ -47,10 +43,17 @@ def _metric_world(spark: SparkSession, sf_dir: str):
         )
         .where(F.col("label") != -1)
     )
-    emb = raw.select(
-        F.col("vec_id").cast("string").alias("node"),
-        F.col("embedding").alias("vector"),
+    return pg, pg.select("u1", "u2"), labels, _emb_nodes(spark, sf_dir)
+
+
+def _metric_world(spark: SparkSession, sf_dir: str):
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+        tracked_checkpoint,
     )
+    from echo_chambers_detection_spark.operators.metrics import restrict_to_members
+
+    pg, edges, labels, emb = _metric_inputs(spark, sf_dir)
     edges_m, members = restrict_to_members(edges, labels, emb)
     # The metric DAGs reference edges_m/members from many branches
     # (degrees, node sets, modularity subgraph, similarities); without
@@ -170,28 +173,21 @@ LEFT JOIN vol v USING (label)
 LEFT JOIN varc USING (label), tot t
 """,
     doc="Per-community metric table (reference per_community_table, "
-    "project/metrics/metrics.py:127-205; SURVEY.md A12) — one distributed "
-    "pipeline instead of an O(C·E) driver loop",
+    "project/metrics/metrics.py:127-205; SURVEY.md A12) — one O(E) pass "
+    "instead of an O(C·E) driver loop: numpy on the driver for a "
+    "community-sized member set, one distributed pipeline above it",
 )
 def q_community_metrics_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.metrics import community_metrics
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+        carry_ckpt,
+    )
+    from echo_chambers_detection_spark.operators.metrics import community_table
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-    edges_m, members, emb = _metric_world(spark, sf_dir)
-    t = community_metrics(edges_m, members, emb)
-    return carry_ckpt(t.select(
-        "label",
-        "size",
-        F.round("cohesion", 6).alias("cohesion"),
-        F.round("separation", 6).alias("separation"),
-        F.round("ecs", 6).alias("ecs"),
-        F.round("conductance", 6).alias("conductance"),
-        F.round("variance", 6).alias("variance"),
-        F.round("homophily", 6).alias("homophily"),
-        F.round("density_internal", 6).alias("density_internal"),
-        "internal_edge_count",
-    ), t, edges_m, members)
+    pg, edges, labels, emb = _metric_inputs(spark, sf_dir)
+    t = community_table(edges, labels, emb)
+    _release_checkpoint(pg)
+    return carry_ckpt(t.select(*_rounded()), t)
 
 
 @register(
@@ -305,6 +301,23 @@ def _emb_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rounded() -> list:
+    """The per-community table's columns with the metrics rounded to 6
+    places in Spark (HALF_UP, as the oracles expect)."""
+    return [
+        "label",
+        "size",
+        *(
+            F.round(c, 6).alias(c)
+            for c in (
+                "cohesion", "separation", "ecs", "conductance",
+                "variance", "homophily", "density_internal",
+            )
+        ),
+        "internal_edge_count",
+    ]
+
+
 def _mint_and_metrics(
     edges: DataFrame, labels: DataFrame, emb: DataFrame, run_key: str
 ) -> DataFrame:
@@ -316,43 +329,25 @@ def _mint_and_metrics(
     minted ids.
 
     Checkpoint hygiene: edges/labels are consumed here and never used
-    again — once the eager coalesced checkpoints below truncate the
-    lineage, any checkpoint blocks the CALLER threaded onto edges/labels
-    (the projection's engagement frame, fastrp/hdbscan/CC internals) are
-    dead and released immediately; the result carries only its own two
-    compacted frames."""
+    again. `community_table` leaves them dead, so any checkpoint blocks
+    the CALLER threaded onto them (the projection's engagement frame,
+    fastrp/hdbscan/CC internals) are released immediately; the result
+    carries only the table's own blocks."""
     from echo_chambers_detection_spark.operators.graph import (
         _release_checkpoint,
         carry_ckpt,
-        tracked_checkpoint,
     )
-    from echo_chambers_detection_spark.operators.metrics import (
-        community_metrics,
-        restrict_to_members,
-    )
+    from echo_chambers_detection_spark.operators.metrics import community_table
 
-    edges_m, members = restrict_to_members(edges, labels, emb)
-    edges_m = tracked_checkpoint(edges_m.coalesce(1))
-    members = tracked_checkpoint(members.coalesce(1))
+    t = community_table(edges, labels, emb)
     _release_checkpoint(edges, labels)
-    t = community_metrics(edges_m, members, emb)
     return carry_ckpt(t.select(
         F.md5(F.concat(F.lit("community:"), F.col("label"))).alias(
             "community_id"
         ),
-        "label",
-        "size",
-        F.round("cohesion", 6).alias("cohesion"),
-        F.round("separation", 6).alias("separation"),
-        F.round("ecs", 6).alias("ecs"),
-        F.round("conductance", 6).alias("conductance"),
-        F.round("variance", 6).alias("variance"),
-        F.round("homophily", 6).alias("homophily"),
-        F.round("density_internal", 6).alias("density_internal"),
-        "internal_edge_count",
+        *_rounded(),
         F.md5(F.lit(run_key)).alias("run_id"),
-    ), t, edges_m, members)
-
+    ), t)
 
 
 @register(

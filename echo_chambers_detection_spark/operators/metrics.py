@@ -16,13 +16,43 @@ NaN/null conventions: the reference mixes 0-defaults (global ecs,
 metrics.py:8-12), NaN (per-community table, metrics.py:161-181), and a
 10000 sentinel (standalone conductance, metrics.py:120). SQL NULL stands
 in for NaN; the sentinel is preserved where the reference has it.
+
+Placement (`community_table`): the per-community table is computed on
+the driver, with numpy, when its member set fits one driver pull of
+DRIVER_TABLE_MEMBERS rows, and by `community_metrics` above that. The
+table's inputs are community-graph sized: members are labeled nodes
+with an embedding, and its edges are those between members, so they
+stay in the thousands even when the raw events are 100 TB. A
+distributed plan over them pays ~15 exchanges, each a job with its
+own codegen, for a few milliseconds of task work. This follows the
+engine's mirror pattern (`graph.LOCAL_GRAPH_EDGE_LIMIT`,
+`hdbscan.KNN_TILE_ROWS`): the distributed path stays the scale path
+and gives the same rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from echo_chambers_detection_spark.functions.vector import cosine_similarity
+from echo_chambers_detection_spark.operators.graph import (
+    _exceeds_rows,
+    carry_ckpt,
+    tracked_checkpoint,
+)
+from echo_chambers_detection_spark.session import driver_frame
+
+# Members (labeled nodes with an embedding) at or below which
+# `community_table` computes on the driver. 4096 members of 128-dim
+# vectors are ~4 MB. 0 forces the distributed path (tests do).
+DRIVER_TABLE_MEMBERS = 4096
+
+_TABLE_COLUMNS = (
+    "size bigint, cohesion double, separation double, ecs double, "
+    "conductance double, variance double, homophily double, "
+    "density_internal double, internal_edge_count bigint"
+)
 
 
 def restrict_to_members(
@@ -182,11 +212,6 @@ def community_metrics(
     # recorded id, so callers could never release it (leak census r10).
     # The frame is community-graph sized (edges_m is already compacted),
     # so the eager materialization costs what the first cache fill did.
-    from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
-        tracked_checkpoint,
-    )
-
     we = tracked_checkpoint(_labeled_edges(edges_m, members, embeddings))
 
     g_nodes = (
@@ -274,6 +299,153 @@ def community_metrics(
             "internal_edge_count",
         ).orderBy(F.desc_nulls_last("ecs"), "label"),
         we,
+    )
+
+
+def community_table(
+    edges: DataFrame, labels: DataFrame, embeddings: DataFrame
+) -> DataFrame:
+    """`community_metrics` of raw inputs, placed by size (module
+    docstring): same columns, same rows, same order.
+
+    edges (u1, u2), labels (node, label) and embeddings (node, vector)
+    as in `restrict_to_members`; `label` keeps its type. The gate is
+    the pull itself, `limit(DRIVER_TABLE_MEMBERS + 1)` over
+    embeddings ⋈ labels, so it costs no count job. Members numpy cannot
+    mirror exactly (`_member_vectors`) take the distributed path too.
+    Either way the caller's edges and labels are dead once this
+    returns, and an empty member set or edge list gives the empty
+    table."""
+    spark = labels.sparkSession
+    schema = f"label {labels.schema['label'].dataType.simpleString()}, {_TABLE_COLUMNS}"
+    if DRIVER_TABLE_MEMBERS > 0:
+        pulled = (
+            labels.select("node", "label")
+            .join(embeddings.select("node", "vector"), "node")
+            .limit(DRIVER_TABLE_MEMBERS + 1)
+            .toArrow()
+        )
+        x = _member_vectors(pulled) if pulled.num_rows <= DRIVER_TABLE_MEMBERS else None
+        if x is not None:
+            nodes = pulled.column("node").to_pandas()
+            u1 = u2 = nodes[:0]
+            if len(nodes):
+                ids = driver_frame(
+                    spark, nodes.to_frame(), StructType([labels.schema["node"]])
+                )
+                e = edges.select("u1", "u2")
+                for c in ("u1", "u2"):
+                    m = F.broadcast(ids.withColumnRenamed("node", c))
+                    e = e.join(m, c, "leftsemi")
+                tbl = e.toArrow()
+                u1, u2 = tbl.column("u1").to_pandas(), tbl.column("u2").to_pandas()
+            table = _table_np(nodes, pulled.column("label").to_pandas(), x, u1, u2)
+            return driver_frame(spark, table, schema)
+
+    # Empty frames stay out of the multi-branch plan: AQE drops the
+    # branches an empty side makes dead but leaves their running stages
+    # to finish (it cancels stages only when the query fails). Those
+    # stages read the checkpoints below, which the caller frees as soon
+    # as its action returns, and their tasks then fail with
+    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
+    edges_m, members = restrict_to_members(edges, labels, embeddings)
+    members = tracked_checkpoint(members.coalesce(1))
+    if _exceeds_rows(members, 0):
+        edges_m = tracked_checkpoint(edges_m.coalesce(1))
+        if _exceeds_rows(edges_m, 0):
+            return carry_ckpt(
+                community_metrics(edges_m, members, embeddings), edges_m, members
+            )
+    return carry_ckpt(driver_frame(spark, [], schema), edges_m, members)
+
+
+def _member_vectors(pulled):
+    """The pulled members' vectors as an (n, d) float64 array, or None
+    when the numpy kernel would not give the distributed rows: null,
+    ragged, empty or NaN vectors, or a null label or repeated node."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = pulled.num_rows
+    vec = pulled.column("vector").combine_chunks()
+    flat = vec.flatten()
+    d = len(flat) // n if n else 0
+    if n and (
+        d == 0
+        or vec.null_count
+        or flat.null_count
+        or pulled.column("label").null_count
+        or pc.count_distinct(pulled.column("node")).as_py() < n
+        or pc.any(pc.not_equal(pc.list_value_length(vec), d)).as_py()
+    ):
+        return None
+    x = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, d)
+    return None if np.isnan(x).any() else np.asfortranarray(x)
+
+
+def _table_np(nodes, labels, x, u1, u2):
+    """`community_metrics` in numpy: members `nodes` with `labels` and
+    vectors `x` (n, d), member edges (u1, u2). Returns the table as a
+    pandas frame in column and row order.
+
+    Cosines sum over dimensions in order, as `cosine_similarity`'s
+    Catalyst `aggregate` does, so an edge's similarity matches the
+    distributed one to the bit; a zero norm gives NaN (NULL), which the
+    averages skip and the edge counts do not."""
+    import numpy as np
+    import pandas as pd
+
+    idx = pd.Index(nodes)
+    a, b = idx.get_indexer(u1), idx.get_indexer(u2)
+    codes, uniq = pd.factorize(np.asarray(labels))
+    k, n_edges = len(uniq), len(a)
+
+    def per_label(keys, vals=None):
+        return np.bincount(keys, vals, minlength=k)
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        dims = range(x.shape[1])
+        norm = np.sqrt(sum((x[:, j] * x[:, j] for j in dims), np.zeros(len(x))))
+        dot = sum((x[a, j] * x[b, j] for j in dims), np.zeros(n_edges))
+        denom = norm[a] * norm[b]
+        sim = np.where(denom > 0, dot / denom, np.nan)
+
+        def mean(keys, vals):
+            ok = ~np.isnan(vals)
+            return per_label(keys[ok], vals[ok]) / per_label(keys[ok])
+
+        la, lb = codes[a], codes[b]
+        same = la == lb
+        cohesion = mean(la[same], sim[same])
+        cut_l = np.concatenate([la[~same], lb[~same]])
+        mes = mean(cut_l, np.concatenate([sim[~same], sim[~same]]))
+        vol = per_label(np.concatenate([la, lb]))
+        min_vol = np.minimum(vol, 2 * n_edges - vol)
+        # community nodes: members with a member edge
+        g_idx = np.flatnonzero(np.bincount(np.concatenate([a, b]), minlength=len(x)))
+        g = codes[g_idx]
+        size = per_label(g)
+        sqd = np.zeros(len(g))
+        for j in dims:
+            col = x[g_idx, j]
+            sqd += (col - (per_label(g, col) / size)[g]) ** 2
+        variance = per_label(g, sqd) / size
+        iec = per_label(la[same])
+        possible = size * (size - 1) / 2
+        table = pd.DataFrame({
+            "label": uniq,
+            "size": size,
+            "cohesion": cohesion,
+            "separation": 1 - mes,
+            "ecs": cohesion * (1 - mes),
+            "conductance": np.where(min_vol > 0, per_label(cut_l) / min_vol, np.nan),
+            "variance": variance,
+            "homophily": cohesion,
+            "density_internal": np.where(possible > 0, iec / possible, np.nan),
+            "internal_edge_count": iec,
+        })
+    return table[size > 0].sort_values(
+        ["ecs", "label"], ascending=[False, True], na_position="last"
     )
 
 

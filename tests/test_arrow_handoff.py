@@ -2,8 +2,9 @@
 
 A frame built from a Python list or a pandas frame enters Spark through
 `sc.parallelize`, a PythonRDD that starts a Python daemon and workers
-even at 0 rows. These tests hold the mirror results, the small k-NN and
-the package source to the Arrow-table path."""
+even at 0 rows. These tests hold the mirror results, the small k-NN,
+the per-community table and the package source to the Arrow-table
+path."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 
 import echo_chambers_detection_spark.operators.graph as G
 import echo_chambers_detection_spark.operators.hdbscan as H
+import echo_chambers_detection_spark.operators.metrics as M
 from echo_chambers_detection_spark.operators.planted import (
     planted_arc_embeddings,
     planted_partition_edges,
@@ -95,6 +97,20 @@ def test_hdbscan_labels_are_jvm_only(spark):
     labels = {r["cluster"] for r in out.collect()}
     assert labels == {"000000", "000020", "000040"}
     G._release_checkpoint(out)
+
+
+def test_community_table_is_jvm_only(spark):
+    """The driver-placed per-community table of 3 planted blocks."""
+    emb = planted_arc_embeddings(spark, 3, 20)
+    labels = emb.select(
+        "node", (F.col("node").cast("int") / 20).cast("int").alias("label")
+    )
+    out = M.community_table(_planted(spark), labels, emb)
+    _assert_jvm_only(out, "community_table")
+    assert "Exchange" not in _plan(out)
+    assert sorted((r["label"], r["size"]) for r in out.collect()) == [
+        (0, 20), (1, 20), (2, 20)
+    ]
 
 
 def _tie_heavy(spark, id_type: str):
