@@ -31,7 +31,15 @@ from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from echo_chambers_detection_spark.session import driver_frame
@@ -130,7 +138,12 @@ def _local_path_ok(edges: DataFrame, sym_rows: int) -> bool:
     )
 
 
-def _traversal_local_tbl(edges: DataFrame, weighted: bool = False):
+def _traversal_local_tbl(
+    edges: DataFrame,
+    weighted: bool = False,
+    max_rows: int | None = None,
+    drop_null_ids: bool = True,
+):
     """Gate + collect for the traversal mirrors: a bounded take-probe
     on the RAW edge list (sym rows = exactly 2x input rows — unionAll,
     no dedup), then one Arrow collect of the raw edges (half the bytes
@@ -155,10 +168,13 @@ def _traversal_local_tbl(edges: DataFrame, weighted: bool = False):
     selection — the mirror can't drop the row (loses the endpoints)
     nor keep it (its int64 cast turns NaN into INT64_MIN, a fake
     hugely-negative weight), so parity demands the distributed path.
+    `max_rows` lowers the raw-row bound for a kernel with a tighter
+    memory budget; `drop_null_ids=False` keeps NULL endpoints in the
+    pull for a kernel that must see them to decline.
     Returns None (use the distributed loop) when over the bound, when
     the bound is <= 0 (forced distributed mode), for un-mirrorable id
     types, or for NULL/NaN weights."""
-    from pyspark.sql.types import IntegerType, LongType, StringType
+    from pyspark.sql.types import StringType
 
     if LOCAL_TRAVERSAL_EDGE_LIMIT <= 0:
         return None
@@ -167,12 +183,14 @@ def _traversal_local_tbl(edges: DataFrame, weighted: bool = False):
     ):
         return None
     half = LOCAL_TRAVERSAL_EDGE_LIMIT // 2
+    if max_rows is not None:
+        half = min(half, max_rows)
     cols = ["u1", "u2"]
     if weighted and "weight" in edges.columns:
         cols.append("weight")
-    e = edges.where(
-        F.col("u1").isNotNull() & F.col("u2").isNotNull()
-    ).select(*cols)
+    e = edges.select(*cols)
+    if drop_null_ids:
+        e = e.where(F.col("u1").isNotNull() & F.col("u2").isNotNull())
     # persist() for the gate's duration so probe + collect share ONE
     # execution of the caller's upstream plan: Spark caches partitions
     # as the incremental take() touches them, and the toArrow below
@@ -454,15 +472,24 @@ def _generations():
 
 
 def _traversal_mirror(
-    edges: DataFrame, kernel: str, schema, weighted: bool = False, **kw
+    edges: DataFrame,
+    kernel: str,
+    schema,
+    weighted: bool = False,
+    max_rows: int | None = None,
+    drop_null_ids: bool = True,
+    **kw,
 ):
     """Traversal-mirror dispatch: gate + collect the edge list
-    (`_traversal_local_tbl`), run `localgraph.<kernel>(tbl, **kw)` and
+    (`_traversal_local_tbl`, which takes `weighted`, `max_rows` and
+    `drop_null_ids`), run `localgraph.<kernel>(tbl, **kw)` and
     return its frame with `schema`, a list of (column, type) where a
     None type means the input's id type. Returns None — run the
     distributed loop — when the gate declines or the kernel does (its
-    op/wedge budget returns None)."""
-    tbl = _traversal_local_tbl(edges, weighted=weighted)
+    op/wedge budget or an input it cannot reproduce returns None)."""
+    tbl = _traversal_local_tbl(
+        edges, weighted=weighted, max_rows=max_rows, drop_null_ids=drop_null_ids
+    )
     if tbl is None:
         return None
     from echo_chambers_detection_spark.operators import localgraph
@@ -2943,121 +2970,142 @@ def fastrp(
     no vector-width skew. Returns (node, embedding array<float>), or the
     raw exploded (node, dim, val) frame when assemble=False (cheaper —
     skips the collect_list — and hashable by order-insensitive harnesses).
+
+    Placement: with the default init hash, a graph of at most
+    localgraph.FASTRP_LOCAL_CELLS // (4 · dim) raw edge rows (and within
+    LOCAL_TRAVERSAL_EDGE_LIMIT) runs in the parity-tested numpy mirror
+    (localgraph.fastrp_local) on the driver — the Run-analysis press's
+    100-post graph otherwise pays ~28 serialized Spark jobs. Above the
+    bound, with a custom `hash_mod6`, or on input the mirror cannot
+    reproduce (non-string ids, NULL endpoints, a node of weighted
+    degree 0), the distributed loop runs.
     """
-    spark = edges.sparkSession
-    sym = _materialize_wide(_symmetrize(edges))
-    degw = sym.groupBy("src").agg(F.sum("weight").alias("degw"))
-    trans = _materialize(
-        sym.join(degw, "src").select(
-            "src", "dst", (F.col("weight") / F.col("degw")).alias("p")
-        )
-    )
-    nodes = _nodes_of_sym(sym)
-    dims = spark.range(dim).select(F.col("id").cast("int").alias("dim"))
-
-    sqrt3 = 3.0 ** 0.5
     if hash_mod6 is None:
-        h = F.pmod(
-            F.xxhash64(F.col("node"), F.col("dim"), F.lit(seed)), F.lit(6)
+        from echo_chambers_detection_spark.operators.localgraph import (
+            FASTRP_LOCAL_CELLS,
         )
-    else:
-        h = hash_mod6(F.col("node"), F.col("dim"), seed)
-    init = (
-        nodes.crossJoin(dims)
-        .select(
-            "node",
-            "dim",
-            F.when(h == 0, F.lit(sqrt3))
-            .when(h == 1, F.lit(-sqrt3))
-            .otherwise(F.lit(0.0))
-            .alias("val"),
+
+        out = _traversal_mirror(
+            edges,
+            "fastrp_local",
+            [("node", None), ("embedding", ArrayType(FloatType()))]
+            if assemble
+            else [("node", None), ("dim", IntegerType()), ("val", DoubleType())],
+            weighted=True,
+            max_rows=FASTRP_LOCAL_CELLS // (4 * max(dim, 1)),
+            drop_null_ids=False,
+            dim=dim,
+            iteration_weights=iteration_weights,
+            seed=seed,
+            assemble=assemble,
         )
-        .where(F.col("val") != 0.0)
-    )
-    if iteration_weights and iteration_weights[0] != 0.0:
-        cur = _materialize(init)
-    else:
-        # weight-0 init (the default and the reference configuration) is
-        # consumed exactly ONCE — the t=1 propagation join; checkpointing
-        # it paid a full write+read of the sparse projection for nothing
-        # (guide §2.4: one fewer job + one fewer storage round-trip per
-        # fastrp call). Non-zero init weight keeps the checkpoint: init
-        # then feeds both the propagation and the term union.
-        cur = init
+        if out is not None:
+            return out
+    spark = edges.sparkSession
+    with _generations() as g:
+        sym = g.keep(_symmetrize(edges), wide=True)
+        degw = sym.groupBy("src").agg(F.sum("weight").alias("degw"))
+        trans = g.keep(
+            sym.join(degw, "src").select(
+                "src", "dst", (F.col("weight") / F.col("degw")).alias("p")
+            )
+        )
+        nodes = _nodes_of_sym(sym)
+        dims = spark.range(dim).select(F.col("id").cast("int").alias("dim"))
 
-    terms: list[DataFrame] = []
-    _gens: list[DataFrame] = [cur]  # every checkpointed generation stays
-    # live until the caller materializes (terms reference them all)
-    for t, wt in enumerate(iteration_weights):
-        if t > 0:
-            propagated = (
-                trans.join(
-                    cur.select(F.col("node").alias("dst"), "dim", "val"), "dst"
-                )
-                .groupBy(F.col("src").alias("node"), "dim")
-                .agg(F.sum(F.col("p") * F.col("val")).alias("val"))
+        sqrt3 = 3.0 ** 0.5
+        if hash_mod6 is None:
+            h = F.pmod(
+                F.xxhash64(F.col("node"), F.col("dim"), F.lit(seed)), F.lit(6)
             )
-            w = Window.partitionBy("node")
-            norm = F.sqrt(F.sum(F.col("val") * F.col("val")).over(w))
-            # plain _materialize, NOT _materialize_wide: measured A/B at
-            # sf0.1 (round 4) — re-widening the per-round (node, dim)
-            # state costs an extra exchange per iteration and LOSES ~20%
-            # (cur is scanned once per round, unlike louvain's hot edge
-            # frame which is scanned every round of an inner loop; the
-            # propagation join re-shuffles cur anyway, so frozen-narrow
-            # checkpoints don't serialize the next round's work here).
-            cur = _materialize(  # appended to _gens below
-                propagated.select(
-                    "node",
-                    "dim",
-                    F.when(norm > 0, F.col("val") / norm)
-                    .otherwise(F.col("val"))
-                    .alias("val"),
-                )
-            )
-        if t > 0:
-            _gens.append(cur)
-        if wt != 0.0:
-            terms.append(
-                cur.select("node", "dim", (F.col("val") * F.lit(wt)).alias("val"))
-            )
-
-    combined = terms[0]
-    for part in terms[1:]:
-        combined = combined.unionAll(part)
-    summed = combined.groupBy("node", "dim").agg(F.sum("val").alias("val"))
-
-    dense = (
-        nodes.crossJoin(dims)
-        .join(summed, ["node", "dim"], "left")
-        .na.fill({"val": 0.0})
-    )
-    if not assemble:
-        out = dense.select("node", "dim", "val")
-    else:
-        out = (
-            dense.groupBy("node")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "val"))
-                ).alias("_pairs")
-            )
+        else:
+            h = hash_mod6(F.col("node"), F.col("dim"), seed)
+        init = (
+            nodes.crossJoin(dims)
             .select(
                 "node",
-                F.transform(
-                    F.col("_pairs"), lambda s: s["val"].cast("float")
-                ).alias("embedding"),
+                "dim",
+                F.when(h == 0, F.lit(sqrt3))
+                .when(h == 1, F.lit(-sqrt3))
+                .otherwise(F.lit(0.0))
+                .alias("val"),
             )
+            .where(F.col("val") != 0.0)
         )
-    # transfer ownership of every live internal checkpoint (sym feeds
-    # the final dense crossJoin via nodes; trans and all generations
-    # feed the term union) so callers can release the whole chain
-    ids: list[int] = []
-    for f in [sym, trans] + _gens:
-        ids += getattr(f, "_ckpt_rdd_ids", [])
-        f._ckpt_rdd_ids = []
-    out._ckpt_rdd_ids = ids
-    return out
+        # weight-0 init (the default and the reference configuration) is
+        # consumed exactly ONCE — the t=1 propagation join; checkpointing
+        # it would pay a full write+read of the sparse projection for
+        # nothing. Non-zero init weight keeps the checkpoint: init then
+        # feeds both the propagation and the term union.
+        cur = init
+        terms: list[DataFrame] = []
+        live: list[DataFrame] = []  # generations the term union reads
+        for t, wt in enumerate(iteration_weights):
+            if t > 0:
+                propagated = (
+                    trans.join(
+                        cur.select(F.col("node").alias("dst"), "dim", "val"),
+                        "dst",
+                    )
+                    .groupBy(F.col("src").alias("node"), "dim")
+                    .agg(F.sum(F.col("p") * F.col("val")).alias("val"))
+                )
+                w = Window.partitionBy("node")
+                norm = F.sqrt(F.sum(F.col("val") * F.col("val")).over(w))
+                # plain keep, NOT wide: measured A/B at sf0.1 (round 4) —
+                # re-widening the per-round (node, dim) state costs an
+                # extra exchange per iteration and LOSES ~20% (cur is
+                # scanned once per round, and the propagation join
+                # re-shuffles it anyway).
+                cur = g.keep(
+                    propagated.select(
+                        "node",
+                        "dim",
+                        F.when(norm > 0, F.col("val") / norm)
+                        .otherwise(F.col("val"))
+                        .alias("val"),
+                    )
+                )
+            elif wt != 0.0:
+                cur = g.keep(init)
+            if wt != 0.0:
+                live.append(cur)
+                terms.append(
+                    cur.select(
+                        "node", "dim", (F.col("val") * F.lit(wt)).alias("val")
+                    )
+                )
+
+        combined = terms[0]
+        for part in terms[1:]:
+            combined = combined.unionAll(part)
+        summed = combined.groupBy("node", "dim").agg(F.sum("val").alias("val"))
+
+        dense = (
+            nodes.crossJoin(dims)
+            .join(summed, ["node", "dim"], "left")
+            .na.fill({"val": 0.0})
+        )
+        if not assemble:
+            out = dense.select("node", "dim", "val")
+        else:
+            out = (
+                dense.groupBy("node")
+                .agg(
+                    F.array_sort(
+                        F.collect_list(F.struct("dim", "val"))
+                    ).alias("_pairs")
+                )
+                .select(
+                    "node",
+                    F.transform(
+                        F.col("_pairs"), lambda s: s["val"].cast("float")
+                    ).alias("embedding"),
+                )
+            )
+        # sym feeds the final node x dim grid; the term generations feed
+        # the union. trans and zero-weight generations die with the scope.
+        return g.result(out, sym, *live)
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,16 @@ to force the distributed path.
 The hash mirrored is Spark's `xxhash64(col)` (catalyst XXH64, seed 42)
 over the node id's UTF-8 bytes — the Leiden refinement's parity
 schedule (refine_np / graph._refine) still keys off it, as do the
-walk/bitmap mirrors.
+walk/bitmap mirrors and FastRP's init grid (`fastrp_init_mod6`, which
+chains Spark's hashInt over the dim and seed columns).
+
+Placement rule: an operator runs its mirror when the graph is under
+its bound — LOCAL_GRAPH_EDGE_LIMIT for the community loops,
+LOCAL_TRAVERSAL_EDGE_LIMIT for the traversal family, FastRP and the
+triangle kernels, lowered by a kernel's own memory or operation budget
+(`FASTRP_LOCAL_CELLS`, `WALK_LOCAL_OP_LIMIT`, `WEDGE_LOCAL_OP_LIMIT`)
+— and the mirror can reproduce the input; otherwise the distributed
+loop runs. A kernel that returns None hands the call back to it.
 """
 
 from __future__ import annotations
@@ -91,14 +100,6 @@ def xxhash64(data: bytes, seed: int = 42) -> int:
     h = (h * _PRIME3) & MASK64
     h ^= h >> 32
     return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def node_parity(node_id: str, rnd: int) -> bool:
-    """Mirror of graph._refine's parity schedule:
-    pmod(xxhash64(node) + rnd, 2) == 0. (The _local_moves loop no
-    longer uses hash parity — it applies ONE move direction per round,
-    the majority one, which rules out symmetric swaps structurally.)"""
-    return (xxhash64(str(node_id).encode("utf-8")) + rnd) % 2 == 0
 
 
 # ---------------------------------------------------------------------------
@@ -1076,6 +1077,130 @@ def bellman_ford_landmark_local(tbl, n_landmarks=4, k=10):
             {"seed": ids[:0], "node": ids[:0], "cost": np.array([], np.int64)}
         )
     return pd.concat(parts, ignore_index=True)
+
+
+# Cell budget for the FastRP mirror, which holds about (sym rows + nodes)
+# x dim float64s: each round gathers every edge's neighbor row, then
+# sums the gather into the node x dim state. 2**25 cells is 256 MB.
+# graph.fastrp derives its pull bound from it (sym rows = 2 x raw rows
+# and nodes <= sym rows, so raw rows <= FASTRP_LOCAL_CELLS // (4 * dim)),
+# so the pull never fetches a graph too big for the kernel.
+FASTRP_LOCAL_CELLS = 1 << 25
+
+
+def _rotl_np(x, r: int):
+    np = _np()
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix_np(h):
+    np = _np()
+    h = h ^ (h >> np.uint64(33))
+    h = h * np.uint64(_PRIME2)
+    h = h ^ (h >> np.uint64(29))
+    h = h * np.uint64(_PRIME3)
+    return h ^ (h >> np.uint64(32))
+
+
+def _hash_int_np(v, h):
+    """Spark's XXH64.hashInt(v, seed=h), broadcast over an int64 array `v`
+    and a uint64 seed array `h` (arrays, not numpy scalars: array
+    arithmetic wraps silently where scalar arithmetic warns)."""
+    np = _np()
+    k = (v.view(np.uint64) & np.uint64(0xFFFFFFFF)) * np.uint64(_PRIME1)
+    h = (h + np.uint64(_PRIME5 + 4)) ^ k
+    return _fmix_np(_rotl_np(h, 23) * np.uint64(_PRIME2) + np.uint64(_PRIME3))
+
+
+def _hash_long_np(v: int, h):
+    """Spark's XXH64.hashLong(v, seed=h) over a uint64 seed array."""
+    np = _np()
+    k = (_rotl((v * _PRIME2) & MASK64, 31) * _PRIME1) & MASK64
+    h = (h + np.uint64(_PRIME5 + 8)) ^ np.uint64(k)
+    return _fmix_np(_rotl_np(h, 27) * np.uint64(_PRIME1) + np.uint64(_PRIME4))
+
+
+def fastrp_init_mod6(ids, dim: int, seed: int):
+    """pmod(xxhash64(node, dim, lit(seed)), 6) over the n x dim grid, as
+    int64. Spark's multi-column xxhash64 chains each column's hash into
+    the next one's seed: XXH64 of the id's UTF-8 bytes (seed 42), then
+    hashInt(dim), then hashInt(seed) — hashLong for a seed outside int32,
+    which F.lit types as bigint."""
+    np = _np()
+    h = _hash_arr(ids).view(np.uint64)[:, None]
+    h = _hash_int_np(np.arange(dim, dtype=np.int64)[None, :], h)
+    if -(1 << 31) <= seed < (1 << 31):
+        h = _hash_int_np(np.array([[seed]], dtype=np.int64), h)
+    else:
+        h = _hash_long_np(seed & MASK64, h)
+    return h.view(np.int64) % 6
+
+
+def fastrp_local(tbl, dim, iteration_weights, seed, assemble):
+    """Mirror of graph.fastrp with its default xxhash64 init: a pandas
+    DataFrame (node, embedding float32 array) when `assemble`, else
+    (node, dim, val) over every node x dim cell.
+
+    Init cells are ±√3 where pmod(xxhash64(node, dim, seed), 6) is 0/1
+    (`fastrp_init_mod6`). Each round propagates over the symmetrized
+    rows with p = w / Σw(src), duplicate edges kept, and divides each
+    node's row by its L2 norm when that norm is > 0; the output is
+    Σ_t w_t·r_t. Summation order differs from the distributed
+    aggregation, so values agree to float rounding, not bit for bit.
+
+    Returns None (run the distributed loop) where the mirror cannot
+    reproduce it: non-string ids (the init hashes UTF-8 bytes), a NULL
+    endpoint, a node of weighted degree 0 (the distributed division
+    raises or yields NULL there), dim <= 0, or no non-zero iteration
+    weight (the distributed term union raises)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    np = _np()
+    id_t = tbl.schema.field("u1").type
+    if not (pa.types.is_string(id_t) or pa.types.is_large_string(id_t)):
+        return None
+    if dim <= 0 or tbl.column("u1").null_count or tbl.column("u2").null_count:
+        return None
+    if not any(w != 0.0 for w in iteration_weights):
+        return None
+    ids, e_src, e_dst, e_w = _raw_edge_arrays(tbl, weighted=True)
+    n = len(ids)
+    degw = np.bincount(e_src, weights=e_w, minlength=n)
+    if not np.all(degw != 0.0):
+        return None
+    # src-sorted rows: every node is some row's src in the symmetrized
+    # graph, so the segment starts are exactly one per node, in order
+    order = np.argsort(e_src, kind="stable")
+    src_s, dst_s = e_src[order], e_dst[order]
+    p_s = (e_w / degw[e_src])[order][:, None]
+    starts = np.flatnonzero(np.r_[True, src_s[1:] != src_s[:-1]])
+
+    h = fastrp_init_mod6(ids, dim, seed)
+    sqrt3 = 3.0 ** 0.5
+    r = np.where(h == 0, sqrt3, np.where(h == 1, -sqrt3, 0.0))
+    out = np.zeros((n, dim))
+    for t, wt in enumerate(iteration_weights):
+        if t > 0 and n:
+            gathered = r[dst_s]
+            gathered *= p_s
+            r = np.add.reduceat(gathered, starts, axis=0)
+            norm = np.sqrt(np.einsum("ij,ij->i", r, r))
+            pos = norm > 0
+            r[pos] /= norm[pos, None]
+        if wt != 0.0:
+            out += r * wt
+    if assemble:
+        return pd.DataFrame(
+            {"node": ids, "embedding": list(out.astype(np.float32))}
+        )
+    return pd.DataFrame(
+        {
+            "node": np.repeat(ids, dim),
+            "dim": np.tile(np.arange(dim, dtype=np.int32), n),
+            "val": out.ravel(),
+        }
+    )
 
 
 # Operation budget for the walk mirror: each candidate evaluation is

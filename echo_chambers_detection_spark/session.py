@@ -30,6 +30,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 
+def _driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half the host's physical RAM,
+    clamped to 2-48g: a fixed 48g heap on a 15 GB host let G1 try to
+    commit more memory than the machine had, and the JVM died with it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(2, min(48, ram_gb // 2))}g"
+
+
 def get_spark(
     app_name: str = "echo_chambers_detection_spark",
     shuffle_partitions: int | None = None,
@@ -89,7 +100,7 @@ def get_spark(
         .config("spark.ui.retainedStages", "100")
         .config("spark.ui.retainedTasks", "1000")
         .config("spark.sql.ui.retainedExecutions", "50")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     if master != "external":
         builder = builder.master(master)

@@ -31,12 +31,5 @@ def lane(full: list, quick: list) -> list:
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # Heap from physical RAM (half, 2-48g) instead of the engine's 48g
-    # default: on a 15 GB host G1 once tried to commit 16.9 GB more heap
-    # mid-suite, the kernel refused, and the JVM died with it.
-    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
-    os.environ.setdefault(
-        "SPARK_GRAFT_DRIVER_MEM", f"{max(2, min(48, ram_gb // 2))}g"
-    )
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s

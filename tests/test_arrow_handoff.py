@@ -74,6 +74,7 @@ def test_cc_on_empty_edges_is_jvm_only(spark):
         ("pagerank", lambda e: G.pagerank(e, max_iter=5)),
         ("louvain", lambda e: G.louvain(e, max_levels=2, max_rounds=2)),
         ("leiden", lambda e: G.leiden(e, max_levels=2, max_rounds=2)),
+        ("fastrp", lambda e: G.fastrp(e, dim=8)),
     ],
 )
 def test_graph_mirror_results_are_jvm_only(spark, name, run):

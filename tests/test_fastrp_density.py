@@ -1,5 +1,6 @@
 """Tests for FastRP embeddings and the DBSCAN-style density clustering
-(SURVEY.md G2/G3): shape, determinism, and structure recovery."""
+(SURVEY.md G2/G3): shape, determinism, structure recovery, and the
+parity of FastRP's driver mirror with the distributed loop."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+import echo_chambers_detection_spark.operators.graph as G
 from echo_chambers_detection_spark.operators.graph import (
     density_cluster,
     fastrp,
@@ -139,3 +141,163 @@ def test_density_cluster_lsh_recall_at_sf(spark):
     assert set(lsh) == set(exact)  # same node universe
     agree = sum(1 for n, c in exact.items() if lsh[n] == c)
     assert agree / len(exact) >= 0.9
+
+
+# ---------------------------------------------------------------------------
+# Driver mirror (localgraph.fastrp_local) vs the distributed loop, forced
+# by LOCAL_TRAVERSAL_EDGE_LIMIT = 0.
+# ---------------------------------------------------------------------------
+
+
+def _ran_on_driver(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "Exchange" not in plan
+
+
+def _cells(df) -> dict:
+    """(node, dim) -> value, from either output shape."""
+    if "embedding" in df.columns:
+        return {
+            (r["node"], d): float(v)
+            for r in df.collect()
+            for d, v in enumerate(r["embedding"])
+        }
+    return {(r["node"], r["dim"]): r["val"] for r in df.collect()}
+
+
+def _both_ways(monkeypatch, run):
+    """run() with the mirror allowed, then with the distributed loop
+    forced; each side is its frame or the exception it raised."""
+
+    def attempt():
+        try:
+            return run()
+        except Exception as exc:  # noqa: BLE001 — compared below
+            return exc
+
+    local = attempt()
+    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
+    dist = attempt()
+    monkeypatch.undo()
+    return local, dist
+
+
+@pytest.fixture(scope="module")
+def sf_post_graph(spark):
+    from echo_chambers_detection_spark.catalog import _post_graph
+    from tests.conftest import SF_ORACLE
+
+    g = _post_graph(spark, SF_ORACLE).localCheckpoint(eager=True)
+    yield g
+    g.unpersist()
+
+
+@pytest.mark.parametrize("weights", [(0.0, 1.0, 1.0), (1.0, 1.0, 1.0)])
+@pytest.mark.parametrize("graph", ["two_cliques", "sf_post_graph"])
+def test_fastrp_mirror_matches_distributed(
+    request, monkeypatch, graph, weights
+):
+    edges = request.getfixturevalue(graph)
+    for assemble in (True, False):
+        local, dist = _both_ways(
+            monkeypatch,
+            lambda: fastrp(
+                edges, dim=32, iteration_weights=weights, assemble=assemble
+            ),
+        )
+        assert _ran_on_driver(local) and not _ran_on_driver(dist)
+        assert local.schema.simpleString() == dist.schema.simpleString()
+        a, b = _cells(local), _cells(dist)
+        assert a.keys() == b.keys()
+        assert max(abs(a[k] - b[k]) for k in a) <= 1e-6
+        G._release_checkpoint(dist)
+
+
+def test_fastrp_init_grid_matches_spark_hash(spark):
+    """The mirror's init grid equals Spark's
+    pmod(xxhash64(node, dim, lit(seed)), 6) on every cell: ids that take
+    each XXH64 branch (empty, short, multi-byte UTF-8, >= 32 bytes) and
+    seeds typed int and bigint."""
+    import numpy as np
+
+    from echo_chambers_detection_spark.operators.localgraph import (
+        fastrp_init_mod6,
+    )
+
+    ids = ["", "a", "b0", "ünï", "x" * 40, "0123456789abcdef" * 2 + "012"]
+    nodes = spark.createDataFrame([(i,) for i in ids], "node string")
+    dims = spark.range(16).select(F.col("id").cast("int").alias("dim"))
+    for seed in (42, -3, 2**40):
+        h = F.pmod(F.xxhash64("node", "dim", F.lit(seed)), F.lit(6))
+        want = {
+            (r["node"], r["dim"]): r["h"]
+            for r in nodes.crossJoin(dims)
+            .select("node", "dim", h.alias("h"))
+            .collect()
+        }
+        grid = fastrp_init_mod6(np.array(ids, dtype=object), 16, seed)
+        got = {(n, d): int(grid[i, d]) for i, n in enumerate(ids) for d in range(16)}
+        assert got == want, seed
+
+
+def test_hdbscan_chain_labels_same_both_ways(monkeypatch, sf_post_graph):
+    """The analysis_run_hdbscan clustering step (FastRP dim=128, then
+    HDBSCAN at the chain's parameters) labels every post the same with
+    the embeddings from the mirror and from the distributed loop."""
+    from echo_chambers_detection_spark.operators.hdbscan import (
+        hdbscan_cluster,
+    )
+
+    def labels():
+        emb = fastrp(sf_post_graph, dim=128).withColumnRenamed(
+            "embedding", "vector"
+        )
+        out = hdbscan_cluster(emb, min_pts=3, min_cluster_size=3, k=10)
+        got = {r["node"]: r["cluster"] for r in out.collect()}
+        G._release_checkpoint(out)
+        return got
+
+    local, dist = _both_ways(monkeypatch, labels)
+    assert len(local) > 50
+    assert local == dist
+
+
+@pytest.fixture(scope="module")
+def decline_cases(spark, two_cliques):
+    zero = spark.createDataFrame(
+        [("c0", "c1", 0.0)], "u1 string, u2 string, weight double"
+    )
+    null = spark.createDataFrame(
+        [("a1", None, 1.0)], "u1 string, u2 string, weight double"
+    )
+    return {
+        "null_endpoint": (two_cliques.unionAll(null), None),
+        "zero_weighted_degree": (two_cliques.unionAll(zero), None),
+        "custom_hash": (two_cliques, G.fastrp_md5_mod6),
+    }
+
+
+@pytest.mark.parametrize(
+    "case", ["null_endpoint", "zero_weighted_degree", "custom_hash"]
+)
+def test_fastrp_mirror_declines_to_distributed(
+    monkeypatch, decline_cases, case
+):
+    """Input the mirror cannot reproduce runs the distributed loop: the
+    same frame, or the same exception, as forcing it."""
+    edges, hash_mod6 = decline_cases[case]
+
+    def run():
+        out = fastrp(
+            edges, dim=8, iteration_weights=(1.0, 1.0), assemble=False,
+            hash_mod6=hash_mod6,
+        )
+        return out, _cells(out)
+
+    local, dist = _both_ways(monkeypatch, run)
+    if isinstance(dist, Exception):
+        assert type(local) is type(dist), local
+        return
+    assert not _ran_on_driver(local[0])
+    assert local[1] == dist[1]
+    G._release_checkpoint(local[0], dist[0])

@@ -718,6 +718,7 @@ def test_loop_operators_release_all_checkpoints(spark):
             )),
             ("seeded_random_walks", lambda: G.seeded_random_walks(u, length=2)),
             ("ktruss_edges", lambda: ktruss_edges(u, k=4)),
+            ("fastrp", lambda: G.fastrp(e, dim=8)),
         ]:
             base = _pinned(spark)
             out = fn()

@@ -157,7 +157,7 @@ def test_semi_and_anti_joins_planned(spark):
     assert count_operator(anti, "LeftAnti") >= 1
 
 
-def test_fastrp_plan_shape(spark):
+def test_fastrp_plan_shape(spark, monkeypatch):
     """fastrp's final assembly plan (VERDICT r3 #4 — rule out silent
     parallelism collapse behind the ×1.20 bench drift): zero Python
     stages, exactly four exchanges (dense node×dim re-key + broadcast
@@ -165,7 +165,11 @@ def test_fastrp_plan_shape(spark):
     map-side partial_sum before the term-union aggregation. The loop
     itself checkpoints through _materialize_wide, so every generation
     is re-widened to the session's shuffle parallelism before the next
-    round scans it."""
+    round scans it. The driver mirror is disabled: at the fixture's 100
+    posts it would answer with a LocalRelation instead."""
+    import echo_chambers_detection_spark.operators.graph as G
+
+    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
     df = _q(spark, "fastrp_embeddings")
     assert not has_python_stage(df), "fastrp fell back to Python"
     plan = df._jdf.queryExecution().executedPlan().toString()

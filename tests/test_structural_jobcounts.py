@@ -286,11 +286,28 @@ def test_pagerank_tol_distributed_job_count(spark, monkeypatch):
     assert n <= 76, f"distributed pagerank(tol>0) grew to {n} jobs (was 73)"
 
 
+def test_fastrp_distributed_job_count(spark, monkeypatch):
+    """Five propagation rounds of the distributed FastRP loop, so one
+    extra job per round exceeds the headroom."""
+    _forced_distributed(monkeypatch)
+    e = _planted_leaf(spark)
+    n = _count_jobs(
+        spark,
+        lambda: G.fastrp(
+            e, dim=16, iteration_weights=(0.0, 1.0, 1.0, 1.0, 1.0, 1.0)
+        ).count(),
+    )
+    e.unpersist()
+    assert n <= 44, f"distributed fastrp grew to {n} jobs (was 41)"
+
+
 # The paper's Run-analysis press, on the oracle tables. Counts are with
 # the driver hand-offs on Arrow, the small k-NN and the per-community
-# table on the driver; the bounds sit 3 above the measured counts.
-# With the table forced distributed (metrics.DRIVER_TABLE_MEMBERS = 0)
-# the chains take 54 and 88-90 jobs, as before the driver placement.
+# table and FastRP on the driver; the bounds sit 3 above the measured
+# counts. With the table forced distributed (metrics.DRIVER_TABLE_MEMBERS
+# = 0) the chains take 54 and 88-90 jobs, as before the driver placement;
+# with FastRP forced distributed (LOCAL_TRAVERSAL_EDGE_LIMIT = 0) the
+# HDBSCAN chain takes 55.
 
 
 def _analysis_jobs(spark, query) -> int:
@@ -312,4 +329,4 @@ def test_analysis_run_hdbscan_job_count(spark):
     )
 
     n = _analysis_jobs(spark, q_analysis_run_hdbscan)
-    assert n <= 59, f"analysis_run_hdbscan grew to {n} jobs (was 55-56)"
+    assert n <= 37, f"analysis_run_hdbscan grew to {n} jobs (was 33-34)"
