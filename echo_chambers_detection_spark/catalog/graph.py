@@ -707,12 +707,10 @@ def q_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         fastrp,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt as _cc
-
     g = _post_graph(spark, sf_dir)
-    rp = _cc(fastrp(g, dim=32), g)
+    rp = carry_ckpt(fastrp(g, dim=32), g)
     emb = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp)
-    return density_cluster(emb, min_sim=0.6, min_pts=2, carry_input_ckpt=True)
+    return carry_ckpt(density_cluster(emb, min_sim=0.6, min_pts=2), emb)
 
 
 @register(
@@ -732,15 +730,15 @@ def q_density_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         fastrp,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt as _cc
-
     g = _post_graph(spark, sf_dir)
-    rp = _cc(fastrp(g, dim=32), g)
+    rp = carry_ckpt(fastrp(g, dim=32), g)
     emb = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp)
-    return density_cluster(
-        emb, min_sim=0.6, min_pts=2, use_lsh=True,
-        lsh_num_planes=16, lsh_band_bits=4, dim=32,
-        carry_input_ckpt=True,
+    return carry_ckpt(
+        density_cluster(
+            emb, min_sim=0.6, min_pts=2, use_lsh=True,
+            lsh_num_planes=16, lsh_band_bits=4, dim=32,
+        ),
+        emb,
     )
 
 

@@ -419,27 +419,41 @@ class _Generations:
     def __init__(self):
         self._owned: list[DataFrame] = []
 
-    def _free(self, df: DataFrame | None) -> None:
-        # only ever frees what this scope owns: a caller's frame passed
-        # as `prev` by mistake is left alone, not destroyed
-        if df is not None and any(o is df for o in self._owned):
-            self._owned = [o for o in self._owned if o is not df]
-            _release_checkpoint(df)
+    def _free(self, prev) -> None:
+        # only ever frees what this scope owns: a caller's frame (or a
+        # lazy projection of an owned one) passed as `prev` is left
+        # alone, not destroyed
+        for df in prev if isinstance(prev, tuple) else (prev,):
+            if df is not None and any(o is df for o in self._owned):
+                self._owned = [o for o in self._owned if o is not df]
+                _release_checkpoint(df)
 
     def keep(self, df: DataFrame, wide: bool = False) -> DataFrame:
         """Materialize `df` (through `_materialize_wide` when `wide`)
         and own it until the scope exits or a step() supersedes it."""
-        out = (_materialize_wide if wide else _materialize)(df)
-        self._owned.append(out)
-        return out
+        return self.adopt((_materialize_wide if wide else _materialize)(df))
 
-    def step(self, df: DataFrame, cols=None, prev: DataFrame | None = None, **aggs):
-        """One generation: materialize `df`, free `prev` (the generation
-        it supersedes) now that the new one is on storage, project to
+    def adopt(self, df: DataFrame) -> DataFrame:
+        """Own `df`, a frame another operator or scope handed over with
+        its blocks (its `result()`), as if this scope had kept it."""
+        self._owned.append(df)
+        return df
+
+    def step(
+        self,
+        df: DataFrame,
+        cols=None,
+        prev: DataFrame | tuple | None = None,
+        wide: bool = False,
+        **aggs,
+    ):
+        """One generation: materialize `df` (wide as in keep()), free
+        `prev` (the generation it supersedes, or a tuple of frames it
+        makes dead) now that the new one is on storage, project to
         `cols` with ownership kept, and read `aggs` over the new leaf in
         one `_scalars` job. Returns the frame, or (frame, *scalars) when
         aggs are given."""
-        leaf = _materialize(df)
+        leaf = (_materialize_wide if wide else _materialize)(df)
         out = leaf if cols is None else carry_ckpt(leaf.select(*cols), leaf)
         self._owned.append(out)
         self._free(prev)
@@ -459,10 +473,12 @@ def _generations():
     """Scope that owns a loop's checkpoint generations, in the spirit of
     Pregelix's superstep driver: `keep()` materializes loop-invariant
     frames (edge lists, node sets), `step()` materializes each new
-    generation and frees the one it supersedes, and `result()` hands
-    generations to the returned frame. A loop's generations belong to
-    its scope; only what `result()` hands over outlives it — on normal
-    exit and on an exception alike (a raise mid-loop pins nothing)."""
+    generation and frees the ones it supersedes, `adopt()` takes over
+    what a nested operator or helper scope handed over, and `result()`
+    hands generations to the returned frame. A loop's generations
+    belong to its scope; only what `result()` hands over outlives it —
+    on normal exit, early return and exception alike (a raise mid-loop
+    pins nothing)."""
     g = _Generations()
     try:
         yield g
@@ -484,7 +500,8 @@ def _traversal_mirror(
     (`_traversal_local_tbl`, which takes `weighted`, `max_rows` and
     `drop_null_ids`), run `localgraph.<kernel>(tbl, **kw)` and
     return its frame with `schema`, a list of (column, type) where a
-    None type means the input's id type. Returns None — run the
+    None type means the input's id type, or (column, type, False) for a
+    column the distributed loop declares NOT NULL. Returns None — run the
     distributed loop — when the gate declines or the kernel does (its
     op/wedge budget or an input it cannot reproduce returns None)."""
     tbl = _traversal_local_tbl(
@@ -497,14 +514,17 @@ def _traversal_mirror(
     pdf = getattr(localgraph, kernel)(tbl, **kw)
     if pdf is None:
         return None
-    # the distributed loop's exact schema: node/seed columns keep the
-    # input id dtype
+    # the distributed loop's exact schema, nullability included:
+    # node/seed columns keep the input id dtype
     node_t = edges.schema["u1"].dataType
     return driver_frame(
         edges.sparkSession,
         pdf,
         StructType(
-            [StructField(c, node_t if t is None else t) for c, t in schema]
+            [
+                StructField(c, node_t if t is None else t, *nullable)
+                for c, t, *nullable in schema
+            ]
         ),
     )
 
@@ -1176,7 +1196,7 @@ def brandes_betweenness(
     """
     out = _traversal_mirror(
         edges, "betweenness_local",
-        [("node", None), ("betweenness", DoubleType())],
+        [("node", None), ("betweenness", DoubleType(), False)],
         n_sources=n_sources, max_iter=max_iter,
     )
     if out is not None:
@@ -1374,7 +1394,7 @@ def seeded_random_walks(
                         StructType(
                             [
                                 StructField("wid", wid_t),
-                                StructField("step", LongType()),
+                                StructField("step", LongType(), False),
                                 StructField("node", node_t),
                             ]
                         ),
@@ -1822,7 +1842,9 @@ def _local_moves(
     direction. The result is then a different but still valid greedy
     partition; callers needing cross-environment bit-reproducibility on
     fractional weights should quantize weights upstream. Returns
-    (new comm, total moves applied).
+    (new comm, total moves applied). The phase owns its generations in
+    its own `_generations` scope; only `comm`, a projection of the last
+    `best` generation carrying its blocks, outlives it.
 
     Job shape per round (the loops' cost is FIXED per-stage overhead at
     test scale, measured via event logs — 55 serialized jobs for a
@@ -1837,144 +1859,128 @@ def _local_moves(
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.sum("weight").alias("k_adj")
     )
-    k_i = _materialize(
-        selfw.join(deg, "node", "outer")
-        .na.fill({"w_self": 0.0, "k_adj": 0.0})
-        .select("node", (F.col("k_adj") + 2 * F.col("w_self")).alias("k"))
-    )
-
-    total_moves = 0
-    prev_best = None
-    comm_is_projection = False
-    for _ in range(max_rounds):
-        # per-node state: (node, community, k, sigma_tot of own community).
-        # sigma as an unbounded window sum over the community partition:
-        # ONE exchange produces both the per-node rows and their
-        # community mass, replacing the groupBy + broadcast-join-back
-        # (round 9; two fewer jobs per round, and exact — k is an
-        # integral-valued double on every real input, so the sum is
-        # order-insensitive)
-        ck = comm.join(hint(k_i), "node")
-        state = _materialize(
-            ck.withColumn(
-                "sigma_tot",
-                F.sum("k").over(Window.partitionBy("community")),
-            )
+    with _generations() as g:
+        k_i = g.keep(
+            selfw.join(deg, "node", "outer")
+            .na.fill({"w_self": 0.0, "k_adj": 0.0})
+            .select("node", (F.col("k_adj") + 2 * F.col("w_self")).alias("k"))
         )
-        # Zero-weight self-edges guarantee every node an own-community
-        # row in w_nc — the stay option falls out of the same aggregation
-        # (score 0 - k*(sigma_own-k)/2m for isolated-in-community nodes)
-        # instead of a separate union branch that would break the
-        # partitioning chain below.
-        aug = state.select(
-            F.col("node").alias("src"),
-            F.col("node").alias("dst"),
-            F.lit(0.0).alias("weight"),
-        )
-        # ONE wide exchange per round: hash(src) from the explicit
-        # repartition satisfies groupBy(src, nbr_c) (src is a prefix of
-        # the clustering), the window over node=src, and the final
-        # groupBy(node) — Catalyst inserts no further shuffle.
-        enriched = (
-            sym.unionAll(aug)
-            .join(
-                hint(
-                    state.select(
-                        F.col("node").alias("dst"),
-                        F.col("community").alias("nbr_c"),
-                        F.col("sigma_tot").alias("sigma_nbr"),
-                    )
+        total_moves = 0
+        best = None
+        for _ in range(max_rounds):
+            # per-node state: (node, community, k, sigma_tot of own
+            # community). sigma as an unbounded window sum over the
+            # community partition: ONE exchange produces both the per-node
+            # rows and their community mass, replacing the groupBy +
+            # broadcast-join-back (round 9; two fewer jobs per round, and
+            # exact — k is an integral-valued double on every real input,
+            # so the sum is order-insensitive). It supersedes last round's
+            # `best`, which `comm` projects.
+            state = g.step(
+                comm.join(hint(k_i), "node").withColumn(
+                    "sigma_tot",
+                    F.sum("k").over(Window.partitionBy("community")),
                 ),
-                "dst",
+                prev=best,
             )
-            .repartition("src")
-        )
-        # weight from each node to each neighboring community, with the
-        # neighbor community's sigma carried through (constant per group)
-        w_nc = enriched.groupBy("src", "nbr_c").agg(
-            F.sum("weight").alias("w_ic"),
-            F.max("sigma_nbr").alias("sigma_nbr"),
-        )
-        cand = w_nc.withColumnRenamed("src", "node").join(hint(state), "node")
-        own = F.col("nbr_c") == F.col("community")
-        # staying: exclude own k from sigma_tot; joining: full sigma_tot
-        score = F.when(
-            own,
-            F.col("w_ic")
-            - F.col("k") * (F.col("sigma_nbr") - F.col("k")) / (2 * m),
-        ).otherwise(
-            F.col("w_ic") - F.col("k") * F.col("sigma_nbr") / (2 * m)
-        )
-        scored = cand.select(
-            "node", "nbr_c", score.alias("score"), "community"
-        )
-        # Argmax in ONE shuffle: window-max over hash(node), filter to the
-        # top-score rows, then aggregate the tie-break WITHOUT a new
-        # exchange (the groupBy reuses the window's hash(node)
-        # partitioning). A single max_by(struct, struct) reads nicer but
-        # its var-width string buffer forces a SortAggregate with an
-        # INTERPRETED struct comparator — measured 44 CPU-seconds per
-        # round on a 2.2M-row candidate table, ~90% of the round. The
-        # loops' cost at test scale is serialized-stage count, so the
-        # shuffle saved matters as much as the CPU.
-        wnode = Window.partitionBy("node")
-        best = _materialize(
-            scored.withColumn("best", F.max("score").over(wnode))
-            .where(F.col("score") == F.col("best"))
-            .groupBy("node")
-            .agg(
-                # community (the node's own) is constant per node; max is
-                # just a buffer-friendly way to carry it through
-                F.max("community").alias("old_c"),
-                F.max("nbr_c").alias("new_c"),
+            # Zero-weight self-edges guarantee every node an own-community
+            # row in w_nc — the stay option falls out of the same
+            # aggregation (score 0 - k*(sigma_own-k)/2m for
+            # isolated-in-community nodes) instead of a separate union
+            # branch that would break the partitioning chain below.
+            aug = state.select(
+                F.col("node").alias("src"),
+                F.col("node").alias("dst"),
+                F.lit(0.0).alias("weight"),
             )
-        )
-        # one aggregation job for ALL loop-control scalars: the wanted
-        # moves of each direction plus n. The direction choice is made
-        # driver-side from these exact integers; `comm` then becomes a
-        # lazy projection over the checkpointed `best` leaf — no extra
-        # materialization job vs the old applied-frame shape.
-        row = best.agg(
-            F.sum((F.col("new_c") > F.col("old_c")).cast("long")).alias("up"),
-            F.sum((F.col("new_c") < F.col("old_c")).cast("long")).alias("dn"),
-            F.count("*").alias("n"),
-        ).first()
-        # generation r-1 and this round's state are dead: every later
-        # plan reads `best` (generation r), which is on storage
-        _release_checkpoint(prev_best, state)
-        prev_best = best
-        comm_is_projection = True
-        up, dn = int(row["up"] or 0), int(row["dn"] or 0)
-        if up + dn < max(1, int(row["n"]) // 1000):
-            # quiet: total wanted movement (BOTH directions are visible
-            # here) is below the GDS-style 0.1% tolerance — stop without
-            # applying the residue
+            # ONE wide exchange per round: hash(src) from the explicit
+            # repartition satisfies groupBy(src, nbr_c) (src is a prefix
+            # of the clustering), the window over node=src, and the final
+            # groupBy(node) — Catalyst inserts no further shuffle.
+            enriched = (
+                sym.unionAll(aug)
+                .join(
+                    hint(
+                        state.select(
+                            F.col("node").alias("dst"),
+                            F.col("community").alias("nbr_c"),
+                            F.col("sigma_tot").alias("sigma_nbr"),
+                        )
+                    ),
+                    "dst",
+                )
+                .repartition("src")
+            )
+            # weight from each node to each neighboring community, with
+            # the neighbor community's sigma carried through (constant
+            # per group)
+            w_nc = enriched.groupBy("src", "nbr_c").agg(
+                F.sum("weight").alias("w_ic"),
+                F.max("sigma_nbr").alias("sigma_nbr"),
+            )
+            cand = w_nc.withColumnRenamed("src", "node").join(hint(state), "node")
+            own = F.col("nbr_c") == F.col("community")
+            # staying: exclude own k from sigma_tot; joining: full sigma_tot
+            score = F.when(
+                own,
+                F.col("w_ic")
+                - F.col("k") * (F.col("sigma_nbr") - F.col("k")) / (2 * m),
+            ).otherwise(
+                F.col("w_ic") - F.col("k") * F.col("sigma_nbr") / (2 * m)
+            )
+            scored = cand.select(
+                "node", "nbr_c", score.alias("score"), "community"
+            )
+            # Argmax in ONE shuffle: window-max over hash(node), filter to
+            # the top-score rows, then aggregate the tie-break WITHOUT a
+            # new exchange (the groupBy reuses the window's hash(node)
+            # partitioning). A single max_by(struct, struct) reads nicer
+            # but its var-width string buffer forces a SortAggregate with
+            # an INTERPRETED struct comparator — measured 44 CPU-seconds
+            # per round on a 2.2M-row candidate table, ~90% of the round.
+            # The loops' cost at test scale is serialized-stage count, so
+            # the shuffle saved matters as much as the CPU. The same step
+            # reads ALL loop-control scalars in one job: the wanted moves
+            # of each direction plus n. The direction choice is made
+            # driver-side from these exact integers; `comm` then becomes
+            # a lazy projection over the checkpointed `best` leaf.
+            wnode = Window.partitionBy("node")
+            best, up, dn, n = g.step(
+                scored.withColumn("best", F.max("score").over(wnode))
+                .where(F.col("score") == F.col("best"))
+                .groupBy("node")
+                .agg(
+                    # community (the node's own) is constant per node;
+                    # max is just a buffer-friendly way to carry it
+                    F.max("community").alias("old_c"),
+                    F.max("nbr_c").alias("new_c"),
+                ),
+                prev=state,
+                up=F.sum((F.col("new_c") > F.col("old_c")).cast("long")),
+                dn=F.sum((F.col("new_c") < F.col("old_c")).cast("long")),
+                n=F.count("*"),
+            )
+            if up + dn < max(1, n // 1000):
+                # quiet: total wanted movement (BOTH directions are
+                # visible here) is below the GDS-style 0.1% tolerance —
+                # stop without applying the residue
+                comm = best.select("node", F.col("old_c").alias("community"))
+                break
+            # apply only one move DIRECTION per round — the majority one
+            # (see docstring); strict inequality also subsumes new_c != old_c
+            direction_ok = (
+                F.col("new_c") > F.col("old_c")
+                if up >= dn
+                else F.col("new_c") < F.col("old_c")
+            )
             comm = best.select(
-                "node", F.col("old_c").alias("community")
+                "node",
+                F.when(direction_ok, F.col("new_c"))
+                .otherwise(F.col("old_c"))
+                .alias("community"),
             )
-            break
-        # apply only one move DIRECTION per round — the majority one
-        # (see docstring); strict inequality also subsumes new_c != old_c
-        direction_ok = (
-            F.col("new_c") > F.col("old_c")
-            if up >= dn
-            else F.col("new_c") < F.col("old_c")
-        )
-        comm = best.select(
-            "node",
-            F.when(direction_ok, F.col("new_c"))
-            .otherwise(F.col("old_c"))
-            .alias("community"),
-        )
-        total_moves += up if up >= dn else dn
-    # Transfer block ownership of the final generation to the returned
-    # frame (comm is a pure projection of it), so callers can retire the
-    # whole phase with one _release_checkpoint(comm) when they are done.
-    if comm_is_projection and prev_best is not None:
-        comm._ckpt_rdd_ids = getattr(prev_best, "_ckpt_rdd_ids", [])
-        prev_best._ckpt_rdd_ids = []
-    _release_checkpoint(k_i)
-    return comm, total_moves
+            total_moves += up if up >= dn else dn
+        return g.result(comm, best), total_moves
 
 
 def _coarsen(
@@ -2009,6 +2015,16 @@ def _coarsen(
     return new_edges, new_selfw
 
 
+def _weighted_sym(g, edges: DataFrame) -> tuple[DataFrame, float, int]:
+    """The symmetrized weighted graph, kept in scope `g`, with m (the
+    undirected total weight) and its row count (the local-gate probe)
+    read in ONE scan of the leaf — guide S2.4: every scalar read here is
+    a serialized driver round-trip."""
+    sym = g.keep(_symmetrize(edges), wide=True)
+    m, n = _scalars(sym, m=F.sum("weight") / 2, n=F.count("*"))
+    return sym, float(m), int(n)
+
+
 def louvain(
     edges: DataFrame, max_levels: int = 3, max_rounds: int = 8
 ) -> DataFrame:
@@ -2019,116 +2035,92 @@ def louvain(
     Level mappings compose through joins; final community ids are
     canonicalized to the min member node id, so results are stable across
     runs (the reference's GDS ids are not). Returns (node, community).
+    One `_generations` scope owns every level's generations; only the
+    returned frame's blocks outlive the call, on every return path.
     """
+    from echo_chambers_detection_spark.operators.localgraph import louvain_local
+
     spark = edges.sparkSession
-    sym = _materialize_wide(_symmetrize(edges))
-    # one scan of the checkpointed sym leaf yields BOTH loop-entry
-    # scalars (m and the local-gate row count) — the old shape paid a
-    # second full-scan job for sym.count() (guide S2.4: every scalar
-    # read here is a serialized driver round-trip)
-    m_row = sym.agg(
-        (F.sum("weight") / 2).alias("m"), F.count("*").alias("n")
-    ).first()
-    m = float(m_row["m"] or 0.0)
-    if m <= 0:
-        return _nodes(edges).withColumn("community", F.col("node"))
-
-    if _local_path_ok(edges, int(m_row["n"])):
-        # bounded collect (≤ LOCAL_GRAPH_EDGE_LIMIT rows by the probe):
-        # finish the whole multilevel loop driver-side, bit-identical
-        # semantics (tests/test_local_graph_parity.py)
-        from echo_chambers_detection_spark.operators.localgraph import (
-            louvain_local,
-        )
-
-        rows = sym.toPandas()
-        _release_checkpoint(sym)
-        result = louvain_local(rows, m, max_levels, max_rounds)
-        return driver_frame(
-            spark, result.items(), "node string, community string"
-        )
-
-    # one distinct over the edge frame: selfw shares mapping's
-    # checkpoint leaf instead of re-executing the 2|E|-row distinct per
-    # lazy consumer (k_i build + coarsen); safe because the level
-    # boundary releases the old mapping only after the new sym/selfw
-    # generation is materialized — every selfw consumer has run by then
-    mapping = _materialize(
-        _nodes_of_sym(sym).withColumn("community", F.col("node"))
-    )
-    selfw = mapping.select("node", F.lit(0.0).alias("w_self"))
-    small = _probe_small(mapping)
-    hint = _state_hint(small)
-    base_mapping = None  # set on the local-finish path; released at exit
-
-    for _level in range(max_levels):
-        comm0 = (
-            mapping.select(F.col("community").alias("node")).distinct()
-            .withColumn("community", F.col("node"))
-        )
-        comm, moves = _local_moves(
-            sym, selfw, comm0, m, max_rounds, small_state=small
-        )
-        if moves == 0:
-            _release_checkpoint(comm)
-            break
-        # compose: node -> old community -> new community
-        new_mapping = _materialize(
-            mapping.join(
-                hint(
-                    comm.select(
-                        F.col("node").alias("community"),
-                        F.col("community").alias("_next"),
-                    )
-                ),
-                "community",
-            ).select("node", F.col("_next").alias("community"))
-        )
-        new_edges, new_selfw = _coarsen(sym, selfw, comm, small_state=small)
-        new_sym = _materialize_wide(_symmetrize(new_edges))
-        new_selfw = _materialize(new_selfw)
-        # the previous level's generation is dead: every live plan now
-        # reads the freshly-materialized leaves
-        _release_checkpoint(mapping, sym, comm, selfw)
-        mapping, sym, selfw = new_mapping, new_sym, new_selfw
-        n_sym = sym.count()
-        if n_sym == 0:
-            break
-        remaining = max_levels - _level - 1
-        if remaining > 0 and _local_path_ok(edges, n_sym):
-            # coarsening crossed the local threshold: finish the
-            # remaining levels driver-side on the coarse graph and
-            # compose through the distributed mapping (the final canon
-            # below re-derives ids from original members either way)
-            from echo_chambers_detection_spark.operators.localgraph import (
-                louvain_local,
+    with _generations() as g:
+        sym, m, n = _weighted_sym(g, edges)
+        if m <= 0:
+            return _nodes(edges).withColumn("community", F.col("node"))
+        if _local_path_ok(edges, n):
+            # bounded collect (≤ LOCAL_GRAPH_EDGE_LIMIT rows by the probe):
+            # finish the whole multilevel loop driver-side, bit-identical
+            # semantics (tests/test_local_graph_parity.py)
+            result = louvain_local(sym.toPandas(), m, max_levels, max_rounds)
+            return driver_frame(
+                spark, result.items(), "node string, community string"
             )
 
-            rows = sym.toPandas()
-            selfw_rows = selfw.toPandas()
-            coarse = louvain_local(
-                rows, m, remaining, max_rounds, selfw_rows=selfw_rows
-            )
-            coarse_df = driver_frame(
-                spark, coarse.items(), "community string, _next string"
-            )
-            base_mapping = mapping  # keep the checkpoint ref for release
-            mapping = base_mapping.join(
-                F.broadcast(coarse_df), "community"
-            ).select("node", F.col("_next").alias("community"))
-            break
-    # canonicalize ids to min member node, materialize the result, and
-    # release every internal generation (round 9: the lazy return used
-    # to leak the final mapping/selfw checkpoints to the session; the
-    # returned frame carries its own _ckpt_rdd_ids for callers)
-    canon = mapping.groupBy("community").agg(F.min("node").alias("_canon"))
-    out = _materialize(
-        mapping.join(hint(canon), "community").select(
-            "node", F.col("_canon").alias("community")
+        # one distinct over the edge frame: selfw shares mapping's
+        # checkpoint leaf instead of re-executing the 2|E|-row distinct
+        # per lazy consumer (k_i build + coarsen)
+        mapping = g.keep(
+            _nodes_of_sym(sym).withColumn("community", F.col("node"))
         )
-    )
-    _release_checkpoint(sym, mapping, selfw, base_mapping)
-    return out
+        selfw = mapping.select("node", F.lit(0.0).alias("w_self"))
+        small = _probe_small(mapping)
+        hint = _state_hint(small)
+        for _level in range(max_levels):
+            comm0 = (
+                mapping.select(F.col("community").alias("node")).distinct()
+                .withColumn("community", F.col("node"))
+            )
+            comm, moves = _local_moves(
+                sym, selfw, comm0, m, max_rounds, small_state=small
+            )
+            comm = g.adopt(comm)
+            if moves == 0:
+                break
+            # compose: node -> old community -> new community
+            new_mapping = g.step(
+                mapping.join(
+                    hint(
+                        comm.select(
+                            F.col("node").alias("community"),
+                            F.col("community").alias("_next"),
+                        )
+                    ),
+                    "community",
+                ).select("node", F.col("_next").alias("community"))
+            )
+            new_edges, new_selfw = _coarsen(sym, selfw, comm, small_state=small)
+            new_sym, n_sym = g.step(
+                _symmetrize(new_edges), wide=True, n=F.count("*")
+            )
+            # the previous level is dead once the new one is on storage
+            selfw = g.step(new_selfw, prev=(mapping, sym, comm, selfw))
+            mapping, sym = new_mapping, new_sym
+            if n_sym == 0:
+                break
+            remaining = max_levels - _level - 1
+            if remaining > 0 and _local_path_ok(edges, n_sym):
+                # coarsening crossed the local threshold: finish the
+                # remaining levels driver-side on the coarse graph and
+                # compose through the distributed mapping (the final canon
+                # below re-derives ids from original members either way)
+                coarse = louvain_local(
+                    sym.toPandas(), m, remaining, max_rounds,
+                    selfw_rows=selfw.toPandas(),
+                )
+                coarse_df = driver_frame(
+                    spark, coarse.items(), "community string, _next string"
+                )
+                mapping = mapping.join(
+                    F.broadcast(coarse_df), "community"
+                ).select("node", F.col("_next").alias("community"))
+                break
+        # canonicalize ids to the min member node
+        canon = mapping.groupBy("community").agg(F.min("node").alias("_canon"))
+        return g.result(
+            g.keep(
+                mapping.join(hint(canon), "community").select(
+                    "node", F.col("_canon").alias("community")
+                )
+            )
+        )
 
 
 def modularity_optimization(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
@@ -2136,42 +2128,31 @@ def modularity_optimization(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
     gds.modularityOptimization.stream,
     project/metrics/community_detection.py:78-83) — Louvain's phase one
     without coarsening. Returns (node, community) canonicalized to min
-    member node id."""
-    sym = _materialize_wide(_symmetrize(edges))
-    # fused m + gate-count scalar read (see louvain)
-    m_row = sym.agg(
-        (F.sum("weight") / 2).alias("m"), F.count("*").alias("n")
-    ).first()
-    m = float(m_row["m"] or 0.0)
-    if m <= 0:
-        return _nodes(edges).withColumn("community", F.col("node"))
-    if _local_path_ok(edges, int(m_row["n"])):
-        from echo_chambers_detection_spark.operators.localgraph import (
-            modularity_local,
-        )
+    member node id; only the returned frame's blocks outlive the call's
+    `_generations` scope."""
+    with _generations() as g:
+        sym, m, n = _weighted_sym(g, edges)
+        if m <= 0:
+            return _nodes(edges).withColumn("community", F.col("node"))
+        if _local_path_ok(edges, n):
+            from echo_chambers_detection_spark.operators.localgraph import (
+                modularity_local,
+            )
 
-        rows = sym.toPandas()
-        _release_checkpoint(sym)
-        result = modularity_local(rows, m, max_rounds)
-        return driver_frame(
-            edges.sparkSession, result.items(), "node string, community string"
+            result = modularity_local(sym.toPandas(), m, max_rounds)
+            return driver_frame(
+                edges.sparkSession, result.items(), "node string, community string"
+            )
+        nodes = _nodes_of_sym(sym)
+        selfw = nodes.select("node", F.lit(0.0).alias("w_self"))
+        comm0 = g.keep(nodes.withColumn("community", F.col("node")))
+        small = _probe_small(comm0)
+        comm, _ = _local_moves(sym, selfw, comm0, m, max_rounds, small_state=small)
+        canon = comm.groupBy("community").agg(F.min("node").alias("_canon"))
+        out = comm.join(_state_hint(small)(canon), "community").select(
+            "node", F.col("_canon").alias("community")
         )
-    nodes = _nodes_of_sym(sym)
-    selfw = nodes.select("node", F.lit(0.0).alias("w_self"))
-    comm0 = _materialize(nodes.withColumn("community", F.col("node")))
-    small = _probe_small(comm0)
-    comm, _ = _local_moves(sym, selfw, comm0, m, max_rounds, small_state=small)
-    # result reads only the final comm leaf — the graph and the seed
-    # partition are dead
-    _release_checkpoint(sym, comm0)
-    canon = comm.groupBy("community").agg(F.min("node").alias("_canon"))
-    out = comm.join(_state_hint(small)(canon), "community").select(
-        "node", F.col("_canon").alias("community")
-    )
-    # transfer block ownership so callers can release the final frame
-    out._ckpt_rdd_ids = getattr(comm, "_ckpt_rdd_ids", [])
-    comm._ckpt_rdd_ids = []
-    return out
+        return g.result(out, comm)
 
 
 def _refine_group_kernel(m: float, gamma: float, max_rounds: int):
@@ -2284,304 +2265,303 @@ def _refine(
     community in parallel Arrow tasks, replacing the global round loop
     (~6 jobs/round over the full edge frame). The round-loop path
     remains for the giant-community regime, where one group would not
-    fit an executor task.
+    fit an executor task. Either path runs in its own `_generations`
+    scope; only the returned frame's blocks outlive it.
     """
     hint = _state_hint(small_state)
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.sum("weight").alias("k_adj")
     )
-    csrc = comm.select(F.col("node").alias("src"), F.col("community").alias("c1"))
-    cdst = comm.select(F.col("node").alias("dst"), F.col("community").alias("c2"))
-    # Half-edge frame for the group-parallel gate + cogroup input: each
-    # undirected edge ONCE (src < dst), labeled only with the SRC side's
-    # community — half the join input and half the Arrow transfer of the
-    # old both-directions intra0 double-join. Cross-community edges ride
-    # along (the kernel drops them by unmapped dst id); per-community
-    # counts are therefore an OVERESTIMATE of intra half-edges, so the
-    # gate below (2×count vs limit) only ever falls back early, never
-    # admits an oversized group.
-    half = _materialize(
-        sym.where(F.col("src") < F.col("dst"))
-        .join(hint(csrc), "src")
-        .select("src", "dst", "weight", F.col("c1").alias("community"))
-    )
-    max_intra = 2 * (
-        half.groupBy("community")
-        .agg(F.count("*").alias("n"))
-        .agg(F.max("n").alias("mx"))
-        .first()["mx"]
-        or 0
-    )
-    if REFINE_GROUP_EDGE_LIMIT > 0 and max_intra <= REFINE_GROUP_EDGE_LIMIT:
-        k_i_lazy = (
-            selfw.join(deg, "node", "outer")
-            .na.fill({"w_self": 0.0, "k_adj": 0.0})
-            .select(
-                "node", (F.col("k_adj") + 2 * F.col("w_self")).alias("k")
-            )
-        )
-        nodesc = comm.join(k_i_lazy, "node")  # (node, community, k)
-        out = _materialize(
-            half.groupBy("community")
-            .cogroup(nodesc.groupBy("community"))
-            .applyInPandas(
-                _refine_group_kernel(m, gamma, max_rounds),
-                "node string, sub string, community string",
-            )
-        )
-        _release_checkpoint(half)
-        return out
-    k_i = _materialize(
+    k_i_lazy = (
         selfw.join(deg, "node", "outer")
         .na.fill({"w_self": 0.0, "k_adj": 0.0})
         .select("node", (F.col("k_adj") + 2 * F.col("w_self")).alias("k"))
     )
-    # giant-community fallback: reconstruct the both-directions intra
-    # edge list from the half frame — ONE more half-sized join (dst
-    # side) + a local mirror instead of the old second 2|E|-row join
-    intra_h = (
-        half.join(hint(cdst), "dst")
-        .where(F.col("community") == F.col("c2"))
-        .select("src", "dst", "weight")
-    )
-    intra = _materialize_wide(
-        intra_h.unionAll(
-            intra_h.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                "weight",
-            )
+    csrc = comm.select(F.col("node").alias("src"), F.col("community").alias("c1"))
+    cdst = comm.select(F.col("node").alias("dst"), F.col("community").alias("c2"))
+    with _generations() as g:
+        # Half-edge frame for the group-parallel gate + cogroup input:
+        # each undirected edge ONCE (src < dst), labeled only with the
+        # SRC side's community — half the join input and half the Arrow
+        # transfer of the old both-directions intra0 double-join.
+        # Cross-community edges ride along (the kernel drops them by
+        # unmapped dst id); per-community counts are therefore an
+        # OVERESTIMATE of intra half-edges, so the gate below (2×count vs
+        # limit) only ever falls back early, never admits an oversized
+        # group.
+        half = g.keep(
+            sym.where(F.col("src") < F.col("dst"))
+            .join(hint(csrc), "src")
+            .select("src", "dst", "weight", F.col("c1").alias("community"))
         )
-    )
-    _release_checkpoint(half)
-    k_c = comm.join(hint(k_i), "node").groupBy("community").agg(
-        F.sum("k").alias("k_c")
-    )
-    # node gate: w(v, C∖v) ≥ γ·k_v·(k_C−k_v)/(2m)
-    w_vc = intra.groupBy(F.col("src").alias("node")).agg(
-        F.sum("weight").alias("w_vc")
-    )
-    # loop-invariant per-node state: k, community k_C, and the node gate
-    # result — one checkpoint consumed as a cheap broadcast leaf every
-    # round (the old shape rebuilt these as deep broadcast subtrees per
-    # use, and the loops' cost at test scale is serialized job count)
-    naux = _materialize(
-        comm.join(hint(k_i), "node")
-        .join(hint(k_c), "community")
-        .join(hint(w_vc), "node", "left")
-        .na.fill({"w_vc": 0.0})
-        .select(
-            "node",
-            "k",
-            "k_c",
-            # kept: round 0's per-sub outgoing weight IS w_vc (all subs
-            # are singletons), so the first round's target-gate skips
-            # the pairw scan entirely
-            "w_vc",
-            (
-                F.col("w_vc")
-                >= gamma * F.col("k") * (F.col("k_c") - F.col("k")) / (2 * m)
-            ).alias("is_mover"),
-        )
-    )
-    _release_checkpoint(k_i)
-    sub = _materialize(comm.select("node").withColumn("sub", F.col("node")))
-    if naux.where(F.col("is_mover")).isEmpty():
-        # nothing is γ-well-connected enough to merge — refined partition
-        # stays all-singletons; skip the round loop entirely
-        _release_checkpoint(intra, naux)
-        return sub
-
-    # Incrementally-maintained SUB-PAIR weight frame (round 9, VERDICT
-    # r8 #4): pairw(s1, s2, w) = total intra-community weight between
-    # distinct subs s1 and s2, both directions present (intra is the
-    # symmetrized edge set). All loop aggregates factor through it:
-    #   w(S, C∖S)   = Σ_{s2} pairw(S, s2)      (target gate)
-    #   w(v, S)     = pairw(v, S) for singleton v  (candidate scores)
-    # At round 0 every sub is a singleton, so pairw IS the intra edge
-    # list — no join, no aggregation. After each round's merges, pairw
-    # is relabeled through the (small) moved map and re-grouped: one
-    # pairw-sized exchange replaces the TWO full intra double-joins the
-    # previous shape paid per round (w_out + the candidate join tree),
-    # and pairw only shrinks as subs grow. This is _coarsen's
-    # fold-the-graph trick applied per-round inside refinement.
-    pairw = intra.select(
-        F.col("src").alias("s1"), F.col("dst").alias("s2"),
-        F.col("weight").alias("w"),
-    )
-    own_pairw = False  # round-0 pairw aliases `intra`; never release it
-    prev_holder = sub
-    import logging
-    import time as _time
-
-    _log = logging.getLogger(__name__)
-    # two-consecutive-zero-round termination: the hash-parity schedule
-    # alternates with rnd, so one zero-move round is not a fixpoint —
-    # see the refine_np mirror's comment (this rule is also what makes
-    # the per-community group kernel bit-identical to this loop)
-    zero_rounds = 0
-    for rnd in range(max_rounds):
-        _t0 = _time.perf_counter()
-        # per-sub state: size n, degree mass k_S, community mass k_C
-        # (sub id = a member node id, every member shares the sub's
-        # community, so k_C resolves via naux), outgoing weight w_sc
-        # from pairw, and the γ-well-connectedness target gate. Round 0
-        # reads w_sc straight off naux (singleton subs ⇒ w_sc = w_vc) —
-        # no pairw scan.
-        if rnd == 0:
-            w_out = naux.select(
-                F.col("node").alias("sub"), F.col("w_vc").alias("w_sc")
-            )
-        else:
-            w_out = pairw.groupBy(F.col("s1").alias("sub")).agg(
-                F.sum("w").alias("w_sc")
-            )
-        substate = _materialize(
-            sub.join(hint(naux.select("node", "k")), "node")
-            .groupBy("sub")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("k").alias("k_s"),
-                # for singleton subs this is THE member node — which can
-                # differ from the sub id after a chain move (v joins u
-                # while w joins v's now-vacated sub): node-level lookups
-                # (k, is_mover, the applied-join key) must go through
-                # the member, not the sub id
-                F.max("node").alias("rep"),
-            )
-            .join(
-                hint(naux.select(F.col("node").alias("sub"), "k_c")), "sub"
-            )
-            .join(hint(w_out), "sub", "left")
-            .na.fill({"w_sc": 0.0})
-            .select(
-                "sub",
-                "n",
-                "k_s",
-                "rep",
-                (
-                    F.col("w_sc")
-                    >= gamma
-                    * F.col("k_s")
-                    * (F.col("k_c") - F.col("k_s"))
-                    / (2 * m)
-                ).alias("ok"),
-            )
-        )
-        # singleton v -> adjacent sub S: w(v,S) = pairw(v,S), gain
-        # w_vS − k_v·k_S/(2m). Every join below is sub-level state on
-        # the small side (hinted); pairw itself is never re-joined
-        # against the edge frame.
-        cand = (
-            pairw.join(
-                hint(
-                    substate.where(F.col("n") == 1).select(
-                        F.col("sub").alias("s1"), F.col("rep")
-                    )
-                ),
-                "s1",
-            )
-            .join(
-                hint(
-                    naux.select(
-                        F.col("node").alias("rep"), "k", "is_mover"
-                    )
-                ),
-                "rep",
-            )
-            .where(F.col("is_mover"))
-            .join(
-                hint(
-                    substate.select(
-                        F.col("sub").alias("s2"),
-                        F.col("n").alias("n_tgt"),
-                        "k_s",
-                        "ok",
-                    )
-                ),
-                "s2",
-            )
-            .where(F.col("ok"))
-            .select(
-                F.col("rep").alias("node"),
-                F.col("s1").alias("own"),
-                F.col("s2").alias("tgt"),
-                (
-                    F.col("w") - F.col("k") * F.col("k_s") / (2 * m)
-                ).alias("score"),
-                "n_tgt",
-            )
-            .where(F.col("score") > 0)
-            # singleton↔singleton symmetric swap guard: a singleton may
-            # absorb INTO a larger-id singleton only (grown subs are fair
-            # game either way — they never move)
-            .where((F.col("n_tgt") > 1) | (F.col("tgt") > F.col("own")))
-        )
-        # one-shuffle window argmax (see _local_moves): max_by's string
-        # buffer would force an interpreted SortAggregate over the full
-        # candidate table
-        wnode = Window.partitionBy("node")
-        best = (
-            cand.withColumn("best", F.max("score").over(wnode))
-            .where(F.col("score") == F.col("best"))
-            .groupBy("node")
-            .agg(
-                F.max("tgt").alias("new_sub"),
-                # own is constant per node; carried for the pairw relabel
-                # (pairw is keyed by SUB id, which can differ from the
-                # member node id after a chain move)
-                F.max("own").alias("old_sub"),
-            )
-        )
-        parity = F.pmod(F.xxhash64(F.col("node")) + F.lit(rnd), F.lit(2)) == 0
-        applied = _materialize(
-            sub.join(hint(best), "node", "left").select(
-                "node",
-                F.when(parity & F.col("new_sub").isNotNull(), F.col("new_sub"))
-                .otherwise(F.col("sub"))
-                .alias("sub"),
-                (parity & F.col("new_sub").isNotNull()).alias("moved"),
-                # old sub id rides along so the pairw fold below can read
-                # the moved map off THIS checkpoint instead of re-deriving
-                # the whole cand→window→best pipeline for the broadcast
-                # build (measured: 8 jobs/fold → ~4)
-                F.col("old_sub"),
-            )
-        )
-        moves = int(
-            applied.agg(F.sum(F.col("moved").cast("long")).alias("mv")).first()["mv"]
+        max_intra = 2 * (
+            half.groupBy("community")
+            .agg(F.count("*").alias("n"))
+            .agg(F.max("n").alias("mx"))
+            .first()["mx"]
             or 0
         )
-        _t_moves = _time.perf_counter()
-        # substate is NOT released yet: the pairw relabel below reads the
-        # moved map through `best`, whose plan still references it
-        _release_checkpoint(prev_holder)
-        prev_holder = applied
-        sub = applied.select("node", "sub")
-        if moves == 0:
-            zero_rounds += 1
-            _release_checkpoint(substate)
-            _log.info(
-                "refine round %d: moves=0 (zero_rounds=%d), %.2fs",
-                rnd, zero_rounds, _t_moves - _t0,
+        if REFINE_GROUP_EDGE_LIMIT > 0 and max_intra <= REFINE_GROUP_EDGE_LIMIT:
+            nodesc = comm.join(k_i_lazy, "node")  # (node, community, k)
+            return g.result(
+                g.keep(
+                    half.groupBy("community")
+                    .cogroup(nodesc.groupBy("community"))
+                    .applyInPandas(
+                        _refine_group_kernel(m, gamma, max_rounds),
+                        "node string, sub string, community string",
+                    )
+                )
             )
-            if zero_rounds >= 2:
-                break
-            continue  # pairw unchanged — nothing merged this round
+        k_i = g.keep(k_i_lazy)
+        # giant-community fallback: reconstruct the both-directions intra
+        # edge list from the half frame — ONE more half-sized join (dst
+        # side) + a local mirror instead of the old second 2|E|-row join
+        intra_h = (
+            half.join(hint(cdst), "dst")
+            .where(F.col("community") == F.col("c2"))
+            .select("src", "dst", "weight")
+        )
+        intra = g.keep(
+            intra_h.unionAll(
+                intra_h.select(
+                    F.col("dst").alias("src"),
+                    F.col("src").alias("dst"),
+                    "weight",
+                )
+            ),
+            wide=True,
+        )
+        k_c = comm.join(hint(k_i), "node").groupBy("community").agg(
+            F.sum("k").alias("k_c")
+        )
+        # node gate: w(v, C∖v) ≥ γ·k_v·(k_C−k_v)/(2m)
+        w_vc = intra.groupBy(F.col("src").alias("node")).agg(
+            F.sum("weight").alias("w_vc")
+        )
+        # loop-invariant per-node state: k, community k_C, and the node
+        # gate result — one checkpoint consumed as a cheap broadcast leaf
+        # every round (the old shape rebuilt these as deep broadcast
+        # subtrees per use, and the loops' cost at test scale is
+        # serialized job count)
+        naux = g.step(
+            comm.join(hint(k_i), "node")
+            .join(hint(k_c), "community")
+            .join(hint(w_vc), "node", "left")
+            .na.fill({"w_vc": 0.0})
+            .select(
+                "node",
+                "k",
+                "k_c",
+                # kept: round 0's per-sub outgoing weight IS w_vc (all
+                # subs are singletons), so the first round's target-gate
+                # skips the pairw scan entirely
+                "w_vc",
+                (
+                    F.col("w_vc")
+                    >= gamma * F.col("k") * (F.col("k_c") - F.col("k")) / (2 * m)
+                ).alias("is_mover"),
+            ),
+            prev=(half, k_i),
+        )
+        sub = applied = g.step(
+            comm.select("node").withColumn("sub", F.col("node"))
+        )
+        if naux.where(F.col("is_mover")).isEmpty():
+            # nothing is γ-well-connected enough to merge — refined
+            # partition stays all-singletons; skip the round loop entirely
+            return g.result(sub)
+
+        # Incrementally-maintained SUB-PAIR weight frame (round 9, VERDICT
+        # r8 #4): pairw(s1, s2, w) = total intra-community weight between
+        # distinct subs s1 and s2, both directions present (intra is the
+        # symmetrized edge set). All loop aggregates factor through it:
+        #   w(S, C∖S)   = Σ_{s2} pairw(S, s2)      (target gate)
+        #   w(v, S)     = pairw(v, S) for singleton v  (candidate scores)
+        # At round 0 every sub is a singleton, so pairw IS the intra edge
+        # list — no join, no aggregation. After each round's merges,
+        # pairw is relabeled through the (small) moved map and
+        # re-grouped: one pairw-sized exchange replaces the TWO full
+        # intra double-joins the previous shape paid per round (w_out +
+        # the candidate join tree), and pairw only shrinks as subs grow.
+        # This is _coarsen's fold-the-graph trick applied per-round
+        # inside refinement.
+        pairw = intra.select(
+            F.col("src").alias("s1"), F.col("dst").alias("s2"),
+            F.col("weight").alias("w"),
+        )
+        import logging
+        import time as _time
+
+        _log = logging.getLogger(__name__)
+        # two-consecutive-zero-round termination: the hash-parity
+        # schedule alternates with rnd, so one zero-move round is not a
+        # fixpoint — see the refine_np mirror's comment (this rule is
+        # also what makes the per-community group kernel bit-identical to
+        # this loop)
         zero_rounds = 0
-        if rnd < max_rounds - 1:
+        for rnd in range(max_rounds):
+            _t0 = _time.perf_counter()
+            # per-sub state: size n, degree mass k_S, community mass k_C
+            # (sub id = a member node id, every member shares the sub's
+            # community, so k_C resolves via naux), outgoing weight w_sc
+            # from pairw, and the γ-well-connectedness target gate. Round
+            # 0 reads w_sc straight off naux (singleton subs ⇒ w_sc =
+            # w_vc) — no pairw scan.
+            if rnd == 0:
+                w_out = naux.select(
+                    F.col("node").alias("sub"), F.col("w_vc").alias("w_sc")
+                )
+            else:
+                w_out = pairw.groupBy(F.col("s1").alias("sub")).agg(
+                    F.sum("w").alias("w_sc")
+                )
+            substate = g.step(
+                sub.join(hint(naux.select("node", "k")), "node")
+                .groupBy("sub")
+                .agg(
+                    F.count("*").alias("n"),
+                    F.sum("k").alias("k_s"),
+                    # for singleton subs this is THE member node — which
+                    # can differ from the sub id after a chain move (v
+                    # joins u while w joins v's now-vacated sub):
+                    # node-level lookups (k, is_mover, the applied-join
+                    # key) must go through the member, not the sub id
+                    F.max("node").alias("rep"),
+                )
+                .join(
+                    hint(naux.select(F.col("node").alias("sub"), "k_c")), "sub"
+                )
+                .join(hint(w_out), "sub", "left")
+                .na.fill({"w_sc": 0.0})
+                .select(
+                    "sub",
+                    "n",
+                    "k_s",
+                    "rep",
+                    (
+                        F.col("w_sc")
+                        >= gamma
+                        * F.col("k_s")
+                        * (F.col("k_c") - F.col("k_s"))
+                        / (2 * m)
+                    ).alias("ok"),
+                )
+            )
+            # singleton v -> adjacent sub S: w(v,S) = pairw(v,S), gain
+            # w_vS − k_v·k_S/(2m). Every join below is sub-level state on
+            # the small side (hinted); pairw itself is never re-joined
+            # against the edge frame.
+            cand = (
+                pairw.join(
+                    hint(
+                        substate.where(F.col("n") == 1).select(
+                            F.col("sub").alias("s1"), F.col("rep")
+                        )
+                    ),
+                    "s1",
+                )
+                .join(
+                    hint(
+                        naux.select(
+                            F.col("node").alias("rep"), "k", "is_mover"
+                        )
+                    ),
+                    "rep",
+                )
+                .where(F.col("is_mover"))
+                .join(
+                    hint(
+                        substate.select(
+                            F.col("sub").alias("s2"),
+                            F.col("n").alias("n_tgt"),
+                            "k_s",
+                            "ok",
+                        )
+                    ),
+                    "s2",
+                )
+                .where(F.col("ok"))
+                .select(
+                    F.col("rep").alias("node"),
+                    F.col("s1").alias("own"),
+                    F.col("s2").alias("tgt"),
+                    (
+                        F.col("w") - F.col("k") * F.col("k_s") / (2 * m)
+                    ).alias("score"),
+                    "n_tgt",
+                )
+                .where(F.col("score") > 0)
+                # singleton↔singleton symmetric swap guard: a singleton
+                # may absorb INTO a larger-id singleton only (grown subs
+                # are fair game either way — they never move)
+                .where((F.col("n_tgt") > 1) | (F.col("tgt") > F.col("own")))
+            )
+            # one-shuffle window argmax (see _local_moves): max_by's
+            # string buffer would force an interpreted SortAggregate over
+            # the full candidate table
+            wnode = Window.partitionBy("node")
+            best = (
+                cand.withColumn("best", F.max("score").over(wnode))
+                .where(F.col("score") == F.col("best"))
+                .groupBy("node")
+                .agg(
+                    F.max("tgt").alias("new_sub"),
+                    # own is constant per node; carried for the pairw
+                    # relabel (pairw is keyed by SUB id, which can differ
+                    # from the member node id after a chain move)
+                    F.max("own").alias("old_sub"),
+                )
+            )
+            parity = F.pmod(F.xxhash64(F.col("node")) + F.lit(rnd), F.lit(2)) == 0
+            moved = parity & F.col("new_sub").isNotNull()
+            # supersedes the last round's assignment and this round's
+            # substate: the old sub id rides along, so the pairw fold
+            # below reads the moved map off THIS leaf instead of
+            # re-deriving the cand→window→best pipeline for the broadcast
+            # build (measured: 8 jobs/fold → ~4)
+            applied, moves = g.step(
+                sub.join(hint(best), "node", "left").select(
+                    "node",
+                    F.when(moved, F.col("new_sub"))
+                    .otherwise(F.col("sub"))
+                    .alias("sub"),
+                    moved.alias("moved"),
+                    F.col("old_sub"),
+                ),
+                prev=(applied, substate),
+                mv=F.sum(F.col("moved").cast("long")),
+            )
+            _t_moves = _time.perf_counter()
+            sub = applied.select("node", "sub")
+            if moves == 0:
+                zero_rounds += 1
+                _log.info(
+                    "refine round %d: moves=0 (zero_rounds=%d), %.2fs",
+                    rnd, zero_rounds, _t_moves - _t0,
+                )
+                if zero_rounds >= 2:
+                    break
+                continue  # pairw unchanged — nothing merged this round
+            zero_rounds = 0
+            if rnd == max_rounds - 1:
+                _log.info(
+                    "refine round %d (last): moves=%d, %.2fs",
+                    rnd, moves, _t_moves - _t0,
+                )
+                break
             # fold this round's merges into pairw: relabel both ends
-            # through the moved map (small, hinted), drop now-internal
-            # pairs, re-group. hash(s1) from the repartition serves the
-            # (s1, s2) aggregation (s1 is a prefix of the grouping).
-            # moved-sub map keyed by the OLD SUB ID (not the node id —
-            # see the rep/chain-move note on substate), read off the
-            # checkpointed `applied` leaf
+            # through the moved map (small, hinted; keyed by the OLD SUB
+            # ID, not the node id — see the rep/chain-move note on
+            # substate), drop now-internal pairs, re-group. hash(s1) from
+            # the repartition serves the (s1, s2) aggregation (s1 is a
+            # prefix of the grouping). Round 0's pairw is a projection of
+            # `intra`, which the scope keeps; later ones are superseded.
             moved_map = applied.where(F.col("moved")).select(
                 F.col("old_sub").alias("_mv"),
                 F.col("sub").alias("_mvsub"),
             )
-            relabeled = (
+            pairw = g.step(
                 pairw.join(
                     hint(moved_map.withColumnRenamed("_mv", "s1")),
                     "s1",
@@ -2600,34 +2580,17 @@ def _refine(
                 .groupBy(
                     F.col("s1n").alias("s1"), F.col("s2n").alias("s2")
                 )
-                .agg(F.sum("w").alias("w"))
+                .agg(F.sum("w").alias("w")),
+                prev=pairw,
+                wide=True,
             )
-            new_pairw = _materialize_wide(relabeled)
-            if own_pairw:
-                _release_checkpoint(pairw)
-            pairw = new_pairw
-            own_pairw = True
-            _release_checkpoint(substate)
             _log.info(
                 "refine round %d: moves=%d, move-phase %.2fs, "
                 "pairw-fold %.2fs",
                 rnd, moves, _t_moves - _t0,
                 _time.perf_counter() - _t_moves,
             )
-        else:
-            _release_checkpoint(substate)
-            _log.info(
-                "refine round %d (last): moves=%d, %.2fs",
-                rnd, moves, _t_moves - _t0,
-            )
-    # transfer block ownership to the returned projection; the graph
-    # scaffolding of this refinement is dead
-    sub._ckpt_rdd_ids = getattr(prev_holder, "_ckpt_rdd_ids", [])
-    prev_holder._ckpt_rdd_ids = []
-    if own_pairw:
-        _release_checkpoint(pairw)
-    _release_checkpoint(intra, naux)
-    return sub
+        return g.result(sub, applied)
 
 
 def leiden(
@@ -2651,278 +2614,216 @@ def leiden(
     ever splits, never merges, and since round 7 it runs over the FINAL
     aggregation units rather than the level-0 graph — exact because
     refined subs are connected by construction (see the tail comment).
-    Returns (node, community), ids = min member node."""
-    sym = _materialize_wide(_symmetrize(edges))
-    # fused m + gate-count scalar read (see louvain)
-    m_row = sym.agg(
-        (F.sum("weight") / 2).alias("m"), F.count("*").alias("n")
-    ).first()
-    m = float(m_row["m"] or 0.0)
-    if m <= 0:
-        return _nodes(edges).withColumn("community", F.col("node"))
+    Returns (node, community), ids = min member node. One
+    `_generations` scope owns every level's generations; only the
+    returned frame's blocks outlive the call, on every return path."""
+    from echo_chambers_detection_spark.operators.localgraph import (
+        leiden_local,
+        leiden_local_continue,
+    )
 
-    if _local_path_ok(edges, int(m_row["n"])):
-        # bounded collect (see louvain): whole multilevel loop plus the
-        # split-only connectivity pass, driver-side, same semantics
-        from echo_chambers_detection_spark.operators.localgraph import (
-            leiden_local,
-        )
-
-        rows = sym.toPandas()
-        _release_checkpoint(sym)
-        result = leiden_local(rows, m, max_levels, max_rounds, gamma=gamma)
-        return driver_frame(
-            edges.sparkSession, result.items(), "node string, community string"
-        )
-
-    sym0 = sym
-    # ONE distinct over the edge frame: selfw/comm0/mapping are all
-    # projections of (or derived from) this checkpointed node list —
-    # the old shape re-executed the 2|E|-row distinct once per lazy
-    # consumer (selfw alone fed three: both k_i builds and the coarsen)
-    nodes_m = _materialize(_nodes_of_sym(sym))
-    selfw = nodes_m.select("node", F.lit(0.0).alias("w_self"))
-    mapping = nodes_m.withColumn("agg", F.col("node"))
-    comm0 = nodes_m.withColumn("community", F.col("node"))
-    comm0_init = nodes_m  # leaf shared by all of the above; release at exit
-    small = _probe_small(mapping)
-    hint = _state_hint(small)
-    sub2comm = comm0.select(F.col("node").alias("sub"), "community")
-    unit_edges = None  # set on the moves==0 break; else the final sym
-
-    for _level in range(max_levels):
-        prev_sub2comm, prev_mapping = sub2comm, mapping
-        comm, moves = _local_moves(
-            sym, selfw, comm0, m, max_rounds, small_state=small
-        )
-        if _level == max_levels - 1:
-            # LAST level: the refined partition is only ever consumed by
-            # the next level's aggregation, which will not happen, and
-            # the community output factors through `comm` identically
-            # with or without refining (each refined sub lies inside one
-            # community, so sub2comm∘mapping == comm either way, and the
-            # units stay connected for the CC check below) — skip the
-            # whole refinement pass (round 7; 20% of the 6M-edge row)
-            # a pure projection of the already-checkpointed comm — no
-            # extra materialization; comm's blocks transfer to sub2comm
-            # and are released with it at exit (round 9)
-            sub2comm = comm.select(F.col("node").alias("sub"), "community")
-            sub2comm._ckpt_rdd_ids = getattr(comm, "_ckpt_rdd_ids", [])
-            comm._ckpt_rdd_ids = []
-            # mapping is NOT replaced on this path — keep its blocks
-            if prev_sub2comm is not comm0:
-                _release_checkpoint(prev_sub2comm)
-            break
-        refined = _refine(sym, selfw, comm, m, small_state=small, gamma=gamma)
-        if "community" in refined.columns:
-            # group-parallel refine already carries each sub's community
-            # (the cogroup key) — skip the node-level re-join
-            sub2comm = _materialize(
-                refined.select("sub", "community").distinct()
+    spark = edges.sparkSession
+    with _generations() as g:
+        sym, m, n = _weighted_sym(g, edges)
+        if m <= 0:
+            return _nodes(edges).withColumn("community", F.col("node"))
+        if _local_path_ok(edges, n):
+            # bounded collect (see louvain): whole multilevel loop plus
+            # the split-only connectivity pass, driver-side, same semantics
+            result = leiden_local(
+                sym.toPandas(), m, max_levels, max_rounds, gamma=gamma
             )
-        else:
-            sub2comm = _materialize(
-                refined.join(comm, "node")
-                .select(F.col("sub"), "community")
-                .distinct()
+            return driver_frame(
+                spark, result.items(), "node string, community string"
             )
-        mapping = _materialize(
-            mapping.join(
-                hint(refined.select(F.col("node").alias("agg"), "sub")), "agg"
-            ).select("node", F.col("sub").alias("agg"))
-        )
-        _release_checkpoint(prev_mapping, comm)
-        if prev_sub2comm is not comm0:  # level-0 seed shares comm0's blocks
-            _release_checkpoint(prev_sub2comm)
-        if moves == 0:
-            # the refined subs were never coarsened: build just the
-            # unit-level edge list the connectivity check below needs
-            fin_edges, _ = _coarsen(
+
+        def finish(sym_rows, selfw_rows, unit_min_rows, levels):
+            # the rest driver-side with the seeded numpy mirror, labels
+            # composed through the distributed mapping
+            labels = leiden_local_continue(
+                sym_rows, selfw_rows, sub2comm.toPandas(), unit_min_rows,
+                m, levels, max_rounds, gamma=gamma,
+            )
+            lab_df = driver_frame(
+                spark, labels.items(), "agg string, community string"
+            )
+            return g.result(
+                g.keep(
+                    mapping.join(F.broadcast(lab_df), "agg").select(
+                        "node", "community"
+                    )
+                )
+            )
+
+        # ONE distinct over the edge frame: selfw/comm0/mapping are all
+        # projections of (or derived from) this checkpointed node list —
+        # the old shape re-executed the 2|E|-row distinct once per lazy
+        # consumer (selfw alone fed three: both k_i builds and the coarsen)
+        nodes_m = g.keep(_nodes_of_sym(sym))
+        selfw = nodes_m.select("node", F.lit(0.0).alias("w_self"))
+        mapping = nodes_m.withColumn("agg", F.col("node"))
+        comm0 = nodes_m.withColumn("community", F.col("node"))
+        small = _probe_small(mapping)
+        hint = _state_hint(small)
+        sub2comm = comm0.select(F.col("node").alias("sub"), "community")
+        unit_edges = None  # set on the moves==0 break; else the final sym
+
+        for _level in range(max_levels):
+            comm, moves = _local_moves(
+                sym, selfw, comm0, m, max_rounds, small_state=small
+            )
+            comm = g.adopt(comm)
+            if _level == max_levels - 1:
+                # LAST level: the refined partition is only ever consumed
+                # by the next level's aggregation, which will not happen,
+                # and the community output factors through `comm`
+                # identically with or without refining (each refined sub
+                # lies inside one community, so sub2comm∘mapping == comm
+                # either way, and the units stay connected for the CC
+                # check below) — skip the whole refinement pass (round 7;
+                # 20% of the 6M-edge row)
+                sub2comm = comm.select(F.col("node").alias("sub"), "community")
+                break
+            refined = g.adopt(
+                _refine(sym, selfw, comm, m, small_state=small, gamma=gamma)
+            )
+            if "community" in refined.columns:
+                # group-parallel refine already carries each sub's
+                # community (the cogroup key) — skip the node-level re-join
+                s2c = refined.select("sub", "community")
+            else:
+                s2c = refined.join(comm, "node").select(F.col("sub"), "community")
+            # the seed partition of this level is dead once the next one
+            # (Traag's aggregate-by-P_ref, seed-with-P) is on storage
+            sub2comm = g.step(s2c.distinct(), prev=sub2comm)
+            mapping = g.step(
+                mapping.join(
+                    hint(refined.select(F.col("node").alias("agg"), "sub")),
+                    "agg",
+                ).select("node", F.col("sub").alias("agg")),
+                prev=(mapping, comm),
+            )
+            if moves == 0:
+                # the refined subs were never coarsened: build just the
+                # unit-level edge list the connectivity check below needs.
+                # _coarsen emits ORIENTED (u1 < u2) pairs named u1/u2 —
+                # rename to the src/dst the connectivity pass reads (its
+                # src < dst filter then keeps every row, matching the
+                # both-directions sym frame it otherwise receives). This
+                # branch was dormant until the single-direction-per-round
+                # schedules let a mid-loop level converge to moves == 0.
+                fin_edges, _ = _coarsen(
+                    sym,
+                    selfw,
+                    refined.select("node", F.col("sub").alias("community")),
+                    small_state=small,
+                )
+                unit_edges = g.keep(
+                    fin_edges.select(
+                        F.col("u1").alias("src"), F.col("u2").alias("dst")
+                    )
+                )
+                break
+            new_edges, new_selfw = _coarsen(
                 sym,
                 selfw,
                 refined.select("node", F.col("sub").alias("community")),
                 small_state=small,
             )
-            # _coarsen emits ORIENTED (u1 < u2) pairs named u1/u2 —
-            # rename to the src/dst the connectivity pass reads (its
-            # src < dst filter then keeps every row, matching the
-            # both-directions sym frame it otherwise receives). This
-            # branch was dormant until the single-direction-per-round
-            # schedules let a mid-loop level converge to moves == 0.
-            unit_edges = _materialize(
-                fin_edges.select(
-                    F.col("u1").alias("src"), F.col("u2").alias("dst")
-                )
-            )
-            _release_checkpoint(refined)
-            break
-        new_edges, new_selfw = _coarsen(
-            sym,
-            selfw,
-            refined.select("node", F.col("sub").alias("community")),
-            small_state=small,
-        )
-        prev_sym, prev_selfw = sym, selfw
-        remaining = max_levels - _level - 1
-        coarse = None
-        if remaining > 0 and _local_path_ok(edges, sub2comm.count()):
-            # aggregation may have crossed the local threshold
-            # (louvain's mid-loop crossover, VERDICT r9 #3): checkpoint
-            # the coarse DIRECTED edge list compactly first — the wide
-            # repartition below only pays off for further distributed
-            # rounds, not for a driver-side finish
-            coarse = _materialize(new_edges)
-            if _local_path_ok(
-                edges, max(2 * coarse.count(), sub2comm.count())
-            ):
-                # finish the remaining levels AND the split-only
-                # connectivity pass driver-side on the coarse unit
-                # graph with the seeded numpy mirror, composed through
-                # the distributed mapping. Exact: the kernels are the
-                # bit-for-bit local mirrors, and the connectivity pass
-                # over ENTRY units equals the node-level pass because
-                # every unit is connected by construction.
-                from echo_chambers_detection_spark.operators.localgraph import (  # noqa: E501
-                    leiden_local_continue,
-                )
-
-                unit_min_rows = (
-                    mapping.groupBy("agg")
-                    .agg(F.min("node").alias("umin"))
-                    .toPandas()
-                )
-                labels = leiden_local_continue(
-                    _symmetrize(coarse).toPandas(),
-                    new_selfw.toPandas(),
-                    sub2comm.toPandas(),
-                    unit_min_rows,
-                    m,
-                    remaining,
-                    max_rounds,
-                    gamma=gamma,
-                )
-                lab_df = driver_frame(
-                    edges.sparkSession,
-                    labels.items(),
-                    "agg string, community string",
-                )
-                out = _materialize(
-                    mapping.join(F.broadcast(lab_df), "agg").select(
-                        "node", "community"
+            coarse = None
+            n_units = sub2comm.count()
+            if _local_path_ok(edges, n_units):
+                # aggregation may have crossed the local threshold
+                # (louvain's mid-loop crossover, VERDICT r9 #3): checkpoint
+                # the coarse DIRECTED edge list compactly first — the wide
+                # repartition below only pays off for further distributed
+                # rounds, not for a driver-side finish
+                coarse = g.keep(new_edges)
+                if _local_path_ok(edges, max(2 * coarse.count(), n_units)):
+                    # finish the remaining levels AND the split-only
+                    # connectivity pass on the coarse unit graph. Exact:
+                    # the kernels are the bit-for-bit local mirrors, and
+                    # the connectivity pass over ENTRY units equals the
+                    # node-level pass because every unit is connected by
+                    # construction.
+                    unit_min_rows = (
+                        mapping.groupBy("agg")
+                        .agg(F.min("node").alias("umin"))
+                        .toPandas()
                     )
+                    return finish(
+                        _symmetrize(coarse).toPandas(),
+                        new_selfw.toPandas(),
+                        unit_min_rows,
+                        max_levels - _level - 1,
+                    )
+            new_sym = g.step(
+                _symmetrize(coarse if coarse is not None else new_edges),
+                wide=True,
+            )
+            selfw = g.step(new_selfw, prev=(sym, selfw, refined, coarse))
+            sym = new_sym
+            comm0 = sub2comm.select(F.col("sub").alias("node"), "community")
+            if sym.isEmpty():
+                break
+
+        if unit_edges is None:
+            # normal exit: the latest coarsened graph IS the unit-level
+            # graph (its nodes are the final refined subs); zero-level exit
+            # degenerates to the level-0 graph with all-singleton
+            # communities, where the intra frame below is empty and every
+            # unit keeps its own label
+            unit_edges = sym.select("src", "dst")
+
+        # connectivity safety net (split-only), at the FINAL AGGREGATED
+        # level (round 7 — was a full CC over the level-0 graph, ~20% of
+        # the 6M-edge bench row with its two full-width label joins).
+        # Every refined sub is connected by construction (_refine grows
+        # subs one positive-gain edge at a time), so a community is
+        # connected iff its induced subgraph over the final aggregation
+        # units is, and splitting there is EXACT: units partition the
+        # nodes, intra-community adjacency factors through units, and
+        # each split part's label is the min original member via the
+        # per-unit minima — identical labels to the node-level pass,
+        # thousands of times smaller at scale.
+        unit_min = mapping.groupBy("agg").agg(F.min("node").alias("umin"))
+        if _local_path_ok(edges, max(unit_edges.count(), sub2comm.count())):
+            # unit graph fits the driver: the split-only connectivity
+            # pass as one union-find instead of the distributed CC loop
+            # (~15 serialized jobs of pure overhead at unit scale —
+            # VERDICT r9 #3); leiden_local_continue with max_levels=0 IS
+            # this tail
+            return finish(unit_edges.toPandas(), [], unit_min.toPandas(), 0)
+        lab_u1 = sub2comm.select(
+            F.col("sub").alias("u1"), F.col("community").alias("c1")
+        )
+        lab_u2 = sub2comm.select(
+            F.col("sub").alias("u2"), F.col("community").alias("c2")
+        )
+        intra_u = (
+            unit_edges.where(F.col("src") < F.col("dst"))
+            .select(F.col("src").alias("u1"), F.col("dst").alias("u2"))
+            .join(lab_u1, "u1")
+            .join(lab_u2, "u2")
+            .where(F.col("c1") == F.col("c2"))
+            .select("u1", "u2")
+        )
+        comps_u = g.adopt(connected_components(intra_u))
+        comp_min = comps_u.join(
+            unit_min.withColumnRenamed("agg", "node"), "node"
+        ).groupBy("component").agg(F.min("umin").alias("cmin"))
+        unit_final = comps_u.join(comp_min, "component").select(
+            F.col("node").alias("agg"), "cmin"
+        )
+        return g.result(
+            g.keep(
+                mapping.join(hint(unit_final), "agg", "left")
+                .join(hint(unit_min), "agg")
+                .select(
+                    "node", F.coalesce("cmin", F.col("umin")).alias("community")
                 )
-                _release_checkpoint(refined, coarse, prev_selfw)
-                if prev_sym is not sym0:
-                    _release_checkpoint(prev_sym)
-                _release_checkpoint(sym0, mapping, sub2comm, comm0_init)
-                return out
-        sym = _materialize_wide(
-            _symmetrize(coarse if coarse is not None else new_edges)
-        )
-        selfw = _materialize(new_selfw)
-        _release_checkpoint(refined, prev_selfw)
-        if coarse is not None:
-            _release_checkpoint(coarse)
-        if prev_sym is not sym0:
-            _release_checkpoint(prev_sym)
-        comm0 = sub2comm.select(F.col("sub").alias("node"), "community")
-        if sym.isEmpty():
-            break
-
-    if unit_edges is None:
-        # normal exit: the latest coarsened graph IS the unit-level
-        # graph (its nodes are the final refined subs); zero-level exit
-        # degenerates to sym0 with all-singleton communities, where the
-        # intra frame below is empty and every unit keeps its own label
-        unit_edges = sym.select("src", "dst")
-
-    # connectivity safety net (split-only), at the FINAL AGGREGATED
-    # level (round 7 — was a full CC over the level-0 graph, ~20% of
-    # the 6M-edge bench row with its two full-width label joins).
-    # Every refined sub is connected by construction (_refine grows
-    # subs one positive-gain edge at a time), so a community is
-    # connected iff its induced subgraph over the final aggregation
-    # units is, and splitting there is EXACT: units partition the
-    # nodes, intra-community adjacency factors through units, and each
-    # split part's label is the min original member via the per-unit
-    # minima — identical labels to the node-level pass, thousands of
-    # times smaller at scale.
-    unit_min = mapping.groupBy("agg").agg(F.min("node").alias("umin"))
-    if _local_path_ok(edges, max(unit_edges.count(), sub2comm.count())):
-        # unit graph fits the driver: run the split-only connectivity
-        # pass as one union-find instead of the distributed CC loop
-        # (~15 serialized jobs of pure overhead at unit scale —
-        # VERDICT r9 #3). leiden_local_continue with max_levels=0 IS
-        # this tail, labels = min original member via unit_min.
-        from echo_chambers_detection_spark.operators.localgraph import (
-            leiden_local_continue,
-        )
-
-        labels = leiden_local_continue(
-            unit_edges.toPandas(),
-            [],
-            sub2comm.toPandas(),
-            unit_min.toPandas(),
-            m,
-            0,
-            max_rounds,
-            gamma=gamma,
-        )
-        lab_df = driver_frame(
-            edges.sparkSession, labels.items(), "agg string, community string"
-        )
-        out = _materialize(
-            mapping.join(F.broadcast(lab_df), "agg").select(
-                "node", "community"
             )
         )
-        if sym is not sym0:
-            _release_checkpoint(sym)
-        _release_checkpoint(
-            sym0, mapping, sub2comm, comm0_init, selfw, unit_edges
-        )
-        return out
-    lab_u1 = sub2comm.select(
-        F.col("sub").alias("u1"), F.col("community").alias("c1")
-    )
-    lab_u2 = sub2comm.select(
-        F.col("sub").alias("u2"), F.col("community").alias("c2")
-    )
-    intra_u = (
-        unit_edges.where(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u1"), F.col("dst").alias("u2"))
-        .join(lab_u1, "u1")
-        .join(lab_u2, "u2")
-        .where(F.col("c1") == F.col("c2"))
-        .select("u1", "u2")
-    )
-    comps_u = connected_components(intra_u)
-    comp_min = comps_u.join(
-        unit_min.withColumnRenamed("agg", "node"), "node"
-    ).groupBy("component").agg(F.min("umin").alias("cmin"))
-    unit_final = comps_u.join(comp_min, "component").select(
-        F.col("node").alias("agg"), "cmin"
-    )
-    out = _materialize(
-        mapping.join(hint(unit_final), "agg", "left")
-        .join(hint(unit_min), "agg")
-        .select(
-            "node", F.coalesce("cmin", F.col("umin")).alias("community")
-        )
-    )
-    # `out` is on storage: EVERY internal generation is now dead. Release
-    # them all here rather than leaking them to the session — bench's
-    # between-query sweep used to exempt locally-checkpointed blocks, so
-    # each leiden call left ~5 pinned frames (comm0, the last selfw,
-    # mapping, sub2comm, comps_u, the owned unit_edges) for the rest of
-    # the session (round 9; the returned frame carries its own
-    # _ckpt_rdd_ids so callers can release it too).
-    if sym is not sym0:
-        _release_checkpoint(sym)
-    _release_checkpoint(
-        sym0, mapping, sub2comm, comps_u, comm0_init, selfw, unit_edges
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2988,9 +2889,13 @@ def fastrp(
         out = _traversal_mirror(
             edges,
             "fastrp_local",
-            [("node", None), ("embedding", ArrayType(FloatType()))]
+            [("node", None), ("embedding", ArrayType(FloatType(), False), False)]
             if assemble
-            else [("node", None), ("dim", IntegerType()), ("val", DoubleType())],
+            else [
+                ("node", None),
+                ("dim", IntegerType(), False),
+                ("val", DoubleType(), False),
+            ],
             weighted=True,
             max_rows=FASTRP_LOCAL_CELLS // (4 * max(dim, 1)),
             drop_null_ids=False,
@@ -3127,7 +3032,6 @@ def density_cluster(
     lsh_num_planes: int = 16,
     lsh_band_bits: int = 4,
     dim: int | None = None,
-    carry_input_ckpt: bool = False,
 ) -> DataFrame:
     """DBSCAN-flavored clustering over (node, vector).
 
@@ -3145,11 +3049,9 @@ def density_cluster(
       /root/reference/hdbscan_clusters.csv).
 
     Returns (node, cluster) with cluster = min member node id or '-1'.
-
-    carry_input_ckpt=True additionally transfers checkpoint-block
-    ownership of the caller-supplied `embeddings` frame onto the result
-    (one release frees the whole fastrp->cluster chain). Leave False if
-    the caller will reuse `embeddings` after releasing a result.
+    The result owns its own checkpoints, never the caller's
+    `embeddings`: a caller that wants one release to free the whole
+    chain hands them over with `carry_ckpt(out, embeddings)`.
     """
     from echo_chambers_detection_spark.operators.ann import (
         lsh_near_dup_pairs,
@@ -3217,12 +3119,5 @@ def density_cluster(
         .select("node", F.coalesce("cluster", F.lit("-1")).alias("cluster"))
     )
     # nbrs/comps stay live inside the returned plan; carry their block
-    # ownership so one caller-side release frees the chain. The INPUT's
-    # checkpoints transfer only on explicit opt-in (carry_input_ckpt):
-    # silently stealing a caller-supplied frame's blocks means a caller
-    # that releases one result and then reuses the same embeddings frame
-    # hits unrecoverable block-not-found failures (ADVICE r9).
-    out = carry_ckpt(out, nbrs, comps)
-    if carry_input_ckpt:
-        out = carry_ckpt(out, embeddings)
-    return out
+    # ownership so one caller-side release frees the chain
+    return carry_ckpt(out, nbrs, comps)

@@ -411,132 +411,109 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
     the same single-linkage partition at every threshold, so the
     downstream condense is path-independent. Local Kruskal below the
     small-graph bound, distributed Borůvka (per-component min out-edge,
-    contract, repeat) above it.
+    contract, repeat) above it. The rounds' generations belong to one
+    `_generations` scope; only the picked edge sets outlive it, owned
+    by the returned union.
     """
     from echo_chambers_detection_spark.operators import graph as _G
     from echo_chambers_detection_spark.operators.graph import (
+        _generations,
         _local_path_ok,
-        _materialize,
-        _release_checkpoint,
         connected_components,
     )
-
-    e = _materialize(edges.select("u1", "u2", F.col("w").cast("double")))
-    n_rows = e.count()
-    if _local_path_ok(edges, n_rows):
-        rows = e.toPandas()
-        _release_checkpoint(e)
-        picked = _kruskal_local(
-            list(zip(rows["u1"], rows["u2"], rows["w"]))
-        )
-        return driver_frame(
-            edges.sparkSession, picked, "u1 string, u2 string, w double"
-        )
-
-    comp = _materialize(
-        e.select(F.col("u1").alias("node"))
-        .unionAll(e.select(F.col("u2").alias("node")))
-        .distinct()
-        .withColumn("comp", F.col("node"))
+    from echo_chambers_detection_spark.operators.localgraph import (
+        connected_components_local,
     )
-    mst_parts: list[DataFrame] = []
-    for _ in range(max_rounds):
-        lab1 = comp.select(F.col("node").alias("u1"), F.col("comp").alias("c1"))
-        lab2 = comp.select(F.col("node").alias("u2"), F.col("comp").alias("c2"))
-        live = (
-            e.join(lab1, "u1")
-            .join(lab2, "u2")
-            .where(F.col("c1") != F.col("c2"))
-        )
-        # per-component min out-edge under (w, u1, u2)
-        both = live.select(
-            F.col("c1").alias("c"), "w", "u1", "u2"
-        ).unionAll(live.select(F.col("c2").alias("c"), "w", "u1", "u2"))
-        win = Window.partitionBy("c").orderBy("w", "u1", "u2")
-        picked = _materialize(
-            both.withColumn("_rn", F.row_number().over(win))
-            .where(F.col("_rn") == 1)
-            .select("u1", "u2", "w")
-            .distinct()
-        )
-        # full count off the checkpointed leaf: serves both the emptiness
-        # break AND the contraction-path gate below (the old shape paid a
-        # limit(1).count() here and the nested CC's own count probe)
-        n_picked = picked.count()
-        if n_picked == 0:
-            _release_checkpoint(picked)
-            break
-        mst_parts.append(picked)
-        # contract along picked edges: CC over the component graph
-        c_edges = (
-            picked.join(lab1, "u1")
-            .join(lab2, "u2")
-            .select(F.col("c1").alias("u1"), F.col("c2").alias("u2"))
-        )
-        spark_s = edges.sparkSession
-        if n_picked <= _G.LOCAL_GRAPH_EDGE_LIMIT and isinstance(
-            comp.schema["comp"].dataType, StringType
-        ):
-            # Borůvka picks at most one out-edge per live component, so
-            # c_edges is <= n_picked rows; when that is driver-bounded
-            # (the community-mirror limit, graph.LOCAL_GRAPH_EDGE_LIMIT's
-            # standing 4M-row budget) contract via ONE Arrow collect +
-            # the parity-pinned union-find mirror instead of the nested
-            # distributed-CC call, which paid its own symmetrize
-            # checkpoint + gate count + collect every round (guide §2.4:
-            # ~3 fewer jobs per Borůvka round). component = min member
-            # id under string order — connected_components' exact
-            # labeling convention (connected_components_local is the
-            # same mirror CC itself dispatches to under the bound).
-            from echo_chambers_detection_spark.operators.localgraph import (
-                connected_components_local,
-            )
 
-            labels = connected_components_local(c_edges.toPandas())
-            remap_df = driver_frame(
-                spark_s, labels.items(), "comp string, component string"
+    spark = edges.sparkSession
+    with _generations() as g:
+        e = g.keep(edges.select("u1", "u2", F.col("w").cast("double")))
+        if _local_path_ok(edges, e.count()):
+            rows = e.toPandas()
+            picked = _kruskal_local(
+                list(zip(rows["u1"], rows["u2"], rows["w"]))
             )
-            new_comp = _materialize(
-                comp.join(remap_df, "comp", "left").select(
-                    "node",
-                    F.coalesce("component", F.col("comp")).alias("comp"),
+            return driver_frame(spark, picked, "u1 string, u2 string, w double")
+
+        comp = g.keep(
+            e.select(F.col("u1").alias("node"))
+            .unionAll(e.select(F.col("u2").alias("node")))
+            .distinct()
+            .withColumn("comp", F.col("node"))
+        )
+        mst_parts: list[DataFrame] = []
+        for _ in range(max_rounds):
+            lab1 = comp.select(F.col("node").alias("u1"), F.col("comp").alias("c1"))
+            lab2 = comp.select(F.col("node").alias("u2"), F.col("comp").alias("c2"))
+            live = (
+                e.join(lab1, "u1")
+                .join(lab2, "u2")
+                .where(F.col("c1") != F.col("c2"))
+            )
+            # per-component min out-edge under (w, u1, u2)
+            both = live.select(
+                F.col("c1").alias("c"), "w", "u1", "u2"
+            ).unionAll(live.select(F.col("c2").alias("c"), "w", "u1", "u2"))
+            win = Window.partitionBy("c").orderBy("w", "u1", "u2")
+            # the full count off the checkpointed leaf serves both the
+            # emptiness break AND the contraction-path gate below
+            picked, n_picked = g.step(
+                both.withColumn("_rn", F.row_number().over(win))
+                .where(F.col("_rn") == 1)
+                .select("u1", "u2", "w")
+                .distinct(),
+                n=F.count("*"),
+            )
+            if n_picked == 0:
+                break
+            mst_parts.append(picked)
+            # contract along picked edges: CC over the component graph
+            c_edges = (
+                picked.join(lab1, "u1")
+                .join(lab2, "u2")
+                .select(F.col("c1").alias("u1"), F.col("c2").alias("u2"))
+            )
+            if n_picked <= _G.LOCAL_GRAPH_EDGE_LIMIT and isinstance(
+                comp.schema["comp"].dataType, StringType
+            ):
+                # Borůvka picks at most one out-edge per live component,
+                # so c_edges is <= n_picked rows; when that is
+                # driver-bounded (the community-mirror limit,
+                # graph.LOCAL_GRAPH_EDGE_LIMIT's standing 4M-row budget)
+                # contract via ONE Arrow collect + the parity-pinned
+                # union-find mirror instead of the nested distributed-CC
+                # call, which paid its own symmetrize checkpoint + gate
+                # count + collect every round (guide §2.4: ~3 fewer jobs
+                # per Borůvka round). component = min member id under
+                # string order — connected_components' exact labeling
+                # convention (connected_components_local is the same
+                # mirror CC itself dispatches to under the bound).
+                labels = connected_components_local(c_edges.toPandas())
+                remap = driver_frame(
+                    spark, labels.items(), "node string, component string"
                 )
-            )
-            _release_checkpoint(comp)
-        else:
-            # Borůvka's min-out-edge graph can form long pointer chains
-            # at extreme scale; min-label CC needs O(diameter) rounds and
-            # RAISES instead of silently splitting a component (which
-            # would let a later round re-pick edges and break the forest
-            # contract), so give the contraction a generous budget.
-            remap = connected_components(c_edges, max_iter=200)
-            new_comp = _materialize(
+            else:
+                # Borůvka's min-out-edge graph can form long pointer
+                # chains at extreme scale; min-label CC needs
+                # O(diameter) rounds and RAISES instead of silently
+                # splitting a component (which would let a later round
+                # re-pick edges and break the forest contract), so give
+                # the contraction a generous budget.
+                remap = g.adopt(connected_components(c_edges, max_iter=200))
+            comp = g.step(
                 comp.join(
                     remap.withColumnRenamed("node", "comp"), "comp", "left"
                 ).select(
-                    "node",
-                    F.coalesce("component", F.col("comp")).alias("comp"),
-                )
+                    "node", F.coalesce("component", F.col("comp")).alias("comp")
+                ),
+                prev=(comp, remap),
             )
-            # remap (the CC labels frame) is only needed to build
-            # new_comp — retire its generation in-loop like everything
-            # else
-            _release_checkpoint(comp, remap)
-        comp = new_comp
-    _release_checkpoint(comp, e)
-    if not mst_parts:
-        return driver_frame(
-            edges.sparkSession, [], "u1 string, u2 string, w double"
-        )
-    out = mst_parts[0]
-    for p in mst_parts[1:]:
-        out = out.unionAll(p)
-    out._ckpt_rdd_ids = [
-        rid for p in mst_parts for rid in getattr(p, "_ckpt_rdd_ids", [])
-    ]
-    for p in mst_parts:
-        p._ckpt_rdd_ids = []
-    return out
+        if not mst_parts:
+            return driver_frame(spark, [], "u1 string, u2 string, w double")
+        out = mst_parts[0]
+        for p in mst_parts[1:]:
+            out = out.unionAll(p)
+        return g.result(out, *mst_parts)
 
 
 def _kruskal_local(rows) -> list[tuple[str, str, float]]:
@@ -887,13 +864,14 @@ def contract_runt_fringes(
     fringe-heavy forests — the driver collect drops from n-1 edge rows
     to the cluster backbone plus one row per contracted fringe, and
     every round is a handful of joins over a strictly shrinking
-    edge frame.
+    edge frame. The rounds' generations belong to one `_generations`
+    scope; only the three returned frames' blocks outlive it.
     """
     import math
 
     from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _release_checkpoint,
+        _generations,
+        _scalars,
     )
 
     if max_rounds is None:
@@ -910,274 +888,269 @@ def contract_runt_fringes(
         log.info("contract_runt_fringes stage %-14s %.1fs", name, now - _t0)
         _t0 = now
 
-    e = _materialize(forest.select("u1", "u2", F.col("w").cast("double")))
-    base_nodes = _materialize(
-        e.select(F.col("u1").alias("node"))
-        .unionAll(e.select(F.col("u2").alias("node")))
-        .distinct()
-    )
-    # the seed state is a pure literal projection of the checkpointed
-    # base_nodes — keep it lazy (round 1 skips the state joins entirely,
-    # so the only reader is the first nodes_new build)
-    nodes = base_nodes.select(
-        "node",
-        F.lit(1).cast("long").alias("size"),
-        F.col("node").alias("min_id"),
-        F.lit(neg_inf).alias("m_w"),
-        F.lit("").alias("m_u1"),
-        F.lit("").alias("m_u2"),
-    )
-    _stage("base_frames")
-    absorptions: DataFrame | None = None
-    rounds_run = 0
+    with _generations() as g:
+        e = g.keep(forest.select("u1", "u2", F.col("w").cast("double")))
+        base_nodes = g.keep(
+            e.select(F.col("u1").alias("node"))
+            .unionAll(e.select(F.col("u2").alias("node")))
+            .distinct()
+        )
+        # the seed state is a pure literal projection of the checkpointed
+        # base_nodes — keep it lazy (round 1 skips the state joins entirely,
+        # so the only reader is the first nodes_new build)
+        nodes = base_nodes.select(
+            "node",
+            F.lit(1).cast("long").alias("size"),
+            F.col("node").alias("min_id"),
+            F.lit(neg_inf).alias("m_w"),
+            F.lit("").alias("m_u1"),
+            F.lit("").alias("m_u2"),
+        )
+        _stage("base_frames")
+        absorptions: DataFrame | None = None
+        rounds_run = 0
 
-    for _ in range(max_rounds):
-        rounds_run += 1
-        inc = e.select(
-            F.col("u1").alias("node"), F.col("u2").alias("other"),
-            "w", "u1", "u2",
-        ).unionAll(
-            e.select(
-                F.col("u2").alias("node"), F.col("u1").alias("other"),
+        for _ in range(max_rounds):
+            rounds_run += 1
+            inc = e.select(
+                F.col("u1").alias("node"), F.col("u2").alias("other"),
                 "w", "u1", "u2",
-            )
-        )
-        deg = inc.groupBy("node").agg(F.count("*").alias("deg"))
-        # BATCH-PREFIX absorption (round 7): the one-leaf-per-target
-        # round rule made deep fringes (k pendant leaves per hub) take
-        # k rounds — the dominant cost of the 1M-edge bench probe. The
-        # sequential replay absorbs a target's candidate leaf edges in
-        # key order as long as (i) they form a PREFIX of the target's
-        # full incident-key order (each absorption's (c) check: after
-        # absorbing edge_1..edge_{i-1}, the target's second-smallest
-        # remaining incident key is exactly its next incident edge) and
-        # (ii) the running size stays under min_cluster_size ((d) at
-        # every step; (b) for i>1 is automatic since the internal max
-        # becomes edge_{i-1} < edge_i). Taking that longest valid
-        # prefix per target in ONE round is therefore EXACTLY the
-        # multi-round result — the 15-case random parity suite and the
-        # hub/backbone exactness test pin it.
-        # TARGET-SIDE build (round 10): `inc` holds both directions of
-        # every edge, so the rank of an edge within its TARGET's
-        # incident order can be computed directly on the target-side
-        # row — the old shape ranked a separate frame and re-joined it
-        # on the 4-part (other, w, u1, u2) key, a second 2|E|-row
-        # sort-merge join that dominated the 1M-edge bench probe.
-        # Here node = TARGET, other = candidate leaf throughout.
-        wk = Window.partitionBy("node").orderBy("w", "u1", "u2")
-        # the target's own degree as a window count over the SAME
-        # node-keyed exchange the rank already pays — the old shape
-        # joined the degree frame back on node, a second 2|E|-row
-        # shuffle join (round 10)
-        inc_rk = inc.withColumn("rk", F.row_number().over(wk)).withColumn(
-            "tdeg", F.count("*").over(Window.partitionBy("node"))
-        )
-        base_cand = inc_rk.join(
-            deg.where(F.col("deg") == 1).select(
-                F.col("node").alias("other")
-            ),
-            "other",
-            # two-leaf components: exactly one direction absorbs
-        ).where((F.col("tdeg") > 1) | (F.col("other") > F.col("node")))
-        if rounds_run == 1:
-            # every supernode is still the all-default singleton
-            # (size 1, min_id = node, merge key -inf < any edge), so
-            # the two full-width state joins and both lex gates fold
-            # to literals — the dominant round skips them entirely
-            cand = base_cand.select(
-                "*",
-                F.lit(1).cast("long").alias("lsize"),
-                F.col("other").alias("lmin"),
-                F.lit(1).cast("long").alias("tsize"),
-            )
-        else:
-            cand = (
-                base_cand.join(
-                    nodes.select(
-                        F.col("node").alias("other"),
-                        F.col("size").alias("lsize"),
-                        F.col("min_id").alias("lmin"),
-                        F.col("m_w").alias("lm_w"),
-                        F.col("m_u1").alias("lm_u1"),
-                        F.col("m_u2").alias("lm_u2"),
-                    ),
-                    "other",
+            ).unionAll(
+                e.select(
+                    F.col("u2").alias("node"), F.col("u1").alias("other"),
+                    "w", "u1", "u2",
                 )
-                .join(
-                    nodes.select(
+            )
+            deg = inc.groupBy("node").agg(F.count("*").alias("deg"))
+            # BATCH-PREFIX absorption (round 7): the one-leaf-per-target
+            # round rule made deep fringes (k pendant leaves per hub) take
+            # k rounds — the dominant cost of the 1M-edge bench probe. The
+            # sequential replay absorbs a target's candidate leaf edges in
+            # key order as long as (i) they form a PREFIX of the target's
+            # full incident-key order (each absorption's (c) check: after
+            # absorbing edge_1..edge_{i-1}, the target's second-smallest
+            # remaining incident key is exactly its next incident edge) and
+            # (ii) the running size stays under min_cluster_size ((d) at
+            # every step; (b) for i>1 is automatic since the internal max
+            # becomes edge_{i-1} < edge_i). Taking that longest valid
+            # prefix per target in ONE round is therefore EXACTLY the
+            # multi-round result — the 15-case random parity suite and the
+            # hub/backbone exactness test pin it.
+            # TARGET-SIDE build (round 10): `inc` holds both directions of
+            # every edge, so the rank of an edge within its TARGET's
+            # incident order can be computed directly on the target-side
+            # row — the old shape ranked a separate frame and re-joined it
+            # on the 4-part (other, w, u1, u2) key, a second 2|E|-row
+            # sort-merge join that dominated the 1M-edge bench probe.
+            # Here node = TARGET, other = candidate leaf throughout.
+            wk = Window.partitionBy("node").orderBy("w", "u1", "u2")
+            # the target's own degree as a window count over the SAME
+            # node-keyed exchange the rank already pays — the old shape
+            # joined the degree frame back on node, a second 2|E|-row
+            # shuffle join (round 10)
+            inc_rk = inc.withColumn("rk", F.row_number().over(wk)).withColumn(
+                "tdeg", F.count("*").over(Window.partitionBy("node"))
+            )
+            base_cand = inc_rk.join(
+                deg.where(F.col("deg") == 1).select(
+                    F.col("node").alias("other")
+                ),
+                "other",
+                # two-leaf components: exactly one direction absorbs
+            ).where((F.col("tdeg") > 1) | (F.col("other") > F.col("node")))
+            if rounds_run == 1:
+                # every supernode is still the all-default singleton
+                # (size 1, min_id = node, merge key -inf < any edge), so
+                # the two full-width state joins and both lex gates fold
+                # to literals — the dominant round skips them entirely
+                cand = base_cand.select(
+                    "*",
+                    F.lit(1).cast("long").alias("lsize"),
+                    F.col("other").alias("lmin"),
+                    F.lit(1).cast("long").alias("tsize"),
+                )
+            else:
+                cand = (
+                    base_cand.join(
+                        nodes.select(
+                            F.col("node").alias("other"),
+                            F.col("size").alias("lsize"),
+                            F.col("min_id").alias("lmin"),
+                            F.col("m_w").alias("lm_w"),
+                            F.col("m_u1").alias("lm_u1"),
+                            F.col("m_u2").alias("lm_u2"),
+                        ),
+                        "other",
+                    )
+                    .join(
+                        nodes.select(
+                            "node",
+                            F.col("size").alias("tsize"),
+                            F.col("m_w").alias("tm_w"),
+                            F.col("m_u1").alias("tm_u1"),
+                            F.col("m_u2").alias("tm_u2"),
+                        ),
                         "node",
-                        F.col("size").alias("tsize"),
-                        F.col("m_w").alias("tm_w"),
-                        F.col("m_u1").alias("tm_u1"),
-                        F.col("m_u2").alias("tm_u2"),
+                    )
+                    .where(
+                        _lex_lt(  # (a) leaf fully merged before its edge
+                            F.col("lm_w"), F.col("lm_u1"), F.col("lm_u2"),
+                            F.col("w"), F.col("u1"), F.col("u2"),
+                        )
+                        & _lex_lt(  # (b) target merged before the first edge
+                            F.col("tm_w"), F.col("tm_u1"), F.col("tm_u2"),
+                            F.col("w"), F.col("u1"), F.col("u2"),
+                        )
+                    )
+                )
+            wt = Window.partitionBy("node").orderBy("rk")
+            wt_all = Window.partitionBy("node")
+            flagged = (
+                cand.withColumn("lrk", F.row_number().over(wt))
+                .withColumn("cum", F.sum("lsize").over(wt))
+                .withColumn(
+                    "_bad_rk",
+                    F.when(
+                        (F.col("rk") != F.col("lrk"))  # prefix break = (c)
+                        | (
+                            F.col("tsize") + F.col("cum")
+                            >= F.lit(min_cluster_size)
+                        ),  # (d) at this step
+                        F.col("rk"),
                     ),
+                )
+                .withColumn("_first_bad", F.min("_bad_rk").over(wt_all))
+            )
+            acc = g.step(
+                flagged.where(
+                    F.col("_first_bad").isNull()
+                    | (F.col("rk") < F.col("_first_bad"))
+                ).select(
+                    F.col("other").alias("leaf"),
+                    F.col("node").alias("target"),
+                    "w", "u1", "u2", "lsize", "lmin", "tdeg",
+                )
+            )
+            _stage("candidates")
+            # ONE scalar job for both loop-control reads off the checkpointed
+            # acc leaf (guide S2.4): emptiness (the old acc.limit(1).count())
+            # and the exact early-exit probe (the old tgt...limit(1).count()
+            # at the bottom of the round) — each was its own serialized job.
+            n_targets, new_leaves = _scalars(
+                acc.groupBy("target").agg(
+                    F.max("tdeg").alias("_td"), F.count("*").alias("_na")
+                ),
+                n_targets=F.count("*"),
+                new_leaves=F.sum(((F.col("_td") - F.col("_na")) == 1).cast("long")),
+            )
+            if n_targets == 0:
+                rounds_run -= 1  # empty round: nothing absorbed
+                break
+            tgt = acc.groupBy(F.col("target").alias("node")).agg(
+                F.sum("lsize").alias("a_size"),
+                F.min("lmin").alias("a_min"),
+                # the LAST absorbed edge is the target's new internal max
+                F.max(F.struct("w", "u1", "u2")).alias("a_key"),
+                # post-round degree bookkeeping for the exact-exit probe
+                # below: tdeg is constant per target, n_abs edges were
+                # removed from it
+                F.max("tdeg").alias("tdeg"),
+                F.count("*").alias("n_abs"),
+            )
+            nodes_new = g.step(
+                nodes.join(
+                    acc.select(F.col("leaf").alias("node")), "node", "left_anti"
+                )
+                .join(tgt, "node", "left")
+                .select(
                     "node",
-                )
-                .where(
-                    _lex_lt(  # (a) leaf fully merged before its edge
-                        F.col("lm_w"), F.col("lm_u1"), F.col("lm_u2"),
-                        F.col("w"), F.col("u1"), F.col("u2"),
-                    )
-                    & _lex_lt(  # (b) target merged before the first edge
-                        F.col("tm_w"), F.col("tm_u1"), F.col("tm_u2"),
-                        F.col("w"), F.col("u1"), F.col("u2"),
-                    )
+                    (F.col("size") + F.coalesce("a_size", F.lit(0))).alias(
+                        "size"
+                    ),
+                    F.least(
+                        "min_id", F.coalesce("a_min", F.col("min_id"))
+                    ).alias("min_id"),
+                    F.coalesce(F.col("a_key.w"), F.col("m_w")).alias("m_w"),
+                    F.coalesce(F.col("a_key.u1"), F.col("m_u1")).alias("m_u1"),
+                    F.coalesce(F.col("a_key.u2"), F.col("m_u2")).alias("m_u2"),
                 )
             )
-        wt = Window.partitionBy("node").orderBy("rk")
-        wt_all = Window.partitionBy("node")
-        flagged = (
-            cand.withColumn("lrk", F.row_number().over(wt))
-            .withColumn("cum", F.sum("lsize").over(wt))
-            .withColumn(
-                "_bad_rk",
-                F.when(
-                    (F.col("rk") != F.col("lrk"))  # prefix break = (c)
-                    | (
-                        F.col("tsize") + F.col("cum")
-                        >= F.lit(min_cluster_size)
-                    ),  # (d) at this step
-                    F.col("rk"),
+            e = g.step(
+                e.join(acc.select("u1", "u2"), ["u1", "u2"], "left_anti"),
+                prev=e,
+            )
+            amap_new = acc.select("leaf", "target")
+            absorptions = g.step(
+                amap_new
+                if absorptions is None
+                else absorptions.unionByName(amap_new),
+                prev=(absorptions, acc, nodes),
+            )
+            nodes = nodes_new
+            _stage("apply_round")
+            # EXACT early exit (round 10): another round can absorb only if
+            # a NEW degree-1 node appeared (new degree tdeg - n_abs == 1;
+            # only a TARGET can become a new leaf — see the round-10 note in
+            # the git history). Since round 13 the scalar is read off the
+            # SAME fused probe job as the emptiness check above.
+            if new_leaves == 0:
+                break
+
+        log.info(
+            "contract_runt_fringes: %d absorbing round(s) (batch-prefix; "
+            "was one-leaf-per-target-per-round before round 7)",
+            rounds_run,
+        )
+        if absorptions is None:
+            # nothing absorbed: `nodes` is still the seed projection of
+            # base_nodes, so its blocks go with it
+            member_map = g.keep(
+                base_nodes.select(
+                    F.col("node").alias("member"), F.col("node").alias("snode")
+                )
+            )
+            return g.result(e), g.result(nodes, base_nodes), g.result(member_map)
+
+        # Absorption chains are <= rounds_run deep (a round's targets are
+        # never that round's leaves, so each extra link needs one more
+        # round). After a single absorbing round every leaf already points
+        # at its root — zero jump joins; otherwise ceil(log2(depth)) passes
+        # shortcut every chain (pointer distance halves per pass; +1 pass
+        # of safety margin). The old bound used max_rounds, paying ~5
+        # self-join rounds at the 1M bench probe whose batch-prefix rule
+        # finishes in ONE absorbing round.
+        amap = absorptions
+        n_jumps = (
+            0
+            if rounds_run <= 1
+            else math.ceil(math.log2(max(rounds_run, 2))) + 1
+        )
+        for _ in range(n_jumps):
+            amap = g.step(
+                amap.join(
+                    amap.select(
+                        F.col("leaf").alias("target"),
+                        F.col("target").alias("_t2"),
+                    ),
+                    "target",
+                    "left",
+                ).select(
+                    "leaf", F.coalesce("_t2", F.col("target")).alias("target")
                 ),
+                prev=amap,
             )
-            .withColumn("_first_bad", F.min("_bad_rk").over(wt_all))
-        )
-        acc = _materialize(
-            flagged.where(
-                F.col("_first_bad").isNull()
-                | (F.col("rk") < F.col("_first_bad"))
-            ).select(
-                F.col("other").alias("leaf"),
-                F.col("node").alias("target"),
-                "w", "u1", "u2", "lsize", "lmin", "tdeg",
-            )
-        )
-        _stage("candidates")
-        # ONE scalar job for both loop-control reads off the checkpointed
-        # acc leaf (guide S2.4): emptiness (the old acc.limit(1).count())
-        # and the exact early-exit probe (the old tgt...limit(1).count()
-        # at the bottom of the round) — each was its own serialized job.
-        probe = (
-            acc.groupBy("target")
-            .agg(F.max("tdeg").alias("_td"), F.count("*").alias("_na"))
-            .agg(
-                F.count("*").alias("n_targets"),
-                F.sum(
-                    ((F.col("_td") - F.col("_na")) == 1).cast("long")
-                ).alias("new_leaves"),
-            )
-            .first()
-        )
-        if int(probe["n_targets"] or 0) == 0:
-            _release_checkpoint(acc)
-            rounds_run -= 1  # empty round: nothing absorbed
-            break
-        tgt = acc.groupBy(F.col("target").alias("node")).agg(
-            F.sum("lsize").alias("a_size"),
-            F.min("lmin").alias("a_min"),
-            # the LAST absorbed edge is the target's new internal max
-            F.max(F.struct("w", "u1", "u2")).alias("a_key"),
-            # post-round degree bookkeeping for the exact-exit probe
-            # below: tdeg is constant per target, n_abs edges were
-            # removed from it
-            F.max("tdeg").alias("tdeg"),
-            F.count("*").alias("n_abs"),
-        )
-        nodes_new = _materialize(
-            nodes.join(
-                acc.select(F.col("leaf").alias("node")), "node", "left_anti"
-            )
-            .join(tgt, "node", "left")
-            .select(
+        member_map = g.keep(
+            base_nodes.join(
+                amap.select(F.col("leaf").alias("node"), "target"),
                 "node",
-                (F.col("size") + F.coalesce("a_size", F.lit(0))).alias(
-                    "size"
-                ),
-                F.least(
-                    "min_id", F.coalesce("a_min", F.col("min_id"))
-                ).alias("min_id"),
-                F.coalesce(F.col("a_key.w"), F.col("m_w")).alias("m_w"),
-                F.coalesce(F.col("a_key.u1"), F.col("m_u1")).alias("m_u1"),
-                F.coalesce(F.col("a_key.u2"), F.col("m_u2")).alias("m_u2"),
-            )
-        )
-        e_new = _materialize(
-            e.join(acc.select("u1", "u2"), ["u1", "u2"], "left_anti")
-        )
-        amap_new = acc.select("leaf", "target")
-        if absorptions is not None:
-            amap_new = _materialize(absorptions.unionByName(amap_new))
-            _release_checkpoint(absorptions)
-        else:
-            amap_new = _materialize(amap_new)
-        # EXACT early exit (round 10): another round can absorb only if
-        # a NEW degree-1 node appeared (new degree tdeg - n_abs == 1;
-        # only a TARGET can become a new leaf — see the round-10 note in
-        # the git history). Since round 13 the scalar is read off the
-        # SAME fused probe job as the emptiness check above.
-        new_leaf_exists = int(probe["new_leaves"] or 0) > 0
-        _stage("apply_round")
-        _release_checkpoint(nodes, e, acc)
-        nodes, e, absorptions = nodes_new, e_new, amap_new
-        if not new_leaf_exists:
-            break
-
-    log.info(
-        "contract_runt_fringes: %d absorbing round(s) (batch-prefix; "
-        "was one-leaf-per-target-per-round before round 7)",
-        rounds_run,
-    )
-    if absorptions is None:
-        member_map = _materialize(
-            base_nodes.select(
-                F.col("node").alias("member"), F.col("node").alias("snode")
-            )
-        )
-        _release_checkpoint(base_nodes)
-        return e, nodes, member_map
-
-    # Absorption chains are <= rounds_run deep (a round's targets are
-    # never that round's leaves, so each extra link needs one more
-    # round). After a single absorbing round every leaf already points
-    # at its root — zero jump joins; otherwise ceil(log2(depth)) passes
-    # shortcut every chain (pointer distance halves per pass; +1 pass
-    # of safety margin). The old bound used max_rounds, paying ~5
-    # self-join rounds at the 1M bench probe whose batch-prefix rule
-    # finishes in ONE absorbing round.
-    amap = absorptions
-    n_jumps = (
-        0
-        if rounds_run <= 1
-        else math.ceil(math.log2(max(rounds_run, 2))) + 1
-    )
-    for _ in range(n_jumps):
-        nxt = _materialize(
-            amap.join(
-                amap.select(
-                    F.col("leaf").alias("target"),
-                    F.col("target").alias("_t2"),
-                ),
-                "target",
                 "left",
             ).select(
-                "leaf", F.coalesce("_t2", F.col("target")).alias("target")
+                F.col("node").alias("member"),
+                F.coalesce("target", F.col("node")).alias("snode"),
             )
         )
-        _release_checkpoint(amap)
-        amap = nxt
-    member_map = _materialize(
-        base_nodes.join(
-            amap.select(F.col("leaf").alias("node"), "target"),
-            "node",
-            "left",
-        ).select(
-            F.col("node").alias("member"),
-            F.coalesce("target", F.col("node")).alias("snode"),
-        )
-    )
-    _release_checkpoint(base_nodes, amap)
-    _stage("member_map")
-    return e, nodes, member_map
+        _stage("member_map")
+        return g.result(e), g.result(nodes), g.result(member_map)
 
 
 # ---------------------------------------------------------------------------
@@ -1647,426 +1620,418 @@ def condense_two_level(
     back to the classic driver condense).
 
     Driver state: ~driver_rows top-edge rows + one summary row per
-    component — a constant budget, not O(n)."""
+    component — a constant budget, not O(n). Its checkpoints belong to
+    one `_generations` scope; only those backing the result outlive it."""
     import pandas as pd
 
     from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _release_checkpoint,
+        _generations,
         connected_components,
     )
 
     if min_cluster_size < 2:
         return None
     spark = c_edges.sparkSession
-    e = _materialize(c_edges.select("u1", "u2", F.col("w").cast("double")))
-    ecount = e.count()
-    if ecount == 0:
-        _release_checkpoint(e)
-        return None
+    with _generations() as g:
+        e = g.keep(c_edges.select("u1", "u2", F.col("w").cast("double")))
+        ecount = e.count()
+        if ecount == 0:
+            return None
 
-    attrs = _materialize(c_nodes.select("node", "size", "min_id"))
+        attrs = g.keep(c_nodes.select("node", "size", "min_id"))
 
-    # θ search, ONE distributed CC pass (VERDICT r6 #3). Candidate cuts
-    # θ0 >= θ1 >= θ2 keep roughly {0.5, 1, 2}·driver_rows top edges.
-    # Components are monotone in θ — the finest cut refines every
-    # coarser one — so CC runs ONCE at the finest viable θ, and a
-    # driver-side union-find over the mid-band edges (θ_fine <= w < θ0,
-    # at most ~2·driver_rows rows, a constant) derives the coarser
-    # labellings. The previous loop re-ran the full distributed CC per
-    # attempt, and its 4× frac_ext retry almost always tripped the
-    # n_ext budget guard — a silent fallback to the unbounded driver
-    # condense (ADVICE r6); retries now share the one CC pass and get a
-    # relaxed-but-constant 2× budget, and every fallback is logged with
-    # the guard that fired.
-    log = logging.getLogger(__name__)
-    import time as _time
+        # θ search, ONE distributed CC pass (VERDICT r6 #3). Candidate cuts
+        # θ0 >= θ1 >= θ2 keep roughly {0.5, 1, 2}·driver_rows top edges.
+        # Components are monotone in θ — the finest cut refines every
+        # coarser one — so CC runs ONCE at the finest viable θ, and a
+        # driver-side union-find over the mid-band edges (θ_fine <= w < θ0,
+        # at most ~2·driver_rows rows, a constant) derives the coarser
+        # labellings. The previous loop re-ran the full distributed CC per
+        # attempt, and its 4× frac_ext retry almost always tripped the
+        # n_ext budget guard — a silent fallback to the unbounded driver
+        # condense (ADVICE r6); retries now share the one CC pass and get a
+        # relaxed-but-constant 2× budget, and every fallback is logged with
+        # the guard that fired.
+        log = logging.getLogger(__name__)
+        import time as _time
 
-    _t0 = _time.perf_counter()
+        _t0 = _time.perf_counter()
 
-    def _stage(name: str) -> None:
-        nonlocal _t0
-        now = _time.perf_counter()
-        log.info("condense_two_level stage %-14s %.1fs", name, now - _t0)
-        _t0 = now
+        def _stage(name: str) -> None:
+            nonlocal _t0
+            now = _time.perf_counter()
+            log.info("condense_two_level stage %-14s %.1fs", name, now - _t0)
+            _t0 = now
 
-    f0 = min(0.5, (driver_rows // 2) / ecount)
-    fracs = [f0, min(0.5, 2.0 * f0), min(0.5, 4.0 * f0)]
-    # rank error scaled to the budget: at >=1e8 edges the default 0.001
-    # relative error alone is more rows than driver_rows (ADVICE r6)
-    rel_err = max(1e-6, min(0.001, driver_rows / (4.0 * ecount)))
-    thetas = e.stat.approxQuantile("w", [1.0 - f for f in fracs], rel_err)
-    exts = e.agg(
-        *[
-            F.sum(
-                F.when(F.col("w") >= F.lit(t), 1).otherwise(0)
-            ).alias(f"x{i}")
-            for i, t in enumerate(thetas)
-        ]
-    ).first()
-    n_exts = [int(exts[f"x{i}"] or 0) for i in range(len(thetas))]
-    budgets = [driver_rows, 2 * driver_rows, 2 * driver_rows]
-    viable = [i for i in range(len(thetas)) if n_exts[i] <= budgets[i]]
-    if not viable:
-        log.info(
-            "condense_two_level: falling back to driver condense — "
-            "n_ext budget guard fired (n_exts=%s > budgets=%s; "
-            "degenerate weight distribution)",
-            n_exts,
-            budgets,
+        f0 = min(0.5, (driver_rows // 2) / ecount)
+        fracs = [f0, min(0.5, 2.0 * f0), min(0.5, 4.0 * f0)]
+        # rank error scaled to the budget: at >=1e8 edges the default 0.001
+        # relative error alone is more rows than driver_rows (ADVICE r6)
+        rel_err = max(1e-6, min(0.001, driver_rows / (4.0 * ecount)))
+        thetas = e.stat.approxQuantile("w", [1.0 - f for f in fracs], rel_err)
+        exts = e.agg(
+            *[
+                F.sum(
+                    F.when(F.col("w") >= F.lit(t), 1).otherwise(0)
+                ).alias(f"x{i}")
+                for i, t in enumerate(thetas)
+            ]
+        ).first()
+        n_exts = [int(exts[f"x{i}"] or 0) for i in range(len(thetas))]
+        budgets = [driver_rows, 2 * driver_rows, 2 * driver_rows]
+        viable = [i for i in range(len(thetas)) if n_exts[i] <= budgets[i]]
+        if not viable:
+            log.info(
+                "condense_two_level: falling back to driver condense — "
+                "n_ext budget guard fired (n_exts=%s > budgets=%s; "
+                "degenerate weight distribution)",
+                n_exts,
+                budgets,
+            )
+            return None
+        _stage("theta_search")
+        fine = max(viable)  # finest viable cut (smallest θ)
+        coarse = min(viable)  # preferred cut (fewest collected top edges)
+
+        internal_fine = e.where(F.col("w") < F.lit(thetas[fine]))
+        comps_fine = g.adopt(connected_components(internal_fine.select("u1", "u2")))
+        # node -> fine comp; singletons (no internal edge) are their own comp
+        node_comp_fine = g.step(
+            attrs.select("node")
+            .join(comps_fine, "node", "left")
+            .select(
+                "node", F.coalesce("component", F.col("node")).alias("comp")
+            ),
+            prev=comps_fine,
         )
-        _release_checkpoint(e, attrs)
-        return None
-    _stage("theta_search")
-    fine = max(viable)  # finest viable cut (smallest θ)
-    coarse = min(viable)  # preferred cut (fewest collected top edges)
-
-    internal_fine = e.where(F.col("w") < F.lit(thetas[fine]))
-    comps_fine = connected_components(internal_fine.select("u1", "u2"))
-    # node -> fine comp; singletons (no internal edge) are their own comp
-    node_comp_fine = _materialize(
-        attrs.select("node")
-        .join(comps_fine, "node", "left")
-        .select(
-            "node", F.coalesce("component", F.col("node")).alias("comp")
+        comp_edges_fine = g.keep(
+            internal_fine.join(
+                node_comp_fine.withColumnRenamed("node", "u1"), "u1"
+            )
         )
-    )
-    _release_checkpoint(comps_fine)
-    comp_edges_fine = _materialize(
-        internal_fine.join(
-            node_comp_fine.withColumnRenamed("node", "u1"), "u1"
+        # single scalar job off the checkpointed comp_edges_fine leaf — the
+        # old shape checkpointed the per-component counts (a write + an extra
+        # job) although only this max and, rarely, the touched-component
+        # counts below ever read them (guide S2.4)
+        fine_max = int(
+            comp_edges_fine.groupBy("comp")
+            .count()
+            .agg(F.max("count"))
+            .first()[0]
+            or 0
         )
-    )
-    # single scalar job off the checkpointed comp_edges_fine leaf — the
-    # old shape checkpointed the per-component counts (a write + an extra
-    # job) although only this max and, rarely, the touched-component
-    # counts below ever read them (guide S2.4)
-    fine_max = int(
-        comp_edges_fine.groupBy("comp")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-        or 0
-    )
-    if fine_max > TWO_LEVEL_MAX_COMPONENT_EDGES:
-        # coarser cuts only merge components, so every level fails
-        log.info(
-            "condense_two_level: falling back to driver condense — "
-            "component-size guard fired (biggest θ-component has %d "
-            "edges > cap %d at the finest viable cut)",
-            fine_max,
-            TWO_LEVEL_MAX_COMPONENT_EDGES,
+        if fine_max > TWO_LEVEL_MAX_COMPONENT_EDGES:
+            # coarser cuts only merge components, so every level fails
+            log.info(
+                "condense_two_level: falling back to driver condense — "
+                "component-size guard fired (biggest θ-component has %d "
+                "edges > cap %d at the finest viable cut)",
+                fine_max,
+                TWO_LEVEL_MAX_COMPONENT_EDGES,
+            )
+            return None
+
+        def _uf_find(parent: dict, x: str) -> str:
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != x:
+                parent[x], x = root, parent[x]
+            return root
+
+        chosen = fine
+        mapping: dict[str, str] = {}
+        if coarse < fine:
+            # mid-band edges with fine-comp endpoints: the only edges whose
+            # internal/external status differs between the candidate cuts
+            mid = (
+                e.where(
+                    (F.col("w") >= F.lit(thetas[fine]))
+                    & (F.col("w") < F.lit(thetas[coarse]))
+                )
+                .join(
+                    node_comp_fine.select(
+                        F.col("node").alias("u1"), F.col("comp").alias("cu")
+                    ),
+                    "u1",
+                )
+                .join(
+                    node_comp_fine.select(
+                        F.col("node").alias("u2"), F.col("comp").alias("cv")
+                    ),
+                    "u2",
+                )
+                .select("cu", "cv", "w")
+                .collect()
+            )
+            touched = sorted({r["cu"] for r in mid} | {r["cv"] for r in mid})
+            t_cnt: dict[str, int] = {}
+            if touched:
+                t_cnt = {
+                    r["comp"]: int(r["count"])
+                    for r in comp_edges_fine.groupBy("comp")
+                    .count()
+                    .join(
+                        F.broadcast(
+                            driver_frame(
+                                spark, [(c,) for c in touched], "comp string"
+                            )
+                        ),
+                        "comp",
+                        "leftsemi",
+                    ).collect()
+                }
+            # per-level merged-component maxima and mappings (driver-
+            # trivial union-finds over the bounded mid-band); then pick the
+            # coarsest level under the SOFT ceiling, falling back to the
+            # coarsest under the hard cap
+            stats: dict[int, tuple[int, dict[str, str]]] = {
+                fine: (int(fine_max), {})
+            }
+            for lvl in sorted(i for i in viable if i < fine):
+                lvl_edges = [r for r in mid if r["w"] < thetas[lvl]]
+                parent: dict[str, str] = {}
+                for r in lvl_edges:
+                    ra, rb = _uf_find(parent, r["cu"]), _uf_find(parent, r["cv"])
+                    if ra != rb:
+                        # attach max under min: the root stays the min node
+                        # id of the merged component, matching CC's labels
+                        lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                        parent[hi] = lo
+                tot: dict[str, int] = {}
+                for c in touched:
+                    root = _uf_find(parent, c)
+                    tot[root] = tot.get(root, 0) + t_cnt.get(c, 0)
+                for r in lvl_edges:
+                    root = _uf_find(parent, r["cu"])
+                    tot[root] = tot.get(root, 0) + 1
+                stats[lvl] = (
+                    max([int(fine_max)] + list(tot.values())),
+                    {
+                        c: _uf_find(parent, c)
+                        for c in touched
+                        if _uf_find(parent, c) != c
+                    },
+                )
+            for cap in (
+                TWO_LEVEL_SOFT_COMPONENT_EDGES,
+                TWO_LEVEL_MAX_COMPONENT_EDGES,
+            ):
+                picks = [i for i in sorted(stats) if stats[i][0] <= cap]
+                if picks:
+                    chosen = picks[0]
+                    mapping = stats[chosen][1]
+                    break
+
+        _stage("cc_and_cuts")
+        theta = thetas[chosen]
+        if chosen != fine and n_exts[chosen] > driver_rows:
+            log.info(
+                "condense_two_level: relaxed top-edge budget in use "
+                "(n_ext=%d > driver_rows=%d at the chosen cut; cap 2x)",
+                n_exts[chosen],
+                driver_rows,
+            )
+        if chosen == fine:
+            node_comp = node_comp_fine
+            comp_edges = comp_edges_fine
+        else:
+            map_df = driver_frame(
+                spark, mapping.items(), "comp string, root string"
+            )
+            node_comp = g.step(
+                node_comp_fine.join(F.broadcast(map_df), "comp", "left").select(
+                    "node", F.coalesce("root", F.col("comp")).alias("comp")
+                )
+            )
+            comp_edges = g.step(
+                e.where(F.col("w") < F.lit(theta)).join(
+                    node_comp.withColumnRenamed("node", "u1"), "u1"
+                ),
+                prev=(node_comp_fine, comp_edges_fine),
+            )
+        _stage("node_comp")
+        comp_summary = (
+            node_comp.join(attrs, "node")
+            .groupBy("comp")
+            .agg(F.sum("size").alias("csize"), F.min("min_id").alias("cmin"))
+            .collect()
         )
-        _release_checkpoint(e, attrs, node_comp_fine, comp_edges_fine)
-        return None
+        comp_sizes = {r["comp"]: int(r["csize"]) for r in comp_summary}
+        comp_min_ids = {r["comp"]: r["cmin"] for r in comp_summary}
 
-    def _uf_find(parent: dict, x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    chosen = fine
-    mapping: dict[str, str] = {}
-    if coarse < fine:
-        # mid-band edges with fine-comp endpoints: the only edges whose
-        # internal/external status differs between the candidate cuts
-        mid = (
-            e.where(
-                (F.col("w") >= F.lit(thetas[fine]))
-                & (F.col("w") < F.lit(thetas[coarse]))
+        # per-component condense of every enterable (>= mcs) component:
+        # group = the component's internal edges with both endpoints' attrs
+        enterable = {c for c, s in comp_sizes.items() if s >= min_cluster_size}
+        ent_df = driver_frame(
+            spark, [(c,) for c in sorted(enterable)], "comp string"
+        )
+        grp = (
+            comp_edges.join(F.broadcast(ent_df), "comp", "leftsemi")
+            .join(
+                attrs.select(
+                    F.col("node").alias("u1"),
+                    F.col("size").alias("s1"),
+                    F.col("min_id").alias("m1"),
+                ),
+                "u1",
             )
             .join(
-                node_comp_fine.select(
+                attrs.select(
+                    F.col("node").alias("u2"),
+                    F.col("size").alias("s2"),
+                    F.col("min_id").alias("m2"),
+                ),
+                "u2",
+            )
+        )
+        mcs = min_cluster_size
+
+        def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+            # one Arrow group = one BUCKET of components (round 7): the
+            # per-group Spark/Arrow/worker overhead is ~1 ms, which at 100k
+            # tiny components serialized the whole pass (72 s measured on
+            # the caterpillar bench). Components are sliced out of plain
+            # numpy arrays by boundary index (round 10): pandas groupby
+            # iteration costs ~1-3 ms per tiny group in frame construction
+            # alone, which at ~3k components per bucket was the residual
+            # bottleneck of the 1M-edge probe.
+            import numpy as np
+
+            out_comp: list = []
+            out_kind: list = []
+            out_node: list = []
+            out_lab: list = []
+            out_a: list = []
+            out_tb: list = []
+            pdf = pdf.sort_values("comp", kind="stable")
+            comp_a = pdf["comp"].to_numpy()
+            u1_a = pdf["u1"].to_numpy()
+            u2_a = pdf["u2"].to_numpy()
+            w_a = pdf["w"].to_numpy()
+            s1_a = pdf["s1"].to_numpy()
+            s2_a = pdf["s2"].to_numpy()
+            m1_a = pdf["m1"].to_numpy()
+            m2_a = pdf["m2"].to_numpy()
+            n_rows = len(comp_a)
+            bnd = np.flatnonzero(np.r_[True, comp_a[1:] != comp_a[:-1]])
+            for gi, start in enumerate(bnd):
+                stop = bnd[gi + 1] if gi + 1 < len(bnd) else n_rows
+                comp = comp_a[start]
+                sizes: dict[str, int] = {}
+                min_ids: dict[str, str] = {}
+                for i in range(start, stop):
+                    sizes[u1_a[i]] = int(s1_a[i])
+                    min_ids[u1_a[i]] = m1_a[i]
+                    sizes[u2_a[i]] = int(s2_a[i])
+                    min_ids[u2_a[i]] = m2_a[i]
+                edges = list(
+                    zip(u1_a[start:stop], u2_a[start:stop], w_a[start:stop])
+                )
+                A, term_best, labels = _component_condense(
+                    sorted(sizes), edges, mcs, sizes, min_ids
+                )
+                out_comp += [comp] * (1 + len(labels))
+                out_kind += ["s"] + ["n"] * len(labels)
+                out_node += [""] + list(labels)
+                out_lab += [""] + [labels[k] for k in labels]
+                out_a += [A] + [0.0] * len(labels)
+                out_tb += [term_best] + [0.0] * len(labels)
+            return pd.DataFrame(
+                {
+                    "comp": out_comp,
+                    "kind": out_kind,
+                    "node": out_node,
+                    "lab": out_lab,
+                    "a": out_a,
+                    "tb": out_tb,
+                }
+            )
+
+        _stage("group_build")
+        # bucket count: ~50k edges per bucket for amortization, bounded so
+        # small inputs still spread across the cluster; one bucket's slab is
+        # at most (hard cap) + its share of the rest — same memory contract
+        n_buckets = int(min(4096, max(64, ecount // 50_000 + 1)))
+        comp_out = g.keep(
+            grp.withColumn(
+                "_bkt", F.pmod(F.xxhash64("comp"), F.lit(n_buckets))
+            )
+            .groupBy("_bkt")
+            .applyInPandas(
+                run_bucket,
+                schema="comp string, kind string, node string, lab string, "
+                "a double, tb double",
+            )
+        )
+        _stage("component_condense")
+        comp_entry = {
+            r["comp"]: (float(r["a"]), float(r["tb"]))
+            for r in comp_out.where(F.col("kind") == "s").collect()
+        }
+        if set(comp_entry) != enterable:
+            # a component >= mcs with no internal edges cannot exist (its
+            # supernodes are < mcs each and singletons have no edges), but
+            # fail loudly rather than mislabel
+            raise AssertionError("two-level condense lost a component summary")
+
+        _stage("entry_collect")
+        top = (
+            e.where(F.col("w") >= theta)
+            .join(
+                node_comp.select(
                     F.col("node").alias("u1"), F.col("comp").alias("cu")
                 ),
                 "u1",
             )
             .join(
-                node_comp_fine.select(
+                node_comp.select(
                     F.col("node").alias("u2"), F.col("comp").alias("cv")
                 ),
                 "u2",
             )
-            .select("cu", "cv", "w")
             .collect()
         )
-        touched = sorted({r["cu"] for r in mid} | {r["cv"] for r in mid})
-        t_cnt: dict[str, int] = {}
-        if touched:
-            t_cnt = {
-                r["comp"]: int(r["count"])
-                for r in comp_edges_fine.groupBy("comp")
-                .count()
-                .join(
-                    F.broadcast(
-                        driver_frame(
-                            spark, [(c,) for c in touched], "comp string"
-                        )
-                    ),
-                    "comp",
-                    "leftsemi",
-                ).collect()
-            }
-        # per-level merged-component maxima and mappings (driver-
-        # trivial union-finds over the bounded mid-band); then pick the
-        # coarsest level under the SOFT ceiling, falling back to the
-        # coarsest under the hard cap
-        stats: dict[int, tuple[int, dict[str, str]]] = {
-            fine: (int(fine_max), {})
-        }
-        for lvl in sorted(i for i in viable if i < fine):
-            lvl_edges = [r for r in mid if r["w"] < thetas[lvl]]
-            parent: dict[str, str] = {}
-            for r in lvl_edges:
-                ra, rb = _uf_find(parent, r["cu"]), _uf_find(parent, r["cv"])
-                if ra != rb:
-                    # attach max under min: the root stays the min node
-                    # id of the merged component, matching CC's labels
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            tot: dict[str, int] = {}
-            for c in touched:
-                root = _uf_find(parent, c)
-                tot[root] = tot.get(root, 0) + t_cnt.get(c, 0)
-            for r in lvl_edges:
-                root = _uf_find(parent, r["cu"])
-                tot[root] = tot.get(root, 0) + 1
-            stats[lvl] = (
-                max([int(fine_max)] + list(tot.values())),
-                {
-                    c: _uf_find(parent, c)
-                    for c in touched
-                    if _uf_find(parent, c) != c
-                },
+        _stage("top_collect")
+        verdicts = _condense_top(
+            comp_sizes,
+            comp_min_ids,
+            comp_entry,
+            [(r["u1"], r["u2"], float(r["w"]), r["cu"], r["cv"]) for r in top],
+            mcs,
+        )
+        _stage("condense_top")
+
+        # assemble (snode, _lab): whole-component labels via one small join,
+        # INTERNAL components from the distributed per-node rows
+        whole = [
+            (c, v[1]) for c, v in verdicts.items() if v[0] in ("RUNT", "OVERRIDE")
+        ]
+        internal_comps = [
+            (c,) for c, v in verdicts.items() if v[0] == "INTERNAL"
+        ]
+        parts = []
+        if whole:
+            whole_df = driver_frame(spark, whole, "comp string, _lab string")
+            parts.append(
+                node_comp.join(F.broadcast(whole_df), "comp").select(
+                    F.col("node").alias("snode"), "_lab"
+                )
             )
-        for cap in (
-            TWO_LEVEL_SOFT_COMPONENT_EDGES,
-            TWO_LEVEL_MAX_COMPONENT_EDGES,
-        ):
-            picks = [i for i in sorted(stats) if stats[i][0] <= cap]
-            if picks:
-                chosen = picks[0]
-                mapping = stats[chosen][1]
-                break
-
-    _stage("cc_and_cuts")
-    theta = thetas[chosen]
-    if chosen != fine and n_exts[chosen] > driver_rows:
-        log.info(
-            "condense_two_level: relaxed top-edge budget in use "
-            "(n_ext=%d > driver_rows=%d at the chosen cut; cap 2x)",
-            n_exts[chosen],
-            driver_rows,
-        )
-    if chosen == fine:
-        node_comp = node_comp_fine
-        comp_edges = comp_edges_fine
-    else:
-        map_df = driver_frame(
-            spark, mapping.items(), "comp string, root string"
-        )
-        node_comp = _materialize(
-            node_comp_fine.join(F.broadcast(map_df), "comp", "left").select(
-                "node", F.coalesce("root", F.col("comp")).alias("comp")
+        if internal_comps:
+            int_df = driver_frame(spark, internal_comps, "comp string")
+            parts.append(
+                comp_out.where(F.col("kind") == "n")
+                .join(F.broadcast(int_df), "comp", "leftsemi")
+                .select(F.col("node").alias("snode"), F.col("lab").alias("_lab"))
             )
-        )
-        comp_edges = _materialize(
-            e.where(F.col("w") < F.lit(theta)).join(
-                node_comp.withColumnRenamed("node", "u1"), "u1"
-            )
-        )
-        _release_checkpoint(node_comp_fine, comp_edges_fine)
-    _stage("node_comp")
-    comp_summary = (
-        node_comp.join(attrs, "node")
-        .groupBy("comp")
-        .agg(F.sum("size").alias("csize"), F.min("min_id").alias("cmin"))
-        .collect()
-    )
-    comp_sizes = {r["comp"]: int(r["csize"]) for r in comp_summary}
-    comp_min_ids = {r["comp"]: r["cmin"] for r in comp_summary}
-
-    # per-component condense of every enterable (>= mcs) component:
-    # group = the component's internal edges with both endpoints' attrs
-    enterable = {c for c, s in comp_sizes.items() if s >= min_cluster_size}
-    ent_df = driver_frame(
-        spark, [(c,) for c in sorted(enterable)], "comp string"
-    )
-    grp = (
-        comp_edges.join(F.broadcast(ent_df), "comp", "leftsemi")
-        .join(
-            attrs.select(
-                F.col("node").alias("u1"),
-                F.col("size").alias("s1"),
-                F.col("min_id").alias("m1"),
-            ),
-            "u1",
-        )
-        .join(
-            attrs.select(
-                F.col("node").alias("u2"),
-                F.col("size").alias("s2"),
-                F.col("min_id").alias("m2"),
-            ),
-            "u2",
-        )
-    )
-    mcs = min_cluster_size
-
-    def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one Arrow group = one BUCKET of components (round 7): the
-        # per-group Spark/Arrow/worker overhead is ~1 ms, which at 100k
-        # tiny components serialized the whole pass (72 s measured on
-        # the caterpillar bench). Components are sliced out of plain
-        # numpy arrays by boundary index (round 10): pandas groupby
-        # iteration costs ~1-3 ms per tiny group in frame construction
-        # alone, which at ~3k components per bucket was the residual
-        # bottleneck of the 1M-edge probe.
-        import numpy as np
-
-        out_comp: list = []
-        out_kind: list = []
-        out_node: list = []
-        out_lab: list = []
-        out_a: list = []
-        out_tb: list = []
-        pdf = pdf.sort_values("comp", kind="stable")
-        comp_a = pdf["comp"].to_numpy()
-        u1_a = pdf["u1"].to_numpy()
-        u2_a = pdf["u2"].to_numpy()
-        w_a = pdf["w"].to_numpy()
-        s1_a = pdf["s1"].to_numpy()
-        s2_a = pdf["s2"].to_numpy()
-        m1_a = pdf["m1"].to_numpy()
-        m2_a = pdf["m2"].to_numpy()
-        n_rows = len(comp_a)
-        bnd = np.flatnonzero(np.r_[True, comp_a[1:] != comp_a[:-1]])
-        for gi, start in enumerate(bnd):
-            stop = bnd[gi + 1] if gi + 1 < len(bnd) else n_rows
-            comp = comp_a[start]
-            sizes: dict[str, int] = {}
-            min_ids: dict[str, str] = {}
-            for i in range(start, stop):
-                sizes[u1_a[i]] = int(s1_a[i])
-                min_ids[u1_a[i]] = m1_a[i]
-                sizes[u2_a[i]] = int(s2_a[i])
-                min_ids[u2_a[i]] = m2_a[i]
-            edges = list(
-                zip(u1_a[start:stop], u2_a[start:stop], w_a[start:stop])
-            )
-            A, term_best, labels = _component_condense(
-                sorted(sizes), edges, mcs, sizes, min_ids
-            )
-            out_comp += [comp] * (1 + len(labels))
-            out_kind += ["s"] + ["n"] * len(labels)
-            out_node += [""] + list(labels)
-            out_lab += [""] + [labels[k] for k in labels]
-            out_a += [A] + [0.0] * len(labels)
-            out_tb += [term_best] + [0.0] * len(labels)
-        return pd.DataFrame(
-            {
-                "comp": out_comp,
-                "kind": out_kind,
-                "node": out_node,
-                "lab": out_lab,
-                "a": out_a,
-                "tb": out_tb,
-            }
-        )
-
-    _stage("group_build")
-    # bucket count: ~50k edges per bucket for amortization, bounded so
-    # small inputs still spread across the cluster; one bucket's slab is
-    # at most (hard cap) + its share of the rest — same memory contract
-    n_buckets = int(min(4096, max(64, ecount // 50_000 + 1)))
-    comp_out = _materialize(
-        grp.withColumn(
-            "_bkt", F.pmod(F.xxhash64("comp"), F.lit(n_buckets))
-        )
-        .groupBy("_bkt")
-        .applyInPandas(
-            run_bucket,
-            schema="comp string, kind string, node string, lab string, "
-            "a double, tb double",
-        )
-    )
-    _stage("component_condense")
-    comp_entry = {
-        r["comp"]: (float(r["a"]), float(r["tb"]))
-        for r in comp_out.where(F.col("kind") == "s").collect()
-    }
-    if set(comp_entry) != enterable:
-        # a component >= mcs with no internal edges cannot exist (its
-        # supernodes are < mcs each and singletons have no edges), but
-        # fail loudly rather than mislabel
-        raise AssertionError("two-level condense lost a component summary")
-
-    _stage("entry_collect")
-    top = (
-        e.where(F.col("w") >= theta)
-        .join(
-            node_comp.select(
-                F.col("node").alias("u1"), F.col("comp").alias("cu")
-            ),
-            "u1",
-        )
-        .join(
-            node_comp.select(
-                F.col("node").alias("u2"), F.col("comp").alias("cv")
-            ),
-            "u2",
-        )
-        .collect()
-    )
-    _stage("top_collect")
-    verdicts = _condense_top(
-        comp_sizes,
-        comp_min_ids,
-        comp_entry,
-        [(r["u1"], r["u2"], float(r["w"]), r["cu"], r["cv"]) for r in top],
-        mcs,
-    )
-    _stage("condense_top")
-
-    # assemble (snode, _lab): whole-component labels via one small join,
-    # INTERNAL components from the distributed per-node rows
-    whole = [
-        (c, v[1]) for c, v in verdicts.items() if v[0] in ("RUNT", "OVERRIDE")
-    ]
-    internal_comps = [
-        (c,) for c, v in verdicts.items() if v[0] == "INTERNAL"
-    ]
-    parts = []
-    if whole:
-        whole_df = driver_frame(spark, whole, "comp string, _lab string")
-        parts.append(
-            node_comp.join(F.broadcast(whole_df), "comp").select(
-                F.col("node").alias("snode"), "_lab"
-            )
-        )
-    if internal_comps:
-        int_df = driver_frame(spark, internal_comps, "comp string")
-        parts.append(
-            comp_out.where(F.col("kind") == "n")
-            .join(F.broadcast(int_df), "comp", "leftsemi")
-            .select(F.col("node").alias("snode"), F.col("lab").alias("_lab"))
-        )
-    _release_checkpoint(e, attrs, comp_edges)
-    if not parts:
-        return driver_frame(spark, [], "snode string, _lab string")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # node_comp/comp_out leaves back the result; transfer block ownership
-    out._ckpt_rdd_ids = getattr(node_comp, "_ckpt_rdd_ids", []) + getattr(
-        comp_out, "_ckpt_rdd_ids", []
-    )
-    node_comp._ckpt_rdd_ids = []
-    comp_out._ckpt_rdd_ids = []
-    return out
+        if not parts:
+            return driver_frame(spark, [], "snode string, _lab string")
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        # node_comp/comp_out leaves back the result
+        return g.result(out, node_comp, comp_out)
 
 
 # Measured crossover for hdbscan_cluster's knn_mode="auto" (local[32],
@@ -2130,184 +2095,127 @@ def hdbscan_cluster(
     else driver; two_level quietly falls back to driver when no
     feasible θ exists).
 
-    carry_input_ckpt=True transfers checkpoint-block ownership of the
-    caller-supplied `embeddings` frame onto the result (opt-in, ADVICE
-    r9); leave False if the caller reuses the input after a release."""
-    from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _release_checkpoint,
-    )
+    carry_input_ckpt=True also hands the caller-supplied `embeddings`
+    frame's checkpoint blocks to the result (opt-in, ADVICE r9); leave
+    False if the caller reuses the input after a release. Everything
+    else the pipeline checkpoints belongs to one `_generations` scope;
+    only what backs the result outlives it, on every return path."""
+    from echo_chambers_detection_spark.operators.graph import _generations
 
-    if carry_input_ckpt:
-        # Explicit opt-in for input ownership transfer (ADVICE r9): run
-        # the pipeline normally, then move the CALLER frame's checkpoint
-        # blocks onto the result so one caller-side release frees the
-        # whole fastrp->hdbscan chain. Never implicit — a caller that
-        # reuses `embeddings` after releasing one result would hit
-        # unrecoverable block-not-found failures.
-        from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-        out = hdbscan_cluster(
-            embeddings,
-            min_pts=min_pts,
-            min_cluster_size=min_cluster_size,
-            k=k,
-            num_blocks=num_blocks,
-            knn_mode=knn_mode,
-            n_cells=n_cells,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            condense_mode=condense_mode,
-        )
-        return carry_ckpt(out, embeddings)
-
-    if k is None:
-        k = max(min_pts + 1, 10)
-    spark = embeddings.sparkSession
-    embeddings = embeddings.select(
-        F.col(id_col).cast("string").alias(id_col), F.col(vec_col)
-    )
-    n: int | None = None
-    needs_count = knn_mode == "auto" or (knn_mode == "ann" and n_cells is None)
-    if needs_count:
-        # the input is typically an expensive lazy plan (FastRP); cut it
-        # to a leaf BEFORE counting so the count doesn't execute the
-        # whole pipeline once for sizing and again for the k-NN build
-        embeddings = _materialize(embeddings)
-        n = embeddings.count()
-    if knn_mode == "auto":
-        knn_mode = "ann" if n > KNN_ANN_CROSSOVER else "exact"
-    if knn_mode == "ann":
-        cells = n_cells if n_cells is not None else max(16, int(n ** 0.5))
-        knn = _materialize(
-            knn_graph_ann(
-                embeddings, k=k, n_cells=cells, nprobe=nprobe,
-                id_col=id_col, vec_col=vec_col,
-            )
-        )
-    else:
-        knn = _materialize(
-            knn_graph(
-                embeddings, k=k, num_blocks=num_blocks,
-                id_col=id_col, vec_col=vec_col, n=n,
-            )
-        )
-    core = core_distances(knn, min_pts)
-    mre = mutual_reachability_edges(knn, core)
-    # (forest is either a driver_frame or a union of
-    # checkpointed Borůvka parts — the gate count below re-reads
-    # cached blocks, not the k-NN pipeline)
-    forest = minimum_spanning_forest(mre)
-    # Pre-contract hanging sub-min_cluster_size subtrees DISTRIBUTEDLY
-    # (VERDICT r4 #2): the driver then collects the contracted forest —
-    # cluster backbone + one row per fringe, not n-1 rows — and the
-    # member expansion stays a distributed join. Condense itself is
-    # sequential in any HDBSCAN implementation; this bounds what it is
-    # fed, label-identically (tests pin contracted == uncontracted).
-    # Below CONTRACT_MIN_FOREST_EDGES the collect is trivially cheap and
-    # the contraction rounds are pure overhead (+3 s measured at sf0.1),
-    # so the gate — like every crossover here — takes the direct path
-    # small and the bounded path at scale.
     if condense_mode not in ("auto", "driver", "two_level"):
         raise ValueError(
             f"condense_mode must be auto|driver|two_level, got "
             f"{condense_mode!r}"
         )
-    if forest.count() >= CONTRACT_MIN_FOREST_EDGES:
-        c_edges, c_nodes, member_map = contract_runt_fringes(
-            forest, min_cluster_size
+    if k is None:
+        k = max(min_pts + 1, 10)
+    spark = embeddings.sparkSession
+    with _generations() as g:
+        emb = embeddings.select(
+            F.col(id_col).cast("string").alias(id_col), F.col(vec_col)
         )
-        lab_sn_df = None
-        if condense_mode == "two_level" or (
-            condense_mode == "auto"
-            and c_edges.count() >= TWO_LEVEL_MIN_EDGES
-        ):
-            lab_sn_df = condense_two_level(
-                c_edges, c_nodes, min_cluster_size
+        n: int | None = None
+        if knn_mode == "auto" or (knn_mode == "ann" and n_cells is None):
+            # the input is typically an expensive lazy plan (FastRP); cut
+            # it to a leaf BEFORE counting so the count doesn't execute
+            # the whole pipeline once for sizing and again for the k-NN
+            # build
+            emb = g.keep(emb)
+            n = emb.count()
+        if knn_mode == "auto":
+            knn_mode = "ann" if n > KNN_ANN_CROSSOVER else "exact"
+        if knn_mode == "ann":
+            cells = n_cells if n_cells is not None else max(16, int(n ** 0.5))
+            knn = g.keep(
+                knn_graph_ann(
+                    emb, k=k, n_cells=cells, nprobe=nprobe,
+                    id_col=id_col, vec_col=vec_col,
+                )
             )
-        if lab_sn_df is not None:
-            from echo_chambers_detection_spark.operators.graph import (
-                carry_ckpt,
+        else:
+            knn = g.keep(
+                knn_graph(
+                    emb, k=k, num_blocks=num_blocks,
+                    id_col=id_col, vec_col=vec_col, n=n,
+                )
             )
+        core = core_distances(knn, min_pts)
+        # (forest is either a driver_frame or a union of checkpointed
+        # Borůvka parts — the gate count below re-reads cached blocks,
+        # not the k-NN pipeline)
+        forest = g.adopt(
+            minimum_spanning_forest(mutual_reachability_edges(knn, core))
+        )
+        # Pre-contract hanging sub-min_cluster_size subtrees
+        # DISTRIBUTEDLY (VERDICT r4 #2): the driver then collects the
+        # contracted forest — cluster backbone + one row per fringe, not
+        # n-1 rows — and the member expansion stays a distributed join.
+        # Condense itself is sequential in any HDBSCAN implementation;
+        # this bounds what it is fed, label-identically (tests pin
+        # contracted == uncontracted). Below CONTRACT_MIN_FOREST_EDGES
+        # the collect is trivially cheap and the contraction rounds are
+        # pure overhead (+3 s measured at sf0.1), so the gate — like
+        # every crossover here — takes the direct path small and the
+        # bounded path at scale.
+        member_map = lab_sn = lab_df = None
+        if forest.count() >= CONTRACT_MIN_FOREST_EDGES:
+            c_edges, c_nodes, member_map = (
+                g.adopt(f)
+                for f in contract_runt_fringes(forest, min_cluster_size)
+            )
+            if condense_mode == "two_level" or (
+                condense_mode == "auto"
+                and c_edges.count() >= TWO_LEVEL_MIN_EDGES
+            ):
+                lab_sn = condense_two_level(c_edges, c_nodes, min_cluster_size)
+            if lab_sn is None:
+                f_rows = [
+                    (r["u1"], r["u2"], float(r["w"])) for r in c_edges.collect()
+                ]
+                node_rows = c_nodes.collect()
+                sn_sizes = {r["node"]: int(r["size"]) for r in node_rows}
+                sn_min = {r["node"]: r["min_id"] for r in node_rows}
+                labels = condense_and_select(
+                    sorted(sn_sizes),
+                    f_rows,
+                    min_cluster_size,
+                    node_sizes=sn_sizes,
+                    node_min_ids=sn_min,
+                )
+                # labels cover only forest supernodes; everything else
+                # (inf-core nodes, isolated points) is noise. No
+                # broadcast hint: lab_sn is a LocalRelation sized by the
+                # cluster-tree, AQE broadcasts it when small.
+                if labels:
+                    lab_sn = driver_frame(
+                        spark, labels.items(), "snode string, _lab string"
+                    )
+            if lab_sn is not None:
+                # member expansion and the final join both stay
+                # distributed
+                lab_df = member_map.join(lab_sn, "snode").select(
+                    F.col("member").alias(id_col), "_lab"
+                )
+        else:
+            f_rows = [
+                (r["u1"], r["u2"], float(r["w"])) for r in forest.collect()
+            ]
+            in_forest = sorted({u for e in f_rows for u in (e[0], e[1])})
+            labels = condense_and_select(in_forest, f_rows, min_cluster_size)
+            if labels:
+                lab_df = driver_frame(
+                    spark, labels.items(), f"{id_col} string, _lab string"
+                )
+        if lab_df is None:
+            out = emb.select(id_col).withColumn("cluster", F.lit("-1"))
+        else:
+            out = (
+                emb.select(id_col)
+                .join(lab_df, id_col, "left")  # AQE picks broadcast when small
+                .select(id_col, F.coalesce("_lab", F.lit("-1")).alias("cluster"))
+            )
+        return g.result(
+            out, emb, member_map, lab_sn,
+            embeddings if carry_input_ckpt else None,
+        )
 
-            _release_checkpoint(forest, knn, c_edges, c_nodes)
-            lab_df = member_map.join(lab_sn_df, "snode").select(
-                F.col("member").alias(id_col), "_lab"
-            )
-            return carry_ckpt(
-                embeddings.select(id_col)
-                .join(lab_df, id_col, "left")
-                .select(
-                    id_col,
-                    F.coalesce("_lab", F.lit("-1")).alias("cluster"),
-                ),
-                member_map, lab_sn_df, embeddings,
-            )
-        f_rows = [
-            (r["u1"], r["u2"], float(r["w"])) for r in c_edges.collect()
-        ]
-        node_rows = c_nodes.collect()
-        _release_checkpoint(forest, knn, c_edges, c_nodes)
-        sn_sizes = {r["node"]: int(r["size"]) for r in node_rows}
-        sn_min = {r["node"]: r["min_id"] for r in node_rows}
-        labels = condense_and_select(
-            sorted(sn_sizes),
-            f_rows,
-            min_cluster_size,
-            node_sizes=sn_sizes,
-            node_min_ids=sn_min,
-        )
-        # labels cover only forest supernodes; everything else
-        # (inf-core nodes, isolated points) is noise — member expansion
-        # and the final join both stay distributed. No broadcast hint:
-        # lab_sn is a LocalRelation sized by the cluster-tree, AQE
-        # broadcasts it when small.
-        from echo_chambers_detection_spark.operators.graph import (
-            carry_ckpt,
-        )
-
-        if labels:
-            lab_sn = driver_frame(
-                spark, labels.items(), "snode string, _lab string"
-            )
-            lab_df = member_map.join(lab_sn, "snode").select(
-                F.col("member").alias(id_col), "_lab"
-            )
-            return carry_ckpt(
-                embeddings.select(id_col)
-                .join(lab_df, id_col, "left")
-                .select(
-                    id_col,
-                    F.coalesce("_lab", F.lit("-1")).alias("cluster"),
-                ),
-                member_map, embeddings,
-            )
-        return carry_ckpt(
-            embeddings.select(id_col).withColumn("cluster", F.lit("-1")),
-            member_map, embeddings,
-        )
-    f_rows = [
-        (r["u1"], r["u2"], float(r["w"])) for r in forest.collect()
-    ]
-    _release_checkpoint(forest, knn)
-    in_forest = sorted({u for e in f_rows for u in (e[0], e[1])})
-    labels = condense_and_select(in_forest, f_rows, min_cluster_size)
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-    if labels:
-        lab_df = driver_frame(
-            spark, labels.items(), f"{id_col} string, _lab string"
-        )
-        return carry_ckpt(
-            embeddings.select(id_col)
-            .join(lab_df, id_col, "left")  # AQE picks broadcast when small
-            .select(
-                id_col, F.coalesce("_lab", F.lit("-1")).alias("cluster")
-            ),
-            embeddings,
-        )
-    return carry_ckpt(
-        embeddings.select(id_col).withColumn("cluster", F.lit("-1")),
-        embeddings,
-    )

@@ -114,8 +114,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     stay the at-scale plan."""
     out = _traversal_mirror(
         edges, "tricount_local",
-        [("node", None), ("triangles", LongType()), ("deg", LongType()),
-         ("wedges", LongType())],
+        [("node", None), ("triangles", LongType(), False),
+         ("deg", LongType(), False), ("wedges", LongType())],
     )
     if out is not None:
         return out
@@ -146,7 +146,8 @@ def transitivity_stats(edges: DataFrame) -> DataFrame:
     exact integers). Same mirror crossover as triangle_counts."""
     out = _traversal_mirror(
         edges, "transitivity_local",
-        [(c, LongType()) for c in ("n_nodes", "n_edges", "n_triangles", "n_wedges")],
+        [("n_nodes", LongType(), False), ("n_edges", LongType()),
+         ("n_triangles", LongType(), False), ("n_wedges", LongType())],
     )
     if out is not None:
         return out
@@ -287,7 +288,7 @@ def ktruss_edges(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     # plan (and the forced-distributed bench probe keeps exercising it).
     out = _traversal_mirror(
         edges, "ktruss_local",
-        [("u1", None), ("u2", None), ("support", LongType())],
+        [("u1", None), ("u2", None), ("support", LongType(), False)],
         k=k, max_rounds=max_rounds,
     )
     if out is not None:

@@ -22,6 +22,15 @@ SF_ORACLE = "/root/testdata/sf0.01"
 FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 
 
+def assert_same_schema(mirror, distributed) -> None:
+    """A driver mirror's frame must carry the distributed path's full
+    schema, nullability included (`simpleString` hides NOT NULL). Reads
+    only the analyzed schemas: no Spark job."""
+    assert mirror.schema == distributed.schema, (
+        f"mirror schema {mirror.schema} != distributed {distributed.schema}"
+    )
+
+
 def lane(full: list, quick: list) -> list:
     """Parametrize list for the current lane (full sweeps vs verify
     budget); `quick` must be a subset of `full`."""

@@ -15,6 +15,7 @@ from echo_chambers_detection_spark.operators.graph import (
     density_cluster,
     fastrp,
 )
+from tests.conftest import assert_same_schema
 
 
 @pytest.fixture(scope="module")
@@ -206,7 +207,7 @@ def test_fastrp_mirror_matches_distributed(
             ),
         )
         assert _ran_on_driver(local) and not _ran_on_driver(dist)
-        assert local.schema.simpleString() == dist.schema.simpleString()
+        assert_same_schema(local, dist)
         a, b = _cells(local), _cells(dist)
         assert a.keys() == b.keys()
         assert max(abs(a[k] - b[k]) for k in a) <= 1e-6

@@ -658,6 +658,77 @@ def test_generation_scope_frees_on_exception(spark):
     assert _pinned(spark) == base
 
 
+def test_generation_scope_adopts_and_frees_several_prev(spark):
+    """adopt() owns what a nested scope handed over, and one step() can
+    retire several dead frames at once."""
+    from echo_chambers_detection_spark.operators.graph import _generations
+
+    base = _pinned(spark)
+    with _generations() as g:
+        with _generations() as inner:
+            handed = inner.result(inner.keep(spark.range(4).toDF("x")))
+        a = g.adopt(handed)
+        b = g.keep(spark.range(4).toDF("x"))
+        c = g.step(a.union(b), prev=(a, b))
+        assert c.count() == 8
+        assert len(_pinned(spark) - base) == len(c._ckpt_rdd_ids)
+    assert _pinned(spark) == base
+
+
+@pytest.mark.parametrize("fn", [louvain, leiden, modularity_optimization])
+def test_zero_weight_graph_pins_nothing(spark, fn):
+    """With m = 0 the Louvain family returns the singleton partition;
+    the symmetrized graph checkpointed to read m must not stay pinned."""
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+    )
+
+    e = _edges_df(spark, [("a", "b", 0.0), ("b", "c", 0.0)], weighted=True)
+    base = _pinned(spark)
+    out = fn(e)
+    assert {(r["node"], r["community"]) for r in out.collect()} == {
+        (x, x) for x in "abc"
+    }
+    _release_checkpoint(out)
+    assert _pinned(spark) == base
+
+
+def test_hdbscan_rejects_condense_mode_before_any_job(spark):
+    from echo_chambers_detection_spark.operators.hdbscan import hdbscan_cluster
+    from echo_chambers_detection_spark.operators.planted import (
+        planted_arc_embeddings,
+    )
+
+    emb = planted_arc_embeddings(spark, 2, 10)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    base, j0 = _pinned(spark), jobs()
+    with pytest.raises(ValueError, match="condense_mode"):
+        hdbscan_cluster(emb, condense_mode="bogus")
+    assert jobs() == j0
+    assert _pinned(spark) == base
+
+
+def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
+    """An exception in Leiden's second level frees every generation the
+    call had checkpointed."""
+    import echo_chambers_detection_spark.operators.graph as G
+
+    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
+    real, calls = G._coarsen, []
+
+    def coarsen_failing_at_level_2(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected at level 2")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(G, "_coarsen", coarsen_failing_at_level_2)
+    base = _pinned(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        G.leiden(planted, max_levels=3, max_rounds=4)
+    assert _pinned(spark) == base
+
+
 def test_loop_operators_release_all_checkpoints(spark):
     """Checkpoint-leak regression (round 9): the flagship loop operators
     must leave ZERO pinned RDD blocks behind once the caller releases
@@ -673,7 +744,9 @@ def test_loop_operators_release_all_checkpoints(spark):
     from echo_chambers_detection_spark.operators.graph import (
         _release_checkpoint,
     )
+    import echo_chambers_detection_spark.operators.hdbscan as H
     from echo_chambers_detection_spark.operators.planted import (
+        planted_arc_embeddings,
         planted_partition_edges,
     )
     from echo_chambers_detection_spark.operators.triangles import ktruss_edges
@@ -685,6 +758,35 @@ def test_loop_operators_release_all_checkpoints(spark):
     eng = u.select(F.col("u1").alias("user_did"), post).unionAll(
         u.select(F.col("u2").alias("user_did"), post)
     )
+    # a 40-node slice for Borůvka, a caterpillar forest (40 hubs of 9
+    # pendant leaves) for the contraction and the two-level condense,
+    # and 4 arcs of 20 points for HDBSCAN
+    small_forest_input = e.where(F.col("u2") < "000040").select(
+        "u1", "u2",
+        (F.abs(F.xxhash64("u1", "u2")) % 97 + 1).cast("double").alias("w"),
+    )
+    hub = F.format_string("h%03d", F.col("id") % 40)
+    caterpillar = spark.range(0, 360, 1, 2).select(
+        hub.alias("u1"),
+        F.format_string("%sx%d", hub, F.floor(F.col("id") / 40)).alias("u2"),
+        (F.lit(0.001) + F.col("id") * 1e-9).alias("w"),
+    ).unionAll(
+        spark.range(0, 39, 1, 1).select(
+            F.format_string("h%03d", F.col("id")).alias("u1"),
+            F.format_string("h%03d", F.col("id") + 1).alias("u2"),
+            (F.lit(1.0) + F.col("id") * 1e-4).alias("w"),
+        )
+    )
+    arcs = planted_arc_embeddings(spark, 4, 20)
+
+    def contracted(*a, **kw):
+        old_gate = H.CONTRACT_MIN_FOREST_EDGES
+        H.CONTRACT_MIN_FOREST_EDGES = 0
+        try:
+            return H.hdbscan_cluster(*a, **kw)
+        finally:
+            H.CONTRACT_MIN_FOREST_EDGES = old_gate
+
     old = G.LOCAL_GRAPH_EDGE_LIMIT, G.LOCAL_TRAVERSAL_EDGE_LIMIT
     # force the distributed loops
     G.LOCAL_GRAPH_EDGE_LIMIT = G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
@@ -719,12 +821,40 @@ def test_loop_operators_release_all_checkpoints(spark):
             ("seeded_random_walks", lambda: G.seeded_random_walks(u, length=2)),
             ("ktruss_edges", lambda: ktruss_edges(u, k=4)),
             ("fastrp", lambda: G.fastrp(e, dim=8)),
+            ("modularity_optimization", lambda: G.modularity_optimization(
+                e, max_rounds=2
+            )),
+            ("minimum_spanning_forest", lambda: H.minimum_spanning_forest(
+                small_forest_input
+            )),
+            ("contract_runt_fringes", lambda: H.contract_runt_fringes(
+                caterpillar, min_cluster_size=10
+            )),
+            ("condense_two_level", lambda: H.condense_two_level(
+                c_e, c_n, min_cluster_size=10, driver_rows=24
+            )),
+            ("hdbscan_cluster", lambda: H.hdbscan_cluster(
+                arcs, min_pts=3, min_cluster_size=5
+            )),
+            ("hdbscan_cluster contracted", lambda: contracted(
+                arcs, min_pts=3, min_cluster_size=5, condense_mode="driver"
+            )),
         ]:
+            if name == "condense_two_level":
+                # its input is the contraction's output, made outside the
+                # measured window
+                c_e, c_n, mm = H.contract_runt_fringes(
+                    caterpillar, min_cluster_size=10
+                )
             base = _pinned(spark)
             out = fn()
-            out.count()  # materialize like a caller would
-            _release_checkpoint(out)
+            outs = out if isinstance(out, tuple) else (out,)
+            for o in outs:
+                o.count()  # materialize like a caller would
+            _release_checkpoint(*outs)
             leaked = _pinned(spark) - base
             assert not leaked, f"{name} leaked pinned RDDs: {sorted(leaked)}"
+            if name == "condense_two_level":
+                _release_checkpoint(c_e, c_n, mm)
     finally:
         G.LOCAL_GRAPH_EDGE_LIMIT, G.LOCAL_TRAVERSAL_EDGE_LIMIT = old

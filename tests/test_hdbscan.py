@@ -526,6 +526,33 @@ def test_contract_runt_fringes_bounds_collected_rows(spark):
     assert n_n == 20, n_n     # one supernode per hub
 
 
+def test_contract_runt_fringes_without_absorption(spark):
+    """min_cluster_size 2 admits no absorption (condition (d) needs
+    size(u) + size(v) < 2), so the three frames come back uncontracted
+    — and readable: the supernode frame used to be a projection of a
+    node seed that was freed before the return."""
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+    )
+    from echo_chambers_detection_spark.operators.hdbscan import (
+        contract_runt_fringes,
+    )
+
+    f = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 2.0), ("c", "d", 3.0)],
+        "u1 string, u2 string, w double",
+    )
+    c_e, c_n, mm = contract_runt_fringes(f, 2)
+    assert c_e.count() == 3
+    assert sorted((r["node"], r["size"], r["min_id"]) for r in c_n.collect()) == [
+        (x, 1, x) for x in "abcd"
+    ]
+    assert {(r["member"], r["snode"]) for r in mm.collect()} == {
+        (x, x) for x in "abcd"
+    }
+    _release_checkpoint(c_e, c_n, mm)
+
+
 def test_weighted_condense_defaults_identical():
     """node_sizes/node_min_ids default to 1/identity — the weighted
     arithmetic must be bit-identical to the unweighted form."""
