@@ -6,7 +6,10 @@ are verbatim from that file — see its git history for provenance.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from echo_chambers_detection_spark.catalog._core import (
     _t,
@@ -18,6 +21,7 @@ from echo_chambers_detection_spark.catalog.flagship import (
 from echo_chambers_detection_spark.catalog.graph import (
     _post_graph,
 )
+from echo_chambers_detection_spark.session import driver_frame, driver_table
 
 # ===========================================================================
 # Community metrics (SURVEY.md M2: A4-A12) over the post co-engagement graph
@@ -328,9 +332,14 @@ def _mint_and_metrics(
     uuid4 appends), and the per-community metrics table keyed by the
     minted ids.
 
-    Checkpoint hygiene: edges/labels are consumed here and never used
-    again. `community_table` leaves them dead, so any checkpoint blocks
-    the CALLER threaded onto them (the projection's engagement frame,
+    Placement and checkpoint hygiene: when edges, labels and emb are
+    all driver frames (`session.driver_frame`), as the one-pull
+    placement of both chains hands them over (`_on_driver`: every step
+    of the chain under its bound), the table runs in numpy from their
+    Arrow tables with no Spark job and nothing to free. Otherwise
+    edges/labels are consumed here and never used again:
+    `community_table` leaves them dead, so any checkpoint blocks the
+    CALLER threaded onto them (the projection's engagement frame,
     fastrp/hdbscan/CC internals) are released immediately; the result
     carries only the table's own blocks."""
     from echo_chambers_detection_spark.operators.graph import (
@@ -348,6 +357,125 @@ def _mint_and_metrics(
         *_rounded(),
         F.md5(F.lit(run_key)).alias("run_id"),
     ), t)
+
+
+def _on_driver(spark, sf_dir, pg, max_rows, labels_of, run_key):
+    """The analysis chain after its projection `pg`, run from one Arrow
+    pull on the driver, or None to run it distributed.
+
+    `max_rows` bounds the pull (the chain's graph steps' edge bound);
+    `labels_of(spark, tbl)` runs the chain's community step over the
+    pulled (u1, u2, weight) table and returns (member edges as an Arrow
+    table, labels as a driver frame), or None when a step's bound or
+    kernel declines. The labeled members' vectors are pulled once,
+    bounded by DRIVER_TABLE_MEMBERS (as are the labeled nodes, so that
+    pull is one filtered scan); then `_mint_and_metrics` gets
+    driver frames only, so its table runs in numpy without a job. Every
+    decline happens before `_mint_and_metrics` is called, and leaves
+    `pg` as it was."""
+    from echo_chambers_detection_spark.operators import metrics as M
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+        _traversal_local_tbl,
+    )
+
+    if M.DRIVER_TABLE_MEMBERS <= 0 or not isinstance(
+        pg.schema["u1"].dataType, StringType
+    ):
+        return None
+    tbl = _traversal_local_tbl(
+        pg, weighted=True, max_rows=max_rows, drop_null_ids=False
+    )
+    if tbl is None or tbl.column("u1").null_count or tbl.column("u2").null_count:
+        return None
+    got = labels_of(spark, tbl)
+    if got is None:
+        return None
+    edges, labels = got
+    nodes = driver_table(labels).column("node")
+    if len(nodes) > M.DRIVER_TABLE_MEMBERS:
+        return None
+    # labels ⋈ embeddings as one filtered scan (the labeled nodes are
+    # distinct, so the filter keeps the join's rows, in its order)
+    emb = _emb_nodes(spark, sf_dir)
+    emb_t = (
+        emb.where(F.col("node").isin(nodes.to_pylist()))
+        .limit(M.DRIVER_TABLE_MEMBERS + 1)
+        .toArrow()
+    )
+    members = M._joined_members(driver_table(labels), emb_t)
+    if members.num_rows > M.DRIVER_TABLE_MEMBERS or M._member_vectors(members) is None:
+        return None
+    _release_checkpoint(pg)
+    return _mint_and_metrics(
+        driver_frame(spark, edges, "u1 string, u2 string"),
+        labels,
+        driver_frame(spark, emb_t, emb.schema),
+        run_key,
+    )
+
+
+def _cc_labels(spark, tbl):
+    """The CC chain's community step in numpy: the strong backbone
+    (weight >= 1.2 x mean weight) and its connected components
+    (`connected_components_local`, the mirror `connected_components`
+    runs under its bound)."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from echo_chambers_detection_spark.operators.localgraph import (
+        connected_components_local,
+    )
+
+    w = tbl.column("weight").to_numpy().astype(np.float64)
+    # Spark's avg sums the long weights as doubles: exact below 2^53
+    if len(w):
+        strong = tbl.filter(pa.array(w >= 1.2 * (w.sum() / len(w))))
+    else:
+        strong = tbl
+    u1 = strong.column("u1").to_pandas().to_numpy()
+    u2 = strong.column("u2").to_pandas().to_numpy()
+    # connected_components collects its symmetrized rows with src <= dst
+    src, dst = np.concatenate([u1, u2]), np.concatenate([u2, u1])
+    half = src <= dst
+    comps = connected_components_local(
+        pd.DataFrame({"src": src[half], "dst": dst[half]})
+    )
+    labels = driver_frame(spark, comps.items(), "node string, label string")
+    return strong.select(["u1", "u2"]), labels
+
+
+def _hdbscan_labels(spark, tbl, dim, **hdbscan_args):
+    """The HDBSCAN chain's community step in numpy: FastRP
+    (`fastrp_local`, `fastrp`'s defaults), then `hdbscan_local` where
+    `hdbscan_cluster`'s "auto" gates would take the exact k-NN on the
+    driver, then the noise filter."""
+    from echo_chambers_detection_spark.operators.hdbscan import (
+        KNN_ANN_CROSSOVER,
+        hdbscan_local,
+    )
+    from echo_chambers_detection_spark.operators.localgraph import fastrp_local
+
+    rp = fastrp_local(
+        tbl, dim=dim, iteration_weights=(0.0, 1.0, 1.0), seed=42, assemble=True
+    )
+    if rp is None or len(rp) > KNN_ANN_CROSSOVER:
+        return None
+    lab = hdbscan_local(
+        rp["node"].to_numpy(), rp["embedding"].to_numpy(), num_blocks=8,
+        **hdbscan_args,
+    )
+    if lab is None:
+        return None
+    labels = driver_frame(
+        spark, lab.items(),
+        StructType([
+            StructField("node", StringType()),
+            StructField("label", StringType(), False),
+        ]),
+    )
+    return tbl.select(["u1", "u2"]), labels
 
 
 @register(
@@ -470,11 +598,17 @@ LEFT JOIN varc USING (label), tot t
     "backbone — the one member of the algorithm family with an exact "
     "recursive-CTE oracle, so the WHOLE chain is hash-checked "
     "end-to-end; the FastRP->HDBSCAN branch of the same DAG runs as "
-    "analysis_run_hdbscan (rows-only, iterative labels). SCD-2 "
+    "analysis_run_hdbscan (rows-only, iterative labels). Placement: "
+    "when the post graph fits one pull under the CC mirror's bound and "
+    "the labeled members fit DRIVER_TABLE_MEMBERS, the projection is "
+    "pulled once as Arrow and threshold, CC and metrics table run in "
+    "numpy (_on_driver); past any bound, or when a kernel declines, "
+    "each step runs as its own operator. SCD-2 "
     "expire/append of a previous run's membership is the "
     "scd2_membership_* family; the report stage is sinks/report.",
 )
 def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from echo_chambers_detection_spark.operators import graph as G
     from echo_chambers_detection_spark.operators.graph import (
         carry_ckpt,
         connected_components,
@@ -482,6 +616,12 @@ def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage 1: graph projection (reference produce_graph_projection)
     pg = _post_graph(spark, sf_dir)
+    out = _on_driver(
+        spark, sf_dir, pg, G.LOCAL_GRAPH_EDGE_LIMIT // 2, _cc_labels,
+        "analysis_run:cc_strong",
+    )
+    if out is not None:
+        return out
     thr = pg.agg((1.2 * F.avg("weight")).alias("t"))
     strong = carry_ckpt(
         pg.crossJoin(F.broadcast(thr))
@@ -511,9 +651,17 @@ def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Iterative + embedding-derived labels have no SQL twin, so this "
     "is a rows-only driver check; every stage is individually pinned "
     "(fastrp_embeddings, hdbscan_clusters, community_metrics_table, "
-    "and analysis_run_metrics for the chain shape itself).",
+    "and analysis_run_metrics for the chain shape itself). Placement: "
+    "when every step's gate would run it on the driver (FastRP's pull "
+    "bound, the k-NN tile rows, the Kruskal and contraction bounds, "
+    "DRIVER_TABLE_MEMBERS), the projection is pulled once as Arrow and "
+    "FastRP, hdbscan_local and the metrics table run in numpy "
+    "(_on_driver); past any bound, or when a kernel declines, each step "
+    "runs as its own operator. The noise-filtered labels reach "
+    "_mint_and_metrics as a (node, label) frame either way.",
 )
 def q_analysis_run_hdbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from echo_chambers_detection_spark.operators import localgraph
     from echo_chambers_detection_spark.operators.graph import (
         carry_ckpt,
         fastrp,
@@ -522,15 +670,21 @@ def q_analysis_run_hdbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         hdbscan_cluster,
     )
 
+    # the reference's FastRP dim and HDBSCAN parameters, for both placements
+    dim, args = 128, dict(min_pts=3, min_cluster_size=3, k=10)
     pg = _post_graph(spark, sf_dir)
-    rp = fastrp(pg, dim=128)
+    out = _on_driver(
+        spark, sf_dir, pg, localgraph.FASTRP_LOCAL_CELLS // (4 * dim),
+        partial(_hdbscan_labels, dim=dim, **args), "analysis_run:hdbscan",
+    )
+    if out is not None:
+        return out
+    rp = fastrp(pg, dim=dim)
     # thread checkpoint ownership down the chain (projection -> fastrp ->
     # hdbscan -> noise filter) so _mint_and_metrics can release it all
     # once its compacted frames are checkpointed (leak census r10)
     frp = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp, pg)
-    clusters = hdbscan_cluster(
-        frp, min_pts=3, min_cluster_size=3, k=10, carry_input_ckpt=True
-    )
+    clusters = hdbscan_cluster(frp, **args, carry_input_ckpt=True)
     # reference noise filter: result_df[label != -1]
     labels = carry_ckpt(
         clusters.where(F.col("cluster") != "-1").select(

@@ -46,7 +46,7 @@ import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from echo_chambers_detection_spark.session import driver_frame
 
@@ -215,6 +215,43 @@ def knn_graph(
         .where(F.col("_rn") <= k)
         .drop("_rn")
     )
+
+
+def round_half_up(x, scale: int = 6):
+    """`F.round(x, scale)` of a float64 array in numpy, or None when it
+    cannot be reproduced exactly.
+
+    Spark rounds a double as `BigDecimal(Double.toString(d))` with
+    HALF_UP, and JDK 17's `Double.toString` is not always the shortest
+    repr, so numpy cannot reproduce the decimal it rounds. That decimal
+    lies within half an ulp of `d`, though, so HALF_UP of the exact
+    binary value gives the same digit except within an ulp or so of a
+    half-step. This rounds the exact binary value (`Fraction` settles
+    the few near-ties) and returns None when a value is within a few
+    ulps of a half-step without lying on it. The result is `k / 10^scale`
+    with `k` an integer, which IEEE division rounds exactly as Spark's
+    `BigDecimal.doubleValue` does, with +0.0 for a zero `k`; NaN and
+    ±inf pass through, as in Spark. np.round rounds half to even on a
+    scaled float and disagrees at exact half-steps."""
+    from fractions import Fraction
+
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    p = 10.0 ** scale
+    finite = np.isfinite(x)
+    y = np.abs(np.where(finite, x, 0.0)) * p
+    k = np.floor(y)
+    # y - k is exact (Sterbenz), and so is its distance to 1/2
+    off = (y - k) - 0.5
+    near = np.abs(off) <= 4 * np.spacing(y)
+    k += off >= 0
+    for i in np.flatnonzero(near):
+        exact = Fraction(float(abs(x[i]))) * 10**scale
+        if exact - int(np.floor(y[i])) != Fraction(1, 2):
+            return None
+        k[i] = np.floor(y[i]) + 1
+    return np.where(finite, np.copysign(k, x) / p + 0.0, x)
 
 
 def _driver_tiles(pdf, num_blocks: int, k: int):
@@ -2055,6 +2092,101 @@ KNN_ANN_CROSSOVER = 32_000
 CONTRACT_MIN_FOREST_EDGES = 4_000_000
 
 
+def hdbscan_local(
+    ids, vectors, min_pts: int, min_cluster_size: int, k: int, num_blocks: int
+) -> dict | None:
+    """`hdbscan_cluster`'s exact chain in numpy on the driver: {node:
+    label} of the nodes that reach a cluster (every other node is
+    noise), or None where a step would not run on the driver or could
+    not be reproduced there.
+
+    `ids` are distinct string ids and `vectors` their equal-length
+    vectors, in the order Spark would collect them. Each step is the
+    driver placement of its distributed twin: `knn_graph`'s tiles over
+    the same crc32 blocks (`_driver_tiles`), its `1 - round(1 - dist,
+    6)` (`round_half_up`) and (dist, dst) top-k; `core_distances`;
+    `mutual_reachability_edges`; `_kruskal_local`; then the direct
+    `condense_and_select`. It declines above the same bounds the
+    distributed chain's gates apply: more than KNN_TILE_ROWS rows, more
+    than graph.LOCAL_GRAPH_EDGE_LIMIT mutual-reachability edges, a
+    forest of CONTRACT_MIN_FOREST_EDGES edges or more, and on a
+    distance within a few ulps of a rounding half-step."""
+    import zlib
+
+    import numpy as np
+    import pandas as pd
+
+    from echo_chambers_detection_spark.operators import graph as _G
+
+    if len(ids) > KNN_TILE_ROWS:
+        return None
+    ids = np.asarray(ids, dtype=object)
+    blocks = [zlib.crc32(s.encode("utf-8")) % num_blocks for s in ids]
+    cand = _driver_tiles(
+        pd.DataFrame({"_id": ids, "_vec": list(vectors), "_b": blocks}),
+        num_blocks, k,
+    )
+    if len(cand) == 0:
+        return {}
+    rounded = round_half_up(1.0 - cand["dist"].to_numpy(dtype=np.float64))
+    if rounded is None:
+        return None
+    knn = (
+        cand.assign(dist=1.0 - rounded)
+        .sort_values(["src", "dist", "dst"])
+        .groupby("src", sort=False)
+        .head(k)
+    )
+    src, dst = knn["src"].to_numpy(), knn["dst"].to_numpy()
+    dist = knn["dist"].to_numpy()
+    # core: the (min_pts - 1)-th nearest other neighbor, inf if fewer
+    core = pd.Series(np.inf if min_pts > 1 else 0.0, index=pd.unique(src))
+    if min_pts > 1:
+        nth = knn.groupby("src", sort=False).cumcount().to_numpy() == min_pts - 2
+        core.loc[src[nth]] = dist[nth]
+    lo = np.where(src < dst, src, dst)
+    hi = np.where(src < dst, dst, src)
+    und = (
+        pd.DataFrame({"u1": lo, "u2": hi, "dist": dist})
+        .groupby(["u1", "u2"], sort=False, as_index=False)["dist"]
+        .min()
+    )
+    c1, c2 = und["u1"].map(core), und["u2"].map(core)
+    w = np.maximum(und["dist"], np.maximum(c1, c2)).to_numpy()
+    keep = (c1.notna() & c2.notna()).to_numpy() & (w < np.inf)
+    if keep.sum() > _G.LOCAL_GRAPH_EDGE_LIMIT:
+        return None
+    picked = _kruskal_local(
+        zip(und["u1"].to_numpy()[keep], und["u2"].to_numpy()[keep], w[keep])
+    )
+    if len(picked) >= CONTRACT_MIN_FOREST_EDGES:
+        return None
+    in_forest = sorted({u for e in picked for u in (e[0], e[1])})
+    labels = condense_and_select(in_forest, picked, min_cluster_size)
+    return {node: lab for node, lab in labels.items() if lab != "-1"}
+
+
+def _hdbscan_pulled(tbl, id_col: str, vec_col: str, **kw) -> dict | None:
+    """`hdbscan_local` over a collected (id, vector) table, or None when
+    its rows are not distinct non-NULL ids with equal-length non-NULL
+    vectors (the distributed chain keeps those)."""
+    import pyarrow.compute as pc
+
+    vec = tbl.column(vec_col).combine_chunks()
+    node = tbl.column(id_col)
+    if (
+        node.null_count
+        or vec.null_count
+        or vec.flatten().null_count
+        or pc.count_distinct(node).as_py() < tbl.num_rows
+        or pc.count_distinct(pc.list_value_length(vec)).as_py() > 1
+    ):
+        return None
+    return hdbscan_local(
+        node.to_pandas().to_numpy(), vec.to_pandas().to_numpy(), **kw
+    )
+
+
 def hdbscan_cluster(
     embeddings: DataFrame,
     min_pts: int = 5,
@@ -2095,6 +2227,12 @@ def hdbscan_cluster(
     else driver; two_level quietly falls back to driver when no
     feasible θ exists).
 
+    Placement: in "auto" mode, when the sized input is at most
+    KNN_TILE_ROWS (and KNN_ANN_CROSSOVER) rows, it is pulled once and
+    the whole chain runs in `hdbscan_local`, the same kernel the
+    analysis press runs; the Spark steps below take over wherever that
+    kernel declines (a later step's bound, unreproducible input).
+
     carry_input_ckpt=True also hands the caller-supplied `embeddings`
     frame's checkpoint blocks to the result (opt-in, ADVICE r9); leave
     False if the caller reuses the input after a release. Everything
@@ -2122,6 +2260,26 @@ def hdbscan_cluster(
             # build
             emb = g.keep(emb)
             n = emb.count()
+        if knn_mode == "auto" and n <= min(KNN_ANN_CROSSOVER, KNN_TILE_ROWS):
+            # every step fits the driver: one pull, one kernel
+            tbl = emb.toArrow()
+            labels = _hdbscan_pulled(
+                tbl, id_col, vec_col, min_pts=min_pts,
+                min_cluster_size=min_cluster_size, k=k,
+                num_blocks=num_blocks or 8,
+            )
+            if labels is not None:
+                out = driver_frame(
+                    spark,
+                    [(i, labels.get(i, "-1")) for i in tbl.column(id_col).to_pylist()],
+                    StructType([
+                        emb.schema[id_col],
+                        StructField("cluster", StringType(), False),
+                    ]),
+                )
+                return g.result(
+                    out, embeddings if carry_input_ckpt else None
+                )
         if knn_mode == "auto":
             knn_mode = "ann" if n > KNN_ANN_CROSSOVER else "exact"
         if knn_mode == "ann":

@@ -33,7 +33,7 @@ and gives the same rows.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from echo_chambers_detection_spark.functions.vector import cosine_similarity
 from echo_chambers_detection_spark.operators.graph import (
@@ -41,18 +41,25 @@ from echo_chambers_detection_spark.operators.graph import (
     carry_ckpt,
     tracked_checkpoint,
 )
-from echo_chambers_detection_spark.session import driver_frame
+from echo_chambers_detection_spark.session import driver_frame, driver_table
 
 # Members (labeled nodes with an embedding) at or below which
 # `community_table` computes on the driver. 4096 members of 128-dim
 # vectors are ~4 MB. 0 forces the distributed path (tests do).
 DRIVER_TABLE_MEMBERS = 4096
 
-_TABLE_COLUMNS = (
-    "size bigint, cohesion double, separation double, ecs double, "
-    "conductance double, variance double, homophily double, "
-    "density_internal double, internal_edge_count bigint"
-)
+# The table's columns after `label`, with `community_metrics`' NOT NULLs
+_TABLE_COLUMNS = [
+    StructField("size", LongType(), False),
+    *(
+        StructField(c, DoubleType())
+        for c in (
+            "cohesion", "separation", "ecs", "conductance", "variance",
+            "homophily", "density_internal",
+        )
+    ),
+    StructField("internal_edge_count", LongType(), False),
+]
 
 
 def restrict_to_members(
@@ -313,23 +320,35 @@ def community_table(
     the pull itself, `limit(DRIVER_TABLE_MEMBERS + 1)` over
     embeddings ⋈ labels, so it costs no count job. Members numpy cannot
     mirror exactly (`_member_vectors`) take the distributed path too.
-    Either way the caller's edges and labels are dead once this
-    returns, and an empty member set or edge list gives the empty
-    table."""
+    Inputs that are driver frames (`session.driver_table`) are read
+    from their Arrow tables instead: labels and embeddings both for the
+    member join, edges for the member edges, with no Spark job. Either
+    way the caller's edges and labels are dead once this returns, and
+    an empty member set or edge list gives the empty table."""
     spark = labels.sparkSession
-    schema = f"label {labels.schema['label'].dataType.simpleString()}, {_TABLE_COLUMNS}"
+    schema = StructType([labels.schema["label"], *_TABLE_COLUMNS])
     if DRIVER_TABLE_MEMBERS > 0:
-        pulled = (
-            labels.select("node", "label")
-            .join(embeddings.select("node", "vector"), "node")
-            .limit(DRIVER_TABLE_MEMBERS + 1)
-            .toArrow()
-        )
+        lab_t, emb_t = driver_table(labels), driver_table(embeddings)
+        if lab_t is not None and emb_t is not None:
+            pulled = _joined_members(lab_t, emb_t)
+        else:
+            pulled = (
+                labels.select("node", "label")
+                .join(embeddings.select("node", "vector"), "node")
+                .limit(DRIVER_TABLE_MEMBERS + 1)
+                .toArrow()
+            )
         x = _member_vectors(pulled) if pulled.num_rows <= DRIVER_TABLE_MEMBERS else None
         if x is not None:
             nodes = pulled.column("node").to_pandas()
             u1 = u2 = nodes[:0]
-            if len(nodes):
+            edge_t = driver_table(edges)
+            if len(nodes) and edge_t is not None:
+                u1 = edge_t.column("u1").to_pandas()
+                u2 = edge_t.column("u2").to_pandas()
+                keep = (u1.isin(nodes) & u2.isin(nodes)).to_numpy()
+                u1, u2 = u1[keep], u2[keep]
+            elif len(nodes):
                 ids = driver_frame(
                     spark, nodes.to_frame(), StructType([labels.schema["node"]])
                 )
@@ -357,6 +376,26 @@ def community_table(
                 community_metrics(edges_m, members, embeddings), edges_m, members
             )
     return carry_ckpt(driver_frame(spark, [], schema), edges_m, members)
+
+
+def _joined_members(lab_t, emb_t):
+    """labels ⋈ embeddings of two driver tables, as the pull in
+    `community_table` returns it: (node, label, vector) in the
+    embeddings' row order, NULL nodes matching nothing."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    def keyed(t, pos):
+        node = t.column("node").to_pandas()
+        return pd.DataFrame({"node": node, pos: np.arange(t.num_rows)})[node.notna()]
+
+    m = keyed(emb_t, "_i").merge(keyed(lab_t, "_j"), on="node", sort=False)
+    return pa.table({
+        "node": emb_t.column("node").take(m["_i"].to_numpy()),
+        "label": lab_t.column("label").take(m["_j"].to_numpy()),
+        "vector": emb_t.column("vector").take(m["_i"].to_numpy()),
+    })
 
 
 def _member_vectors(pulled):

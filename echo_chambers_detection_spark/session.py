@@ -130,9 +130,13 @@ def driver_frame(spark: SparkSession, data, schema: str | StructType) -> DataFra
     string or StructType), built as a typed Arrow table (module
     docstring: the Arrow hand-off rule).
 
-    `data` is a pandas DataFrame, whose columns map to the schema by
-    position as in `createDataFrame(pdf, schema)`, or an iterable of row
-    tuples."""
+    `data` is a pandas DataFrame or a `pyarrow.Table`, whose columns map
+    to the schema by position as in `createDataFrame(pdf, schema)`, or
+    an iterable of row tuples.
+
+    The returned frame keeps the table as `_arrow_table`, so a driver
+    step handed this exact frame reads its rows without a Spark job
+    (`driver_table`); any transform of it is a new frame without one."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -140,7 +144,9 @@ def driver_frame(spark: SparkSession, data, schema: str | StructType) -> DataFra
         schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
     )
     arrow_schema = to_arrow_schema(struct)
-    if hasattr(data, "iloc"):
+    if isinstance(data, pa.Table):
+        cols = [data.column(i).cast(f.type) for i, f in enumerate(arrow_schema)]
+    elif hasattr(data, "iloc"):
         cols = [
             pa.Array.from_pandas(data.iloc[:, i], type=f.type)
             for i, f in enumerate(arrow_schema)
@@ -152,4 +158,11 @@ def driver_frame(spark: SparkSession, data, schema: str | StructType) -> DataFra
             for i, f in enumerate(arrow_schema)
         ]
     table = pa.Table.from_arrays(cols, schema=arrow_schema)
-    return spark.createDataFrame(table, struct)
+    out = spark.createDataFrame(table, struct)
+    out._arrow_table = table
+    return out
+
+
+def driver_table(df: DataFrame):
+    """The Arrow table `df` was built from by `driver_frame`, or None."""
+    return getattr(df, "_arrow_table", None)

@@ -3,8 +3,8 @@
 A frame built from a Python list or a pandas frame enters Spark through
 `sc.parallelize`, a PythonRDD that starts a Python daemon and workers
 even at 0 rows. These tests hold the mirror results, the small k-NN,
-the per-community table and the package source to the Arrow-table
-path."""
+the per-community table, both Run-analysis chains and the package
+source to the Arrow-table path."""
 
 from __future__ import annotations
 
@@ -112,6 +112,19 @@ def test_community_table_is_jvm_only(spark):
     assert sorted((r["label"], r["size"]) for r in out.collect()) == [
         (0, 20), (1, 20), (2, 20)
     ]
+
+
+@pytest.mark.parametrize("query", ["analysis_run_metrics", "analysis_run_hdbscan"])
+def test_analysis_chains_are_jvm_only(spark, query):
+    """Both Run-analysis chains on the oracle tables, whose steps all
+    run on the driver from one pull."""
+    import echo_chambers_detection_spark.catalog.metrics as CM
+    from tests.conftest import SF_ORACLE
+
+    out = getattr(CM, f"q_{query}")(spark, SF_ORACLE)
+    _assert_jvm_only(out, query)
+    assert out.collect()
+    G._release_checkpoint(out)
 
 
 def _tie_heavy(spark, id_type: str):

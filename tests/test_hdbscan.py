@@ -593,3 +593,83 @@ def test_hdbscan_contraction_gate_paths_agree(spark, monkeypatch):
         ).collect()
     }
     assert direct == contracted
+
+
+def _spark_round6(spark, x):
+    from pyspark.sql import functions as F
+
+    from echo_chambers_detection_spark.session import driver_frame
+
+    df = driver_frame(spark, [(float(v),) for v in x], "x double")
+    return np.array([r[0] for r in df.select(F.round("x", 6)).collect()])
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """`round_half_up` gives `F.round(x, 6)` bit for bit, signed zeros
+    included, on exact half-steps (the dyadic (2j+1)/128), their
+    negatives, 0, ±1 and random doubles; np.round (half to even) fails
+    this grid at the half-steps."""
+    from echo_chambers_detection_spark.operators.hdbscan import round_half_up
+
+    halves = (2 * np.arange(64) + 1) / 128.0
+    rng = np.random.default_rng(7)
+    x = np.concatenate([
+        halves, -halves, [0.0, -0.0, 1.0, -1.0, 1e-9, -1e-9],
+        rng.uniform(-1.0, 1.0, 2000), rng.uniform(-1e-5, 1e-5, 200),
+    ])
+    got = round_half_up(x)
+    assert got is not None
+    want = _spark_round6(spark, x)
+    assert np.array_equal(got.view(np.int64), want.view(np.int64))
+
+
+def test_round_half_up_declines_near_a_half_step(spark):
+    """5e-7 lies just below the half-step in binary, and Spark rounds
+    its decimal repr "5.0E-7" up: the helper cannot tell, so it
+    declines rather than guess."""
+    from echo_chambers_detection_spark.operators.hdbscan import round_half_up
+
+    assert _spark_round6(spark, [5e-7])[0] == 1e-6
+    assert round_half_up(np.array([0.25, 5e-7])) is None
+
+
+def _tie_heavy_embeddings(spark):
+    vecs = [[1.0, 0.0, 0.0]] * 14 + [[0.0, 2.0, 0.0]] * 9 + [[0.0, 0.0, 0.0]]
+    vecs += [[float(i % 3), 1.0, float(i % 5)] for i in range(16)]
+    return spark.createDataFrame(
+        [(f"n{i:03d}", v) for i, v in enumerate(vecs)],
+        "node string, vector array<double>",
+    )
+
+
+@pytest.mark.parametrize("fixture", ["arcs", "tie_heavy"])
+def test_hdbscan_kernel_matches_spark_steps(spark, monkeypatch, fixture):
+    """`hdbscan_local`, which `hdbscan_cluster` runs when every step fits
+    the driver, labels like the Spark steps it replaces (the same k-NN
+    tiles, then Spark's rounding, window, joins and Kruskal): same
+    rows, same schema."""
+    import echo_chambers_detection_spark.operators.hdbscan as H
+    from echo_chambers_detection_spark.operators.planted import (
+        planted_arc_embeddings,
+    )
+    from echo_chambers_detection_spark.session import driver_table
+    from tests.conftest import assert_same_schema
+
+    emb = (
+        planted_arc_embeddings(spark, 3, 20)
+        if fixture == "arcs"
+        else _tie_heavy_embeddings(spark)
+    )
+
+    def run():
+        out = hdbscan_cluster(emb, min_pts=3, min_cluster_size=5, k=5)
+        return out, sorted(out.collect())
+
+    kernel, k_rows = run()
+    monkeypatch.setattr(H, "_hdbscan_pulled", lambda *a, **kw: None)
+    steps, s_rows = run()
+    assert driver_table(kernel) is not None and driver_table(steps) is None
+    assert_same_schema(kernel, steps)
+    assert k_rows == s_rows
+    assert len({r["cluster"] for r in k_rows}) > 1
+    G._release_checkpoint(kernel, steps)

@@ -2,8 +2,12 @@
 `community_table`): the numpy kernel on the driver and the distributed
 `community_metrics` plan, forced with DRIVER_TABLE_MEMBERS = 0, give
 the same rows in the same order after the analysis chains' md5/round
-projection. Also pins the distributed tail's checkpoint lifecycle:
-no job it starts fails after the caller frees the result."""
+projection. The analysis chains' one-pull placement
+(catalog/metrics.py, `_on_driver`) gives the rows, schema and labels
+of the chain with every step forced distributed, declines whenever a
+step would, and pins nothing once its result is freed. Also pins the
+distributed tail's checkpoint lifecycle: no job it starts fails after
+the caller frees the result."""
 
 from __future__ import annotations
 
@@ -13,6 +17,9 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+import echo_chambers_detection_spark.catalog.metrics as CM
+import echo_chambers_detection_spark.operators.graph as G
+import echo_chambers_detection_spark.operators.hdbscan as H
 import echo_chambers_detection_spark.operators.metrics as M
 from echo_chambers_detection_spark.catalog.metrics import (
     _mint_and_metrics,
@@ -24,7 +31,7 @@ from echo_chambers_detection_spark.operators.graph import (
     connected_components,
     tracked_checkpoint,
 )
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, assert_same_schema
 
 E1, E2, DIAG, ZERO = [1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [0.0, 0.0]
 
@@ -111,10 +118,193 @@ def test_empty_member_edges_give_the_empty_table(spark, monkeypatch):
     assert driver == distributed == []
 
 
+# Every bound a step of the analysis chains checks; all 0 runs each
+# step distributed.
+_BOUNDS = [
+    (M, "DRIVER_TABLE_MEMBERS"),
+    (G, "LOCAL_TRAVERSAL_EDGE_LIMIT"),
+    (G, "LOCAL_GRAPH_EDGE_LIMIT"),
+    (H, "KNN_TILE_ROWS"),
+    (H, "CONTRACT_MIN_FOREST_EDGES"),
+]
+SF01 = os.path.join(os.path.dirname(SF_ORACLE), "sf0.1")
+
+
+def _write_tables(root, weights, vectors):
+    """events and embeddings parquet files of a post graph: `weights`
+    maps a post pair to the number of users engaging exactly those two
+    posts; `vectors` maps a post to its embedding."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(root)
+    rows = [
+        (user, post)
+        for user, (pair, _) in enumerate(
+            (pair, i) for pair, w in weights.items() for i in range(w)
+        )
+        for post in pair
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array([ts] * len(rows), pa.timestamp("us")),
+        "user_id": pa.array([u for u, _ in rows], pa.int64()),
+        "event_type": ["like"] * len(rows),
+        "value": [1.0] * len(rows),
+        "props": [f'{{"k": {p}}}' for _, p in rows],
+    }), os.path.join(root, "events.parquet"))
+    pq.write_table(pa.table({
+        "vec_id": pa.array(list(vectors), pa.int64()),
+        "embedding": pa.array(list(vectors.values()), pa.list_(pa.float32())),
+        "label": pa.array([0] * len(vectors), pa.int32()),
+    }), os.path.join(root, "embeddings.parquet"))
+    return root
+
+
+@pytest.fixture(scope="module")
+def degenerate(tmp_path_factory):
+    """Two degenerate press inputs. "flat": four posts, every pair
+    co-engaged once, so no edge reaches 1.2 x the mean weight (empty
+    strong backbone) and HDBSCAN finds only the cluster of every point
+    (all noise). "zero_vector": two strong triangles, one member with
+    the zero vector, a post with no embedding and a weak tail."""
+    root = tmp_path_factory.mktemp("press")
+    vec = lambda i: [float(i % 3), 1.0, float(i % 2), 0.5]  # noqa: E731
+    return {
+        "flat": _write_tables(
+            str(root / "flat"),
+            {(a, b): 1 for a in range(4) for b in range(a + 1, 4)},
+            {i: vec(i) for i in range(4)},
+        ),
+        "zero_vector": _write_tables(
+            str(root / "zero_vector"),
+            {
+                (0, 1): 3, (0, 2): 3, (1, 2): 3, (3, 4): 3, (4, 5): 3,
+                (3, 5): 3, (2, 3): 1, (5, 6): 1, (6, 7): 1,
+            },
+            {i: [0.0] * 4 if i == 1 else vec(i) for i in range(7)},
+        ),
+    }
+
+
+def _pinned(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _run_chain(spark, monkeypatch, query, sf):
+    """(result, rows, the labels `_mint_and_metrics` got, whether the
+    one-pull placement ran) of one chain run. Freeing the result must
+    leave no RDD pinned that was not pinned before. (Only new pins
+    count: Spark's ContextCleaner may unpersist an earlier test's dead
+    frames while the chain runs.)"""
+    seen = {}
+    tail, on_driver = CM._mint_and_metrics, CM._on_driver
+
+    def tap(edges, labels, emb, run_key):
+        seen["labels"] = (labels.schema, sorted(labels.collect()))
+        return tail(edges, labels, emb, run_key)
+
+    def spy(*args):
+        seen["one_pull"] = on_driver(*args)
+        return seen["one_pull"]
+
+    before = _pinned(spark)
+    with monkeypatch.context() as mp:
+        mp.setattr(CM, "_mint_and_metrics", tap)
+        mp.setattr(CM, "_on_driver", spy)
+        out = query(spark, sf)
+        rows = out.collect()
+    _release_checkpoint(out)
+    assert _pinned(spark) - before == set()
+    return out, rows, seen["labels"], seen["one_pull"] is not None
+
+
+def _one_pull_matches_distributed(spark, monkeypatch, query, sf) -> list:
+    """The one-pull placement and the chain with every step forced
+    distributed give the same rows, the same schema, and hand the same
+    labels to `_mint_and_metrics` (perfbench's SCD-2 tap). Returns the
+    rows."""
+    one, one_rows, one_labels, one_pull = _run_chain(spark, monkeypatch, query, sf)
+    with monkeypatch.context() as mp:
+        for mod, name in _BOUNDS:
+            mp.setattr(mod, name, 0)
+        dist, dist_rows, dist_labels, still = _run_chain(spark, mp, query, sf)
+    assert one_pull and not still
+    assert one_rows == dist_rows
+    assert_same_schema(one, dist)
+    assert one_labels == dist_labels
+    return one_rows
+
+
 @pytest.mark.parametrize("query", [q_analysis_run_metrics, q_analysis_run_hdbscan])
 def test_analysis_chains_match_across_placements(spark, monkeypatch, query):
-    driver, distributed = _both_placements(monkeypatch, lambda: query(spark, SF_ORACLE))
-    assert driver and driver == distributed
+    assert _one_pull_matches_distributed(spark, monkeypatch, query, SF_ORACLE)
+
+
+@pytest.mark.parametrize("data", ["sf0.1", "flat", "zero_vector"])
+@pytest.mark.parametrize(
+    "query", [q_analysis_run_metrics, q_analysis_run_hdbscan], ids=["cc", "hdbscan"]
+)
+def test_analysis_chains_match_across_placements_off_oracle(
+    spark, monkeypatch, degenerate, query, data
+):
+    """As above on sf0.1 (2 HDBSCAN communities, no CC member edge) and
+    on the degenerate inputs."""
+    sf = SF01 if data == "sf0.1" else degenerate[data]
+    rows = _one_pull_matches_distributed(spark, monkeypatch, query, sf)
+    if data == "flat":
+        assert rows == []
+    if query is q_analysis_run_metrics and data == "zero_vector":
+        assert rows
+
+
+class _Stop(Exception):
+    pass
+
+
+_DECLINES = [
+    *(f"{mod.__name__.rsplit('.', 1)[1]}.{name}" for mod, name in _BOUNDS),
+    "localgraph.fastrp_local",
+    "hdbscan.round_half_up",
+    "metrics._member_vectors",
+]
+
+
+@pytest.mark.parametrize("decline", _DECLINES)
+@pytest.mark.parametrize(
+    "query", [q_analysis_run_metrics, q_analysis_run_hdbscan], ids=["cc", "hdbscan"]
+)
+def test_one_pull_declines_with_any_step(spark, monkeypatch, query, decline):
+    """Forcing any one bound the chain's steps check to 0, or any
+    kernel to decline, sends the chain to its step-by-step path; bounds
+    and kernels of the other chain leave the one-pull placement on."""
+    import echo_chambers_detection_spark.operators.localgraph as L
+
+    mod, name = decline.split(".")
+    target = {"metrics": M, "graph": G, "hdbscan": H, "localgraph": L}[mod]
+    monkeypatch.setattr(
+        target, name, 0 if name.isupper() else (lambda *a, **kw: None)
+    )
+    seen = []
+    on_driver = CM._on_driver
+
+    def spy(spark_, sf_dir, pg, *rest):
+        seen.append(on_driver(spark_, sf_dir, pg, *rest))
+        _release_checkpoint(pg, seen[-1])
+        raise _Stop
+
+    monkeypatch.setattr(CM, "_on_driver", spy)
+    with pytest.raises(_Stop):
+        query(spark, SF_ORACLE)
+    hdbscan_only = {
+        "hdbscan.KNN_TILE_ROWS", "hdbscan.CONTRACT_MIN_FOREST_EDGES",
+        "localgraph.fastrp_local", "hdbscan.round_half_up",
+    }
+    declined = query is q_analysis_run_hdbscan or decline not in hdbscan_only
+    assert (seen[0] is None) == declined
 
 
 def test_distributed_tail_leaves_no_failed_job(spark, monkeypatch):

@@ -332,17 +332,26 @@ def test_minimum_spanning_forest_distributed_job_count(spark, monkeypatch):
     assert n <= 271, f"distributed Borůvka grew to {n} jobs (was 266-268)"
 
 
-# The paper's Run-analysis press, on the oracle tables. Counts are with
-# the driver hand-offs on Arrow, the small k-NN and the per-community
-# table and FastRP on the driver; the bounds sit 3 above the measured
-# counts. With the table forced distributed (metrics.DRIVER_TABLE_MEMBERS
-# = 0) the chains take 54 and 88-90 jobs, as before the driver placement;
-# with FastRP forced distributed (LOCAL_TRAVERSAL_EDGE_LIMIT = 0) the
-# HDBSCAN chain takes 55.
-
+# The paper's Run-analysis press, on the oracle tables. Below every
+# step's bound each chain runs from one Arrow pull of the post graph
+# (catalog.metrics._on_driver): 5 projection jobs, 5 for the pull, the
+# embeddings' schema read and the member pull. The forced-distributed
+# pins set every bound the chains' steps check to 0. Bounds sit 3 above
+# the measured counts.
 
 def _analysis_jobs(spark, query) -> int:
     return _count_jobs(spark, lambda: query(spark, SF_ORACLE).collect())
+
+
+def _force_press_distributed(monkeypatch) -> None:
+    import echo_chambers_detection_spark.operators.hdbscan as H
+    import echo_chambers_detection_spark.operators.metrics as M
+
+    monkeypatch.setattr(M, "DRIVER_TABLE_MEMBERS", 0)
+    monkeypatch.setattr(H, "KNN_TILE_ROWS", 0)
+    monkeypatch.setattr(H, "CONTRACT_MIN_FOREST_EDGES", 0)
+    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
+    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
 
 
 def test_analysis_run_metrics_job_count(spark):
@@ -351,7 +360,7 @@ def test_analysis_run_metrics_job_count(spark):
     )
 
     n = _analysis_jobs(spark, q_analysis_run_metrics)
-    assert n <= 27, f"analysis_run_metrics grew to {n} jobs (was 23-24)"
+    assert n <= 15, f"analysis_run_metrics grew to {n} jobs (was 12)"
 
 
 def test_analysis_run_hdbscan_job_count(spark):
@@ -360,4 +369,24 @@ def test_analysis_run_hdbscan_job_count(spark):
     )
 
     n = _analysis_jobs(spark, q_analysis_run_hdbscan)
-    assert n <= 37, f"analysis_run_hdbscan grew to {n} jobs (was 33-34)"
+    assert n <= 15, f"analysis_run_hdbscan grew to {n} jobs (was 12)"
+
+
+def test_analysis_run_metrics_distributed_job_count(spark, monkeypatch):
+    from echo_chambers_detection_spark.catalog.metrics import (
+        q_analysis_run_metrics,
+    )
+
+    _force_press_distributed(monkeypatch)
+    n = _analysis_jobs(spark, q_analysis_run_metrics)
+    assert n <= 99, f"distributed analysis_run_metrics grew to {n} jobs (was 96)"
+
+
+def test_analysis_run_hdbscan_distributed_job_count(spark, monkeypatch):
+    from echo_chambers_detection_spark.catalog.metrics import (
+        q_analysis_run_hdbscan,
+    )
+
+    _force_press_distributed(monkeypatch)
+    n = _analysis_jobs(spark, q_analysis_run_hdbscan)
+    assert n <= 271, f"distributed analysis_run_hdbscan grew to {n} jobs (was 268)"
