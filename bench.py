@@ -13,6 +13,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.catalog import QUERY_REGISTRY
 from echo_chambers_detection_spark.session import get_spark
 
@@ -261,12 +262,20 @@ def _semantic_dedup_scale_probe(spark, timings: dict) -> None:
         )
 
 
+@placement.distributed(
+    "kcore", "connected_components", "pagerank", "betweenness", "tricount"
+)
 def _graph_scale_probes(spark, timings: dict) -> None:
     """Distributed community-detection rows at REPRESENTATIVE scale
-    (VERDICT r5 #1): a 100k-node planted-partition graph with >=5M
-    DIRECTED edge rows sits above graph.LOCAL_GRAPH_EDGE_LIMIT (4M),
-    so the iterative DataFrame loops — the actual 100 TB code path —
-    are what gets timed, not the driver-local numpy mirror. Each row
+    (VERDICT r5 #1) on a 100k-node planted-partition graph with >=5M
+    DIRECTED edge rows. The rows' kernels are forced distributed, so
+    the iterative DataFrame loops — the actual 100 TB code path — are
+    what gets timed, not the driver-local numpy mirror, whatever
+    driver budget the host gives. Louvain and Leiden are left to
+    placement: their 6.2M-row level 0 is over the budget on every host
+    (`placement`: past the 1 GiB result-size cap), and their coarse
+    levels cross over to the mirror, as at scale. So is the layered
+    BFS row, which the traversal mirror takes from a 4g heap up. Each row
     carries a planted-recovery assertion (split/merge purity >= 0.9,
     two-sided so neither block-splitting nor block-merging can pass
     silently); a bench that times a wrong answer is worse than a
@@ -421,16 +430,11 @@ def _graph_scale_probes(spark, timings: dict) -> None:
         for p in parts[1:]:
             edges = edges.unionAll(p)
         edges = edges.localCheckpoint(eager=True)
-        saved = G.LOCAL_TRAVERSAL_EDGE_LIMIT
-        G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
-        try:
-            t0 = time.perf_counter()
-            bc = G.brandes_betweenness(
-                edges, n_sources=1, max_iter=L + 1
-            ).localCheckpoint(eager=True)
-            timings[timings_key] = round(time.perf_counter() - t0, 3)
-        finally:
-            G.LOCAL_TRAVERSAL_EDGE_LIMIT = saved
+        t0 = time.perf_counter()
+        bc = G.brandes_betweenness(
+            edges, n_sources=1, max_iter=L + 1
+        ).localCheckpoint(eager=True)
+        timings[timings_key] = round(time.perf_counter() - t0, 3)
         layer = F.floor(F.col("node") / 10_000_000)
         expected = F.when(layer == 0, F.lit(0.0)).otherwise(
             (F.lit(L) - layer).cast("double")
@@ -577,21 +581,16 @@ def _graph_scale_probes(spark, timings: dict) -> None:
             spark, NB, BS, 25, bridges=False, partitions=64,
             offsets="linear",
         )
-        # force the DISTRIBUTED wedge+closure joins: this row is the
-        # at-scale triangle evidence (round 12 — the new numpy mirror's
-        # gate would otherwise collect the 2.5M-row fixture and only
-        # then decline on the 30M wedge budget, wasting ~2s and muddying
-        # the row's meaning)
-        saved = G.LOCAL_TRAVERSAL_EDGE_LIMIT
-        G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
-        try:
-            t0 = time.perf_counter()
-            tc = triangle_counts(edges.select("u1", "u2")).localCheckpoint(
-                eager=True
-            )
-            timings[timings_key] = round(time.perf_counter() - t0, 3)
-        finally:
-            G.LOCAL_TRAVERSAL_EDGE_LIMIT = saved
+        # the DISTRIBUTED wedge+closure joins (tricount is forced
+        # distributed above): this row is the at-scale triangle
+        # evidence (round 12 — the numpy mirror's gate would otherwise
+        # collect the 2.5M-row fixture and only then decline on the 30M
+        # wedge budget, wasting ~2s and muddying the row's meaning)
+        t0 = time.perf_counter()
+        tc = triangle_counts(edges.select("u1", "u2")).localCheckpoint(
+            eager=True
+        )
+        timings[timings_key] = round(time.perf_counter() - t0, 3)
         bad = tc.where(
             (F.col("triangles") != 900) | (F.col("deg") != 50)
         ).count()
@@ -772,17 +771,11 @@ def _ktruss_scale_probe(spark, timings: dict) -> None:
     # numpy mirror's budget, so without the override the mirror would
     # silently answer — same treatment as the layered-BFS/betweenness
     # probes)
-    from echo_chambers_detection_spark.operators import graph as _G
-
-    saved_tl = _G.LOCAL_TRAVERSAL_EDGE_LIMIT
-    _G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
-    try:
+    with placement.distributed("ktruss"):
         t0 = time.perf_counter()
         # the pruning loop runs eagerly inside the call (materialized
-        # generations), so restoring the limit after it is safe
+        # generations), so leaving the block after it is safe
         out = ktruss_edges(edges, k=4)
-    finally:
-        _G.LOCAL_TRAVERSAL_EDGE_LIMIT = saved_tl
     stats = out.agg(
         F.count("*").alias("n"),
         F.min("support").alias("lo"),

@@ -296,7 +296,7 @@ def _clique_modules_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     97 x 66 edges at ANY scale factor — a correctness stamp, not a
     perf row; the planted bench_ fixtures carry the at-scale load).
     LONG node ids on purpose: the community mirrors serve string ids
-    only (_local_path_ok), so these queries pin the REAL distributed
+    only (`graph._mirror_ok`), so these queries pin the REAL distributed
     multilevel loops, which is the point of the stamp."""
     from pyspark.sql import Window
 

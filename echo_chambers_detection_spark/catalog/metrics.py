@@ -11,6 +11,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.catalog._core import (
     _t,
     register,
@@ -359,17 +360,19 @@ def _mint_and_metrics(
     ), t)
 
 
-def _on_driver(spark, sf_dir, pg, max_rows, labels_of, run_key):
+def _on_driver(spark, sf_dir, pg, kernel, row_bytes, labels_of, run_key):
     """The analysis chain after its projection `pg`, run from one Arrow
     pull on the driver, or None to run it distributed.
 
-    `max_rows` bounds the pull (the chain's graph steps' edge bound);
+    The pull is placed as the chain's graph step, `kernel` at
+    `row_bytes` driver bytes per raw edge row (`placement`);
     `labels_of(spark, tbl)` runs the chain's community step over the
     pulled (u1, u2, weight) table and returns (member edges as an Arrow
-    table, labels as a driver frame), or None when a step's bound or
+    table, labels as a driver frame), or None when a step's gate or
     kernel declines. The labeled members' vectors are pulled once,
-    bounded by DRIVER_TABLE_MEMBERS (as are the labeled nodes, so that
-    pull is one filtered scan); then `_mint_and_metrics` gets
+    bounded as the metrics table's members (`placement` kernel
+    "community_table"; so are the labeled nodes, so that pull is one
+    filtered scan); then `_mint_and_metrics` gets
     driver frames only, so its table runs in numpy without a job. Every
     decline happens before `_mint_and_metrics` is called, and leaves
     `pg` as it was."""
@@ -379,12 +382,11 @@ def _on_driver(spark, sf_dir, pg, max_rows, labels_of, run_key):
         _traversal_local_tbl,
     )
 
-    if M.DRIVER_TABLE_MEMBERS <= 0 or not isinstance(
-        pg.schema["u1"].dataType, StringType
-    ):
+    members = placement.max_rows(spark, "community_table", placement.MEMBER_BYTES)
+    if members <= 0 or not isinstance(pg.schema["u1"].dataType, StringType):
         return None
     tbl = _traversal_local_tbl(
-        pg, weighted=True, max_rows=max_rows, drop_null_ids=False
+        pg, kernel, row_bytes, weighted=True, drop_null_ids=False
     )
     if tbl is None or tbl.column("u1").null_count or tbl.column("u2").null_count:
         return None
@@ -393,18 +395,18 @@ def _on_driver(spark, sf_dir, pg, max_rows, labels_of, run_key):
         return None
     edges, labels = got
     nodes = driver_table(labels).column("node")
-    if len(nodes) > M.DRIVER_TABLE_MEMBERS:
+    if len(nodes) > members:
         return None
     # labels ⋈ embeddings as one filtered scan (the labeled nodes are
     # distinct, so the filter keeps the join's rows, in its order)
     emb = _emb_nodes(spark, sf_dir)
     emb_t = (
         emb.where(F.col("node").isin(nodes.to_pylist()))
-        .limit(M.DRIVER_TABLE_MEMBERS + 1)
+        .limit(members + 1)
         .toArrow()
     )
-    members = M._joined_members(driver_table(labels), emb_t)
-    if members.num_rows > M.DRIVER_TABLE_MEMBERS or M._member_vectors(members) is None:
+    joined = M._joined_members(driver_table(labels), emb_t)
+    if joined.num_rows > members or M._member_vectors(joined) is None:
         return None
     _release_checkpoint(pg)
     return _mint_and_metrics(
@@ -463,7 +465,7 @@ def _hdbscan_labels(spark, tbl, dim, **hdbscan_args):
     if rp is None or len(rp) > KNN_ANN_CROSSOVER:
         return None
     lab = hdbscan_local(
-        rp["node"].to_numpy(), rp["embedding"].to_numpy(), num_blocks=8,
+        spark, rp["node"].to_numpy(), rp["embedding"].to_numpy(), num_blocks=8,
         **hdbscan_args,
     )
     if lab is None:
@@ -599,8 +601,9 @@ LEFT JOIN varc USING (label), tot t
     "recursive-CTE oracle, so the WHOLE chain is hash-checked "
     "end-to-end; the FastRP->HDBSCAN branch of the same DAG runs as "
     "analysis_run_hdbscan (rows-only, iterative labels). Placement: "
-    "when the post graph fits one pull under the CC mirror's bound and "
-    "the labeled members fit DRIVER_TABLE_MEMBERS, the projection is "
+    "when the post graph fits one pull as the CC mirror's input and "
+    "the labeled members fit the metrics table's, both within the "
+    "driver budget (placement.on_driver), the projection is "
     "pulled once as Arrow and threshold, CC and metrics table run in "
     "numpy (_on_driver); past any bound, or when a kernel declines, "
     "each step runs as its own operator. SCD-2 "
@@ -608,7 +611,6 @@ LEFT JOIN varc USING (label), tot t
     "scd2_membership_* family; the report stage is sinks/report.",
 )
 def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators import graph as G
     from echo_chambers_detection_spark.operators.graph import (
         carry_ckpt,
         connected_components,
@@ -616,9 +618,10 @@ def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage 1: graph projection (reference produce_graph_projection)
     pg = _post_graph(spark, sf_dir)
+    # a raw edge row is two of CC's symmetrized rows
     out = _on_driver(
-        spark, sf_dir, pg, G.LOCAL_GRAPH_EDGE_LIMIT // 2, _cc_labels,
-        "analysis_run:cc_strong",
+        spark, sf_dir, pg, "connected_components", 2 * placement.EDGE_ROW_BYTES,
+        _cc_labels, "analysis_run:cc_strong",
     )
     if out is not None:
         return out
@@ -652,16 +655,15 @@ def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is a rows-only driver check; every stage is individually pinned "
     "(fastrp_embeddings, hdbscan_clusters, community_metrics_table, "
     "and analysis_run_metrics for the chain shape itself). Placement: "
-    "when every step's gate would run it on the driver (FastRP's pull "
-    "bound, the k-NN tile rows, the Kruskal and contraction bounds, "
-    "DRIVER_TABLE_MEMBERS), the projection is pulled once as Arrow and "
+    "when every step's gate would run it on the driver (placement."
+    "on_driver for FastRP's pull, the k-NN tiles, Kruskal, the direct "
+    "condense and the metrics table), the projection is pulled once as Arrow and "
     "FastRP, hdbscan_local and the metrics table run in numpy "
     "(_on_driver); past any bound, or when a kernel declines, each step "
     "runs as its own operator. The noise-filtered labels reach "
     "_mint_and_metrics as a (node, label) frame either way.",
 )
 def q_analysis_run_hdbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators import localgraph
     from echo_chambers_detection_spark.operators.graph import (
         carry_ckpt,
         fastrp,
@@ -674,7 +676,7 @@ def q_analysis_run_hdbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim, args = 128, dict(min_pts=3, min_cluster_size=3, k=10)
     pg = _post_graph(spark, sf_dir)
     out = _on_driver(
-        spark, sf_dir, pg, localgraph.FASTRP_LOCAL_CELLS // (4 * dim),
+        spark, sf_dir, pg, "fastrp", placement.FASTRP_ROW_BYTES_PER_DIM * dim,
         partial(_hdbscan_labels, dim=dim, **args), "analysis_run:hdbscan",
     )
     if out is not None:

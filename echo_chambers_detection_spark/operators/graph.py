@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.session import driver_frame
 
 try:  # the only failure modes _materialize's fallback should absorb are
@@ -68,38 +69,10 @@ except ImportError:  # pragma: no cover - py4j always ships with pyspark
 # round; 10M would push hundreds of MB per executor per round.
 BROADCAST_NODE_LIMIT = 1_000_000
 
-# Crossover to the driver-side small-graph fast path (operators/
-# localgraph.py): below this many DIRECTED edge rows (~150 MB at 4M
-# rows of two ids + a double, vs the 48g driver heap) the multilevel
-# community loops finish locally — the distributed rounds pay a fixed
-# number of serialized Spark jobs per round, measured ~15s of pure
-# overhead for Leiden on a 100-node graph. This is the same measured-
-# crossover pattern as bitmap-vs-self-join and LSH-vs-exact: the
-# distributed path stays primary above the bound (and for non-string
-# node ids, where the hash-parity mirror doesn't apply), and coarsening
-# re-probes the bound at every level boundary, which is how a
-# 100 TB run lands here too once the graph is communities-not-nodes.
-# Set to 0 to force the distributed path (tests do).
-LOCAL_GRAPH_EDGE_LIMIT = 4_000_000
-
-# Crossover to the driver-side traversal fast path (round 11, VERDICT
-# r10 #3 — BFS/landmark/Bellman-Ford were the only loop family without
-# a local mirror, so toy-scale runs paid ~hop-count serialized Spark
-# rounds on trivial data). Sized ABOVE the community-loop bound because
-# the traversal mirrors hold only flat int64 index arrays + O(n) state
-# (24M sym rows x 24 B/row = ~0.6 GB transient vs the 48g driver heap;
-# the community mirrors carry per-level coarsening state on top).
-# Distances depend only on graph structure — no string-hash move
-# schedule — so the mirror serves ANY orderable id type (bench's
-# layered fixture uses longs), unlike _local_path_ok's string-only
-# gate. 0 forces the distributed path (tests do).
-LOCAL_TRAVERSAL_EDGE_LIMIT = 24_000_000
-
 # Leiden refinement group-parallel gate: when NO community's intra edge
 # list exceeds this, refinement runs as one cogroup shuffle with a
-# per-community numpy kernel (see _refine). Sized like
-# LOCAL_GRAPH_EDGE_LIMIT but per EXECUTOR TASK, not per driver. 0
-# forces the distributed round loop (tests do).
+# per-community numpy kernel (see _refine). A per-EXECUTOR-TASK bound,
+# not a driver one. 0 forces the distributed round loop (tests do).
 REFINE_GROUP_EDGE_LIMIT = 4_000_000
 
 
@@ -130,18 +103,22 @@ def _exceeds_rows(df: DataFrame, bound: int) -> bool:
         return len(probe.take(bound + 1)) > bound
 
 
-def _local_path_ok(edges: DataFrame, sym_rows: int) -> bool:
+def _mirror_ok(edges: DataFrame, kernel: str, rows: int) -> bool:
+    """Whether `kernel`'s community mirror takes `rows` edge rows of
+    `edges`: `placement` puts them on the driver, and the node ids are
+    strings, as the mirrors reproduce Spark's string-hash move schedule."""
     from pyspark.sql.types import StringType
 
-    return sym_rows <= LOCAL_GRAPH_EDGE_LIMIT and isinstance(
-        edges.schema["u1"].dataType, StringType
-    )
+    return placement.on_driver(
+        edges.sparkSession, kernel, rows * placement.EDGE_ROW_BYTES
+    ) and isinstance(edges.schema["u1"].dataType, StringType)
 
 
 def _traversal_local_tbl(
     edges: DataFrame,
+    kernel: str,
+    row_bytes: int = placement.TRAVERSAL_ROW_BYTES,
     weighted: bool = False,
-    max_rows: int | None = None,
     drop_null_ids: bool = True,
 ):
     """Gate + collect for the traversal mirrors: a bounded take-probe
@@ -168,23 +145,21 @@ def _traversal_local_tbl(
     selection — the mirror can't drop the row (loses the endpoints)
     nor keep it (its int64 cast turns NaN into INT64_MIN, a fake
     hugely-negative weight), so parity demands the distributed path.
-    `max_rows` lowers the raw-row bound for a kernel with a tighter
-    memory budget; `drop_null_ids=False` keeps NULL endpoints in the
-    pull for a kernel that must see them to decline.
+    The raw-row bound is what `placement` gives `kernel` at `row_bytes`
+    driver bytes per raw row; `drop_null_ids=False` keeps NULL
+    endpoints in the pull for a kernel that must see them to decline.
     Returns None (use the distributed loop) when over the bound, when
-    the bound is <= 0 (forced distributed mode), for un-mirrorable id
-    types, or for NULL/NaN weights."""
+    the kernel is forced distributed (no probe runs), for un-mirrorable
+    id types, or for NULL/NaN weights."""
     from pyspark.sql.types import StringType
 
-    if LOCAL_TRAVERSAL_EDGE_LIMIT <= 0:
-        return None
     if not isinstance(
         edges.schema["u1"].dataType, (StringType, LongType, IntegerType)
     ):
         return None
-    half = LOCAL_TRAVERSAL_EDGE_LIMIT // 2
-    if max_rows is not None:
-        half = min(half, max_rows)
+    bound = placement.max_rows(edges.sparkSession, kernel, row_bytes)
+    if bound <= 0:
+        return None
     cols = ["u1", "u2"]
     if weighted and "weight" in edges.columns:
         cols.append("weight")
@@ -203,7 +178,7 @@ def _traversal_local_tbl(
 
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        if _exceeds_rows(e, half):
+        if _exceeds_rows(e, bound):
             return None
         tbl = e.toArrow()
     finally:
@@ -492,20 +467,22 @@ def _traversal_mirror(
     kernel: str,
     schema,
     weighted: bool = False,
-    max_rows: int | None = None,
+    row_bytes: int = placement.TRAVERSAL_ROW_BYTES,
     drop_null_ids: bool = True,
     **kw,
 ):
     """Traversal-mirror dispatch: gate + collect the edge list
-    (`_traversal_local_tbl`, which takes `weighted`, `max_rows` and
-    `drop_null_ids`), run `localgraph.<kernel>(tbl, **kw)` and
+    (`_traversal_local_tbl`, placed as `kernel` without its "_local"
+    suffix; it takes `weighted`, `row_bytes` and `drop_null_ids`), run
+    `localgraph.<kernel>(tbl, **kw)` and
     return its frame with `schema`, a list of (column, type) where a
     None type means the input's id type, or (column, type, False) for a
     column the distributed loop declares NOT NULL. Returns None — run the
     distributed loop — when the gate declines or the kernel does (its
     op/wedge budget or an input it cannot reproduce returns None)."""
     tbl = _traversal_local_tbl(
-        edges, weighted=weighted, max_rows=max_rows, drop_null_ids=drop_null_ids
+        edges, kernel.removesuffix("_local"), row_bytes,
+        weighted=weighted, drop_null_ids=drop_null_ids,
     )
     if tbl is None:
         return None
@@ -548,7 +525,7 @@ def kcore(edges: DataFrame, max_rounds: int = 10_000) -> DataFrame:
         sym = g.keep(
             _symmetrize(edges, weighted=False).select("src", "dst"), wide=True
         )
-        if _local_path_ok(edges, sym.count()):
+        if _mirror_ok(edges, "kcore", sym.count()):
             from echo_chambers_detection_spark.operators.localgraph import (
                 kcore_local,
             )
@@ -557,7 +534,7 @@ def kcore(edges: DataFrame, max_rounds: int = 10_000) -> DataFrame:
             return driver_frame(
                 edges.sparkSession,
                 result.items(),
-                "node string, core_value bigint",
+                "node string, core_value bigint not null",
             )
         # Peel over the ALIVE node set, not just nodes that still have
         # edges: a node orphaned by its neighbors' removal (star center)
@@ -602,7 +579,7 @@ def kcore(edges: DataFrame, max_rounds: int = 10_000) -> DataFrame:
             )
         if not assigned:
             return driver_frame(
-                edges.sparkSession, [], "node string, core_value bigint"
+                edges.sparkSession, [], "node string, core_value bigint not null"
             )
         return g.result(reduce(DataFrame.unionAll, assigned), *lows)
 
@@ -640,7 +617,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         sym = g.keep(
             _symmetrize(edges, weighted=False).select("src", "dst"), wide=True
         )
-        if _local_path_ok(edges, sym.count()):
+        if _mirror_ok(edges, "connected_components", sym.count()):
             from echo_chambers_detection_spark.operators.localgraph import (
                 connected_components_local,
             )
@@ -844,7 +821,7 @@ def bfs_distances(
     the same per-round cost profile as the other loops in this module;
     generations are checkpointed and retired in-loop, and the
     convergence flag is an agg on the already-materialized frame.
-    Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
+    Within the driver budget (`placement`) the parity-tested numpy mirror
     (localgraph.bfs_local) answers driver-side — toy-scale graphs
     otherwise pay ~diameter serialized Spark rounds of pure scheduling
     latency; the distributed loop stays primary above the bound.
@@ -885,7 +862,7 @@ def bfs_landmark_distances(
     deterministic, so the result is oracle-able. Returns
     (seed, node, dist: bigint) for reached pairs only; the driver
     holds only the landmark id list (bounded by ``n_landmarks``).
-    Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
+    Within the driver budget (`placement`) the parity-tested numpy mirror
     (localgraph.landmark_bfs_local) answers driver-side.
     """
     out = _traversal_mirror(
@@ -1038,8 +1015,8 @@ def bellman_ford_landmark(
     ids, costs are exact integer arithmetic (edge cost = the input's
     integer ``weight``), and ``k`` pins <=k-edge-path semantics the
     same way `bellman_ford_khop.k` does. Returns
-    (seed, node, cost: bigint) for reached pairs. Below
-    LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
+    (seed, node, cost: bigint) for reached pairs. Within the driver
+    budget (`placement`) the parity-tested numpy mirror
     (localgraph.bellman_ford_landmark_local) answers driver-side.
     """
     out = _traversal_mirror(
@@ -1135,7 +1112,7 @@ def shortest_path_counts(
     conventions coincide). Returns
     (seed, node, dist: bigint, sigma: bigint) for reached pairs.
 
-    Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
+    Within the driver budget (`placement`) the parity-tested numpy mirror
     (localgraph.path_counts_local) answers driver-side.
     """
     out = _traversal_mirror(
@@ -1191,7 +1168,7 @@ def brandes_betweenness(
     (node, betweenness: double) over ALL nodes (0.0 where no shortest
     path passes). Dependency sums are floats; on fixtures whose σ
     ratios are dyadic the result is exact and the local mirror
-    (localgraph.betweenness_local, below LOCAL_TRAVERSAL_EDGE_LIMIT)
+    (localgraph.betweenness_local, within the driver budget)
     matches bit-for-bit — tests pin that plus closed forms.
     """
     out = _traversal_mirror(
@@ -1340,7 +1317,7 @@ def seeded_random_walks(
     edges; for capped projections (the strong-tie backbone) that is a
     small constant factor.
 
-    Below LOCAL_TRAVERSAL_EDGE_LIMIT — and when the a-priori md5
+    Within the driver budget (`placement`) — and when the a-priori md5
     budget (walkers x max replica-degree x length,
     localgraph.WALK_LOCAL_OP_LIMIT) holds — the parity-tested driver
     mirror (localgraph.random_walks_local) replays the walks from one
@@ -1361,7 +1338,7 @@ def seeded_random_walks(
     # proceeds from source exactly as before.
     pinned = edges.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        tbl = _traversal_local_tbl(pinned, weighted=weighted)
+        tbl = _traversal_local_tbl(pinned, "random_walks", weighted=weighted)
         if tbl is not None:
             from echo_chambers_detection_spark.operators.localgraph import (
                 random_walks_local,
@@ -1457,7 +1434,7 @@ def bellman_ford_khop(
     followed by a productive one). Integer costs stay integers:
     hash-exact against a recursive-CTE oracle capped at the same hop
     bound. Returns (node, cost: bigint) for reached nodes only.
-    Below LOCAL_TRAVERSAL_EDGE_LIMIT the parity-tested numpy mirror
+    Within the driver budget (`placement`) the parity-tested numpy mirror
     (localgraph.bellman_ford_local) answers driver-side.
     """
     out = _traversal_mirror(
@@ -1572,7 +1549,7 @@ def pagerank(
         else:
             sym = g.keep(_symmetrize(edges, weighted=weighted), wide=True)
             all_nodes = _nodes_of_sym(sym)
-        if _local_path_ok(edges, sym.count()):
+        if _mirror_ok(edges, "pagerank", sym.count()):
             from echo_chambers_detection_spark.operators.localgraph import (
                 pagerank_local,
             )
@@ -1581,7 +1558,8 @@ def pagerank(
                 sym.toPandas(), damping, max_iter, tol, seeds=seeds
             )
             return driver_frame(
-                edges.sparkSession, ranks.items(), "node string, rank double"
+                edges.sparkSession, ranks.items(),
+                "node string, rank double not null",
             )
         out_strength = sym.groupBy("src").agg(F.sum("weight").alias("_wdeg"))
         shares = g.keep(
@@ -1593,7 +1571,7 @@ def pagerank(
         n = all_nodes.count()
         if n == 0:
             return driver_frame(
-                edges.sparkSession, [], "node string, rank double"
+                edges.sparkSession, [], "node string, rank double not null"
             )
         # all_nodes is a lazy view over sym: the first rank generation
         # supersedes sym's checkpoint
@@ -2045,9 +2023,9 @@ def louvain(
         sym, m, n = _weighted_sym(g, edges)
         if m <= 0:
             return _nodes(edges).withColumn("community", F.col("node"))
-        if _local_path_ok(edges, n):
-            # bounded collect (≤ LOCAL_GRAPH_EDGE_LIMIT rows by the probe):
-            # finish the whole multilevel loop driver-side, bit-identical
+        if _mirror_ok(edges, "louvain", n):
+            # bounded collect (the budget's rows, by the count): finish
+            # the whole multilevel loop driver-side, bit-identical
             # semantics (tests/test_local_graph_parity.py)
             result = louvain_local(sym.toPandas(), m, max_levels, max_rounds)
             return driver_frame(
@@ -2096,7 +2074,7 @@ def louvain(
             if n_sym == 0:
                 break
             remaining = max_levels - _level - 1
-            if remaining > 0 and _local_path_ok(edges, n_sym):
+            if remaining > 0 and _mirror_ok(edges, "louvain", n_sym):
                 # coarsening crossed the local threshold: finish the
                 # remaining levels driver-side on the coarse graph and
                 # compose through the distributed mapping (the final canon
@@ -2134,7 +2112,7 @@ def modularity_optimization(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
         sym, m, n = _weighted_sym(g, edges)
         if m <= 0:
             return _nodes(edges).withColumn("community", F.col("node"))
-        if _local_path_ok(edges, n):
+        if _mirror_ok(edges, "modularity", n):
             from echo_chambers_detection_spark.operators.localgraph import (
                 modularity_local,
             )
@@ -2627,7 +2605,7 @@ def leiden(
         sym, m, n = _weighted_sym(g, edges)
         if m <= 0:
             return _nodes(edges).withColumn("community", F.col("node"))
-        if _local_path_ok(edges, n):
+        if _mirror_ok(edges, "leiden", n):
             # bounded collect (see louvain): whole multilevel loop plus
             # the split-only connectivity pass, driver-side, same semantics
             result = leiden_local(
@@ -2732,14 +2710,14 @@ def leiden(
             )
             coarse = None
             n_units = sub2comm.count()
-            if _local_path_ok(edges, n_units):
+            if _mirror_ok(edges, "leiden", n_units):
                 # aggregation may have crossed the local threshold
                 # (louvain's mid-loop crossover, VERDICT r9 #3): checkpoint
                 # the coarse DIRECTED edge list compactly first — the wide
                 # repartition below only pays off for further distributed
                 # rounds, not for a driver-side finish
                 coarse = g.keep(new_edges)
-                if _local_path_ok(edges, max(2 * coarse.count(), n_units)):
+                if _mirror_ok(edges, "leiden", max(2 * coarse.count(), n_units)):
                     # finish the remaining levels AND the split-only
                     # connectivity pass on the coarse unit graph. Exact:
                     # the kernels are the bit-for-bit local mirrors, and
@@ -2787,7 +2765,7 @@ def leiden(
         # per-unit minima — identical labels to the node-level pass,
         # thousands of times smaller at scale.
         unit_min = mapping.groupBy("agg").agg(F.min("node").alias("umin"))
-        if _local_path_ok(edges, max(unit_edges.count(), sub2comm.count())):
+        if _mirror_ok(edges, "leiden", max(unit_edges.count(), sub2comm.count())):
             # unit graph fits the driver: the split-only connectivity
             # pass as one union-find instead of the distributed CC loop
             # (~15 serialized jobs of pure overhead at unit scale —
@@ -2872,9 +2850,8 @@ def fastrp(
     raw exploded (node, dim, val) frame when assemble=False (cheaper —
     skips the collect_list — and hashable by order-insensitive harnesses).
 
-    Placement: with the default init hash, a graph of at most
-    localgraph.FASTRP_LOCAL_CELLS // (4 · dim) raw edge rows (and within
-    LOCAL_TRAVERSAL_EDGE_LIMIT) runs in the parity-tested numpy mirror
+    Placement: with the default init hash, a graph whose pull fits the
+    driver budget (`placement`) runs in the parity-tested numpy mirror
     (localgraph.fastrp_local) on the driver — the Run-analysis press's
     100-post graph otherwise pays ~28 serialized Spark jobs. Above the
     bound, with a custom `hash_mod6`, or on input the mirror cannot
@@ -2882,10 +2859,6 @@ def fastrp(
     degree 0), the distributed loop runs.
     """
     if hash_mod6 is None:
-        from echo_chambers_detection_spark.operators.localgraph import (
-            FASTRP_LOCAL_CELLS,
-        )
-
         out = _traversal_mirror(
             edges,
             "fastrp_local",
@@ -2897,7 +2870,8 @@ def fastrp(
                 ("val", DoubleType(), False),
             ],
             weighted=True,
-            max_rows=FASTRP_LOCAL_CELLS // (4 * max(dim, 1)),
+            # the mirror holds (sym rows + nodes) x dim float64s
+            row_bytes=placement.FASTRP_ROW_BYTES_PER_DIM * max(dim, 1),
             drop_null_ids=False,
             dim=dim,
             iteration_weights=iteration_weights,
@@ -3049,75 +3023,76 @@ def density_cluster(
       /root/reference/hdbscan_clusters.csv).
 
     Returns (node, cluster) with cluster = min member node id or '-1'.
-    The result owns its own checkpoints, never the caller's
-    `embeddings`: a caller that wants one release to free the whole
-    chain hands them over with `carry_ckpt(out, embeddings)`.
+    One `_generations` scope owns the pair and neighbor checkpoints;
+    the result owns what it reads, never the caller's `embeddings`: a
+    caller that wants one release to free the whole chain hands them
+    over with `carry_ckpt(out, embeddings)`.
     """
     from echo_chambers_detection_spark.operators.ann import (
         lsh_near_dup_pairs,
         similarity_self_join_gemm,
     )
 
-    if use_lsh:
-        if dim is None:
-            dim = int(
-                embeddings.select(F.size("vector").alias("d")).first()["d"]
+    with _generations() as g:
+        if use_lsh:
+            if dim is None:
+                dim = int(
+                    embeddings.select(F.size("vector").alias("d")).first()["d"]
+                )
+            pairs = lsh_near_dup_pairs(
+                embeddings,
+                dim=dim,
+                threshold=min_sim,
+                num_planes=lsh_num_planes,
+                band_bits=lsh_band_bits,
+                id_col="node",
+                vec_col="vector",
             )
-        pairs = lsh_near_dup_pairs(
-            embeddings,
-            dim=dim,
-            threshold=min_sim,
-            num_planes=lsh_num_planes,
-            band_bits=lsh_band_bits,
-            id_col="node",
-            vec_col="vector",
+        else:
+            pairs = similarity_self_join_gemm(
+                embeddings, threshold=min_sim, id_col="node", vec_col="vector"
+            )
+        # the pair generator hands over its checkpoint (the LSH signature
+        # frame), dead once nbrs is a leaf
+        nbrs = g.step(
+            pairs.select(F.col("v1").alias("na"), F.col("v2").alias("nb")),
+            prev=g.adopt(pairs),
         )
-    else:
-        pairs = similarity_self_join_gemm(
-            embeddings, threshold=min_sim, id_col="node", vec_col="vector"
+        sym_nbrs = nbrs.unionAll(
+            nbrs.select(F.col("nb").alias("na"), F.col("na").alias("nb"))
         )
-    nbrs = _materialize(
-        pairs.select(F.col("v1").alias("na"), F.col("v2").alias("nb"))
-    )
-    # nbrs is now a checkpointed leaf; the pair generator's internal
-    # checkpoint (LSH signature frame) is dead — free it here
-    _release_checkpoint(pairs)
-    sym_nbrs = nbrs.unionAll(
-        nbrs.select(F.col("nb").alias("na"), F.col("na").alias("nb"))
-    )
-    deg = sym_nbrs.groupBy(F.col("na").alias("node")).agg(
-        F.count("*").alias("n_nbrs")
-    )
-    core = deg.where(F.col("n_nbrs") >= min_pts).select("node")
-
-    core_edges = (
-        nbrs.join(core.withColumnRenamed("node", "na"), "na", "leftsemi")
-        .join(core.withColumnRenamed("node", "nb"), "nb", "leftsemi")
-        .select(F.col("na").alias("u1"), F.col("nb").alias("u2"))
-    )
-    comps = connected_components(core_edges)
-    core_clusters = core.join(comps, "node", "left").select(
-        "node", F.coalesce("component", F.col("node")).alias("cluster")
-    )
-
-    border = (
-        sym_nbrs.join(
-            core_clusters.select(
-                F.col("node").alias("nb"), F.col("cluster")
-            ),
-            "nb",
+        deg = sym_nbrs.groupBy(F.col("na").alias("node")).agg(
+            F.count("*").alias("n_nbrs")
         )
-        .groupBy(F.col("na").alias("node"))
-        .agg(F.min("cluster").alias("cluster"))
-        .join(core_clusters.select("node"), "node", "leftanti")
-    )
+        core = deg.where(F.col("n_nbrs") >= min_pts).select("node")
 
-    labeled = core_clusters.unionByName(border)
-    out = (
-        embeddings.select("node")
-        .join(labeled, "node", "left")
-        .select("node", F.coalesce("cluster", F.lit("-1")).alias("cluster"))
-    )
-    # nbrs/comps stay live inside the returned plan; carry their block
-    # ownership so one caller-side release frees the chain
-    return carry_ckpt(out, nbrs, comps)
+        core_edges = (
+            nbrs.join(core.withColumnRenamed("node", "na"), "na", "leftsemi")
+            .join(core.withColumnRenamed("node", "nb"), "nb", "leftsemi")
+            .select(F.col("na").alias("u1"), F.col("nb").alias("u2"))
+        )
+        comps = g.adopt(connected_components(core_edges))
+        core_clusters = core.join(comps, "node", "left").select(
+            "node", F.coalesce("component", F.col("node")).alias("cluster")
+        )
+
+        border = (
+            sym_nbrs.join(
+                core_clusters.select(
+                    F.col("node").alias("nb"), F.col("cluster")
+                ),
+                "nb",
+            )
+            .groupBy(F.col("na").alias("node"))
+            .agg(F.min("cluster").alias("cluster"))
+            .join(core_clusters.select("node"), "node", "leftanti")
+        )
+
+        labeled = core_clusters.unionByName(border)
+        out = (
+            embeddings.select("node")
+            .join(labeled, "node", "left")
+            .select("node", F.coalesce("cluster", F.lit("-1")).alias("cluster"))
+        )
+        # nbrs/comps stay live inside the returned plan
+        return g.result(out, nbrs, comps)

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.session import driver_frame
 
 # merges at distance 0 (identical vectors) would give lambda = 1/w = inf;
@@ -85,9 +86,8 @@ def _rowwise_topk(d, rows_ids, cols_ids, kk):
     )
 
 
-# Row cap of one k-NN tile (a <=128 MB pair matrix): it sizes the derived
-# block count, and an input of at most this many rows runs its tiles on
-# the driver instead of in a pandas UDF.
+# Row cap of one executor k-NN tile (a <=128 MB pair matrix): it sizes
+# the derived block count.
 KNN_TILE_ROWS = 4096
 
 
@@ -160,10 +160,11 @@ def knn_graph(
     `knn_graph_ann` is the scale path that prunes the pair space itself.
 
     `n` is the input's row count when the caller already has it. When
-    it is known and at most KNN_TILE_ROWS, the rows are collected over
-    Arrow and the same tiles run on the driver: no pandas UDF, so no
-    Python worker. The candidates take the same rounding and window
-    either way, so both paths give the same rows."""
+    it is known and its tiles fit the driver budget (`placement`, kernel
+    "knn"), the rows are collected over Arrow and the same tiles run on
+    the driver: no pandas UDF, so no Python worker. The candidates take
+    the same rounding and window either way, so both paths give the
+    same rows."""
     if num_blocks is None:
         if n is None:
             n = embeddings.count()
@@ -178,7 +179,9 @@ def knn_graph(
     )
     id_type = dict(embeddings.dtypes)[id_col]
     cand_schema = f"src {id_type}, dst {id_type}, dist double"
-    if n is not None and n <= KNN_TILE_ROWS:
+    if n is not None and placement.on_driver(
+        embeddings.sparkSession, "knn", n * n * placement.KNN_PAIR_BYTES
+    ):
         cand = driver_frame(
             embeddings.sparkSession,
             _driver_tiles(blocked.toArrow().to_pandas(), num_blocks, k),
@@ -452,10 +455,9 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
     `_generations` scope; only the picked edge sets outlive it, owned
     by the returned union.
     """
-    from echo_chambers_detection_spark.operators import graph as _G
     from echo_chambers_detection_spark.operators.graph import (
         _generations,
-        _local_path_ok,
+        _mirror_ok,
         connected_components,
     )
     from echo_chambers_detection_spark.operators.localgraph import (
@@ -465,7 +467,7 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
     spark = edges.sparkSession
     with _generations() as g:
         e = g.keep(edges.select("u1", "u2", F.col("w").cast("double")))
-        if _local_path_ok(edges, e.count()):
+        if _mirror_ok(edges, "kruskal", e.count()):
             rows = e.toPandas()
             picked = _kruskal_local(
                 list(zip(rows["u1"], rows["u2"], rows["w"]))
@@ -510,21 +512,18 @@ def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 64) -> DataFrame
                 .join(lab2, "u2")
                 .select(F.col("c1").alias("u1"), F.col("c2").alias("u2"))
             )
-            if n_picked <= _G.LOCAL_GRAPH_EDGE_LIMIT and isinstance(
-                comp.schema["comp"].dataType, StringType
-            ):
+            if _mirror_ok(c_edges, "boruvka_contract", n_picked):
                 # Borůvka picks at most one out-edge per live component,
-                # so c_edges is <= n_picked rows; when that is
-                # driver-bounded (the community-mirror limit,
-                # graph.LOCAL_GRAPH_EDGE_LIMIT's standing 4M-row budget)
-                # contract via ONE Arrow collect + the parity-pinned
+                # so c_edges is <= n_picked rows; when those fit the
+                # driver budget (`placement`), contract via ONE Arrow
+                # collect + the parity-pinned
                 # union-find mirror instead of the nested distributed-CC
                 # call, which paid its own symmetrize checkpoint + gate
                 # count + collect every round (guide §2.4: ~3 fewer jobs
                 # per Borůvka round). component = min member id under
                 # string order — connected_components' exact labeling
                 # convention (connected_components_local is the same
-                # mirror CC itself dispatches to under the bound).
+                # mirror CC itself dispatches to on the driver).
                 labels = connected_components_local(c_edges.toPandas())
                 remap = driver_frame(
                     spark, labels.items(), "node string, component string"
@@ -1630,7 +1629,7 @@ def _condense_top(
 TWO_LEVEL_DRIVER_ROWS = 100_000
 # Below this contracted-forest size the classic single-collect condense
 # is cheaper than a θ-cut + per-component pass (same crossover pattern
-# as CONTRACT_MIN_FOREST_EDGES).
+# as the contraction gate in `hdbscan_cluster`).
 TWO_LEVEL_MIN_EDGES = 500_000
 # A single pandas group condenses one component; cap its edge count so
 # one executor task never sees an unbounded slab.
@@ -2079,21 +2078,9 @@ def condense_two_level(
 # default; above it the IVF-candidate path is.
 KNN_ANN_CROSSOVER = 32_000
 
-# Below this forest size the direct collect + sequential condense beats
-# the distributed fringe-contraction rounds, whose cost at test scale is
-# serialized-job overhead (measured round 10, same warm JVM: 40k-edge
-# forest 16.6s vs 28.0s end-to-end; 1M-edge caterpillar 12.7s driver
-# path vs ~23s contract+two_level — identical labels both ways, parity
-# pinned in tests/test_hdbscan.py). The bound matches the engine's
-# standing driver-mirror limit (graph.LOCAL_GRAPH_EDGE_LIMIT): above it
-# the contraction bounds driver rows to the cluster backbone and the
-# two-level condense keeps the driver at a constant row budget — the
-# 100 TB path, timed by bench_condense_two_level_1m.
-CONTRACT_MIN_FOREST_EDGES = 4_000_000
-
-
 def hdbscan_local(
-    ids, vectors, min_pts: int, min_cluster_size: int, k: int, num_blocks: int
+    spark, ids, vectors, min_pts: int, min_cluster_size: int, k: int,
+    num_blocks: int,
 ) -> dict | None:
     """`hdbscan_cluster`'s exact chain in numpy on the driver: {node:
     label} of the nodes that reach a cluster (every other node is
@@ -2106,19 +2093,19 @@ def hdbscan_local(
     the same crc32 blocks (`_driver_tiles`), its `1 - round(1 - dist,
     6)` (`round_half_up`) and (dist, dst) top-k; `core_distances`;
     `mutual_reachability_edges`; `_kruskal_local`; then the direct
-    `condense_and_select`. It declines above the same bounds the
-    distributed chain's gates apply: more than KNN_TILE_ROWS rows, more
-    than graph.LOCAL_GRAPH_EDGE_LIMIT mutual-reachability edges, a
-    forest of CONTRACT_MIN_FOREST_EDGES edges or more, and on a
-    distance within a few ulps of a rounding half-step."""
+    `condense_and_select`. It declines where the distributed chain's
+    gates would take a step off the driver (`placement` kernels "knn"
+    on the rows, "kruskal" on the mutual-reachability edges, "condense"
+    on the forest), and on a distance within a few ulps of a rounding
+    half-step."""
     import zlib
 
     import numpy as np
     import pandas as pd
 
-    from echo_chambers_detection_spark.operators import graph as _G
-
-    if len(ids) > KNN_TILE_ROWS:
+    if not placement.on_driver(
+        spark, "knn", len(ids) ** 2 * placement.KNN_PAIR_BYTES
+    ):
         return None
     ids = np.asarray(ids, dtype=object)
     blocks = [zlib.crc32(s.encode("utf-8")) % num_blocks for s in ids]
@@ -2154,19 +2141,23 @@ def hdbscan_local(
     c1, c2 = und["u1"].map(core), und["u2"].map(core)
     w = np.maximum(und["dist"], np.maximum(c1, c2)).to_numpy()
     keep = (c1.notna() & c2.notna()).to_numpy() & (w < np.inf)
-    if keep.sum() > _G.LOCAL_GRAPH_EDGE_LIMIT:
+    if not placement.on_driver(
+        spark, "kruskal", int(keep.sum()) * placement.EDGE_ROW_BYTES
+    ):
         return None
     picked = _kruskal_local(
         zip(und["u1"].to_numpy()[keep], und["u2"].to_numpy()[keep], w[keep])
     )
-    if len(picked) >= CONTRACT_MIN_FOREST_EDGES:
+    if not placement.on_driver(
+        spark, "condense", len(picked) * placement.EDGE_ROW_BYTES
+    ):
         return None
     in_forest = sorted({u for e in picked for u in (e[0], e[1])})
     labels = condense_and_select(in_forest, picked, min_cluster_size)
     return {node: lab for node, lab in labels.items() if lab != "-1"}
 
 
-def _hdbscan_pulled(tbl, id_col: str, vec_col: str, **kw) -> dict | None:
+def _hdbscan_pulled(spark, tbl, id_col: str, vec_col: str, **kw) -> dict | None:
     """`hdbscan_local` over a collected (id, vector) table, or None when
     its rows are not distinct non-NULL ids with equal-length non-NULL
     vectors (the distributed chain keeps those)."""
@@ -2183,7 +2174,7 @@ def _hdbscan_pulled(tbl, id_col: str, vec_col: str, **kw) -> dict | None:
     ):
         return None
     return hdbscan_local(
-        node.to_pandas().to_numpy(), vec.to_pandas().to_numpy(), **kw
+        spark, node.to_pandas().to_numpy(), vec.to_pandas().to_numpy(), **kw
     )
 
 
@@ -2228,7 +2219,8 @@ def hdbscan_cluster(
     feasible θ exists).
 
     Placement: in "auto" mode, when the sized input is at most
-    KNN_TILE_ROWS (and KNN_ANN_CROSSOVER) rows, it is pulled once and
+    KNN_ANN_CROSSOVER rows and its k-NN tiles fit the driver
+    (`placement` kernel "knn"), it is pulled once and
     the whole chain runs in `hdbscan_local`, the same kernel the
     analysis press runs; the Spark steps below take over wherever that
     kernel declines (a later step's bound, unreproducible input).
@@ -2260,11 +2252,15 @@ def hdbscan_cluster(
             # build
             emb = g.keep(emb)
             n = emb.count()
-        if knn_mode == "auto" and n <= min(KNN_ANN_CROSSOVER, KNN_TILE_ROWS):
+        if (
+            knn_mode == "auto"
+            and n <= KNN_ANN_CROSSOVER
+            and placement.on_driver(spark, "knn", n * n * placement.KNN_PAIR_BYTES)
+        ):
             # every step fits the driver: one pull, one kernel
             tbl = emb.toArrow()
             labels = _hdbscan_pulled(
-                tbl, id_col, vec_col, min_pts=min_pts,
+                spark, tbl, id_col, vec_col, min_pts=min_pts,
                 min_cluster_size=min_cluster_size, k=k,
                 num_blocks=num_blocks or 8,
             )
@@ -2310,13 +2306,17 @@ def hdbscan_cluster(
         # n-1 rows — and the member expansion stays a distributed join.
         # Condense itself is sequential in any HDBSCAN implementation;
         # this bounds what it is fed, label-identically (tests pin
-        # contracted == uncontracted). Below CONTRACT_MIN_FOREST_EDGES
-        # the collect is trivially cheap and the contraction rounds are
-        # pure overhead (+3 s measured at sf0.1), so the gate — like
-        # every crossover here — takes the direct path small and the
-        # bounded path at scale.
+        # contracted == uncontracted). While the forest fits the driver
+        # budget (`placement` kernel "condense") the collect is cheap and
+        # the contraction rounds are pure overhead (+3 s measured at
+        # sf0.1; 40k-edge forest 16.6 s direct vs 28.0 s contracted,
+        # same warm JVM, round 10), so the gate — like every crossover
+        # here — takes the direct path small and the bounded path at
+        # scale, where the two-level condense keeps driver rows bounded.
         member_map = lab_sn = lab_df = None
-        if forest.count() >= CONTRACT_MIN_FOREST_EDGES:
+        if not placement.on_driver(
+            spark, "condense", forest.count() * placement.EDGE_ROW_BYTES
+        ):
             c_edges, c_nodes, member_map = (
                 g.adopt(f)
                 for f in contract_runt_fringes(forest, min_cluster_size)

@@ -17,8 +17,8 @@ string-order tie-breaks), so an algorithm can cross from the
 distributed path to the local path mid-run — or run entirely locally
 below the threshold — and produce THE SAME partition.
 tests/test_local_graph_parity.py pins distributed-vs-local equality on
-the regression fixtures, and `LOCAL_GRAPH_EDGE_LIMIT` can be set to 0
-to force the distributed path.
+the regression fixtures, forcing the distributed path with
+`placement.distributed()`.
 
 The hash mirrored is Spark's `xxhash64(col)` (catalyst XXH64, seed 42)
 over the node id's UTF-8 bytes — the Leiden refinement's parity
@@ -26,13 +26,13 @@ schedule (refine_np / graph._refine) still keys off it, as do the
 walk/bitmap mirrors and FastRP's init grid (`fastrp_init_mod6`, which
 chains Spark's hashInt over the dim and seed columns).
 
-Placement rule: an operator runs its mirror when the graph is under
-its bound — LOCAL_GRAPH_EDGE_LIMIT for the community loops,
-LOCAL_TRAVERSAL_EDGE_LIMIT for the traversal family, FastRP and the
-triangle kernels, lowered by a kernel's own memory or operation budget
-(`FASTRP_LOCAL_CELLS`, `WALK_LOCAL_OP_LIMIT`, `WEDGE_LOCAL_OP_LIMIT`)
-— and the mirror can reproduce the input; otherwise the distributed
-loop runs. A kernel that returns None hands the call back to it.
+Placement rule: an operator runs its mirror when `placement.on_driver`
+places its kernel on the driver — the pulled edge rows, at the kernel's
+bytes per row, fit the heap-derived driver budget — when the kernel's
+own operation budget holds (`WALK_LOCAL_OP_LIMIT`,
+`WEDGE_LOCAL_OP_LIMIT`), and when the mirror can reproduce the input;
+otherwise the distributed loop runs. A kernel that returns None hands
+the call back to it.
 """
 
 from __future__ import annotations
@@ -1077,15 +1077,6 @@ def bellman_ford_landmark_local(tbl, n_landmarks=4, k=10):
             {"seed": ids[:0], "node": ids[:0], "cost": np.array([], np.int64)}
         )
     return pd.concat(parts, ignore_index=True)
-
-
-# Cell budget for the FastRP mirror, which holds about (sym rows + nodes)
-# x dim float64s: each round gathers every edge's neighbor row, then
-# sums the gather into the node x dim state. 2**25 cells is 256 MB.
-# graph.fastrp derives its pull bound from it (sym rows = 2 x raw rows
-# and nodes <= sym rows, so raw rows <= FASTRP_LOCAL_CELLS // (4 * dim)),
-# so the pull never fetches a graph too big for the kernel.
-FASTRP_LOCAL_CELLS = 1 << 25
 
 
 def _rotl_np(x, r: int):

@@ -18,15 +18,14 @@ metrics.py:8-12), NaN (per-community table, metrics.py:161-181), and a
 in for NaN; the sentinel is preserved where the reference has it.
 
 Placement (`community_table`): the per-community table is computed on
-the driver, with numpy, when its member set fits one driver pull of
-DRIVER_TABLE_MEMBERS rows, and by `community_metrics` above that. The
-table's inputs are community-graph sized: members are labeled nodes
-with an embedding, and its edges are those between members, so they
-stay in the thousands even when the raw events are 100 TB. A
-distributed plan over them pays ~15 exchanges, each a job with its
-own codegen, for a few milliseconds of task work. This follows the
-engine's mirror pattern (`graph.LOCAL_GRAPH_EDGE_LIMIT`,
-`hdbscan.KNN_TILE_ROWS`): the distributed path stays the scale path
+the driver, with numpy, when its members and the edges between them
+each fit one driver pull (`placement` kernel "community_table"), and by
+`community_metrics` above that. The table's inputs are community-graph
+sized: members are labeled nodes with an embedding, and its edges are
+those between members, so they stay in the thousands even when the raw
+events are 100 TB. A distributed plan over them pays ~15 exchanges,
+each a job with its own codegen, for a few milliseconds of task work.
+As with every driver mirror, the distributed path stays the scale path
 and gives the same rows.
 """
 
@@ -35,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.functions.vector import cosine_similarity
 from echo_chambers_detection_spark.operators.graph import (
     _exceeds_rows,
@@ -43,10 +43,6 @@ from echo_chambers_detection_spark.operators.graph import (
 )
 from echo_chambers_detection_spark.session import driver_frame, driver_table
 
-# Members (labeled nodes with an embedding) at or below which
-# `community_table` computes on the driver. 4096 members of 128-dim
-# vectors are ~4 MB. 0 forces the distributed path (tests do).
-DRIVER_TABLE_MEMBERS = 4096
 
 # The table's columns after `label`, with `community_metrics`' NOT NULLs
 _TABLE_COLUMNS = [
@@ -317,8 +313,9 @@ def community_table(
 
     edges (u1, u2), labels (node, label) and embeddings (node, vector)
     as in `restrict_to_members`; `label` keeps its type. The gate is
-    the pull itself, `limit(DRIVER_TABLE_MEMBERS + 1)` over
-    embeddings ⋈ labels, so it costs no count job. Members numpy cannot
+    the pull itself, a `limit` of the most rows `placement` gives the
+    kernel plus one, over embeddings ⋈ labels and then over the edges
+    between the pulled members, so it costs no count job. Members numpy cannot
     mirror exactly (`_member_vectors`) take the distributed path too.
     Inputs that are driver frames (`session.driver_table`) are read
     from their Arrow tables instead: labels and embeddings both for the
@@ -327,7 +324,8 @@ def community_table(
     an empty member set or edge list gives the empty table."""
     spark = labels.sparkSession
     schema = StructType([labels.schema["label"], *_TABLE_COLUMNS])
-    if DRIVER_TABLE_MEMBERS > 0:
+    bound = placement.max_rows(spark, "community_table", placement.MEMBER_BYTES)
+    if bound > 0:
         lab_t, emb_t = driver_table(labels), driver_table(embeddings)
         if lab_t is not None and emb_t is not None:
             pulled = _joined_members(lab_t, emb_t)
@@ -335,10 +333,10 @@ def community_table(
             pulled = (
                 labels.select("node", "label")
                 .join(embeddings.select("node", "vector"), "node")
-                .limit(DRIVER_TABLE_MEMBERS + 1)
+                .limit(bound + 1)
                 .toArrow()
             )
-        x = _member_vectors(pulled) if pulled.num_rows <= DRIVER_TABLE_MEMBERS else None
+        x = _member_vectors(pulled) if pulled.num_rows <= bound else None
         if x is not None:
             nodes = pulled.column("node").to_pandas()
             u1 = u2 = nodes[:0]
@@ -356,10 +354,16 @@ def community_table(
                 for c in ("u1", "u2"):
                     m = F.broadcast(ids.withColumnRenamed("node", c))
                     e = e.join(m, c, "leftsemi")
-                tbl = e.toArrow()
+                e_bound = placement.max_rows(
+                    spark, "community_table", placement.EDGE_ROW_BYTES
+                )
+                tbl = e.limit(e_bound + 1).toArrow()
+                if tbl.num_rows > e_bound:
+                    x = None  # too many member edges: run distributed
                 u1, u2 = tbl.column("u1").to_pandas(), tbl.column("u2").to_pandas()
-            table = _table_np(nodes, pulled.column("label").to_pandas(), x, u1, u2)
-            return driver_frame(spark, table, schema)
+            if x is not None:
+                table = _table_np(nodes, pulled.column("label").to_pandas(), x, u1, u2)
+                return driver_frame(spark, table, schema)
 
     # Empty frames stay out of the multi-branch plan: AQE drops the
     # branches an empty side makes dead but leaves their running stages

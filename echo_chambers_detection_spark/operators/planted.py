@@ -15,10 +15,11 @@ that gap twice over:
   core values) is a closed-form table DuckDB can generate with
   `range()` — turning Louvain/Leiden/LPA/k-core/CC into
   oracle-hash-checkable catalog queries.
-- SCALE: the same generator at >4M directed edge rows pushes the
-  algorithms past `graph.LOCAL_GRAPH_EDGE_LIMIT`, so the bench rows
-  time the DISTRIBUTED loops — the actual 100 TB code path — with a
-  recovery assertion attached (bench.py `_at_scale_probes`).
+- SCALE: the same generator at millions of directed edge rows feeds
+  bench rows that time the DISTRIBUTED loops — the actual 100 TB code
+  path, forced with `placement.distributed()` whatever the host's
+  driver budget — with a recovery assertion attached (bench.py
+  `_graph_scale_probes`).
 
 Construction: `n_blocks` blocks of `block_size` nodes; node i sits in
 block i // block_size at ring position i % block_size. Within each

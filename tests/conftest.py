@@ -42,3 +42,19 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="module")
+def two_cliques(spark):
+    """Two 5-cliques of unit weight joined by one weak (0.1) bridge."""
+    import itertools
+
+    g1 = [f"a{i}" for i in range(5)]
+    g2 = [f"b{i}" for i in range(5)]
+    pairs = [
+        (u, v, 1.0)
+        for g in (g1, g2)
+        for u, v in itertools.combinations(sorted(g), 2)
+    ]
+    pairs.append(("a0", "b0", 0.1))  # weak bridge
+    return spark.createDataFrame(pairs, "u1 string, u2 string, weight double")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 import echo_chambers_detection_spark.operators.graph as G
 import echo_chambers_detection_spark.operators.hdbscan as H
 import echo_chambers_detection_spark.operators.metrics as M
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.operators.planted import (
     planted_arc_embeddings,
     planted_partition_edges,
@@ -137,7 +138,7 @@ def _tie_heavy(spark, id_type: str):
 
 
 @pytest.mark.parametrize("id_type", ["string", "bigint"])
-def test_driver_knn_matches_udf_knn(spark, monkeypatch, id_type):
+def test_driver_knn_matches_udf_knn(spark, id_type):
     """The driver-placed small k-NN returns the pandas-UDF path's rows,
     exactly, for several block counts."""
     emb = _tie_heavy(spark, id_type)
@@ -146,11 +147,10 @@ def test_driver_knn_matches_udf_knn(spark, monkeypatch, id_type):
         driver = H.knn_graph(emb, k=4, num_blocks=num_blocks, n=n)
         assert "FlatMapGroupsInPandas" not in _plan(driver)
         got = sorted(driver.collect())
-        monkeypatch.setattr(H, "KNN_TILE_ROWS", 0)
-        udf = H.knn_graph(emb, k=4, num_blocks=num_blocks, n=n)
-        assert "FlatMapGroupsInPandas" in _plan(udf)
+        with placement.distributed("knn"):
+            udf = H.knn_graph(emb, k=4, num_blocks=num_blocks, n=n)
+            assert "FlatMapGroupsInPandas" in _plan(udf)
         want = sorted(udf.collect())
-        monkeypatch.undo()
         assert driver.schema == udf.schema
         assert got == want, f"num_blocks={num_blocks}"
         # the zero vector has no neighbor and is no one's neighbor

@@ -11,26 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 import echo_chambers_detection_spark.operators.graph as G
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.operators.graph import (
     density_cluster,
     fastrp,
 )
 from tests.conftest import assert_same_schema
-
-
-@pytest.fixture(scope="module")
-def two_cliques(spark):
-    import itertools
-
-    g1 = [f"a{i}" for i in range(5)]
-    g2 = [f"b{i}" for i in range(5)]
-    pairs = [
-        (u, v, 1.0)
-        for g in (g1, g2)
-        for u, v in itertools.combinations(sorted(g), 2)
-    ]
-    pairs.append(("a0", "b0", 0.1))  # weak bridge
-    return spark.createDataFrame(pairs, "u1 string, u2 string, weight double")
 
 
 def test_fastrp_shape_and_determinism(two_cliques):
@@ -146,7 +132,7 @@ def test_density_cluster_lsh_recall_at_sf(spark):
 
 # ---------------------------------------------------------------------------
 # Driver mirror (localgraph.fastrp_local) vs the distributed loop, forced
-# by LOCAL_TRAVERSAL_EDGE_LIMIT = 0.
+# by placement.distributed("fastrp").
 # ---------------------------------------------------------------------------
 
 
@@ -166,7 +152,7 @@ def _cells(df) -> dict:
     return {(r["node"], r["dim"]): r["val"] for r in df.collect()}
 
 
-def _both_ways(monkeypatch, run):
+def _both_ways(run):
     """run() with the mirror allowed, then with the distributed loop
     forced; each side is its frame or the exception it raised."""
 
@@ -177,9 +163,8 @@ def _both_ways(monkeypatch, run):
             return exc
 
     local = attempt()
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    dist = attempt()
-    monkeypatch.undo()
+    with placement.distributed("fastrp"):
+        dist = attempt()
     return local, dist
 
 
@@ -195,13 +180,10 @@ def sf_post_graph(spark):
 
 @pytest.mark.parametrize("weights", [(0.0, 1.0, 1.0), (1.0, 1.0, 1.0)])
 @pytest.mark.parametrize("graph", ["two_cliques", "sf_post_graph"])
-def test_fastrp_mirror_matches_distributed(
-    request, monkeypatch, graph, weights
-):
+def test_fastrp_mirror_matches_distributed(request, graph, weights):
     edges = request.getfixturevalue(graph)
     for assemble in (True, False):
         local, dist = _both_ways(
-            monkeypatch,
             lambda: fastrp(
                 edges, dim=32, iteration_weights=weights, assemble=assemble
             ),
@@ -241,7 +223,7 @@ def test_fastrp_init_grid_matches_spark_hash(spark):
         assert got == want, seed
 
 
-def test_hdbscan_chain_labels_same_both_ways(monkeypatch, sf_post_graph):
+def test_hdbscan_chain_labels_same_both_ways(sf_post_graph):
     """The analysis_run_hdbscan clustering step (FastRP dim=128, then
     HDBSCAN at the chain's parameters) labels every post the same with
     the embeddings from the mirror and from the distributed loop."""
@@ -258,7 +240,7 @@ def test_hdbscan_chain_labels_same_both_ways(monkeypatch, sf_post_graph):
         G._release_checkpoint(out)
         return got
 
-    local, dist = _both_ways(monkeypatch, labels)
+    local, dist = _both_ways(labels)
     assert len(local) > 50
     assert local == dist
 
@@ -281,9 +263,7 @@ def decline_cases(spark, two_cliques):
 @pytest.mark.parametrize(
     "case", ["null_endpoint", "zero_weighted_degree", "custom_hash"]
 )
-def test_fastrp_mirror_declines_to_distributed(
-    monkeypatch, decline_cases, case
-):
+def test_fastrp_mirror_declines_to_distributed(decline_cases, case):
     """Input the mirror cannot reproduce runs the distributed loop: the
     same frame, or the same exception, as forcing it."""
     edges, hash_mod6 = decline_cases[case]
@@ -295,7 +275,7 @@ def test_fastrp_mirror_declines_to_distributed(
         )
         return out, _cells(out)
 
-    local, dist = _both_ways(monkeypatch, run)
+    local, dist = _both_ways(run)
     if isinstance(dist, Exception):
         assert type(local) is type(dist), local
         return

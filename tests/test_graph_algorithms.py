@@ -299,7 +299,7 @@ def test_connected_components_log_diameter_rounds(spark):
     """Pointer jumping (round 6): a 400-node path converges within ~12
     distributed rounds — pure min-propagation would need 400, so this
     pins the L(L(v)) shortcut actually shortening chains."""
-    import echo_chambers_detection_spark.operators.graph as G
+    from echo_chambers_detection_spark import placement
     from echo_chambers_detection_spark.operators.graph import (
         connected_components,
     )
@@ -308,13 +308,9 @@ def test_connected_components_log_diameter_rounds(spark):
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(399)],
         "u1 string, u2 string",
     )
-    old = G.LOCAL_GRAPH_EDGE_LIMIT
-    G.LOCAL_GRAPH_EDGE_LIMIT = 0
-    try:
+    with placement.distributed():
         out = connected_components(edges, max_iter=12)
-        assert {r["component"] for r in out.collect()} == {"n000"}
-    finally:
-        G.LOCAL_GRAPH_EDGE_LIMIT = old
+    assert {r["component"] for r in out.collect()} == {"n000"}
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
@@ -323,23 +319,18 @@ def test_connected_components_raises_on_nonconvergence(spark):
     Boruvka forest contract and dedup keep-lists downstream)."""
     import pytest
 
+    from echo_chambers_detection_spark import placement
     from echo_chambers_detection_spark.operators.graph import (
-        LOCAL_GRAPH_EDGE_LIMIT,
         connected_components,
     )
 
     # a path graph needs O(length) min-label rounds; force the
-    # distributed path by monkey-free env: build above the local bound
-    # is too slow, so instead drop the bound via the module knob
-    import echo_chambers_detection_spark.operators.graph as G
-
+    # distributed loop (building one above the driver budget is too slow)
     edges = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)],
         "u1 string, u2 string",
     )
-    old = G.LOCAL_GRAPH_EDGE_LIMIT
-    G.LOCAL_GRAPH_EDGE_LIMIT = 0  # force the distributed loop
-    try:
+    with placement.distributed():
         base = _pinned(spark)
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(edges, max_iter=2)
@@ -349,8 +340,6 @@ def test_connected_components_raises_on_nonconvergence(spark):
         # and with budget >= diameter it converges to one component
         out = connected_components(edges, max_iter=30)
         assert {r["component"] for r in out.collect()} == {"n00"}
-    finally:
-        G.LOCAL_GRAPH_EDGE_LIMIT = old
 
 
 # ---------------------------------------------------------------------------
@@ -712,8 +701,8 @@ def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
     """An exception in Leiden's second level frees every generation the
     call had checkpointed."""
     import echo_chambers_detection_spark.operators.graph as G
+    from echo_chambers_detection_spark import placement
 
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
     real, calls = G._coarsen, []
 
     def coarsen_failing_at_level_2(*a, **kw):
@@ -724,7 +713,7 @@ def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
 
     monkeypatch.setattr(G, "_coarsen", coarsen_failing_at_level_2)
     base = _pinned(spark)
-    with pytest.raises(RuntimeError, match="injected"):
+    with placement.distributed(), pytest.raises(RuntimeError, match="injected"):
         G.leiden(planted, max_levels=3, max_rounds=4)
     assert _pinned(spark) == base
 
@@ -741,6 +730,7 @@ def test_loop_operators_release_all_checkpoints(spark):
     planted graph, and asserts the pinned-RDD set returns to baseline
     after _release_checkpoint(result)."""
     import echo_chambers_detection_spark.operators.graph as G
+    from echo_chambers_detection_spark import placement
     from echo_chambers_detection_spark.operators.graph import (
         _release_checkpoint,
     )
@@ -780,17 +770,12 @@ def test_loop_operators_release_all_checkpoints(spark):
     arcs = planted_arc_embeddings(spark, 4, 20)
 
     def contracted(*a, **kw):
-        old_gate = H.CONTRACT_MIN_FOREST_EDGES
-        H.CONTRACT_MIN_FOREST_EDGES = 0
-        try:
+        with placement.distributed("condense"):
             return H.hdbscan_cluster(*a, **kw)
-        finally:
-            H.CONTRACT_MIN_FOREST_EDGES = old_gate
 
-    old = G.LOCAL_GRAPH_EDGE_LIMIT, G.LOCAL_TRAVERSAL_EDGE_LIMIT
-    # force the distributed loops
-    G.LOCAL_GRAPH_EDGE_LIMIT = G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
-    try:
+    # force the distributed loops (the k-NN tiles stay on the driver)
+    loops = placement.KERNELS - {"knn", "condense", "community_table"}
+    with placement.distributed(*loops):
         for name, fn in [
             ("louvain", lambda: G.louvain(e, max_levels=2, max_rounds=2)),
             ("leiden", lambda: G.leiden(e, max_levels=2, max_rounds=2)),
@@ -856,5 +841,3 @@ def test_loop_operators_release_all_checkpoints(spark):
             assert not leaked, f"{name} leaked pinned RDDs: {sorted(leaked)}"
             if name == "condense_two_level":
                 _release_checkpoint(c_e, c_n, mm)
-    finally:
-        G.LOCAL_GRAPH_EDGE_LIMIT, G.LOCAL_TRAVERSAL_EDGE_LIMIT = old

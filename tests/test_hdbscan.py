@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 import echo_chambers_detection_spark.operators.graph as G
+from echo_chambers_detection_spark import placement
 from tests.conftest import lane
 from echo_chambers_detection_spark.operators.hdbscan import (
     _kruskal_local,
@@ -120,14 +121,13 @@ def test_hdbscan_blobs_end_to_end(spark):
     assert len({next(iter({out[m] for m in ms})) for ms in blobs.values()}) == 3
 
 
-def test_boruvka_unionfind_contraction_matches_kruskal(spark, monkeypatch):
+def test_boruvka_unionfind_contraction_matches_kruskal(spark):
     """Round-13 contraction fast path: distributed Borůvka whose picked
     frame fits the driver bound contracts via ONE collect + the
-    union-find mirror (not the nested distributed CC). Force it with a
-    limit below the edge count (distributed Borůvka) but above the
-    node count (picked <= nodes <= limit -> union-find leg), and pin
-    the EXACT edge set against local Kruskal (both deterministic under
-    the (w, u1, u2) total order)."""
+    union-find mirror (not the nested distributed CC). Force Kruskal
+    distributed, leaving the contraction on the driver, and pin the
+    EXACT edge set against local Kruskal (both deterministic under the
+    (w, u1, u2) total order)."""
     rng = np.random.default_rng(11)
     n = 30
     rows = []
@@ -137,22 +137,20 @@ def test_boruvka_unionfind_contraction_matches_kruskal(spark, monkeypatch):
                 rows.append(
                     (f"v{i:02d}", f"v{j:02d}", float(rng.integers(1, 9)))
                 )
-    assert len(rows) > 60  # must exceed the forced limit below
     edges = spark.createDataFrame(rows, "u1 string, u2 string, w double")
     want = sorted(
         (r["u1"], r["u2"], r["w"])
         for r in minimum_spanning_forest(edges).collect()
     )
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 60)
-    got = sorted(
-        (r["u1"], r["u2"], r["w"])
-        for r in minimum_spanning_forest(edges).collect()
-    )
-    monkeypatch.undo()
+    with placement.distributed("kruskal"):
+        got = sorted(
+            (r["u1"], r["u2"], r["w"])
+            for r in minimum_spanning_forest(edges).collect()
+        )
     assert got == want
 
 
-def test_forest_parity_local_vs_boruvka(spark, monkeypatch):
+def test_forest_parity_local_vs_boruvka(spark):
     """Same fixture through local Kruskal and distributed Borůvka: both
     must be spanning forests of equal total weight (strict (w,u1,u2)
     total order makes both deterministic)."""
@@ -168,9 +166,8 @@ def test_forest_parity_local_vs_boruvka(spark, monkeypatch):
     edges = spark.createDataFrame(rows, "u1 string, u2 string, w double")
 
     local = minimum_spanning_forest(edges).collect()
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = minimum_spanning_forest(edges).collect()
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = minimum_spanning_forest(edges).collect()
 
     def summarize(rs):
         return len(rs), round(sum(r["w"] for r in rs), 6)
@@ -571,13 +568,11 @@ def test_weighted_condense_defaults_identical():
     assert plain == weighted
 
 
-def test_hdbscan_contraction_gate_paths_agree(spark, monkeypatch):
-    """hdbscan_cluster takes the direct collect below
-    CONTRACT_MIN_FOREST_EDGES and the contracted path above — both must
-    label identically (the gate is a cost knob, never a semantics
-    knob)."""
-    import echo_chambers_detection_spark.operators.hdbscan as H
-
+def test_hdbscan_contraction_gate_paths_agree(spark):
+    """hdbscan_cluster takes the direct collect while the forest fits
+    the driver budget and the contracted path past it (forced here) —
+    both must label identically (the gate is a cost knob, never a
+    semantics knob)."""
     df, blobs = _blob_embeddings(spark)
     direct = {
         r["node"]: r["cluster"]
@@ -585,13 +580,13 @@ def test_hdbscan_contraction_gate_paths_agree(spark, monkeypatch):
             df, min_pts=3, min_cluster_size=4, k=8
         ).collect()
     }
-    monkeypatch.setattr(H, "CONTRACT_MIN_FOREST_EDGES", 0)
-    contracted = {
-        r["node"]: r["cluster"]
-        for r in hdbscan_cluster(
-            df, min_pts=3, min_cluster_size=4, k=8
-        ).collect()
-    }
+    with placement.distributed("condense"):
+        contracted = {
+            r["node"]: r["cluster"]
+            for r in hdbscan_cluster(
+                df, min_pts=3, min_cluster_size=4, k=8
+            ).collect()
+        }
     assert direct == contracted
 
 

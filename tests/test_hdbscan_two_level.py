@@ -110,20 +110,16 @@ def test_hdbscan_two_level_mode_matches_driver_mode(spark):
         r["node"]: r["cluster"]
         for r in hdbscan_cluster(df, condense_mode="driver", **kw).collect()
     }
-    import echo_chambers_detection_spark.operators.hdbscan as H
+    from echo_chambers_detection_spark import placement
 
     # force the scale path end to end: contraction + two-level condense
-    old = H.CONTRACT_MIN_FOREST_EDGES
-    try:
-        H.CONTRACT_MIN_FOREST_EDGES = 0
+    with placement.distributed("condense"):
         two = {
             r["node"]: r["cluster"]
             for r in hdbscan_cluster(
                 df, condense_mode="two_level", **kw
             ).collect()
         }
-    finally:
-        H.CONTRACT_MIN_FOREST_EDGES = old
     assert two == classic
     assert len({v for v in two.values() if v != "-1"}) == 3
 

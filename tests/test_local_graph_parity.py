@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import echo_chambers_detection_spark.operators.graph as G
+from echo_chambers_detection_spark import placement
 # quick lane keeps the cliques fixture for the heavy leiden parity
 # pins; the random fixture runs under SPARK_GRAFT_FULL_TESTS=1
 # (VERDICT r12 #2 verify-budget trim)
@@ -63,57 +64,66 @@ def _fixtures(spark):
     }
 
 
-def _both_paths(monkeypatch, fn, edges, **kw):
+def _both_paths(fn, edges, **kw):
     local = {(r["node"], r["community"]) for r in fn(edges, **kw).collect()}
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {(r["node"], r["community"]) for r in fn(edges, **kw).collect()}
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {(r["node"], r["community"]) for r in fn(edges, **kw).collect()}
     return local, dist
 
 
 @pytest.mark.parametrize("name", ["cliques", "random"])
-def test_louvain_parity(spark, monkeypatch, name):
+def test_louvain_parity(spark, name):
     edges = _fixtures(spark)[name]
     local, dist = _both_paths(
-        monkeypatch, G.louvain, edges, max_levels=3, max_rounds=8
+        G.louvain, edges, max_levels=3, max_rounds=8
     )
     assert local == dist
 
 
 @pytest.mark.parametrize("name", lane(["cliques", "random"], ["cliques"]))
-def test_leiden_parity(spark, monkeypatch, name):
+def test_leiden_parity(spark, name):
     edges = _fixtures(spark)[name]
     local, dist = _both_paths(
-        monkeypatch, G.leiden, edges, max_levels=3, max_rounds=8
+        G.leiden, edges, max_levels=3, max_rounds=8
     )
     assert local == dist
 
 
-def test_modularity_optimization_parity(spark, monkeypatch):
+def test_modularity_optimization_parity(spark):
     edges = _fixtures(spark)["random"]
     local, dist = _both_paths(
-        monkeypatch, G.modularity_optimization, edges, max_rounds=8
+        G.modularity_optimization, edges, max_rounds=8
     )
     assert local == dist
+
+
+def _refuse_first_probe(monkeypatch, kernel):
+    """Spy on `placement.on_driver`: `kernel`'s first (entry) probe is
+    refused, every later one is placed as usual. Returns the counter of
+    `kernel`'s probes."""
+    calls = {"n": 0}
+    real = placement.on_driver
+
+    def level_boundary_only(spark, k, nbytes):
+        if k == kernel:
+            calls["n"] += 1
+            if calls["n"] == 1:
+                return False
+        return real(spark, k, nbytes)
+
+    monkeypatch.setattr(placement, "on_driver", level_boundary_only)
+    return calls
 
 
 def test_louvain_midrun_switch(spark, monkeypatch):
     """Crossing from distributed level 0 to the local path at the level
     boundary must give the same partition as staying distributed."""
     edges = _fixtures(spark)["cliques"]
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {(r["node"], r["community"])
-            for r in G.louvain(edges, max_levels=3, max_rounds=8).collect()}
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {(r["node"], r["community"])
+                for r in G.louvain(edges, max_levels=3, max_rounds=8).collect()}
 
-    calls = {"n": 0}
-    real = G._local_path_ok
-
-    def level_boundary_only(e, n_rows):
-        calls["n"] += 1
-        return calls["n"] > 1 and real(e, n_rows)  # refuse the first probe
-
-    monkeypatch.setattr(G, "_local_path_ok", level_boundary_only)
+    calls = _refuse_first_probe(monkeypatch, "louvain")
     mixed = {(r["node"], r["community"])
              for r in G.louvain(edges, max_levels=3, max_rounds=8).collect()}
     assert calls["n"] >= 2  # the mid-run probe actually fired
@@ -121,20 +131,12 @@ def test_louvain_midrun_switch(spark, monkeypatch):
 
 
 def _leiden_mixed_vs_dist(spark, monkeypatch, edges, max_levels):
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {(r["node"], r["community"])
-            for r in G.leiden(edges, max_levels=max_levels,
-                              max_rounds=8).collect()}
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {(r["node"], r["community"])
+                for r in G.leiden(edges, max_levels=max_levels,
+                                  max_rounds=8).collect()}
 
-    calls = {"n": 0}
-    real = G._local_path_ok
-
-    def level_boundary_only(e, n_rows):
-        calls["n"] += 1
-        return calls["n"] > 1 and real(e, n_rows)  # refuse the entry probe
-
-    monkeypatch.setattr(G, "_local_path_ok", level_boundary_only)
+    calls = _refuse_first_probe(monkeypatch, "leiden")
     mixed = {(r["node"], r["community"])
              for r in G.leiden(edges, max_levels=max_levels,
                                max_rounds=8).collect()}
@@ -192,7 +194,7 @@ def test_refine_group_vs_round_loop_parity(spark, monkeypatch, name):
     assert grp == loop
 
 
-def test_kcore_parity_and_star_orphan(spark, monkeypatch):
+def test_kcore_parity_and_star_orphan(spark):
     """kcore local path == distributed peel, including the star-center
     orphan case: when all a node's neighbors peel at level k, the node
     loses every edge without being low itself and must still be assigned
@@ -205,9 +207,8 @@ def test_kcore_parity_and_star_orphan(spark, monkeypatch):
     ).select("u1", "u2")
 
     local = {(r["node"], r["core_value"]) for r in G.kcore(edges).collect()}
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {(r["node"], r["core_value"]) for r in G.kcore(edges).collect()}
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {(r["node"], r["core_value"]) for r in G.kcore(edges).collect()}
 
     assert local == dist
     want = {("hub", 1), ("t1", 2), ("t2", 2), ("t3", 2)}
@@ -215,7 +216,7 @@ def test_kcore_parity_and_star_orphan(spark, monkeypatch):
     assert local == want
 
 
-def test_connected_components_parity(spark, monkeypatch):
+def test_connected_components_parity(spark):
     pairs = [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r")]
     edges = spark.createDataFrame(
         [(u, v, 1.0) for u, v in pairs], "u1 string, u2 string, weight double"
@@ -224,12 +225,11 @@ def test_connected_components_parity(spark, monkeypatch):
         (r["node"], r["component"])
         for r in G.connected_components(edges).collect()
     }
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {
-        (r["node"], r["component"])
-        for r in G.connected_components(edges).collect()
-    }
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {
+            (r["node"], r["component"])
+            for r in G.connected_components(edges).collect()
+        }
     assert local == dist
     assert local == {
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
@@ -237,7 +237,7 @@ def test_connected_components_parity(spark, monkeypatch):
     }
 
 
-def test_pagerank_parity_dyadic_exact(spark, monkeypatch):
+def test_pagerank_parity_dyadic_exact(spark):
     """On the power-of-two-degree oracle fixture at damping 0.5 every
     intermediate is dyadic, so local and distributed ranks must be
     BIT-IDENTICAL (this is the pagerank_planted oracle regime)."""
@@ -250,16 +250,15 @@ def test_pagerank_parity_dyadic_exact(spark, monkeypatch):
         r["node"]: r["rank"]
         for r in G.pagerank(edges, damping=0.5, max_iter=3, tol=0.0).collect()
     }
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {
-        r["node"]: r["rank"]
-        for r in G.pagerank(edges, damping=0.5, max_iter=3, tol=0.0).collect()
-    }
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(edges, damping=0.5, max_iter=3, tol=0.0).collect()
+        }
     assert local == dist  # exact float equality, not approx
 
 
-def test_pagerank_parity_generic_weights(spark, monkeypatch):
+def test_pagerank_parity_generic_weights(spark):
     """Messy weights: float association differs between numpy and
     Spark partial aggregates, so parity is to 1e-12 — the reason the
     production catalog query rounds its output."""
@@ -268,12 +267,11 @@ def test_pagerank_parity_generic_weights(spark, monkeypatch):
         r["node"]: r["rank"]
         for r in G.pagerank(edges, weighted=True, max_iter=6, tol=0.0).collect()
     }
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    dist = {
-        r["node"]: r["rank"]
-        for r in G.pagerank(edges, weighted=True, max_iter=6, tol=0.0).collect()
-    }
-    monkeypatch.undo()
+    with placement.distributed():
+        dist = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(edges, weighted=True, max_iter=6, tol=0.0).collect()
+        }
     assert set(local) == set(dist)
     for k in local:
         assert local[k] == pytest.approx(dist[k], rel=1e-12, abs=1e-15), k
@@ -303,34 +301,32 @@ def _traversal_fixture(spark, dtype):
     return spark.createDataFrame(rows, "u1 long, u2 long, weight long")
 
 
-def _both_traversal(monkeypatch, fn, edges, keys, **kw):
+def _both_traversal(fn, edges, keys, **kw):
     """Rows of the mirror and of the forced-distributed path, after
     checking that both frames have the same full schema."""
     mirror = fn(edges, **kw)
     local = {tuple(r[k] for k in keys) for r in mirror.collect()}
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    distributed = fn(edges, **kw)
-    dist = {tuple(r[k] for k in keys) for r in distributed.collect()}
-    monkeypatch.undo()
+    with placement.distributed():
+        distributed = fn(edges, **kw)
+        dist = {tuple(r[k] for k in keys) for r in distributed.collect()}
     assert_same_schema(mirror, distributed)
     return local, dist
 
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
-def test_bfs_parity(spark, monkeypatch, dtype):
+def test_bfs_parity(spark, dtype):
     edges = _traversal_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch, G.bfs_distances, edges, ("node", "dist"), max_iter=10
+        G.bfs_distances, edges, ("node", "dist"), max_iter=10
     )
     assert local == dist and local
 
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
-def test_bfs_parity_hop_bound_and_seeds(spark, monkeypatch, dtype):
+def test_bfs_parity_hop_bound_and_seeds(spark, dtype):
     edges = _traversal_fixture(spark, dtype)
     seeds = ["u400", "u1000"] if dtype == "string" else [400, 1000]
     local, dist = _both_traversal(
-        monkeypatch,
         G.bfs_distances,
         edges,
         ("node", "dist"),
@@ -341,10 +337,9 @@ def test_bfs_parity_hop_bound_and_seeds(spark, monkeypatch, dtype):
 
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
-def test_landmark_bfs_parity(spark, monkeypatch, dtype):
+def test_landmark_bfs_parity(spark, dtype):
     edges = _traversal_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch,
         G.bfs_landmark_distances,
         edges,
         ("seed", "node", "dist"),
@@ -355,10 +350,9 @@ def test_landmark_bfs_parity(spark, monkeypatch, dtype):
 
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
-def test_bellman_ford_parity(spark, monkeypatch, dtype):
+def test_bellman_ford_parity(spark, dtype):
     edges = _traversal_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch,
         G.bellman_ford_khop,
         edges,
         ("node", "cost"),
@@ -376,37 +370,37 @@ def test_bellman_ford_parity(spark, monkeypatch, dtype):
 # ---------------------------------------------------------------------------
 
 
-def test_bellman_ford_parity_negative_weights(spark, monkeypatch):
+def test_bellman_ford_parity_negative_weights(spark):
     # chain 1-2-3 with a negative bridge, plus an UNREACHABLE pair
     # (7,8): without the INF mask, INF + (-5) < INF falsely reaches it.
     rows = [(1, 2, -5), (2, 3, 2), (7, 8, -5)]
     edges = spark.createDataFrame(rows, "u1 long, u2 long, weight long")
     local, dist = _both_traversal(
-        monkeypatch, G.bellman_ford_khop, edges, ("node", "cost"),
+        G.bellman_ford_khop, edges, ("node", "cost"),
         seeds=[1], k=3,
     )
     assert local == dist and local
     assert not any(n in (7, 8) for n, _ in local)
 
 
-def test_bellman_ford_landmark_parity_negative_weights(spark, monkeypatch):
+def test_bellman_ford_landmark_parity_negative_weights(spark):
     rows = [(1, 2, -5), (2, 3, 2), (7, 8, -5)]
     edges = spark.createDataFrame(rows, "u1 long, u2 long, weight long")
     local, dist = _both_traversal(
-        monkeypatch, G.bellman_ford_landmark, edges,
+        G.bellman_ford_landmark, edges,
         ("seed", "node", "cost"), n_landmarks=2, k=3,
     )
     assert local == dist and local
 
 
-def test_bellman_ford_null_weight_bails_to_distributed(spark, monkeypatch):
+def test_bellman_ford_null_weight_bails_to_distributed(spark):
     # node 0 is binary-smallest and connected ONLY via a NULL-weight
     # edge: it must still be picked as a landmark (seed, seed, 0) but
     # never relax anything — only the distributed path gets both right,
     # so the gate must return None here.
     rows = [(0, 5, None), (1, 2, 3), (2, 3, 1)]
     edges = spark.createDataFrame(rows, "u1 long, u2 long, weight long")
-    assert G._traversal_local_tbl(edges, weighted=True) is None
+    assert G._traversal_local_tbl(edges, "bellman_ford_landmark", weighted=True) is None
     out = {
         (r["seed"], r["node"], r["cost"])
         for r in G.bellman_ford_landmark(edges, n_landmarks=2, k=3).collect()
@@ -420,7 +414,7 @@ def test_bellman_ford_nan_weight_bails_to_distributed(spark):
         [(1, 2, float("nan")), (2, 3, 2.0)],
         "u1 long, u2 long, weight double",
     )
-    assert G._traversal_local_tbl(edges, weighted=True) is None
+    assert G._traversal_local_tbl(edges, "bellman_ford", weighted=True) is None
 
 
 def test_unweighted_gate_keeps_null_weight_rows(spark):
@@ -428,15 +422,15 @@ def test_unweighted_gate_keeps_null_weight_rows(spark):
     edges = spark.createDataFrame(
         [(1, 2, None), (2, 3, 2)], "u1 long, u2 long, weight long"
     )
-    assert G._traversal_local_tbl(edges, weighted=False) is not None
+    assert G._traversal_local_tbl(edges, "bfs", weighted=False) is not None
 
 
-def test_forced_distributed_gate_rejects_empty_frame(spark, monkeypatch):
-    # ADVICE r11: with the limit forced to 0 an EMPTY frame used to
-    # pass the gate (0 > 0 is false) and silently exercise the mirror.
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
+def test_forced_distributed_gate_rejects_empty_frame(spark):
+    # ADVICE r11: with the path forced distributed an EMPTY frame used
+    # to pass the gate (0 > 0 is false) and silently exercise the mirror.
     edges = spark.createDataFrame([], "u1 long, u2 long, weight long")
-    assert G._traversal_local_tbl(edges) is None
+    with placement.distributed("bfs"):
+        assert G._traversal_local_tbl(edges, "bfs") is None
 
 
 def test_local_fallbacks_zero_landmarks(spark):
@@ -447,7 +441,7 @@ def test_local_fallbacks_zero_landmarks(spark):
     edges = spark.createDataFrame(
         [(1, 2, 3), (2, 3, 1)], "u1 long, u2 long, weight long"
     )
-    tbl = G._traversal_local_tbl(edges, weighted=True)
+    tbl = G._traversal_local_tbl(edges, "landmark_bfs", weighted=True)
     assert tbl is not None
     assert len(LG.landmark_bfs_local(tbl, n_landmarks=0)) == 0
     assert len(LG.path_counts_local(tbl, n_sources=0)) == 0
@@ -464,10 +458,9 @@ def test_local_fallbacks_zero_landmarks(spark):
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
 @pytest.mark.parametrize("weighted", [False, True])
-def test_random_walks_parity(spark, monkeypatch, dtype, weighted):
+def test_random_walks_parity(spark, dtype, weighted):
     edges = _traversal_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch,
         G.seeded_random_walks,
         edges,
         ("wid", "step", "node"),
@@ -477,7 +470,7 @@ def test_random_walks_parity(spark, monkeypatch, dtype, weighted):
     assert local == dist and local
 
 
-def test_random_walks_parity_with_seed_frame(spark, monkeypatch):
+def test_random_walks_parity_with_seed_frame(spark):
     edges = _traversal_fixture(spark, "string")
     # includes a seed node ABSENT from the graph (step-0 row only) and
     # a wid different from its start node
@@ -486,7 +479,6 @@ def test_random_walks_parity_with_seed_frame(spark, monkeypatch):
         "wid string, node string",
     )
     local, dist = _both_traversal(
-        monkeypatch,
         G.seeded_random_walks,
         edges,
         ("wid", "step", "node"),
@@ -503,7 +495,7 @@ def test_random_walks_budget_falls_back_to_distributed(spark, monkeypatch):
 
     edges = _traversal_fixture(spark, "string")
     monkeypatch.setattr(LG, "WALK_LOCAL_OP_LIMIT", 0)
-    tbl = G._traversal_local_tbl(edges)
+    tbl = G._traversal_local_tbl(edges, "random_walks")
     assert tbl is not None
     assert LG.random_walks_local(tbl, length=3) is None
     # the operator still answers (distributed leg)
@@ -536,14 +528,13 @@ def _tri_fixture(spark, dtype):
 
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
-def test_triangle_counts_parity(spark, monkeypatch, dtype):
+def test_triangle_counts_parity(spark, dtype):
     from echo_chambers_detection_spark.operators.triangles import (
         triangle_counts,
     )
 
     edges = _tri_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch,
         triangle_counts,
         edges,
         ("node", "triangles", "deg", "wedges"),
@@ -552,14 +543,13 @@ def test_triangle_counts_parity(spark, monkeypatch, dtype):
 
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
-def test_transitivity_parity(spark, monkeypatch, dtype):
+def test_transitivity_parity(spark, dtype):
     from echo_chambers_detection_spark.operators.triangles import (
         transitivity_stats,
     )
 
     edges = _tri_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch,
         transitivity_stats,
         edges,
         ("n_nodes", "n_edges", "n_triangles", "n_wedges"),
@@ -569,14 +559,14 @@ def test_transitivity_parity(spark, monkeypatch, dtype):
 
 @pytest.mark.parametrize("dtype", ["string", "long"])
 @pytest.mark.parametrize("k", [3, 4])
-def test_ktruss_parity(spark, monkeypatch, dtype, k):
+def test_ktruss_parity(spark, dtype, k):
     from echo_chambers_detection_spark.operators.triangles import (
         ktruss_edges,
     )
 
     edges = _tri_fixture(spark, dtype)
     local, dist = _both_traversal(
-        monkeypatch, ktruss_edges, edges, ("u1", "u2", "support"), k=k
+        ktruss_edges, edges, ("u1", "u2", "support"), k=k
     )
     assert local == dist
     if k == 3:
@@ -607,10 +597,10 @@ def test_triangle_mirror_declines_duplicates_and_budget(spark, monkeypatch):
     dup = spark.createDataFrame(
         [("a", "b"), ("a", "b"), ("b", "c")], "u1 string, u2 string"
     )
-    tbl = GG._traversal_local_tbl(dup)
+    tbl = GG._traversal_local_tbl(dup, "tricount")
     assert LG.tricount_local(tbl) is None          # duplicate rows
     tri = _tri_fixture(spark, "string")
-    tbl2 = GG._traversal_local_tbl(tri)
+    tbl2 = GG._traversal_local_tbl(tri, "tricount")
     monkeypatch.setattr(LG, "WEDGE_LOCAL_OP_LIMIT", 0)
     assert LG.tricount_local(tbl2) is None          # budget
     assert LG.ktruss_local(tbl2, 4) is None

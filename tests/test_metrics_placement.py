@@ -1,6 +1,6 @@
 """The per-community table's two placements (operators/metrics.py,
 `community_table`): the numpy kernel on the driver and the distributed
-`community_metrics` plan, forced with DRIVER_TABLE_MEMBERS = 0, give
+`community_metrics` plan, forced with `placement.distributed`, give
 the same rows in the same order after the analysis chains' md5/round
 projection. The analysis chains' one-pull placement
 (catalog/metrics.py, `_on_driver`) gives the rows, schema and labels
@@ -13,14 +13,15 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import nullcontext
 
 import pytest
 from pyspark.sql import functions as F
 
 import echo_chambers_detection_spark.catalog.metrics as CM
-import echo_chambers_detection_spark.operators.graph as G
 import echo_chambers_detection_spark.operators.hdbscan as H
 import echo_chambers_detection_spark.operators.metrics as M
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.catalog.metrics import (
     _mint_and_metrics,
     q_analysis_run_hdbscan,
@@ -31,6 +32,7 @@ from echo_chambers_detection_spark.operators.graph import (
     connected_components,
     tracked_checkpoint,
 )
+from echo_chambers_detection_spark.session import driver_table
 from tests.conftest import SF_ORACLE, assert_same_schema
 
 E1, E2, DIAG, ZERO = [1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [0.0, 0.0]
@@ -73,25 +75,25 @@ def _degenerate(spark, int_labels: bool):
     return edges, labels, emb
 
 
-def _both_placements(monkeypatch, run, empty: bool = False):
+def _both_placements(run, empty: bool = False):
     """(driver rows, distributed rows) of `run()`, a frame the caller
     releases. Only the distributed plan of a non-empty table shuffles."""
     out = []
-    for bound in (M.DRIVER_TABLE_MEMBERS, 0):
-        monkeypatch.setattr(M, "DRIVER_TABLE_MEMBERS", bound)
-        df = run()
+    for forced in (False, True):
+        with placement.distributed("community_table") if forced else nullcontext():
+            df = run()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert ("Exchange" in plan) == (bound == 0 and not empty), plan
+        assert ("Exchange" in plan) == (forced and not empty), plan
         out.append(df.collect())
         _release_checkpoint(df)
     return out
 
 
 @pytest.mark.parametrize("int_labels", [False, True], ids=["string", "int"])
-def test_driver_table_matches_distributed(spark, monkeypatch, int_labels):
+def test_driver_table_matches_distributed(spark, int_labels):
     edges, labels, emb = _degenerate(spark, int_labels)
     driver, distributed = _both_placements(
-        monkeypatch, lambda: _mint_and_metrics(edges, labels, emb, "k")
+        lambda: _mint_and_metrics(edges, labels, emb, "k")
     )
     assert driver == distributed
     by_label = {r["label"]: r for r in driver}
@@ -109,24 +111,49 @@ def test_driver_table_matches_distributed(spark, monkeypatch, int_labels):
     assert d["variance"] == 0.5 and a["variance"] == 0.0
 
 
-def test_empty_member_edges_give_the_empty_table(spark, monkeypatch):
+def test_empty_member_edges_give_the_empty_table(spark):
     edges, labels, emb = _degenerate(spark, False)
     lonely = edges.where(F.col("u2") == "nv")
     driver, distributed = _both_placements(
-        monkeypatch, lambda: M.community_table(lonely, labels, emb), empty=True
+        lambda: M.community_table(lonely, labels, emb), empty=True
     )
     assert driver == distributed == []
 
 
-# Every bound a step of the analysis chains checks; all 0 runs each
-# step distributed.
-_BOUNDS = [
-    (M, "DRIVER_TABLE_MEMBERS"),
-    (G, "LOCAL_TRAVERSAL_EDGE_LIMIT"),
-    (G, "LOCAL_GRAPH_EDGE_LIMIT"),
-    (H, "KNN_TILE_ROWS"),
-    (H, "CONTRACT_MIN_FOREST_EDGES"),
-]
+def test_member_edges_bound_the_driver_table(spark, monkeypatch):
+    """Few members with many edges between them: under a 1 MiB budget
+    the 3 members fit the pull (4 would) and their 5000 edges do not
+    (4096 would), so the table runs distributed, with the rows the
+    driver gives at the session's budget."""
+    labels = spark.createDataFrame(
+        [("a", "A"), ("b", "A"), ("c", "B")], "node string, label string"
+    )
+    emb = spark.createDataFrame(
+        [("a", E1), ("b", E2), ("c", DIAG)], "node string, vector array<float>"
+    )
+    edges = spark.range(5000).select(
+        F.when(F.col("id") % 3 == 0, "b").otherwise("a").alias("u1"),
+        F.when(F.col("id") % 2 == 0, "c").otherwise("b").alias("u2"),
+    )
+    on_driver = M.community_table(edges, labels, emb)
+    assert driver_table(on_driver) is not None
+    monkeypatch.setattr(spark.sparkContext, "_driver_budget", 1 << 20)
+    out = M.community_table(edges, labels, emb)
+    assert driver_table(out) is None
+    assert out.collect() == on_driver.collect()
+    _release_checkpoint(out)
+
+
+# The placement kernel of every step of the analysis chains, and the
+# chain each step belongs to (both chains end in the metrics table).
+_STEPS = {
+    "community_table": "both",
+    "connected_components": "cc",
+    "fastrp": "hdbscan",
+    "knn": "hdbscan",
+    "kruskal": "hdbscan",
+    "condense": "hdbscan",
+}
 SF01 = os.path.join(os.path.dirname(SF_ORACLE), "sf0.1")
 
 
@@ -228,10 +255,8 @@ def _one_pull_matches_distributed(spark, monkeypatch, query, sf) -> list:
     labels to `_mint_and_metrics` (perfbench's SCD-2 tap). Returns the
     rows."""
     one, one_rows, one_labels, one_pull = _run_chain(spark, monkeypatch, query, sf)
-    with monkeypatch.context() as mp:
-        for mod, name in _BOUNDS:
-            mp.setattr(mod, name, 0)
-        dist, dist_rows, dist_labels, still = _run_chain(spark, mp, query, sf)
+    with placement.distributed():
+        dist, dist_rows, dist_labels, still = _run_chain(spark, monkeypatch, query, sf)
     assert one_pull and not still
     assert one_rows == dist_rows
     assert_same_schema(one, dist)
@@ -265,12 +290,13 @@ class _Stop(Exception):
     pass
 
 
-_DECLINES = [
-    *(f"{mod.__name__.rsplit('.', 1)[1]}.{name}" for mod, name in _BOUNDS),
-    "localgraph.fastrp_local",
-    "hdbscan.round_half_up",
-    "metrics._member_vectors",
-]
+# each step forced distributed, or each kernel declining
+_DECLINES = {
+    **_STEPS,
+    "localgraph.fastrp_local": "hdbscan",
+    "hdbscan.round_half_up": "hdbscan",
+    "metrics._member_vectors": "both",
+}
 
 
 @pytest.mark.parametrize("decline", _DECLINES)
@@ -278,16 +304,15 @@ _DECLINES = [
     "query", [q_analysis_run_metrics, q_analysis_run_hdbscan], ids=["cc", "hdbscan"]
 )
 def test_one_pull_declines_with_any_step(spark, monkeypatch, query, decline):
-    """Forcing any one bound the chain's steps check to 0, or any
-    kernel to decline, sends the chain to its step-by-step path; bounds
-    and kernels of the other chain leave the one-pull placement on."""
+    """Forcing any one of the chain's steps distributed, or any kernel
+    to decline, sends the chain to its step-by-step path; steps and
+    kernels of the other chain leave the one-pull placement on."""
     import echo_chambers_detection_spark.operators.localgraph as L
 
-    mod, name = decline.split(".")
-    target = {"metrics": M, "graph": G, "hdbscan": H, "localgraph": L}[mod]
-    monkeypatch.setattr(
-        target, name, 0 if name.isupper() else (lambda *a, **kw: None)
-    )
+    if "." in decline:
+        mod, name = decline.split(".")
+        target = {"metrics": M, "hdbscan": H, "localgraph": L}[mod]
+        monkeypatch.setattr(target, name, lambda *a, **kw: None)
     seen = []
     on_driver = CM._on_driver
 
@@ -297,17 +322,14 @@ def test_one_pull_declines_with_any_step(spark, monkeypatch, query, decline):
         raise _Stop
 
     monkeypatch.setattr(CM, "_on_driver", spy)
-    with pytest.raises(_Stop):
+    forced = nullcontext() if "." in decline else placement.distributed(decline)
+    with forced, pytest.raises(_Stop):
         query(spark, SF_ORACLE)
-    hdbscan_only = {
-        "hdbscan.KNN_TILE_ROWS", "hdbscan.CONTRACT_MIN_FOREST_EDGES",
-        "localgraph.fastrp_local", "hdbscan.round_half_up",
-    }
-    declined = query is q_analysis_run_hdbscan or decline not in hdbscan_only
-    assert (seen[0] is None) == declined
+    chain = "cc" if query is q_analysis_run_metrics else "hdbscan"
+    assert (seen[0] is None) == (_DECLINES[decline] in ("both", chain))
 
 
-def test_distributed_tail_leaves_no_failed_job(spark, monkeypatch):
+def test_distributed_tail_leaves_no_failed_job(spark):
     """The CC chain at sf0.1 hands the metrics tail an empty member
     edge list. The caller frees the result as soon as it is collected;
     a plan stage still reading the tail's checkpoints then would fail
@@ -315,7 +337,6 @@ def test_distributed_tail_leaves_no_failed_job(spark, monkeypatch):
     from echo_chambers_detection_spark.catalog.graph import _post_graph
     from echo_chambers_detection_spark.catalog.metrics import _emb_nodes
 
-    monkeypatch.setattr(M, "DRIVER_TABLE_MEMBERS", 0)
     sf = os.path.join(os.path.dirname(SF_ORACLE), "sf0.1")
     sc = spark.sparkContext
     st = sc.statusTracker()
@@ -339,7 +360,8 @@ def test_distributed_tail_leaves_no_failed_job(spark, monkeypatch):
         group = f"metrics-tail-{i}"
         sc.setJobGroup(group, group)
         try:
-            out = _mint_and_metrics(strong, labels, _emb_nodes(spark, sf), "k")
+            with placement.distributed("community_table"):
+                out = _mint_and_metrics(strong, labels, _emb_nodes(spark, sf), "k")
             out.collect()
             _release_checkpoint(out)
         finally:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 import echo_chambers_detection_spark.operators.graph as G
+from echo_chambers_detection_spark import placement
 
 
 def _chain(spark):
@@ -46,9 +47,9 @@ def test_landmark_closeness_closed_form(spark):
     assert got == _EXPECT
 
 
-def test_landmark_closeness_distributed_parity(spark, monkeypatch):
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    got = _rows(G.landmark_closeness(_chain(spark), n_landmarks=3))
+def test_landmark_closeness_distributed_parity(spark):
+    with placement.distributed():
+        got = _rows(G.landmark_closeness(_chain(spark), n_landmarks=3))
     assert got == _EXPECT
 
 
@@ -91,22 +92,22 @@ _BC_EXPECT = {
 
 
 @pytest.mark.parametrize("name", ["path", "star", "c4"])
-def test_betweenness_closed_form_and_parity(spark, monkeypatch, name):
+def test_betweenness_closed_form_and_parity(spark, name):
     edges = _fixture(spark, name)
     local = {
         r["node"]: r["betweenness"]
         for r in G.brandes_betweenness(edges, n_sources=4).collect()
     }
     assert local == _BC_EXPECT[name]
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    dist = {
-        r["node"]: r["betweenness"]
-        for r in G.brandes_betweenness(edges, n_sources=4).collect()
-    }
+    with placement.distributed():
+        dist = {
+            r["node"]: r["betweenness"]
+            for r in G.brandes_betweenness(edges, n_sources=4).collect()
+        }
     assert dist == _BC_EXPECT[name]  # dyadic arithmetic: exact equality
 
 
-def test_path_counts_closed_form_and_parity(spark, monkeypatch):
+def test_path_counts_closed_form_and_parity(spark):
     edges = _fixture(spark, "c4")
     expect = set()
     for s, opp in (("a", "c"), ("b", "d"), ("c", "a"), ("d", "b")):
@@ -120,11 +121,11 @@ def test_path_counts_closed_form_and_parity(spark, monkeypatch):
         for r in G.shortest_path_counts(edges, n_sources=4).collect()
     }
     assert local == expect
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    dist = {
-        (r["seed"], r["node"], r["dist"], r["sigma"])
-        for r in G.shortest_path_counts(edges, n_sources=4).collect()
-    }
+    with placement.distributed():
+        dist = {
+            (r["seed"], r["node"], r["dist"], r["sigma"])
+            for r in G.shortest_path_counts(edges, n_sources=4).collect()
+        }
     assert dist == expect
 
 
@@ -196,7 +197,7 @@ def test_walk_skipgram_pairs_closed_form(spark):
     }
 
 
-def test_bellman_ford_landmark_closed_form_and_parity(spark, monkeypatch):
+def test_bellman_ford_landmark_closed_form_and_parity(spark):
     """Weighted chain a -5- b -1- c -3- d, landmarks a,b,c (3 smallest):
     k-hop min costs are closed-form; mirror and distributed must agree
     exactly (integer arithmetic)."""
@@ -214,8 +215,8 @@ def test_bellman_ford_landmark_closed_form_and_parity(spark, monkeypatch):
     }
     local = rows(G.bellman_ford_landmark(edges, n_landmarks=3, k=5))
     assert local == expect
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    dist = rows(G.bellman_ford_landmark(edges, n_landmarks=3, k=5))
+    with placement.distributed():
+        dist = rows(G.bellman_ford_landmark(edges, n_landmarks=3, k=5))
     assert dist == expect
 
 

@@ -4,8 +4,7 @@
 barrier that reappears) changes the job count; a slow shared host does
 not. The loop pins carry 3 jobs of headroom over the measured counts:
 one extra job per round must fail them, which a 30% bound absorbs. The
-density-LSH, simhash and triangle pins (no `_generations` loop) keep
-~30%.
+simhash and triangle pins (no `_generations` loop) keep ~30%.
 
 Counts come from the DAG scheduler's job counter (`_jobs_so_far`), which
 the status store's 100-job retention cannot clip. Every "(was N)" below
@@ -13,9 +12,11 @@ was measured with it (local[4], shuffle=8)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import echo_chambers_detection_spark.operators.graph as G
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.operators.planted import (
     planted_arc_embeddings,
     planted_partition_edges,
@@ -39,6 +40,13 @@ def _sweep_pinned(spark) -> None:
             jrdd.unpersist(False)
 
 
+@pytest.fixture
+def distributed():
+    """Every driver mirror off, so the distributed loops run."""
+    with placement.distributed():
+        yield
+
+
 def _count_jobs(spark, fn):
     j0 = _jobs_so_far(spark)
     fn()
@@ -60,17 +68,19 @@ def test_job_counter_sees_past_status_store(spark):
 def test_density_lsh_job_count(spark):
     """BENCH_r09's density_clusters_lsh 3.1x wall swing had no plan
     change behind it — this pin makes that checkable: LSH candidate
-    generation + rerank + CC must stay a bounded-job pipeline."""
+    generation + rerank + CC must stay a bounded-job pipeline. The CC
+    runs its distributed loop, so an extra job per round fails it."""
     emb = planted_arc_embeddings(spark, 5, 50).localCheckpoint(eager=True)
-    n = _count_jobs(
-        spark,
-        lambda: G.density_cluster(
-            emb, min_sim=0.6, min_pts=2, use_lsh=True,
-            lsh_num_planes=16, lsh_band_bits=4, dim=2,
-        ).count(),
-    )
+    with placement.distributed("connected_components"):
+        n = _count_jobs(
+            spark,
+            lambda: G.density_cluster(
+                emb, min_sim=0.6, min_pts=2, use_lsh=True,
+                lsh_num_planes=16, lsh_band_bits=4, dim=2,
+            ).count(),
+        )
     emb.unpersist()
-    assert n <= 29, f"density_cluster(use_lsh) grew to {n} jobs (was 22)"
+    assert n <= 45, f"density_cluster(use_lsh) grew to {n} jobs (was 42)"
 
 
 def test_simhash64_banded_job_count(spark):
@@ -95,8 +105,7 @@ def test_simhash64_banded_job_count(spark):
     assert n <= 10, f"simhash64 banded pairs grew to {n} jobs (was 7)"
 
 
-def test_louvain_distributed_job_count(spark, monkeypatch):
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
+def test_louvain_distributed_job_count(spark, distributed):
     e = planted_partition_edges(spark, 4, 60, 5, bridges=True, partitions=4)
     n = _count_jobs(
         spark, lambda: G.louvain(e, max_levels=2, max_rounds=2).count()
@@ -115,8 +124,7 @@ def test_lpa_job_count(spark):
     assert n <= 40, f"label propagation grew to {n} jobs (was 37)"
 
 
-def test_leiden_distributed_job_count(spark, monkeypatch):
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
+def test_leiden_distributed_job_count(spark, distributed):
     e = planted_partition_edges(spark, 4, 60, 5, bridges=True, partitions=4)
     n = _count_jobs(
         spark, lambda: G.leiden(e, max_levels=2, max_rounds=2).count()
@@ -124,13 +132,12 @@ def test_leiden_distributed_job_count(spark, monkeypatch):
     assert n <= 137, f"distributed leiden grew to {n} jobs (was 134)"
 
 
-def test_contract_and_two_level_job_counts(spark, monkeypatch):
+def test_contract_and_two_level_job_counts(spark, distributed):
     """Round-10 pins for the condense chain's distributed half: the
     caterpillar contraction must stay ONE absorbing round + exact-exit
     arithmetic (no pointer-jump joins, no post-round degree rebuild),
     and the two-level condense one CC pass + one cogroup. The CC runs
     distributed (its driver mirror takes 57 jobs in all)."""
-    _forced_distributed(monkeypatch)
     from echo_chambers_detection_spark.operators.hdbscan import (
         condense_two_level,
         contract_runt_fringes,
@@ -166,13 +173,12 @@ def test_contract_and_two_level_job_counts(spark, monkeypatch):
     assert n_two <= 78, f"condense_two_level grew to {n_two} jobs (was 75)"
 
 
-def test_ktruss_job_count(spark, monkeypatch):
+def test_ktruss_job_count(spark, distributed):
     """The incremental k-truss (triangles enumerated once, support
     maintained by anti-joins) is the last heavy bench family without a
     host-noise-immune pin: an extra per-round pass or a lost
     incremental shortcut shows up here, a slow host does not. The
     traversal mirror is disabled so the distributed loop is what runs."""
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
     from echo_chambers_detection_spark.operators.triangles import (
         ktruss_edges,
     )
@@ -184,12 +190,11 @@ def test_ktruss_job_count(spark, monkeypatch):
     assert n <= 35, f"incremental k-truss grew to {n} jobs (was 32)"
 
 
-def test_triangle_counts_job_count(spark, monkeypatch):
+def test_triangle_counts_job_count(spark, distributed):
     """Triangle enumeration is one oriented wedge + closure join
     pipeline — a bounded-job pass, no loop (the traversal mirror is
     disabled so that pipeline is what runs); the bench row's wall
     swings with the host, this cannot."""
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
     from echo_chambers_detection_spark.operators.triangles import (
         triangle_counts,
     )
@@ -201,11 +206,10 @@ def test_triangle_counts_job_count(spark, monkeypatch):
     assert n <= 6, f"triangle_counts grew to {n} jobs (was 4)"
 
 
-def test_brandes_distributed_job_count(spark, monkeypatch):
+def test_brandes_distributed_job_count(spark, distributed):
     """Forward sigma loop + ONE DAG join + level-by-level backward aggs:
     an extra per-level pass (e.g. losing the materialized DAG and
     re-joining state every round) roughly doubles this."""
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
     e = planted_partition_edges(
         spark, 4, 60, 5, bridges=True, partitions=4
     ).localCheckpoint(eager=True)
@@ -219,14 +223,9 @@ def test_brandes_distributed_job_count(spark, monkeypatch):
     assert n <= 91, f"distributed brandes grew to {n} jobs (was 88)"
 
 
-# Pins for the checkpoint-generation loops, with both driver mirrors
+# Pins for the checkpoint-generation loops, with the driver mirrors
 # disabled so the distributed loops run. The counts were identical at
 # local[2], local[4] and local[8].
-
-
-def _forced_distributed(monkeypatch):
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
 
 
 def _planted_leaf(spark):
@@ -235,8 +234,7 @@ def _planted_leaf(spark):
     ).localCheckpoint(eager=True)
 
 
-def test_connected_components_distributed_job_count(spark, monkeypatch):
-    _forced_distributed(monkeypatch)
+def test_connected_components_distributed_job_count(spark, distributed):
     e = _planted_leaf(spark)
     n = _count_jobs(
         spark, lambda: G.connected_components(e.select("u1", "u2")).count()
@@ -245,16 +243,14 @@ def test_connected_components_distributed_job_count(spark, monkeypatch):
     assert n <= 36, f"distributed connected_components grew to {n} jobs (was 33)"
 
 
-def test_kcore_distributed_job_count(spark, monkeypatch):
-    _forced_distributed(monkeypatch)
+def test_kcore_distributed_job_count(spark, distributed):
     e = _planted_leaf(spark)
     n = _count_jobs(spark, lambda: G.kcore(e.select("u1", "u2")).count())
     e.unpersist()
     assert n <= 41, f"distributed kcore grew to {n} jobs (was 38)"
 
 
-def test_bfs_landmark_distributed_job_count(spark, monkeypatch):
-    _forced_distributed(monkeypatch)
+def test_bfs_landmark_distributed_job_count(spark, distributed):
     e = _planted_leaf(spark)
     n = _count_jobs(
         spark,
@@ -266,8 +262,7 @@ def test_bfs_landmark_distributed_job_count(spark, monkeypatch):
     assert n <= 61, f"distributed landmark BFS grew to {n} jobs (was 58)"
 
 
-def test_bellman_ford_khop_distributed_job_count(spark, monkeypatch):
-    _forced_distributed(monkeypatch)
+def test_bellman_ford_khop_distributed_job_count(spark, distributed):
     e = _planted_leaf(spark)
     n = _count_jobs(
         spark, lambda: G.bellman_ford_khop(e, k=8).count()
@@ -276,8 +271,7 @@ def test_bellman_ford_khop_distributed_job_count(spark, monkeypatch):
     assert n <= 54, f"distributed bellman_ford_khop grew to {n} jobs (was 51)"
 
 
-def test_pagerank_tol_distributed_job_count(spark, monkeypatch):
-    _forced_distributed(monkeypatch)
+def test_pagerank_tol_distributed_job_count(spark, distributed):
     e = _planted_leaf(spark)
     n = _count_jobs(
         spark,
@@ -287,10 +281,9 @@ def test_pagerank_tol_distributed_job_count(spark, monkeypatch):
     assert n <= 76, f"distributed pagerank(tol>0) grew to {n} jobs (was 73)"
 
 
-def test_fastrp_distributed_job_count(spark, monkeypatch):
+def test_fastrp_distributed_job_count(spark, distributed):
     """Five propagation rounds of the distributed FastRP loop, so one
     extra job per round exceeds the headroom."""
-    _forced_distributed(monkeypatch)
     e = _planted_leaf(spark)
     n = _count_jobs(
         spark,
@@ -302,8 +295,7 @@ def test_fastrp_distributed_job_count(spark, monkeypatch):
     assert n <= 44, f"distributed fastrp grew to {n} jobs (was 41)"
 
 
-def test_modularity_optimization_distributed_job_count(spark, monkeypatch):
-    _forced_distributed(monkeypatch)
+def test_modularity_optimization_distributed_job_count(spark, distributed):
     e = _planted_leaf(spark)
     n = _count_jobs(
         spark, lambda: G.modularity_optimization(e, max_rounds=4).count()
@@ -312,7 +304,7 @@ def test_modularity_optimization_distributed_job_count(spark, monkeypatch):
     assert n <= 54, f"distributed modularity_optimization grew to {n} jobs (was 51)"
 
 
-def test_minimum_spanning_forest_distributed_job_count(spark, monkeypatch):
+def test_minimum_spanning_forest_distributed_job_count(spark, distributed):
     """Borůvka with the contraction's connected components distributed
     too: every round pays a CC loop, so this is the heaviest pin. Runs
     of the same code read 265-268 jobs, so the bound is the highest
@@ -321,7 +313,6 @@ def test_minimum_spanning_forest_distributed_job_count(spark, monkeypatch):
         minimum_spanning_forest,
     )
 
-    _forced_distributed(monkeypatch)
     e = _planted_leaf(spark)
     w = (F.abs(F.xxhash64("u1", "u2")) % 997 + 1).cast("double")
     n = _count_jobs(
@@ -336,22 +327,11 @@ def test_minimum_spanning_forest_distributed_job_count(spark, monkeypatch):
 # step's bound each chain runs from one Arrow pull of the post graph
 # (catalog.metrics._on_driver): 5 projection jobs, 5 for the pull, the
 # embeddings' schema read and the member pull. The forced-distributed
-# pins set every bound the chains' steps check to 0. Bounds sit 3 above
-# the measured counts.
+# pins run every step distributed. Bounds sit 3 above the measured
+# counts.
 
 def _analysis_jobs(spark, query) -> int:
     return _count_jobs(spark, lambda: query(spark, SF_ORACLE).collect())
-
-
-def _force_press_distributed(monkeypatch) -> None:
-    import echo_chambers_detection_spark.operators.hdbscan as H
-    import echo_chambers_detection_spark.operators.metrics as M
-
-    monkeypatch.setattr(M, "DRIVER_TABLE_MEMBERS", 0)
-    monkeypatch.setattr(H, "KNN_TILE_ROWS", 0)
-    monkeypatch.setattr(H, "CONTRACT_MIN_FOREST_EDGES", 0)
-    monkeypatch.setattr(G, "LOCAL_TRAVERSAL_EDGE_LIMIT", 0)
-    monkeypatch.setattr(G, "LOCAL_GRAPH_EDGE_LIMIT", 0)
 
 
 def test_analysis_run_metrics_job_count(spark):
@@ -372,21 +352,19 @@ def test_analysis_run_hdbscan_job_count(spark):
     assert n <= 15, f"analysis_run_hdbscan grew to {n} jobs (was 12)"
 
 
-def test_analysis_run_metrics_distributed_job_count(spark, monkeypatch):
+def test_analysis_run_metrics_distributed_job_count(spark, distributed):
     from echo_chambers_detection_spark.catalog.metrics import (
         q_analysis_run_metrics,
     )
 
-    _force_press_distributed(monkeypatch)
     n = _analysis_jobs(spark, q_analysis_run_metrics)
     assert n <= 99, f"distributed analysis_run_metrics grew to {n} jobs (was 96)"
 
 
-def test_analysis_run_hdbscan_distributed_job_count(spark, monkeypatch):
+def test_analysis_run_hdbscan_distributed_job_count(spark, distributed):
     from echo_chambers_detection_spark.catalog.metrics import (
         q_analysis_run_hdbscan,
     )
 
-    _force_press_distributed(monkeypatch)
     n = _analysis_jobs(spark, q_analysis_run_hdbscan)
     assert n <= 271, f"distributed analysis_run_hdbscan grew to {n} jobs (was 268)"

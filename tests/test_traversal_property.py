@@ -94,7 +94,7 @@ def model_khop_cost(edges, seed, k):
 def test_traversal_matches_models(spark, edges, bound):
     """DISTRIBUTED loop vs the models (the local mirror is forced off;
     tiny graphs would otherwise always take it)."""
-    import echo_chambers_detection_spark.operators.graph as G
+    from echo_chambers_detection_spark import placement
     from echo_chambers_detection_spark.operators.graph import (
         bellman_ford_khop,
         bfs_distances,
@@ -103,9 +103,7 @@ def test_traversal_matches_models(spark, edges, bound):
     df = spark.createDataFrame(edges, "u1 string, u2 string, weight long")
     seed = min({u for u, _, _ in edges} | {v for _, v, _ in edges})
 
-    saved = G.LOCAL_TRAVERSAL_EDGE_LIMIT
-    G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
-    try:
+    with placement.distributed():
         got_bfs = {
             r["node"]: r["dist"]
             for r in bfs_distances(df, max_iter=bound).collect()
@@ -114,8 +112,6 @@ def test_traversal_matches_models(spark, edges, bound):
             r["node"]: r["cost"]
             for r in bellman_ford_khop(df, k=bound).collect()
         }
-    finally:
-        G.LOCAL_TRAVERSAL_EDGE_LIMIT = saved
     assert got_bfs == model_bfs(edges, seed, bound)
     assert got_cost == model_khop_cost(edges, seed, bound)
 
@@ -253,7 +249,7 @@ def test_betweenness_distributed_matches_rational_model(
 ):
     """The distributed forward/DAG/backward legs vs the same model
     (mirror forced off) — fewer examples, each costs real Spark jobs."""
-    import echo_chambers_detection_spark.operators.graph as G
+    from echo_chambers_detection_spark import placement
     from echo_chambers_detection_spark.operators.graph import (
         brandes_betweenness,
     )
@@ -261,17 +257,13 @@ def test_betweenness_distributed_matches_rational_model(
     df = spark.createDataFrame(edges, "u1 string, u2 string, weight long")
     nodes = sorted({u for u, _, _ in edges} | {v for _, v, _ in edges})
     want = model_betweenness(edges, nodes[:n_sources], 6)
-    saved = G.LOCAL_TRAVERSAL_EDGE_LIMIT
-    G.LOCAL_TRAVERSAL_EDGE_LIMIT = 0
-    try:
+    with placement.distributed():
         got = {
             r["node"]: r["betweenness"]
             for r in brandes_betweenness(
                 df, n_sources=n_sources, max_iter=6
             ).collect()
         }
-    finally:
-        G.LOCAL_TRAVERSAL_EDGE_LIMIT = saved
     assert set(got) == set(want)
     for v in want:
         assert abs(got[v] - float(want[v])) < 1e-9, (
