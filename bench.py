@@ -192,6 +192,7 @@ def _cpu_scaling_probe(spark, timings: dict) -> None:
         )
 
 
+@placement.distributed("ivf")
 def _semantic_dedup_scale_probe(spark, timings: dict) -> None:
     """SemDeDup at representative scale: 100k clustered vectors + 10k
     PLANTED exact duplicates (node i and dup_i share the identical
@@ -201,7 +202,9 @@ def _semantic_dedup_scale_probe(spark, timings: dict) -> None:
     sits far below the 0.9999 gate, so a false positive or a missed
     twin both fail the assertion. Runs the kmeans production path end
     to end (train -> assign -> per-cluster GEMM -> distributed
-    components -> keeper)."""
+    components -> keeper). The quantizer is forced distributed: the
+    110k x 16 table fits the driver budget, and this row times the
+    distributed k-means path."""
     import time
 
     from pyspark.sql import functions as F

@@ -18,11 +18,20 @@ Scale posture:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
+from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.functions.vector import (
     cosine_similarity,
     l2_normalize,
+)
+from echo_chambers_detection_spark.operators.graph import (
+    _generations,
+    _materialize,
+    _release_checkpoint,
+    carry_ckpt,
+    tracked_checkpoint,
 )
 from echo_chambers_detection_spark.session import driver_frame
 
@@ -311,11 +320,6 @@ def lsh_near_dup_pairs(
     scores the whole set, so this is for verification scale only."""
     import pandas as pd
 
-    from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
-        tracked_checkpoint,
-    )
-
     sigs = None
     if band_bits == 0:
         bands = embeddings.select(
@@ -477,7 +481,31 @@ def similarity_self_join_gemm(
 # cluster-parallel substitute: route each vector to its nearest of k
 # centroids at index time, probe only the nprobe nearest cells at query
 # time. Candidate volume drops from n to ~n·nprobe/k.
+#
+# Placement: the quantizer runs on the driver when the embedding table
+# fits the driver budget (`placement.on_driver(spark, "ivf", rows ×
+# IVF_ROW_BYTES_PER_DIM × dim)`), as the other community-sized steps do
+# (REPOSE builds its top-k index locally where the data fits): one Arrow
+# pull of one Catalyst projection, whose seed hash md5(id) and sampling
+# hash xxhash64(id) are Spark's own, then l2_normalize's arithmetic
+# (`_l2_normalize_np`), Lloyd and the final assignment in numpy
+# (`_lloyd_np`), through the argmax kernel the distributed mapInPandas
+# passes run (`_nearest_cell`). Larger tables, the kernel forced
+# distributed, and null, ragged or empty inputs take the distributed
+# path, so does a vector type numpy cannot cast as Spark does.
 # ---------------------------------------------------------------------------
+
+# `_training_subset`'s hash gate: a row trains when pmod(xxhash64(id),
+# _TRAIN_GATE) falls under the keep threshold.
+_TRAIN_GATE = 1_000_000
+
+
+def _train_keep(n: int, cap: int) -> int | None:
+    """The hash-gate threshold that samples ~`cap` of `n` rows, or None
+    when every row trains."""
+    if cap <= 0 or n <= cap:
+        return None
+    return max(1, int(round(cap / n * _TRAIN_GATE)))
 
 
 def _training_subset(norm: DataFrame, cap: int) -> tuple[DataFrame, bool]:
@@ -490,21 +518,121 @@ def _training_subset(norm: DataFrame, cap: int) -> tuple[DataFrame, bool]:
     would change membership whenever the upstream leaf repartitions),
     sized to land ~cap rows. Returns (train frame, was_sampled); the
     train frame is checkpointed when sampled (it is scanned 2·iters
-    times) and the caller releases it after the Lloyd loop."""
-    from echo_chambers_detection_spark.operators.graph import _materialize
-
-    n = norm.count()
-    if cap <= 0 or n <= cap:
+    times) and owned by the caller."""
+    keep = _train_keep(norm.count(), cap)
+    if keep is None:
         return norm, False
-    gate = 1_000_000
-    keep = max(1, int(round(cap / n * gate)))
     train = _materialize(
         norm.where(
-            F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(gate))
+            F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(_TRAIN_GATE))
             < keep
         )
     )
     return train, True
+
+
+def _nearest_cell(X, C):
+    """For each row of `X`, the index of its highest-scoring centroid in
+    `C` (normalized rows, so the largest dot product is the nearest
+    cell): the assignment kernel of both IVF placements."""
+    import numpy as np
+
+    return np.argmax(X @ C.T, axis=1).astype("int32")
+
+
+def _l2_normalize_np(X):
+    """`functions.vector.l2_normalize` of the rows of `X` (float64), bit
+    for bit: the squares summed left to right from 0.0, the square
+    root, then x / norm where the norm is > 0 and x unchanged elsewhere
+    (zero and NaN norms). In the pull, Spark's higher-order
+    `transform`/`aggregate` cost about 2.5 CPU-s in a cold JVM (4000 x
+    64 rows, 4-core VM)."""
+    import numpy as np
+
+    sq = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        sq = sq + X[:, j] * X[:, j]
+    norm = np.sqrt(sq)[:, None]
+    return np.divide(X, norm, out=X.copy(), where=norm > 0)
+
+
+def _lloyd_np(X, by_hash, gate, k: int, iters: int, cap: int):
+    """`ivf_index`'s quantizer over the driver-side table: normalized
+    vectors `X` (n × d), the row indices in md5(id) order `by_hash` and
+    each row's training-gate hash `gate`. Seeds, sample and rounds as
+    the distributed path computes them: the k training rows with the
+    smallest md5(id), Lloyd means summed in row order (a partition's
+    order), empty cells kept. Returns (cells int32 [n], centroids)."""
+    import numpy as np
+
+    keep = _train_keep(len(X), cap)
+    if keep is None:
+        train, seeds = X, by_hash[:k]
+    else:
+        train, seeds = X[gate < keep], by_hash[gate[by_hash] < keep][:k]
+    cent = X[seeds]
+    for _ in range(iters):
+        cl = _nearest_cell(train, cent)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, cl, train)
+        counts = np.bincount(cl, minlength=len(cent))
+        for c in np.flatnonzero(counts):
+            v = sums[c] / counts[c]
+            n = np.linalg.norm(v)
+            if n > 0:
+                cent[c] = v / n
+    return _nearest_cell(X, cent), cent
+
+
+def _ivf_on_driver(embeddings, k, iters, id_col, vec_col, cap):
+    """`ivf_index` on the driver, or None when it declines (module
+    comment): the row count probed by the pull itself, `limit` of the
+    bound plus one, so no count job runs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spark = embeddings.sparkSession
+    if not placement.on_driver(spark, "ivf", 0):
+        return None
+    first = embeddings.select(F.size(vec_col).alias("d")).first()
+    dim = None if first is None else first["d"]
+    if dim is None or dim < 1:
+        return None
+    bound = placement.max_rows(
+        spark, "ivf", placement.IVF_ROW_BYTES_PER_DIM * dim
+    )
+    sid = F.col(id_col).cast("string")
+    tbl = embeddings.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_vec"),
+        F.md5(sid).alias("_h"),
+        F.pmod(F.xxhash64(sid), F.lit(_TRAIN_GATE)).alias("_g"),
+    ).limit(bound + 1).toArrow()
+    vec = tbl.column("_vec")
+    kind = vec.type.value_type
+    flat = pc.list_flatten(vec)
+    if (
+        not (pa.types.is_floating(kind) or pa.types.is_integer(kind))
+        or not 0 < tbl.num_rows <= bound
+        or tbl.column("_id").null_count
+        or vec.null_count
+        or flat.null_count
+        or pc.min_max(pc.list_value_length(vec)).as_py() != {"min": dim, "max": dim}
+    ):
+        return None
+    X = flat.to_numpy().astype("float64", copy=False).reshape(-1, dim)
+    cells, cent = _lloyd_np(
+        _l2_normalize_np(X),
+        pc.sort_indices(tbl.column("_h")).to_numpy(),  # a stable sort
+        tbl.column("_g").to_numpy(),
+        k, iters, cap,
+    )
+    schema = StructType([
+        StructField(id_col, embeddings.schema[id_col].dataType),
+        StructField("cluster", IntegerType()),
+    ])
+    out = pa.table({"_id": tbl.column("_id"), "cluster": cells})
+    return driver_frame(spark, out, schema), cent
 
 
 def ivf_index(
@@ -518,12 +646,21 @@ def ivf_index(
     """Deterministic IVF coarse quantizer.
 
     Init: the k vectors with the smallest md5(id) (hash-spread, seedless,
-    reproducible). Then `iters` Lloyd rounds: assignment is an
-    Arrow-batched mapInPandas argmax against the broadcast (k x d)
-    centroid matrix (one GEMM per batch); the centroid update is a
-    JVM-side exploded (cluster, dim) mean. Driver state is the k x d
-    centroid matrix itself (a few KB) — loop-control scale, like the
-    round counters in the graph loops, never row data.
+    reproducible). Then `iters` Lloyd rounds: assignment is an argmax
+    against the (k x d) centroid matrix (`_nearest_cell`, one GEMM per
+    batch); the centroid update is the per-cell mean, renormalized, and
+    a cell with no members keeps its centroid.
+
+    Placement (module comment): when `placement` gives the "ivf" kernel
+    the embedding table (rows × IVF_ROW_BYTES_PER_DIM × dim bytes), the
+    whole build is one Arrow pull and numpy on the driver, and the
+    assignments come back as a driver frame with nothing to release.
+    Otherwise it runs distributed: assignment is an Arrow-batched
+    mapInPandas pass against the broadcast centroids and the update a
+    JVM-side exploded (cluster, dim) mean, with driver state the k x d
+    centroid matrix alone; the build's checkpoint rides on the returned
+    frame, which the persisted-index builders free after their write.
+    Both placements give the same cells and centroids.
 
     Training runs on a hash-gated subset of ~`train_cap` vectors
     (default 256·k; pass 0 to force full-data training) and the final
@@ -537,111 +674,76 @@ def ivf_index(
     import numpy as np
     import pandas as pd
 
-    from echo_chambers_detection_spark.operators.graph import _materialize
+    cap = 256 * k if train_cap is None else train_cap
+    local = _ivf_on_driver(embeddings, k, iters, id_col, vec_col, cap)
+    if local is not None:
+        return local
 
     spark = embeddings.sparkSession
-    # one leaf for the whole build: every Lloyd round scans norm for the
-    # assignment AND the centroid update, and the caller's plan may be
-    # arbitrarily expensive (FastRP in the HDBSCAN chain) — without the
-    # checkpoint each of the 2·iters+1 passes re-executes it. The ckpt
-    # ids ride on the returned assignments frame so the persisted-index
-    # builders can free the blocks once the parquet write lands
-    # (ADVICE r4: build checkpoints accumulated in long sessions).
-    norm = _materialize(
-        embeddings.select(
-            F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_vec")
+
+    def assign(c: np.ndarray, over: DataFrame, col: str) -> DataFrame:
+        # col "_id" gives the assignments; col "_vec" carries the vector
+        # through the kernel for the Lloyd update, which needs only
+        # (cluster, _vec): no join back to the train frame
+        b = spark.sparkContext.broadcast(c)
+
+        def fn(batches):
+            C = b.value
+            for pdf in batches:
+                if not pdf.empty:
+                    X = np.stack(pdf["_vec"].to_numpy()).astype("float64")
+                    cl = _nearest_cell(X, C)
+                    yield pd.DataFrame({col: pdf[col], "cluster": cl})
+
+        return over.mapInPandas(
+            fn, schema=f"{col} {dict(over.dtypes)[col]}, cluster int"
         )
-    )
 
-    train, sampled = _training_subset(
-        norm, 256 * k if train_cap is None else train_cap
-    )
-
-    seed_rows = (
-        train.select("_id", "_vec", F.md5(F.col("_id").cast("string")).alias("_h"))
-        .orderBy("_h")
-        .limit(k)
-        .collect()
-    )
-    cent = np.stack([np.asarray(r["_vec"], dtype="float64") for r in seed_rows])
-
-    def assign_with(c: np.ndarray, over: DataFrame) -> DataFrame:
-        b = spark.sparkContext.broadcast(c)
-
-        def fn(batches):
-            C = b.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf["_vec"].to_numpy()).astype("float64")
-                cl = np.argmax(X @ C.T, axis=1).astype("int32")
-                yield pd.DataFrame({"_id": pdf["_id"], "cluster": cl})
-
-        id_type = dict(over.dtypes)["_id"]
-        return over.mapInPandas(fn, schema=f"_id {id_type}, cluster int")
-
-    def assign_carrying_vec(c: np.ndarray, over: DataFrame) -> DataFrame:
-        # Lloyd-update variant: the centroid mean needs (cluster, _vec)
-        # only, so carry the vector through the argmax kernel instead of
-        # joining assignments back to the train frame — one shuffle join
-        # fewer per iteration (the vectors ride the same Arrow batches
-        # the kernel already reads)
-        b = spark.sparkContext.broadcast(c)
-
-        def fn(batches):
-            C = b.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf["_vec"].to_numpy()).astype("float64")
-                cl = np.argmax(X @ C.T, axis=1).astype("int32")
-                yield pd.DataFrame({"cluster": cl, "_vec": pdf["_vec"]})
-
-        return over.mapInPandas(fn, schema="cluster int, _vec array<double>")
-
-    for _ in range(iters):
-        means = (
-            assign_carrying_vec(cent, train)
-            .select("cluster", F.posexplode("_vec").alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("mx"))
+    with _generations() as g:
+        # one leaf for the whole build: every Lloyd round scans norm for
+        # the assignment AND the centroid update, and the caller's plan
+        # may be arbitrarily expensive (FastRP in the HDBSCAN chain) —
+        # without the checkpoint each of the 2·iters+1 passes
+        # re-executes it
+        norm = g.keep(
+            embeddings.select(
+                F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_vec")
+            )
+        )
+        train, sampled = _training_subset(norm, cap)
+        if sampled:
+            g.adopt(train)
+        seed_rows = (
+            train.select(
+                "_id", "_vec", F.md5(F.col("_id").cast("string")).alias("_h")
+            )
+            .orderBy("_h")
+            .limit(k)
             .collect()
         )
-        new = cent.copy()
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["mx"]
-        for c, dims in by_cluster.items():
-            v = np.array([dims[i] for i in sorted(dims)], dtype="float64")
-            n = np.linalg.norm(v)
-            if n > 0:
-                new[c] = v / n
-        cent = new
-
-    if sampled:  # the Lloyd loop was the last reader of the subset
-        from echo_chambers_detection_spark.operators.graph import (
-            _release_checkpoint,
+        cent = np.stack(
+            [np.asarray(r["_vec"], dtype="float64") for r in seed_rows]
         )
-
-        _release_checkpoint(train)
-    out = assign_with(cent, norm).withColumnRenamed("_id", id_col)
-    out._ckpt_rdd_ids = getattr(norm, "_ckpt_rdd_ids", [])
-    return out, cent
-
-
-def _release_checkpoints_of(df: DataFrame) -> None:
-    """Free the build checkpoint blocks tagged on `df` (`_ckpt_rdd_ids`).
-
-    Persisted-index builders call this AFTER their parquet write — the
-    write is the last reader of the checkpointed leaf, so the blocks
-    are dead the moment it completes. Inline (non-persisted) paths keep
-    the checkpoint alive because their returned plan still reads it;
-    those blocks go with the result frame via the ContextCleaner."""
-    from echo_chambers_detection_spark.operators.graph import (
-        _release_checkpoint,
-    )
-
-    _release_checkpoint(df)
+        for _ in range(iters):
+            means = (
+                assign(cent, train, "_vec")
+                .select("cluster", F.posexplode("_vec").alias("dim", "x"))
+                .groupBy("cluster", "dim")
+                .agg(F.avg("x").alias("mx"))
+                .collect()
+            )
+            new = cent.copy()
+            by_cluster: dict[int, dict[int, float]] = {}
+            for r in means:
+                by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["mx"]
+            for c, dims in by_cluster.items():
+                v = np.array([dims[i] for i in sorted(dims)], dtype="float64")
+                n = np.linalg.norm(v)
+                if n > 0:
+                    new[c] = v / n
+            cent = new
+        out = assign(cent, norm, "_id").withColumnRenamed("_id", id_col)
+        return g.result(out, norm), cent
 
 
 # process-resident centroid matrices per persisted index dir (immutable
@@ -668,7 +770,9 @@ def ivf_index_build(
     shape of the reference's standing Qdrant collection
     (project/qdrant/consumer_post.py:42-49): the index is amortized
     infrastructure, not per-query work. Rebuild cadence is the caller's
-    ingest policy, exactly as it would be for any vector store."""
+    ingest policy, exactly as it would be for any vector store. The
+    build's checkpoint (distributed placement) is freed once the
+    assignments are written, their last reader."""
     import os
 
     assignments, cent = ivf_index(
@@ -687,7 +791,7 @@ def ivf_index_build(
     assignments.write.mode("overwrite").parquet(
         os.path.join(path, "assignments")
     )
-    _release_checkpoints_of(assignments)
+    _release_checkpoint(assignments)
     _CENTROID_CACHE.pop(("ivf", os.path.abspath(path)), None)
 
 
@@ -783,38 +887,9 @@ def pq_train(
     import numpy as np
     import pandas as pd
 
-    from echo_chambers_detection_spark.operators.graph import _materialize
-
     spark = embeddings.sparkSession
-    # same ckpt-id tagging contract as ivf_index (released by
-    # pq_index_build after its write)
-    norm = _materialize(
-        embeddings.select(
-            F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_vec")
-        )
-    )
 
-    dim = len(norm.select("_vec").first()["_vec"])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    train, sampled = _training_subset(
-        norm, 256 * k if train_cap is None else train_cap
-    )
-
-    seed_rows = (
-        train.select("_id", "_vec", F.md5(F.col("_id").cast("string")).alias("_h"))
-        .orderBy("_h")
-        .limit(k)
-        .collect()
-    )
-    seeds = np.stack([np.asarray(r["_vec"], dtype="float64") for r in seed_rows])
-    books = np.stack(
-        [seeds[:, s * dsub : (s + 1) * dsub] for s in range(m)]
-    )  # (m, k, dsub)
-
-    def assign_with(B: np.ndarray, over: DataFrame) -> DataFrame:
+    def assign_with(B: np.ndarray, over: DataFrame, dsub: int) -> DataFrame:
         b = spark.sparkContext.broadcast(B)
 
         def fn(batches):
@@ -841,42 +916,69 @@ def pq_train(
             fn, schema=f"_id {id_type}, codes array<int>"
         )
 
-    for _ in range(iters):
-        assigned = assign_with(books, train)
-        means = (
-            assigned.join(train, "_id")
-            .select(
-                F.posexplode("_vec").alias("dim", "x"), "codes"
+    with _generations() as g:
+        # one leaf for the whole build, as in ivf_index; its blocks ride
+        # on the returned codes (freed by pq_index_build after its write)
+        norm = g.keep(
+            embeddings.select(
+                F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_vec")
             )
-            .select(
-                (F.col("dim") / dsub).cast("int").alias("sub"),
-                F.pmod(F.col("dim"), F.lit(dsub)).alias("subdim"),
-                F.element_at(
-                    "codes", (F.col("dim") / dsub).cast("int") + 1
-                ).alias("cluster"),
-                "x",
+        )
+        dim = len(norm.select("_vec").first()["_vec"])
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        dsub = dim // m
+
+        train, sampled = _training_subset(
+            norm, 256 * k if train_cap is None else train_cap
+        )
+        if sampled:
+            g.adopt(train)
+
+        seed_rows = (
+            train.select(
+                "_id", "_vec", F.md5(F.col("_id").cast("string")).alias("_h")
             )
-            .groupBy("sub", "cluster", "subdim")
-            .agg(F.avg("x").alias("mx"))
+            .orderBy("_h")
+            .limit(k)
             .collect()
         )
-        new = books.copy()
-        got: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            got.setdefault((r["sub"], r["cluster"]), {})[r["subdim"]] = r["mx"]
-        for (s, c), dims in got.items():
-            new[s, c] = [dims[i] for i in sorted(dims)]
-        books = new
-
-    if sampled:
-        from echo_chambers_detection_spark.operators.graph import (
-            _release_checkpoint,
+        seeds = np.stack(
+            [np.asarray(r["_vec"], dtype="float64") for r in seed_rows]
         )
+        books = np.stack(
+            [seeds[:, s * dsub : (s + 1) * dsub] for s in range(m)]
+        )  # (m, k, dsub)
 
-        _release_checkpoint(train)
-    codes = assign_with(books, norm).withColumnRenamed("_id", id_col)
-    codes._ckpt_rdd_ids = getattr(norm, "_ckpt_rdd_ids", [])
-    return books, codes
+        for _ in range(iters):
+            assigned = assign_with(books, train, dsub)
+            means = (
+                assigned.join(train, "_id")
+                .select(
+                    F.posexplode("_vec").alias("dim", "x"), "codes"
+                )
+                .select(
+                    (F.col("dim") / dsub).cast("int").alias("sub"),
+                    F.pmod(F.col("dim"), F.lit(dsub)).alias("subdim"),
+                    F.element_at(
+                        "codes", (F.col("dim") / dsub).cast("int") + 1
+                    ).alias("cluster"),
+                    "x",
+                )
+                .groupBy("sub", "cluster", "subdim")
+                .agg(F.avg("x").alias("mx"))
+                .collect()
+            )
+            new = books.copy()
+            got: dict[tuple[int, int], dict[int, float]] = {}
+            for r in means:
+                got.setdefault((r["sub"], r["cluster"]), {})[r["subdim"]] = r["mx"]
+            for (s, c), dims in got.items():
+                new[s, c] = [dims[i] for i in sorted(dims)]
+            books = new
+
+        codes = assign_with(books, norm, dsub).withColumnRenamed("_id", id_col)
+        return books, g.result(codes, norm)
 
 
 def pq_topk(
@@ -905,8 +1007,6 @@ def pq_topk(
         embeddings, m=m, k=n_centroids, iters=iters,
         id_col=id_col, vec_col=vec_col, train_cap=train_cap,
     )
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     # codes rides the pq_train build checkpoint (norm leaf); carry it
     # so a caller-side release frees the build blocks
     return carry_ckpt(
@@ -1028,7 +1128,7 @@ def pq_index_build(
         os.path.join(path, "codebooks")
     )
     codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    _release_checkpoints_of(codes)
+    _release_checkpoint(codes)
     _CENTROID_CACHE.pop(("pq", os.path.abspath(path)), None)
 
 
@@ -1106,7 +1206,9 @@ def ivf_topk(
     qn = np.linalg.norm(qv)
     if qn > 0:
         qv = qv / qn
-    order = np.argsort(-(cent @ qv))
+    # stable, as the persisted and served probes rank: tied centroid
+    # scores resolve by cell index
+    order = np.argsort(-(cent @ qv), kind="stable")
     probe = [int(c) for c in order[:nprobe]]
 
     pruned = embeddings.join(
@@ -1114,10 +1216,9 @@ def ivf_topk(
         id_col,
         "leftsemi",
     )
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-    # assignments rides the ivf_index build checkpoint (norm leaf);
-    # carry it so a caller-side release frees the build blocks
+    # assignments rides the ivf_index build checkpoint (norm leaf, on
+    # the distributed placement); carry it so a caller-side release
+    # frees the build blocks
     return carry_ckpt(
         cosine_topk(
             pruned,

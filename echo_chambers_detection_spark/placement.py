@@ -2,12 +2,12 @@
 
 Each operator with a driver kernel (the numpy mirrors in
 operators/localgraph.py, the k-NN tiles, the HDBSCAN chain, the
-per-community metrics table) runs it only when its driver-side input
-fits one budget. The gate asks `on_driver(spark, kernel, nbytes)` with
-the bytes that input takes on the driver, from sizes it already reads:
-rows times that kernel's bytes per row. One heap-derived budget replaces
-a hand-set bound per operator, as Pregelix picks each superstep's plan
-from the data size with one optimizer.
+per-community metrics table, the IVF quantizer) runs it only when its
+driver-side input fits one budget. The gate asks `on_driver(spark,
+kernel, nbytes)` with the bytes that input takes on the driver, from
+sizes it already reads: rows times that kernel's bytes per row. One
+heap-derived budget replaces a hand-set bound per operator, as Pregelix
+picks each superstep's plan from the data size with one optimizer.
 
 The budget is DRIVER_SHARE of the smaller of the driver JVM's maximum
 heap (`Runtime.maxMemory()`: collected rows and Arrow batches land
@@ -44,8 +44,10 @@ DRIVER_SHARE = 0.25
 # input sizes, local[4], 3g heap): ~530 B per symmetrized edge row
 # (Louvain, 0.4M-1.6M rows), ~310 B per raw traversal row (BFS,
 # 0.5M-2M), ~4.9 KB per FastRP row at dim 128, ~31 B per k-NN pair at
-# 4000 rows, ~11 KB per table member. The two edge-row costs sit 2-3.5x
-# under their peaks; DRIVER_SHARE's fourfold headroom covers that.
+# 4000 rows, ~11 KB per table member, ~1.7 KB and ~4.6 KB per IVF
+# row at dim 16 and 64 (40k-160k rows; ~740 B + ~61 B per dim). The
+# two edge-row costs sit 2-3.5x under their peaks; DRIVER_SHARE's
+# fourfold headroom covers that.
 
 # A symmetrized edge row of the community and union-find mirrors (4.2M).
 EDGE_ROW_BYTES = 256
@@ -57,18 +59,22 @@ FASTRP_ROW_BYTES_PER_DIM = 128
 KNN_PAIR_BYTES = 64
 # A member of the per-community metrics table (4096 members).
 MEMBER_BYTES = 1 << 18
+# An embedding row of the IVF quantizer's pull, per dimension (131,072
+# rows at dim 64): at or above its measured peak from dim 12 up.
+IVF_ROW_BYTES_PER_DIM = 128
 
 # Every kernel a gate places. Named after its localgraph kernel, or
 # after its step: "kruskal" (`hdbscan._kruskal_local`),
 # "boruvka_contract" (Borůvka's union-find contraction), "knn" (the
 # k-NN tiles, `hdbscan._driver_tiles`), "condense" (HDBSCAN's direct
-# condense of the whole forest), "community_table" (`metrics._table_np`).
+# condense of the whole forest), "community_table" (`metrics._table_np`),
+# "ivf" (`ann._lloyd_np`, the IVF quantizer's Lloyd rounds).
 KERNELS = frozenset({
     "kcore", "connected_components", "pagerank", "louvain", "modularity",
     "leiden", "bfs", "landmark_bfs", "bellman_ford", "bellman_ford_landmark",
     "path_counts", "betweenness", "random_walks", "fastrp", "tricount",
     "transitivity", "ktruss", "kruskal", "boruvka_contract", "knn",
-    "condense", "community_table",
+    "condense", "community_table", "ivf",
 })
 
 _forced: frozenset = frozenset()

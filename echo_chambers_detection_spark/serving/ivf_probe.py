@@ -34,13 +34,17 @@ import numpy as np
 
 
 def _round_half_up6(x: float) -> float:
-    """Spark's ROUND(col, 6) on DOUBLE: BigDecimal(double) HALF_UP.
-    Python's Decimal(float) builds the same exact binary expansion, so
-    this matches Spark bit-for-bit (numpy.round is banker's — wrong at
-    the .5 boundary)."""
+    """Spark's ROUND(col, 6) on DOUBLE: HALF_UP of the double's decimal
+    string, `BigDecimal(Double.toString(d))`, not of its exact binary
+    value (5e-7 lies just below the half-step in binary, and Spark
+    rounds "5.0E-7" up to 1e-6). Python's repr is the shortest string
+    that reads back as `x`, which is the digits `Double.toString` gives
+    on the half-step grids tests/test_serving_probe.py checks. A zero
+    result is +0.0, as `BigDecimal.doubleValue` gives (numpy.round is
+    banker's — wrong at the .5 boundary)."""
     return float(
-        Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-    )
+        Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+    ) + 0.0
 
 
 class IvfProbe:

@@ -264,3 +264,218 @@ def test_pq_exhaustive_refine_equals_exact(emb, query):
         ).collect()
     ]
     assert got == exact
+
+
+def test_ivf_topk_ranks_tied_cells_stably(spark, tmp_path):
+    """Cells whose centroids tie against the query rank by cell index
+    on the inline path, as on the persisted one: 24 one-member cells
+    (iters=0 keeps the seeds as centroids) score against e0 in a
+    pattern with tied runs on which numpy's default (unstable) argsort
+    picks another 4 of the tied cells."""
+    import hashlib
+
+    import numpy as np
+
+    from echo_chambers_detection_spark.operators.ann import (
+        ivf_index_build,
+        ivf_topk_from_index,
+    )
+    from echo_chambers_detection_spark.session import driver_frame
+
+    pattern = [0, 2, 1, 4, 4, 4, 5, 5, 1, 0, 0, 4, 5, 5, 4, 5, 5, 0, 0, 5, 0, 5, 4, 5]
+    ids = sorted(
+        (f"p{i:02d}" for i in range(24)),
+        key=lambda s: hashlib.md5(s.encode()).hexdigest(),
+    )  # cell j's seed is the j-th smallest md5(id)
+    rows = []
+    for j, a in enumerate(pattern):
+        s = 0.1 + 0.15 * a
+        v = [0.0] * 25
+        v[0], v[j + 1] = s, float(np.sqrt(1 - s * s))
+        rows.append((ids[j], v))
+    emb = driver_frame(spark, rows, "post_cid string, vector array<double>")
+    query = driver_frame(spark, [([1.0] + [0.0] * 24,)], "qvec array<double>")
+    scores = -np.array([0.1 + 0.15 * a for a in pattern])
+    assert set(np.argsort(scores)[:4]) != set(np.argsort(scores, kind="stable")[:4])
+
+    want = sorted(ids[c] for c in np.argsort(scores, kind="stable")[:4])
+    inline = ivf_topk(emb, query, k_results=24, n_cells=24, nprobe=4, iters=0)
+    assert sorted(r["post_cid"] for r in inline.collect()) == want
+    idx = str(tmp_path / "ivf_ties")
+    ivf_index_build(emb, idx, n_cells=24, iters=0)
+    persisted = ivf_topk_from_index(emb, idx, query, k_results=24, nprobe=4)
+    assert sorted(r["post_cid"] for r in persisted.collect()) == want
+
+
+# --- placement: the quantizer on the driver vs the distributed path ---
+
+
+def _random_table(spark, n, dim, seed, ids=int):
+    import numpy as np
+
+    from echo_chambers_detection_spark.session import driver_frame
+
+    x = np.random.default_rng(seed).normal(size=(n, dim)).astype("float32")
+    id_type = "bigint" if ids is int else "string"
+    return driver_frame(
+        spark,
+        [(ids(i), [float(v) for v in x[i]]) for i in range(n)],
+        f"post_cid {id_type}, vector array<float>",
+    )
+
+
+def _degenerate(spark, ids):
+    """Duplicate vectors, a zero vector and fewer rows (7) than cells."""
+    from echo_chambers_detection_spark.session import driver_frame
+
+    vecs = [[1.0, 0.0, 0.0]] * 3 + [[0.0, 0.0, 0.0], [0.0, 2.0, 0.0],
+                                    [0.0, 2.0, 0.0], [1.0, 1.0, 1.0]]
+    id_type = "int" if ids is int else "string"
+    return driver_frame(
+        spark, [(ids(i), v) for i, v in enumerate(vecs)],
+        f"post_cid {id_type}, vector array<double>",
+    )
+
+
+_PLACEMENT_CASES = {
+    "sf0.001-k8": (lambda spark, emb: emb, dict(k=8)),
+    "sf0.001-k16": (lambda spark, emb: emb, dict(k=16)),
+    "sf0.001-k8-sampled": (lambda spark, emb: emb, dict(k=8, train_cap=50)),
+    "random-4000x64-k32": (
+        lambda spark, emb: _random_table(spark, 4000, 64, 5), dict(k=32, iters=3)
+    ),
+    "degenerate-int-ids": (lambda spark, emb: _degenerate(spark, int), dict(k=8)),
+    "degenerate-string-ids": (
+        lambda spark, emb: _degenerate(spark, str), dict(k=4, train_cap=0)
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PLACEMENT_CASES))
+def test_ivf_index_driver_matches_distributed(spark, emb, case):
+    """Below the budget the quantizer runs on the driver (a driver
+    frame comes back) and gives the forced-distributed path's cells,
+    its full schema and its centroids to 1e-12."""
+    import numpy as np
+
+    from echo_chambers_detection_spark import placement
+    from echo_chambers_detection_spark.operators.graph import _release_checkpoint
+    from echo_chambers_detection_spark.session import driver_table
+    from tests.conftest import assert_same_schema
+
+    make, kw = _PLACEMENT_CASES[case]
+    df = make(spark, emb)
+    local, c_local = ivf_index(df, **kw)
+    with placement.distributed("ivf"):
+        dist, c_dist = ivf_index(df, **kw)
+    assert driver_table(local) is not None and driver_table(dist) is None
+    assert sorted(local.collect()) == sorted(dist.collect())
+    assert_same_schema(local, dist)
+    assert c_local.shape == c_dist.shape
+    np.testing.assert_allclose(c_local, c_dist, rtol=0, atol=1e-12)
+    _release_checkpoint(dist)
+
+
+def _outcome(run):
+    """(cells, centroids) of an IVF build, or its exception's type."""
+    try:
+        a, c = run()
+        return sorted(a.collect()), c.tolist()
+    except Exception as e:  # the two placements must fail alike
+        return type(e).__name__
+
+
+@pytest.mark.parametrize("case", ["null_vector", "ragged", "no_rows"])
+def test_ivf_index_driver_declines(spark, monkeypatch, case):
+    """A null vector, ragged vectors or no rows leave the driver kernel
+    unrun: the default placement gives what the forced-distributed one
+    gives, result or exception."""
+    import echo_chambers_detection_spark.operators.ann as A
+    from echo_chambers_detection_spark import placement
+    from echo_chambers_detection_spark.session import driver_frame
+
+    rows = {
+        "null_vector": [("a", [1.0, 0.0]), ("b", None), ("c", [0.0, 1.0])],
+        "ragged": [("a", [1.0, 0.0]), ("b", [0.0, 1.0, 0.0]), ("c", [0.0, 1.0])],
+        "no_rows": [],
+    }[case]
+    df = driver_frame(spark, rows, "post_cid string, vector array<double>")
+
+    def trap(*a, **kw):
+        raise AssertionError("the IVF driver kernel ran")
+
+    monkeypatch.setattr(A, "_lloyd_np", trap)
+    default = _outcome(lambda: ivf_index(df, k=2, iters=1))
+    with placement.distributed("ivf"):
+        forced = _outcome(lambda: ivf_index(df, k=2, iters=1))
+    assert default == forced
+
+
+def test_ivf_index_build_starts_no_python_worker(emb, tmp_path, monkeypatch):
+    """On the driver path the persisted build runs no mapInPandas pass,
+    so it starts no Python worker: it succeeds with the method trapped."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame
+
+    from echo_chambers_detection_spark.operators.ann import ivf_index_build
+
+    def trap(*a, **kw):
+        raise AssertionError("mapInPandas ran on the driver path")
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", trap)
+    idx = str(tmp_path / "ivf_driver")
+    ivf_index_build(emb, idx, n_cells=8, iters=2)
+    got = pq.read_table(f"{idx}/assignments").column("post_cid").to_pylist()
+    assert sorted(got) == sorted(r["post_cid"] for r in emb.collect())
+
+
+@pytest.mark.parametrize("build", ["ivf", "pq"])
+def test_index_builds_free_their_checkpoints(spark, emb, tmp_path, build):
+    """Forced distributed, the persisted builds pin no RDD once their
+    write returns: the build checkpoint (and the sampled training set)
+    are freed, on the success path as on the raise inside pq_train."""
+    from echo_chambers_detection_spark import placement
+    from echo_chambers_detection_spark.operators.ann import (
+        ivf_index_build,
+        pq_index_build,
+    )
+
+    def pinned():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i in jmap.keySet().toArray()}
+
+    before = pinned()
+    with placement.distributed("ivf"):
+        if build == "ivf":
+            ivf_index_build(emb, str(tmp_path / "i"), n_cells=8, iters=2,
+                            train_cap=100)
+        else:
+            pq_index_build(emb, str(tmp_path / "p"), m=8, k=8, iters=2,
+                           train_cap=100)
+            with pytest.raises(ValueError):
+                pq_index_build(emb, str(tmp_path / "p2"), m=7, k=8, iters=1)
+    assert pinned() - before == set()
+
+
+def test_l2_normalize_np_matches_spark(spark):
+    """The driver path's normalization is `l2_normalize`'s, bit for bit,
+    on float and double vectors, zero vectors included."""
+    import numpy as np
+
+    from echo_chambers_detection_spark.functions.vector import l2_normalize
+    from echo_chambers_detection_spark.operators.ann import _l2_normalize_np
+    from echo_chambers_detection_spark.session import driver_frame
+
+    rng = np.random.default_rng(9)
+    x = rng.normal(scale=3.0, size=(500, 48))
+    x[7] = 0.0
+    for vtype, vals in [("double", x), ("float", x.astype("float32"))]:
+        df = driver_frame(
+            spark, [(i, [float(v) for v in r]) for i, r in enumerate(vals)],
+            f"i int, v array<{vtype}>",
+        )
+        want = np.array([
+            r[0] for r in df.orderBy("i").select(l2_normalize("v")).collect()
+        ])
+        got = _l2_normalize_np(vals.astype("float64"))
+        assert np.array_equal(got.view(np.int64), want.view(np.int64)), vtype

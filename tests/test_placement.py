@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import echo_chambers_detection_spark.operators.ann as A
 import echo_chambers_detection_spark.operators.graph as G
 import echo_chambers_detection_spark.operators.hdbscan as H
 import echo_chambers_detection_spark.operators.localgraph as L
@@ -97,6 +98,7 @@ def _operators(e, emb, labels):
             emb, min_pts=2, min_cluster_size=3, k=3
         )),
         ("community_table", lambda: M.community_table(u, labels, emb)),
+        ("ivf", lambda: A.ivf_index(emb, k=2, id_col="node")[0]),
     ]
 
 
@@ -123,7 +125,8 @@ def _ran_on_driver(df) -> bool:
 @pytest.fixture
 def kernels_trapped(monkeypatch):
     """Every driver kernel raises: the localgraph mirrors, Kruskal, the
-    k-NN tiles, the HDBSCAN kernel and the metrics table."""
+    k-NN tiles, the HDBSCAN kernel, the metrics table and the IVF
+    quantizer."""
 
     def trap(*a, **kw):
         raise AssertionError("a driver kernel ran under distributed()")
@@ -133,7 +136,7 @@ def kernels_trapped(monkeypatch):
             monkeypatch.setattr(L, name, trap)
     for mod, name in [
         (H, "_kruskal_local"), (H, "_driver_tiles"), (H, "hdbscan_local"),
-        (M, "_table_np"),
+        (M, "_table_np"), (A, "_lloyd_np"),
     ]:
         monkeypatch.setattr(mod, name, trap)
 

@@ -210,3 +210,28 @@ def test_graph_probe_repeat_latency(knn_edges_dir):
     for _ in range(50):
         probe.probe_one(q, k=10)
     assert (time.time() - t0) < 1.0
+
+
+def test_round_half_up6_matches_spark_round(spark):
+    """The served scores round as `F.round(x, 6)` does, bit for bit:
+    on decimal half-steps (k + 1/2)·1e-6 (5e-7 and 0.1234565 among
+    them, which rounding the binary expansion gets wrong), on the
+    dyadic half-steps (2j+1)/128, on their negatives and on tiny values
+    that round to zero (+0.0 in Spark)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from echo_chambers_detection_spark.serving.ivf_probe import _round_half_up6
+    from echo_chambers_detection_spark.session import driver_frame
+
+    ks = np.concatenate([
+        np.arange(2000), [123456], np.random.default_rng(11).integers(0, 10**6, 3000)
+    ])
+    x = [float(f"{k}.5e-6") for k in ks]
+    x += list((2 * np.arange(128) + 1) / 128.0) + [1e-9, 4e-7, 0.0, 1.0]
+    x += [-v for v in x]
+    df = driver_frame(spark, [(v,) for v in x], "x double")
+    want = np.array([r[0] for r in df.select(F.round("x", 6)).collect()])
+    got = np.array([_round_half_up6(v) for v in x])
+    assert _round_half_up6(5e-7) == 1e-6 and _round_half_up6(0.1234565) == 0.123457
+    assert np.array_equal(got.view(np.int64), want.view(np.int64))

@@ -368,3 +368,26 @@ def test_analysis_run_hdbscan_distributed_job_count(spark, distributed):
 
     n = _analysis_jobs(spark, q_analysis_run_hdbscan)
     assert n <= 271, f"distributed analysis_run_hdbscan grew to {n} jobs (was 268)"
+
+
+@pytest.mark.parametrize("path,measured", [("driver", 4), ("distributed", 14)])
+def test_ivf_index_build_job_count(spark, tmp_path, path, measured):
+    """The persisted IVF build on planted arc embeddings (250 x 2, 8
+    cells, 4 Lloyd rounds): on the driver the dim probe, one Arrow pull
+    and the two writes; distributed, a pass per Lloyd round, so one
+    extra job per round exceeds the headroom."""
+    from contextlib import nullcontext
+
+    from echo_chambers_detection_spark.operators.ann import ivf_index_build
+
+    emb = planted_arc_embeddings(spark, 5, 50).localCheckpoint(eager=True)
+    forced = placement.distributed("ivf") if path == "distributed" else nullcontext()
+    with forced:
+        n = _count_jobs(
+            spark,
+            lambda: ivf_index_build(
+                emb, str(tmp_path / "ivf"), n_cells=8, iters=4, id_col="node"
+            ),
+        )
+    emb.unpersist()
+    assert n <= measured + 3, f"{path} ivf_index_build grew to {n} jobs (was {measured})"
