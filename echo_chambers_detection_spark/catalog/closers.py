@@ -737,12 +737,8 @@ def q_event_key_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         misra_gries_heavy_hitters,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     kv = _t(spark, sf_dir, "events").select(
         F.get_json_object(F.col("props"), "$.k").alias("k")
     )
     hh = misra_gries_heavy_hitters(kv, "k", k=256)
-    return carry_ckpt(
-        hh.orderBy(F.desc("est"), F.asc("value")).limit(20), hh
-    )
+    return hh.orderBy(F.desc("est"), F.asc("value")).limit(20)

@@ -1242,23 +1242,14 @@ def q_near_dup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     shingles = doc_shingles(_docs_spread(spark, sf_dir))
     raw_pairs = jaccard_pairs(shingles, threshold=0.5)
-    pairs = carry_ckpt(
-        raw_pairs.select(
-            F.col("d1").alias("u1"), F.col("d2").alias("u2")
-        ),
-        raw_pairs,
+    pairs = raw_pairs.select(
+        F.col("d1").alias("u1"), F.col("d2").alias("u2")
     )
     comps = connected_components(pairs)
-    return carry_ckpt(
-        comps.where(F.col("node") != F.col("component")).select(
-            F.col("node").alias("doc_id"), F.col("component").alias("keeper")
-        ),
-        comps,
-        pairs,
+    return comps.where(F.col("node") != F.col("component")).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("keeper")
     )
 
 
@@ -1409,11 +1400,9 @@ def q_simhash64_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_candidate_pairs_banded,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     sigs = simhash64(_docs_spread(spark, sf_dir))
     pairs = simhash_candidate_pairs_banded(sigs, max_hamming=3)
-    return carry_ckpt(pairs.orderBy("d1", "d2"), pairs)
+    return pairs.orderBy("d1", "d2")
 
 
 @register(
@@ -1462,11 +1451,9 @@ def q_simhash64_md5_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_candidate_pairs_banded,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     sigs = simhash64(_docs_spread(spark, sf_dir), vote_hash=md5_vote64)
     pairs = simhash_candidate_pairs_banded(sigs, max_hamming=3)
-    return carry_ckpt(pairs.orderBy("d1", "d2"), pairs)
+    return pairs.orderBy("d1", "d2")
 
 
 @register(
@@ -2206,20 +2193,19 @@ def q_minhash_jaccard_estimate_error(
     # keep AQE stats live for the downstream joins (a LAZY checkpoint
     # here measured 3x slower: the unknown-stats barrier forces
     # sort-merge plans).
-    # tracked_checkpoint = the same plain eager localCheckpoint (stats
-    # stay live for AQE, unlike _materialize's stats-free rebuild — the
-    # 3x sort-merge regression noted above) but with block ids recorded
-    # so the result frame can carry ownership (leak census r10)
+    # _checkpoint = the same plain eager localCheckpoint (stats stay live
+    # for AQE, unlike _materialize's stats-free rebuild — the 3x
+    # sort-merge regression noted above) with block ids recorded, so the
+    # query's scope hands them to the result (leak census r10)
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
-        tracked_checkpoint,
+        _checkpoint,
     )
 
-    sh = tracked_checkpoint(
+    sh = _checkpoint(
         doc_shingles(_docs_spread(spark, sf_dir)).coalesce(8)
     )
-    sig = tracked_checkpoint(minhash_signatures(sh, num_perm=16).coalesce(4))
-    cand = tracked_checkpoint(
+    sig = _checkpoint(minhash_signatures(sh, num_perm=16).coalesce(4))
+    cand = _checkpoint(
         lsh_candidate_pairs(lsh_band_keys(sig, rows_per_band=4)).coalesce(1)
     )
     sa = sig.select(
@@ -2250,7 +2236,7 @@ def q_minhash_jaccard_estimate_error(
     s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("sz").alias("sz1"))
     s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("sz").alias("sz2"))
     c = F.coalesce(F.col("c"), F.lit(0))
-    return carry_ckpt(
+    return (
         est.join(shared, ["d1", "d2"], "left")
         .join(s1, "d1")
         .join(s2, "d2")
@@ -2260,10 +2246,7 @@ def q_minhash_jaccard_estimate_error(
             F.round(
                 c * F.lit(1.0) / (F.col("sz1") + F.col("sz2") - c), 6
             ).alias("exact_jaccard"),
-        ),
-        sh,
-        sig,
-        cand,
+        )
     )
 
 

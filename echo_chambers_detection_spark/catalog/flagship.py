@@ -45,19 +45,16 @@ GROUP BY 1, 2
     "(reference project/metrics/community_detection.py:22-38)",
 )
 def q_coengagement_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
-        tracked_checkpoint,
-    )
+    from echo_chambers_detection_spark.operators.graph import _checkpoint
 
     # Checkpoint the parsed engagement relation: the general self-join
     # reads it twice, and the user-encode auto-probe + dictionary build
     # (operators/coengagement.py) add two more passes — JSON extraction
     # over the events scan is the expensive part to repeat.
-    eng = tracked_checkpoint(
+    eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
-    return carry_ckpt(coengagement_edges(eng), eng)
+    return coengagement_edges(eng)
 
 
 @register(
@@ -83,19 +80,15 @@ def q_coengagement_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         coengagement_edges_bitmap,
     )
 
-    from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
-        tracked_checkpoint,
-    )
+    from echo_chambers_detection_spark.operators.graph import _checkpoint
 
-    eng = tracked_checkpoint(
+    eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
-    return carry_ckpt(
+    return (
         coengagement_edges_bitmap(eng, num_slots=None)
         .orderBy(F.desc("weight"), "u1", "u2")
-        .limit(20),
-        eng,
+        .limit(20)
     )
 
 

@@ -46,11 +46,11 @@ def _user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from echo_chambers_detection_spark.operators.graph import (
+        _checkpoint,
         carry_ckpt,
-        tracked_checkpoint,
     )
 
-    eng = tracked_checkpoint(
+    eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
     return carry_ckpt(coengagement_edges_bitmap(eng, num_slots=None), eng)
@@ -65,11 +65,11 @@ def _post_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice (max-key probe + mask build), and JSON extraction over the
     # events scan is the expensive part of this query at any scale.
     from echo_chambers_detection_spark.operators.graph import (
+        _checkpoint,
         carry_ckpt,
-        tracked_checkpoint,
     )
 
-    eng = tracked_checkpoint(
+    eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
     return carry_ckpt(
@@ -134,10 +134,10 @@ g AS (
     "peel oracle with the same min-degree-jump semantics.",
 )
 def q_kcore_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt, kcore
+    from echo_chambers_detection_spark.operators.graph import kcore
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(kcore(g.select("u1", "u2")), g)
+    return kcore(g.select("u1", "u2"))
 
 
 @register(
@@ -161,14 +161,14 @@ g AS (SELECT u1, u2 FROM pe, thr WHERE weight >= t),
     "operators/graph.py::kcore.",
 )
 def q_kcore_strong_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt, kcore
+    from echo_chambers_detection_spark.operators.graph import kcore
 
     pg = _post_graph(spark, sf_dir)
     thr = pg.agg((1.2 * F.avg("weight")).alias("t"))
     strong = pg.crossJoin(F.broadcast(thr)).where(
         F.col("weight") >= F.col("t")
     ).select("u1", "u2")
-    return carry_ckpt(kcore(strong), pg)
+    return kcore(strong)
 
 
 @register(
@@ -178,10 +178,10 @@ def q_kcore_strong_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gds.louvain.stream; SURVEY.md G7). Deterministic min-node community ids.",
 )
 def q_louvain_user_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt, louvain
+    from echo_chambers_detection_spark.operators.graph import louvain
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(louvain(g, max_levels=2, max_rounds=4), g)
+    return louvain(g, max_levels=2, max_rounds=4)
 
 
 @register(
@@ -249,12 +249,11 @@ SELECT node, community FROM lab WHERE final
 )
 def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         label_propagation,
     )
 
     g = _post_graph(spark, sf_dir)
-    return carry_ckpt(label_propagation(g.select("u1", "u2")), g)
+    return label_propagation(g.select("u1", "u2"))
 
 
 @register(
@@ -264,10 +263,10 @@ def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFra
     "gds.leiden.stream; SURVEY.md G6, documented substitution)",
 )
 def q_leiden_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt, leiden
+    from echo_chambers_detection_spark.operators.graph import leiden
 
     g = _post_graph(spark, sf_dir)
-    return carry_ckpt(leiden(g, max_levels=2, max_rounds=4), g)
+    return leiden(g, max_levels=2, max_rounds=4)
 
 
 @register(
@@ -283,10 +282,8 @@ def q_modularity_optimization_communities(
         modularity_optimization,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _post_graph(spark, sf_dir)
-    return carry_ckpt(modularity_optimization(g, max_rounds=4), g)
+    return modularity_optimization(g, max_rounds=4)
 
 
 def _clique_modules_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,20 +417,15 @@ def q_modularity_opt_clique_modules(
 )
 def q_fastrp_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         fastrp,
     )
 
     g = _post_graph(spark, sf_dir)
     exploded = fastrp(g, dim=128, assemble=False)
-    exploded = carry_ckpt(exploded, g)
-    return carry_ckpt(
-        exploded.select(
-            "node",
-            F.col("dim").cast("long").alias("dim"),
-            F.round("val", 6).alias("val"),
-        ),
-        exploded,
+    return exploded.select(
+        "node",
+        F.col("dim").cast("long").alias("dim"),
+        F.round("val", 6).alias("val"),
     )
 
 
@@ -677,7 +669,6 @@ def q_fastrp_step_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad((F.col("id") + 1).cast("string"), 6, "0").alias("u2"),
         F.lit(1.0).alias("weight"),
     )
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
 
     exploded = fastrp(
         edges,
@@ -687,10 +678,7 @@ def q_fastrp_step_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         assemble=False,
         hash_mod6=fastrp_md5_mod6,
     )
-    return carry_ckpt(
-        exploded.select("node", "dim", F.round("val", 6).alias("val")),
-        exploded,
-    )
+    return exploded.select("node", "dim", F.round("val", 6).alias("val"))
 
 
 @register(
@@ -702,15 +690,14 @@ def q_fastrp_step_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         density_cluster,
         fastrp,
     )
 
     g = _post_graph(spark, sf_dir)
-    rp = carry_ckpt(fastrp(g, dim=32), g)
-    emb = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp)
-    return carry_ckpt(density_cluster(emb, min_sim=0.6, min_pts=2), emb)
+    rp = fastrp(g, dim=32)
+    emb = rp.withColumnRenamed("embedding", "vector")
+    return density_cluster(emb, min_sim=0.6, min_pts=2)
 
 
 @register(
@@ -725,20 +712,16 @@ def q_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_density_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         density_cluster,
         fastrp,
     )
 
     g = _post_graph(spark, sf_dir)
-    rp = carry_ckpt(fastrp(g, dim=32), g)
-    emb = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp)
-    return carry_ckpt(
-        density_cluster(
-            emb, min_sim=0.6, min_pts=2, use_lsh=True,
-            lsh_num_planes=16, lsh_band_bits=4, dim=32,
-        ),
-        emb,
+    rp = fastrp(g, dim=32)
+    emb = rp.withColumnRenamed("embedding", "vector")
+    return density_cluster(
+        emb, min_sim=0.6, min_pts=2, use_lsh=True,
+        lsh_num_planes=16, lsh_band_bits=4, dim=32,
     )
 
 
@@ -827,7 +810,6 @@ def q_density_clusters_lsh_exhaustive(
 )
 def q_hdbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         fastrp,
     )
     from echo_chambers_detection_spark.operators.hdbscan import (
@@ -838,11 +820,9 @@ def q_hdbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (embeddingDimension=128 — BASELINE.md; gds.fastRP.mutate at
     # project/metrics/community_detection.py:42-44) before HDBSCAN
     g = _post_graph(spark, sf_dir)
-    rp = carry_ckpt(fastrp(g, dim=128), g)
-    emb = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp)
-    return hdbscan_cluster(
-        emb, min_pts=3, min_cluster_size=3, k=10, carry_input_ckpt=True
-    )
+    rp = fastrp(g, dim=128)
+    emb = rp.withColumnRenamed("embedding", "vector")
+    return hdbscan_cluster(emb, min_pts=3, min_cluster_size=3, k=10)
 
 
 @register(
@@ -920,15 +900,13 @@ SELECT src, dst, dist FROM ranked WHERE rn <= 5
 def q_knn_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.hdbscan import knn_graph_ann
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     # iters=1: with every cell probed the result is quantizer-
     # independent, so extra Lloyd rounds only buy bench time here
     g = knn_graph_ann(
         _emb(spark, sf_dir), k=5, n_cells=4, nprobe=4, iters=1,
         id_col="post_cid", vec_col="vector",
     )
-    return carry_ckpt(g.select(F.col("src"), F.col("dst"), F.col("dist")), g)
+    return g.select(F.col("src"), F.col("dst"), F.col("dist"))
 
 
 @register(
@@ -964,14 +942,12 @@ def q_connected_components_strong(spark: SparkSession, sf_dir: str) -> DataFrame
         connected_components,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     pg = _post_graph(spark, sf_dir)
     thr = pg.agg((1.2 * F.avg("weight")).alias("t"))
     strong = pg.crossJoin(F.broadcast(thr)).where(
         F.col("weight") >= F.col("t")
     ).select("u1", "u2")
-    return carry_ckpt(connected_components(strong), pg)
+    return connected_components(strong)
 
 
 
@@ -1129,17 +1105,12 @@ def q_pagerank_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         pagerank_coengagement,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     eng = engagements_from_events(_t(spark, sf_dir, "events"))
     ranks = pagerank_coengagement(
         eng, damping=0.85, max_iter=3, tol=0.0
     )
-    return carry_ckpt(
-        ranks.select(
-            F.col("node").alias("user_did"), F.round("rank", 9).alias("rank")
-        ),
-        ranks,
+    return ranks.select(
+        F.col("node").alias("user_did"), F.round("rank", 9).alias("rank")
     )
 
 
@@ -1308,12 +1279,8 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         triangle_counts,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        triangle_counts(strong_tie_backbone(g, k=10)), g
-    )
+    return triangle_counts(strong_tie_backbone(g, k=10))
 
 
 @register(
@@ -1343,12 +1310,8 @@ def q_transitivity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         transitivity_stats,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        transitivity_stats(strong_tie_backbone(g, k=10)), g
-    )
+    return transitivity_stats(strong_tie_backbone(g, k=10))
 
 
 @register(
@@ -1381,16 +1344,13 @@ SELECT node, CAST(MIN(d) AS BIGINT) AS dist FROM walk GROUP BY node
 def q_bfs_hop_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
         bfs_distances,
-        carry_ckpt,
     )
     from echo_chambers_detection_spark.operators.triangles import (
         strong_tie_backbone,
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        bfs_distances(strong_tie_backbone(g, k=10), max_iter=30), g
-    )
+    return bfs_distances(strong_tie_backbone(g, k=10), max_iter=30)
 
 
 @register(
@@ -1428,7 +1388,6 @@ SELECT wid, CAST(step AS BIGINT) AS step, node FROM walk
 )
 def q_seeded_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         seeded_random_walks,
     )
     from echo_chambers_detection_spark.operators.triangles import (
@@ -1436,9 +1395,7 @@ def q_seeded_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        seeded_random_walks(strong_tie_backbone(g, k=10), length=8), g
-    )
+    return seeded_random_walks(strong_tie_backbone(g, k=10), length=8)
 
 
 @register(
@@ -1484,7 +1441,6 @@ def q_walk_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         seeded_random_walks,
     )
     from echo_chambers_detection_spark.operators.triangles import (
@@ -1506,7 +1462,7 @@ def q_walk_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node", "context")
         .agg(F.count("*").alias("pair_count"))
     )
-    return carry_ckpt(pairs, walks, g)
+    return pairs
 
 
 @register(
@@ -1569,7 +1525,6 @@ SELECT wid, CAST(step AS BIGINT) AS step, node FROM walk
 )
 def q_weighted_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         seeded_random_walks,
     )
     from echo_chambers_detection_spark.operators.triangles import (
@@ -1586,9 +1541,7 @@ def q_weighted_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(200)
         .select(F.col("node").alias("wid"), "node")
     )
-    return carry_ckpt(
-        seeded_random_walks(bb, length=4, weighted=True, seeds=seeds), g
-    )
+    return seeded_random_walks(bb, length=4, weighted=True, seeds=seeds)
 
 
 @register(
@@ -1627,18 +1580,14 @@ FROM walk GROUP BY seed, node
 def q_landmark_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
         bfs_landmark_distances,
-        carry_ckpt,
     )
     from echo_chambers_detection_spark.operators.triangles import (
         strong_tie_backbone,
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        bfs_landmark_distances(
-            strong_tie_backbone(g, k=10), n_landmarks=4, max_iter=30
-        ),
-        g,
+    return bfs_landmark_distances(
+        strong_tie_backbone(g, k=10), n_landmarks=4, max_iter=30
     )
 
 
@@ -1686,7 +1635,6 @@ GROUP BY w.seed, w.node, m.dist
 )
 def q_landmark_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         shortest_path_counts,
     )
     from echo_chambers_detection_spark.operators.triangles import (
@@ -1694,11 +1642,8 @@ def q_landmark_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        shortest_path_counts(
-            strong_tie_backbone(g, k=10), n_sources=4, max_iter=4
-        ),
-        g,
+    return shortest_path_counts(
+        strong_tie_backbone(g, k=10), n_sources=4, max_iter=4
     )
 
 
@@ -1722,7 +1667,6 @@ def q_betweenness_sampled_scores(
 ) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
         brandes_betweenness,
-        carry_ckpt,
     )
     from echo_chambers_detection_spark.operators.triangles import (
         strong_tie_backbone,
@@ -1732,9 +1676,7 @@ def q_betweenness_sampled_scores(
     bc = brandes_betweenness(
         strong_tie_backbone(g, k=10), n_sources=4, max_iter=30
     )
-    return carry_ckpt(
-        bc.orderBy(F.col("betweenness").desc(), "node").limit(50), g
-    )
+    return bc.orderBy(F.col("betweenness").desc(), "node").limit(50)
 
 
 def _diamond_chain(spark: SparkSession, n_diamonds: int) -> DataFrame:
@@ -1935,7 +1877,6 @@ def q_landmark_closeness_estimates(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
         landmark_closeness,
     )
     from echo_chambers_detection_spark.operators.triangles import (
@@ -1943,11 +1884,8 @@ def q_landmark_closeness_estimates(
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        landmark_closeness(
-            strong_tie_backbone(g, k=10), n_landmarks=4, max_iter=30
-        ),
-        g,
+    return landmark_closeness(
+        strong_tie_backbone(g, k=10), n_landmarks=4, max_iter=30
     )
 
 
@@ -2001,18 +1939,14 @@ SELECT node, CAST(MIN(c) AS BIGINT) AS cost FROM walk GROUP BY node
 def q_khop_min_cost_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
         bellman_ford_khop,
-        carry_ckpt,
     )
     from echo_chambers_detection_spark.operators.triangles import (
         strong_tie_backbone,
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        bellman_ford_khop(
-            strong_tie_backbone(g, k=10, keep_weight=True), k=6
-        ),
-        g,
+    return bellman_ford_khop(
+        strong_tie_backbone(g, k=10, keep_weight=True), k=6
     )
 
 
@@ -2072,20 +2006,16 @@ FROM walk GROUP BY seed, node
 def q_landmark_weighted_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
         bellman_ford_landmark,
-        carry_ckpt,
     )
     from echo_chambers_detection_spark.operators.triangles import (
         strong_tie_backbone,
     )
 
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        bellman_ford_landmark(
-            strong_tie_backbone(g, k=10, keep_weight=True),
-            n_landmarks=4,
-            k=6,
-        ),
-        g,
+    return bellman_ford_landmark(
+        strong_tie_backbone(g, k=10, keep_weight=True),
+        n_landmarks=4,
+        k=6,
     )
 
 
@@ -2118,12 +2048,8 @@ def q_degree_assortativity_moments(
         degree_assortativity_moments,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        degree_assortativity_moments(g.select("u1", "u2")), g
-    )
+    return degree_assortativity_moments(g.select("u1", "u2"))
 
 
 @register(
@@ -2192,11 +2118,10 @@ def q_user_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from echo_chambers_detection_spark.operators.graph import (
-        carry_ckpt,
-        tracked_checkpoint,
+        _checkpoint,
     )
 
-    eng = tracked_checkpoint(
+    eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
     co = coengagement_edges_bitmap(eng, num_slots=None)
@@ -2221,7 +2146,7 @@ def q_user_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("jaccard"), "u1", "u2")
         .limit(100)
     )
-    return carry_ckpt(out, eng)
+    return out
 
 
 # ===========================================================================
@@ -2279,8 +2204,6 @@ def q_pagerank_factored_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         pagerank_coengagement,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     ranks = pagerank_coengagement(
         _factored_star_engagements(spark),
         damping=1.0,
@@ -2288,14 +2211,11 @@ def q_pagerank_factored_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
         tol=0.0,
         seeds=["hub"],
     )
-    return carry_ckpt(
-        ranks.select(
-            "node",
-            (F.col("rank") * F.lit(16777216.0))
-            .cast("long")
-            .alias("rank_scaled"),
-        ),
-        ranks,
+    return ranks.select(
+        "node",
+        (F.col("rank") * F.lit(16777216.0))
+        .cast("long")
+        .alias("rank_scaled"),
     )
 
 
@@ -2321,19 +2241,14 @@ def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         node_degrees,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _user_graph(spark, sf_dir)
     deg = node_degrees(g.select("u1", "u2"))
-    return carry_ckpt(
-        deg.groupBy(
-            F.length(F.bin(F.col("deg"))).cast("long").alias("bucket")
-        ).agg(
-            F.count("*").alias("n_nodes"),
-            F.min("deg").alias("min_deg"),
-            F.max("deg").alias("max_deg"),
-        ),
-        g,
+    return deg.groupBy(
+        F.length(F.bin(F.col("deg"))).cast("long").alias("bucket")
+    ).agg(
+        F.count("*").alias("n_nodes"),
+        F.min("deg").alias("min_deg"),
+        F.max("deg").alias("max_deg"),
     )
 
 
@@ -2368,8 +2283,6 @@ FROM per GROUP BY user_did
     "division).",
 )
 def q_butterfly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _user_graph(spark, sf_dir)
     bf = g.select(
         "u1", "u2", F.expr("(weight * (weight - 1)) div 2").alias("b")
@@ -2377,14 +2290,11 @@ def q_butterfly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = bf.select(F.col("u1").alias("user_did"), "b").unionByName(
         bf.select(F.col("u2").alias("user_did"), "b")
     )
-    return carry_ckpt(
-        per.groupBy("user_did").agg(
-            F.sum("b").cast("bigint").alias("butterflies"),
-            F.sum((F.col("b") > 0).cast("long"))
-            .cast("bigint")
-            .alias("strong_partners"),
-        ),
-        g,
+    return per.groupBy("user_did").agg(
+        F.sum("b").cast("bigint").alias("butterflies"),
+        F.sum((F.col("b") > 0).cast("long"))
+        .cast("bigint")
+        .alias("strong_partners"),
     )
 
 
@@ -2492,9 +2402,5 @@ def q_ktruss_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         strong_tie_backbone,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     g = _user_graph(spark, sf_dir)
-    return carry_ckpt(
-        ktruss_edges(strong_tie_backbone(g, k=10), k=4), g
-    )
+    return ktruss_edges(strong_tie_backbone(g, k=10), k=4)

@@ -53,8 +53,8 @@ def _metric_inputs(spark: SparkSession, sf_dir: str):
 
 def _metric_world(spark: SparkSession, sf_dir: str):
     from echo_chambers_detection_spark.operators.graph import (
+        _checkpoint,
         _release_checkpoint,
-        tracked_checkpoint,
     )
     from echo_chambers_detection_spark.operators.metrics import restrict_to_members
 
@@ -68,11 +68,11 @@ def _metric_world(spark: SparkSession, sf_dir: str):
     # thousands even when the raw data is 100 TB), so compact them to one
     # partition: every downstream branch join becomes a single-task
     # broadcast instead of 32 near-empty tasks per stage (23s -> 13s).
-    edges_m = tracked_checkpoint(edges_m.coalesce(1))
-    members = tracked_checkpoint(members.coalesce(1))
+    edges_m = _checkpoint(edges_m.coalesce(1))
+    members = _checkpoint(members.coalesce(1))
     # the eager checkpoints above truncated lineage, so the projection's
     # engagement checkpoint (owned by pg) is now dead — free it here
-    # instead of leaking it for the session (leak census r10)
+    # instead of holding it until the query's result is released
     _release_checkpoint(pg)
     return edges_m, members, emb
 
@@ -185,14 +185,13 @@ LEFT JOIN varc USING (label), tot t
 def q_community_metrics_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.graph import (
         _release_checkpoint,
-        carry_ckpt,
     )
     from echo_chambers_detection_spark.operators.metrics import community_table
 
     pg, edges, labels, emb = _metric_inputs(spark, sf_dir)
     t = community_table(edges, labels, emb)
     _release_checkpoint(pg)
-    return carry_ckpt(t.select(*_rounded()), t)
+    return t.select(*_rounded())
 
 
 @register(
@@ -243,8 +242,6 @@ def q_global_echo_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         modularity,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     edges_m, members, emb = _metric_world(spark, sf_dir)
     g = global_metrics(edges_m, members, emb).select(
         F.round("homophily", 6).alias("homophily"),
@@ -255,7 +252,7 @@ def q_global_echo_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = modularity(edges_m, members).select(
         F.round("modularity", 6).alias("modularity")
     )
-    return carry_ckpt(g.crossJoin(m), edges_m, members)
+    return g.crossJoin(m)
 
 
 @register(
@@ -287,15 +284,9 @@ def q_conductance_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
         conductance_with_sentinel,
     )
 
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
     edges_m, members, _ = _metric_world(spark, sf_dir)
-    return carry_ckpt(
-        conductance_with_sentinel(edges_m, members).select(
-            "label", F.round("conductance", 6).alias("conductance")
-        ),
-        edges_m,
-        members,
+    return conductance_with_sentinel(edges_m, members).select(
+        "label", F.round("conductance", 6).alias("conductance")
     )
 
 
@@ -626,6 +617,7 @@ def q_analysis_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out is not None:
         return out
     thr = pg.agg((1.2 * F.avg("weight")).alias("t"))
+    # hand-offs kept: _mint_and_metrics frees what edges/labels own early
     strong = carry_ckpt(
         pg.crossJoin(F.broadcast(thr))
         .where(F.col("weight") >= F.col("t"))
@@ -682,9 +674,9 @@ def q_analysis_run_hdbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out is not None:
         return out
     rp = fastrp(pg, dim=dim)
-    # thread checkpoint ownership down the chain (projection -> fastrp ->
-    # hdbscan -> noise filter) so _mint_and_metrics can release it all
-    # once its compacted frames are checkpointed (leak census r10)
+    # hand-offs kept: _mint_and_metrics frees what edges/labels own early
+    # (projection -> fastrp -> hdbscan -> noise filter), once its
+    # compacted frames are checkpointed (leak census r10)
     frp = carry_ckpt(rp.withColumnRenamed("embedding", "vector"), rp, pg)
     clusters = hdbscan_cluster(frp, **args, carry_input_ckpt=True)
     # reference noise filter: result_df[label != -1]

@@ -27,11 +27,11 @@ from echo_chambers_detection_spark.functions.vector import (
     l2_normalize,
 )
 from echo_chambers_detection_spark.operators.graph import (
+    _checkpoint,
     _generations,
     _materialize,
     _release_checkpoint,
     carry_ckpt,
-    tracked_checkpoint,
 )
 from echo_chambers_detection_spark.session import driver_frame
 
@@ -334,7 +334,7 @@ def lsh_near_dup_pairs(
         # below — without this the per-plane projection folds run once
         # per reference. Tracked so the result carries block ownership
         # (leak census r10: this was the last untracked ann checkpoint).
-        sigs = tracked_checkpoint(
+        sigs = _checkpoint(
             hyperplane_signatures(
                 embeddings, dim, num_planes, id_col=id_col, vec_col=vec_col
             )

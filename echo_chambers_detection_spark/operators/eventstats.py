@@ -155,8 +155,8 @@ def misra_gries_heavy_hitters(
         yield pd.concat(frames, ignore_index=True)
 
     from echo_chambers_detection_spark.operators.graph import (
+        _checkpoint,
         carry_ckpt,
-        tracked_checkpoint,
     )
 
     # checkpoint the summary: it feeds FOUR consumers (merge, decrement
@@ -166,7 +166,7 @@ def misra_gries_heavy_hitters(
     # checkpointed frames are <= P*k + P rows — tiny by construction —
     # and their block ownership rides the returned frame (carry_ckpt),
     # so a caller releasing what it consumes leaks nothing.
-    sk = tracked_checkpoint(
+    sk = _checkpoint(
         df.select(F.col(col).cast("string").alias("value"))
         .where(F.col("value").isNotNull())
         .mapInPandas(part, "value string, est long")
@@ -177,7 +177,7 @@ def misra_gries_heavy_hitters(
     )
     merged = data.groupBy("value").agg(F.sum("est").alias("est"))
     w = Window.orderBy(F.desc("est"), F.asc("value"))
-    ranked = tracked_checkpoint(
+    ranked = _checkpoint(
         merged.withColumn("_rk", F.row_number().over(w))
     )
     cutv = ranked.agg(

@@ -11,7 +11,8 @@ distributed joins/aggregations:
   truncates lineage so plans don't grow unboundedly (the classic
   iterative-Spark failure mode). One ownership rule covers its blocks:
   a loop's generations belong to its scope (`_generations`); only what
-  `result()` hands over outlives it;
+  `result()` hands over outlives it, and inside a catalog query that
+  falls to the query's scope (`_query_scope`);
 - driver-side state is O(1) scalars (round counters, change counts) —
   never node/edge collections.
 
@@ -28,8 +29,10 @@ canonicalized to the minimum member node id.
 from __future__ import annotations
 
 from contextlib import contextmanager
-from functools import reduce
+from contextvars import ContextVar
+from functools import reduce, wraps
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -239,21 +242,42 @@ def _nodes_of_sym(sym: DataFrame) -> DataFrame:
     return sym.select(F.col("src").alias("node")).distinct()
 
 
+def _pinned_ids(sc) -> list[int]:
+    return [int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()]
+
+
 def tracked_checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint with its block ids recorded on the result
     (so `_release_checkpoint`/`carry_ckpt` can free it), but WITHOUT
     `_materialize`'s stats-free leaf rebuild — for one-shot frames whose
     Catalyst size estimate should keep steering downstream join
     planning. Loops must keep using `_materialize` (the stats rebuild is
-    what stops checkpoint-stat compounding there)."""
+    what stops checkpoint-stat compounding there).
+
+    It never records into a query scope: engine code checkpoints through
+    `_checkpoint`, and this public name stays for a caller that must own
+    a checkpoint beyond the query it runs in (perfbench's save step,
+    which reads its labels after releasing the query's result)."""
     sc = df.sparkSession.sparkContext
-
-    def pinned():
-        return [int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()]
-
-    before = set(pinned())
+    before = set(_pinned_ids(sc))
     out = df.localCheckpoint(eager=True)
-    out._ckpt_rdd_ids = [i for i in pinned() if i not in before]
+    out._ckpt_rdd_ids = [i for i in _pinned_ids(sc) if i not in before]
+    return out
+
+
+# the ids `_checkpoint` made in the running catalog query (`_query_scope`)
+_QUERY_CKPTS: ContextVar[list | None] = ContextVar("query_ckpts", default=None)
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """`tracked_checkpoint`, with the new block ids also recorded in the
+    running query's scope (`_query_scope`), which hands what is still
+    pinned when the query returns to its result. Outside a query it is
+    `tracked_checkpoint`. Every engine checkpoint goes through here."""
+    out = tracked_checkpoint(df)
+    made = _QUERY_CKPTS.get()
+    if made is not None:
+        made += out._ckpt_rdd_ids
     return out
 
 
@@ -277,7 +301,7 @@ def _materialize(df: DataFrame) -> DataFrame:
     regression is visible instead of silent (ADVICE r2).
 
     The ids of the checkpoint's persisted RDDs are recorded on the
-    returned DataFrame (`_ckpt_rdd_ids`, via `tracked_checkpoint`), so
+    returned DataFrame (`_ckpt_rdd_ids`, via `_checkpoint`), so
     the frame owns its blocks until they are freed. Ownership rule: a
     loop's generations belong to its scope (`_generations`); only what
     `result()` hands over outlives it — a 100-round loop must not pin
@@ -285,7 +309,7 @@ def _materialize(df: DataFrame) -> DataFrame:
     that is executor-memory death by a thousand tiny frames).
     """
     global _MATERIALIZE_FALLBACK_WARNED
-    out = tracked_checkpoint(df)
+    out = _checkpoint(df)
     try:
         jdf = out._jdf
         jspark = out.sparkSession._jsparkSession
@@ -339,7 +363,12 @@ def carry_ckpt(out: DataFrame, *inners: DataFrame) -> DataFrame:
     census: 37/134 catalog queries left pinned blocks behind). Inside a
     loop the same hand-over is `_generations.result`: a loop's
     generations belong to its scope; only what `result()` hands over
-    outlives it."""
+    outlives it. A catalog query needs neither: its scope
+    (`_query_scope`) hands the result everything still pinned. What
+    still needs this: operator results and catalog helpers that run
+    outside any query (`_post_graph`, `_mint_and_metrics`, called by
+    tests and perfbench), a hand-over some release inside the query
+    reads, and perfbench's traced pass."""
     ids = list(getattr(out, "_ckpt_rdd_ids", []))
     for f in inners:
         if f is None:
@@ -366,14 +395,17 @@ def _release_checkpoint(*dfs: DataFrame) -> None:
         if df is None:
             continue
         ids = getattr(df, "_ckpt_rdd_ids", None)
-        if not ids:
-            continue
-        jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-        for i in ids:
-            jrdd = jmap.get(i)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        df._ckpt_rdd_ids = []
+        if ids:
+            _unpersist(df.sparkSession.sparkContext, ids)
+            df._ckpt_rdd_ids = []
+
+
+def _unpersist(sc, ids) -> None:
+    jmap = sc._jsc.getPersistentRDDs()
+    for i in ids:
+        jrdd = jmap.get(i)
+        if jrdd is not None:
+            jrdd.unpersist(False)
 
 
 def _scalars(df: DataFrame, **aggs) -> tuple:
@@ -453,13 +485,51 @@ def _generations():
     hands generations to the returned frame. A loop's generations
     belong to its scope; only what `result()` hands over outlives it —
     on normal exit, early return and exception alike (a raise mid-loop
-    pins nothing)."""
+    pins nothing). Inside a catalog query, what `result()` hands over
+    falls to the query's scope (`_query_scope`), the outer owner."""
     g = _Generations()
     try:
         yield g
     finally:
         _release_checkpoint(*g._owned)
         g._owned = []
+
+
+def _query_scope(fn):
+    """Make the catalog query `fn` the one owner of the checkpoints it
+    makes (`catalog._core.register` wraps every query in it). When `fn`
+    returns, every id `_checkpoint` recorded during the call that is
+    still pinned joins the result's `_ckpt_rdd_ids` (one
+    `getPersistentRDDs` read, no job), so the caller's
+    `_release_checkpoint(result)` frees the query whole; what the query
+    freed itself is not freed twice. A query called inside another
+    passes its result's ids to the outer scope too. On a raise, what
+    the call recorded is freed."""
+
+    @wraps(fn)
+    def run(*args, **kwargs):
+        made: list[int] = []
+        token = _QUERY_CKPTS.set(made)
+        try:
+            out = fn(*args, **kwargs)
+        except BaseException:
+            if made:
+                _unpersist(SparkContext._active_spark_context, made)
+            raise
+        finally:
+            _QUERY_CKPTS.reset(token)
+        if made:
+            pinned = set(_pinned_ids(SparkContext._active_spark_context))
+            out._ckpt_rdd_ids = list(dict.fromkeys([
+                *getattr(out, "_ckpt_rdd_ids", []),
+                *(i for i in made if i in pinned),
+            ]))
+            outer = _QUERY_CKPTS.get()
+            if outer is not None:
+                outer += out._ckpt_rdd_ids
+        return out
+
+    return run
 
 
 def _traversal_mirror(
@@ -1258,7 +1328,7 @@ def brandes_betweenness(
                 .na.fill({"_bc": 0.0})
                 .select("node", F.col("_bc").alias("betweenness"))
             )
-        return tracked_checkpoint(out)
+        return _checkpoint(out)
 
 
 def _walk_step(sym, cur, s, weighted, hint):

@@ -37,9 +37,9 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.functions.vector import cosine_similarity
 from echo_chambers_detection_spark.operators.graph import (
+    _checkpoint,
     _exceeds_rows,
     carry_ckpt,
-    tracked_checkpoint,
 )
 from echo_chambers_detection_spark.session import driver_frame, driver_table
 
@@ -215,7 +215,7 @@ def community_metrics(
     # recorded id, so callers could never release it (leak census r10).
     # The frame is community-graph sized (edges_m is already compacted),
     # so the eager materialization costs what the first cache fill did.
-    we = tracked_checkpoint(_labeled_edges(edges_m, members, embeddings))
+    we = _checkpoint(_labeled_edges(edges_m, members, embeddings))
 
     g_nodes = (
         edges_m.select(F.col("u1").alias("node"))
@@ -372,9 +372,9 @@ def community_table(
     # as its action returns, and their tasks then fail with
     # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
     edges_m, members = restrict_to_members(edges, labels, embeddings)
-    members = tracked_checkpoint(members.coalesce(1))
+    members = _checkpoint(members.coalesce(1))
     if _exceeds_rows(members, 0):
-        edges_m = tracked_checkpoint(edges_m.coalesce(1))
+        edges_m = _checkpoint(edges_m.coalesce(1))
         if _exceeds_rows(edges_m, 0):
             return carry_ckpt(
                 community_metrics(edges_m, members, embeddings), edges_m, members

@@ -11,10 +11,6 @@ and answer point queries with pure numpy — no Spark session required.
 """
 
 from echo_chambers_detection_spark.serving.graph_probe import GraphAnnProbe
-from echo_chambers_detection_spark.serving.http_api import (
-    ServingApp,
-    start_server,
-)
 from echo_chambers_detection_spark.serving.ivf_probe import IvfProbe
 from echo_chambers_detection_spark.serving.pq_probe import PqProbe
 
@@ -22,6 +18,4 @@ __all__ = [
     "GraphAnnProbe",
     "IvfProbe",
     "PqProbe",
-    "ServingApp",
-    "start_server",
 ]

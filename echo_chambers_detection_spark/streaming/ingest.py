@@ -31,6 +31,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from echo_chambers_detection_spark.operators.graph import (
+    _checkpoint,
+    _generations,
+)
 from echo_chambers_detection_spark.schemas import (
     POST_TOPIC_MESSAGE,
     USER_TOPIC_MESSAGE,
@@ -230,15 +234,17 @@ def upsert_parquet(
         .where(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
-    # materialize before overwrite (reading and overwriting the same path);
-    # dynamic mode replaces only the buckets present in `deduped`
-    (
-        deduped.localCheckpoint(eager=True)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_bucket")
-        .parquet(target)
-    )
+    # materialize before overwrite (reading and overwriting the same path),
+    # freed once the write returns; dynamic mode replaces only the
+    # buckets present in `deduped`
+    with _generations() as g:
+        (
+            g.adopt(_checkpoint(deduped))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket")
+            .parquet(target)
+        )
 
 
 def run_user_topic_ingest(
@@ -360,10 +366,6 @@ def near_dedup_batch_against_store(
     band_bits = 64 // bands
     mask = (1 << band_bits) - 1
 
-    signed = batch.withColumn(
-        "_sig", simhash64_rowwise("text")
-    ).localCheckpoint(eager=True)
-
     def banded(df: DataFrame, sig: str) -> DataFrame:
         parts = []
         for i in range(bands):
@@ -383,61 +385,70 @@ def near_dedup_batch_against_store(
             out = out.unionByName(p)
         return out
 
-    # -- within-batch: candidates via banding, verify, keep min id ----
-    keyed = banded(signed, "_sig")
-    cand = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), ["band", "bv"])
-        .where(F.col("a._id") > F.col("b._id"))
-        .where(
-            F.bit_count(
-                F.col("a._s").bitwiseXOR(F.col("b._s"))
-            )
-            <= max_hamming
-        )
-        .select(F.col("a._id").alias("_id"))
-        .distinct()
-    )
-    local_kept = signed.join(cand, signed[id_col] == cand["_id"], "left_anti")
+    # both checkpoints are freed once the writes return; `_checkpoint`,
+    # not `g.keep`: the joins below plan from its size estimate
+    with _generations() as g:
+        signed = g.adopt(_checkpoint(
+            batch.withColumn("_sig", simhash64_rowwise("text"))
+        ))
 
-    # -- against the store: partition-pruned band probe ---------------
-    num_buckets = 64
-    bkey = F.concat_ws(
-        "_",
-        F.col("band").cast("string"),
-        F.pmod(F.xxhash64(F.col("bv")), F.lit(num_buckets)).cast("string"),
-    )
-    if os.path.exists(store_path):
-        probe = banded(local_kept, "_sig").withColumn("_bkey", bkey)
-        touched = [
-            r["_bkey"] for r in probe.select("_bkey").distinct().collect()
-        ]
-        store = (
-            batch.sparkSession.read.parquet(store_path)
-            .where(F.col("_bkey").isin(touched))
-        )
-        hit = (
-            probe.join(store, ["band", "bv"])
+        # -- within-batch: candidates via banding, verify, keep min id
+        keyed = banded(signed, "_sig")
+        cand = (
+            keyed.alias("a")
+            .join(keyed.alias("b"), ["band", "bv"])
+            .where(F.col("a._id") > F.col("b._id"))
             .where(
-                F.bit_count(F.col("_s").bitwiseXOR(F.col("sig")))
+                F.bit_count(
+                    F.col("a._s").bitwiseXOR(F.col("b._s"))
+                )
                 <= max_hamming
             )
-            .select(F.col("_id"))
+            .select(F.col("a._id").alias("_id"))
             .distinct()
         )
-        kept = local_kept.join(
-            hit, local_kept[id_col] == hit["_id"], "left_anti"
+        local_kept = signed.join(
+            cand, signed[id_col] == cand["_id"], "left_anti"
         )
-    else:
-        kept = local_kept
-    kept = kept.localCheckpoint(eager=True)
 
-    kept.drop("_sig").write.mode("append").parquet(survivors_path)
-    (
-        banded(kept, "_sig")
-        .select("band", "bv", F.col("_s").alias("sig"))
-        .withColumn("_bkey", bkey)
-        .write.mode("append")
-        .partitionBy("_bkey")
-        .parquet(store_path)
-    )
+        # -- against the store: partition-pruned band probe -----------
+        num_buckets = 64
+        bkey = F.concat_ws(
+            "_",
+            F.col("band").cast("string"),
+            F.pmod(F.xxhash64(F.col("bv")), F.lit(num_buckets)).cast("string"),
+        )
+        if os.path.exists(store_path):
+            probe = banded(local_kept, "_sig").withColumn("_bkey", bkey)
+            touched = [
+                r["_bkey"] for r in probe.select("_bkey").distinct().collect()
+            ]
+            store = (
+                batch.sparkSession.read.parquet(store_path)
+                .where(F.col("_bkey").isin(touched))
+            )
+            hit = (
+                probe.join(store, ["band", "bv"])
+                .where(
+                    F.bit_count(F.col("_s").bitwiseXOR(F.col("sig")))
+                    <= max_hamming
+                )
+                .select(F.col("_id"))
+                .distinct()
+            )
+            kept = local_kept.join(
+                hit, local_kept[id_col] == hit["_id"], "left_anti"
+            )
+        else:
+            kept = local_kept
+        kept = g.adopt(_checkpoint(kept))
+
+        kept.drop("_sig").write.mode("append").parquet(survivors_path)
+        (
+            banded(kept, "_sig")
+            .select("band", "bv", F.col("_s").alias("sig"))
+            .withColumn("_bkey", bkey)
+            .write.mode("append")
+            .partitionBy("_bkey")
+            .parquet(store_path)
+        )

@@ -6,8 +6,12 @@ every query runs inside a pinned-RDD diff — after a caller-side
 `_release_checkpoint(result)`, the session's pinned-RDD set must return
 to its pre-query baseline. The `_ckpt_rdd_ids` ownership protocol lives
 in a dynamically attached attribute that any select/withColumn silently
-drops, so a wrapper that loses ownership fails HERE instead of leaking
-silently in long-lived sessions."""
+drops; the query scope `register` wraps every query in
+(`operators/graph.py::_query_scope`) puts back on the result whatever
+`_checkpoint` made during the call and left pinned. A checkpoint that
+bypasses `_checkpoint` (a raw `localCheckpoint`, a cache) or a scope
+that loses the hand-over fails HERE instead of leaking silently in
+long-lived sessions."""
 
 from __future__ import annotations
 
@@ -61,8 +65,9 @@ def _run_leak_guarded(spark, name, body):
                     jrdd.unpersist(False)
     assert not leaked, (
         f"{name} leaked {len(leaked)} pinned checkpoint frame(s) "
-        f"{sorted(leaked)} after caller-side release — some wrapper "
-        f"dropped _ckpt_rdd_ids ownership (thread it with carry_ckpt)"
+        f"{sorted(leaked)} after caller-side release — a checkpoint "
+        f"bypassed the query scope (checkpoint through "
+        f"operators/graph.py::_checkpoint) or the scope lost its hand-over"
     )
 
 

@@ -699,7 +699,8 @@ def test_hdbscan_rejects_condense_mode_before_any_job(spark):
 
 def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
     """An exception in Leiden's second level frees every generation the
-    call had checkpointed."""
+    call had checkpointed. (Only new pins count: Spark's ContextCleaner
+    may unpersist an earlier test's dead frames while Leiden runs.)"""
     import echo_chambers_detection_spark.operators.graph as G
     from echo_chambers_detection_spark import placement
 
@@ -715,7 +716,7 @@ def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
     base = _pinned(spark)
     with placement.distributed(), pytest.raises(RuntimeError, match="injected"):
         G.leiden(planted, max_levels=3, max_rounds=4)
-    assert _pinned(spark) == base
+    assert _pinned(spark) - base == set()
 
 
 def test_loop_operators_release_all_checkpoints(spark):

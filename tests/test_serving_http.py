@@ -26,7 +26,8 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def server(emb, tmp_path_factory):
     from echo_chambers_detection_spark.operators.ann import ivf_index_build
-    from echo_chambers_detection_spark.serving import IvfProbe, start_server
+    from echo_chambers_detection_spark.serving import IvfProbe
+    from echo_chambers_detection_spark.serving.http_api import start_server
 
     idx = str(tmp_path_factory.mktemp("http") / "ivf")
     ivf_index_build(emb, idx, n_cells=16, iters=2)

@@ -21,7 +21,7 @@ import pytest
 
 @pytest.fixture()
 def ui_server(tmp_path):
-    from echo_chambers_detection_spark.serving import start_server
+    from echo_chambers_detection_spark.serving.http_api import start_server
     from echo_chambers_detection_spark.sinks.charts import _png_encode
 
     import numpy as np
@@ -127,7 +127,7 @@ def test_analyze_lifecycle_with_log_streaming(ui_server):
 
 
 def test_analyze_failure_surfaces_as_failed_state(tmp_path):
-    from echo_chambers_detection_spark.serving import start_server
+    from echo_chambers_detection_spark.serving.http_api import start_server
 
     def analyze(log):
         log("starting")
@@ -169,7 +169,7 @@ def test_report_traversal_and_missing(ui_server):
 
 
 def test_ui_routes_absent_without_config():
-    from echo_chambers_detection_spark.serving import start_server
+    from echo_chambers_detection_spark.serving.http_api import start_server
 
     srv = start_server({})
     try:
@@ -181,3 +181,20 @@ def test_ui_routes_absent_without_config():
         assert code == 404
     finally:
         srv.shutdown()
+
+
+def test_server_module_runs_without_double_import():
+    """`python -m ...serving.http_api` (how a serving process starts)
+    imports the module once: the package must not import it first, or
+    runpy warns that it was found in sys.modules before execution."""
+    import os
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, "-W", "error::RuntimeWarning", "-m",
+         "echo_chambers_detection_spark.serving.http_api", "--help"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr

@@ -406,6 +406,47 @@ def test_streaming_near_dedup_across_batches(spark, tmp_path):
     assert got == {"a1", "a2", "b2", "b3"}, got
 
 
+def test_ingest_writes_leave_no_checkpoint_pinned(spark, tmp_path):
+    """Both micro-batch stages checkpoint before they write (the upsert
+    reads and overwrites one path; the near-dedup stage reads its signed
+    batch from several branches) and free those blocks once the writes
+    return: across two upserts and two near-dedup batches the session
+    pins no new RDD."""
+    from echo_chambers_detection_spark.streaming.ingest import (
+        near_dedup_batch_against_store,
+        upsert_parquet,
+    )
+
+    def pinned():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i in jmap.keySet().toArray()}
+
+    before = pinned()
+    target = str(tmp_path / "t.parquet")
+    for v in (1, 2):
+        upsert_parquet(
+            spark.createDataFrame(
+                [(f"k{i}", i * v) for i in range(20)], "k string, v int"
+            ),
+            target,
+            keys=["k"],
+        )
+    store, out = str(tmp_path / "sig_store"), str(tmp_path / "survivors")
+    for b in ("a", "b"):
+        near_dedup_batch_against_store(
+            spark.createDataFrame(
+                [(f"{b}{i}", f"batch {b} document {i} about topic {i}")
+                 for i in range(3)],
+                "doc_id string, text string",
+            ),
+            store,
+            out,
+        )
+    assert spark.read.parquet(target).count() == 20
+    assert spark.read.parquet(out).count() > 0
+    assert pinned() - before == set()
+
+
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Two live streams (views, clicks) joined on user + event-time
     proximity must produce exactly the batch join's rows under
