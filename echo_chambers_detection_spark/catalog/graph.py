@@ -45,15 +45,12 @@ def _user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         coengagement_edges_bitmap,
     )
 
-    from echo_chambers_detection_spark.operators.graph import (
-        _checkpoint,
-        carry_ckpt,
-    )
+    from echo_chambers_detection_spark.operators.graph import _checkpoint
 
     eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
-    return carry_ckpt(coengagement_edges_bitmap(eng, num_slots=None), eng)
+    return coengagement_edges_bitmap(eng, num_slots=None)
 
 
 def _post_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

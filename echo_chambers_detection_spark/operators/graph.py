@@ -366,9 +366,9 @@ def carry_ckpt(out: DataFrame, *inners: DataFrame) -> DataFrame:
     outlives it. A catalog query needs neither: its scope
     (`_query_scope`) hands the result everything still pinned. What
     still needs this: operator results and catalog helpers that run
-    outside any query (`_post_graph`, `_mint_and_metrics`, called by
-    tests and perfbench), a hand-over some release inside the query
-    reads, and perfbench's traced pass."""
+    outside any query (`_post_graph`, which tests call, and
+    `_mint_and_metrics`, which perfbench calls), a hand-over some
+    release inside the query reads, and perfbench's traced pass."""
     ids = list(getattr(out, "_ckpt_rdd_ids", []))
     for f in inners:
         if f is None:

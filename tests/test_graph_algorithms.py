@@ -699,8 +699,10 @@ def test_hdbscan_rejects_condense_mode_before_any_job(spark):
 
 def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
     """An exception in Leiden's second level frees every generation the
-    call had checkpointed. (Only new pins count: Spark's ContextCleaner
-    may unpersist an earlier test's dead frames while Leiden runs.)"""
+    call had checkpointed, and nothing it does not own. The test holds
+    every pinned RDD (a sentinel of its own among them) for the call's
+    length, so Spark's ContextCleaner cannot unpersist an earlier
+    test's dead frames mid-call: any pin that goes, Leiden freed."""
     import echo_chambers_detection_spark.operators.graph as G
     from echo_chambers_detection_spark import placement
 
@@ -713,10 +715,15 @@ def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(G, "_coarsen", coarsen_failing_at_level_2)
-    base = _pinned(spark)
+    sentinel = G.tracked_checkpoint(planted)
+    held = spark.sparkContext._jsc.getPersistentRDDs()
+    base = {int(i) for i in held.keySet().toArray()}
+    assert sentinel._ckpt_rdd_ids and set(sentinel._ckpt_rdd_ids) <= base
     with placement.distributed(), pytest.raises(RuntimeError, match="injected"):
         G.leiden(planted, max_levels=3, max_rounds=4)
-    assert _pinned(spark) - base == set()
+    assert _pinned(spark) == base
+    G._release_checkpoint(sentinel)
+    del held
 
 
 def test_loop_operators_release_all_checkpoints(spark):
