@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from echo_chambers_detection_spark.operators.coengagement import coengagement_edges
-from echo_chambers_detection_spark.operators.graph import _query_scope
+from echo_chambers_detection_spark.operators.graph import _owns_checkpoints
 from echo_chambers_detection_spark.sources.domain import (
     engagements_from_events,
     users_from_events,
@@ -50,11 +50,11 @@ QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
 def register(name: str, oracle: Optional[str], doc: str = ""):
     """Decorator: register the query function as `name`, wrapped in its
-    checkpoint scope (`_query_scope`): the returned frame owns every
+    checkpoint scope (`_owns_checkpoints`): the returned frame owns every
     checkpoint the query left pinned, so bodies hand no blocks along."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        fn = _query_scope(fn)
+        fn = _owns_checkpoints(fn)
         QUERY_REGISTRY[name] = QuerySpec(spark=fn, oracle=oracle, doc=doc)
         return fn
 

@@ -23,6 +23,10 @@ from echo_chambers_detection_spark.catalog.vector import (
     _ORACLE_EMB_EXPLODED,
     _emb,
 )
+from echo_chambers_detection_spark.operators.graph import (
+    _checkpoint,
+    _owns_checkpoints,
+)
 
 # ===========================================================================
 # Graph algorithms (SURVEY.md M3: G2, G4-G8) — iterative, not SQL-
@@ -45,14 +49,13 @@ def _user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         coengagement_edges_bitmap,
     )
 
-    from echo_chambers_detection_spark.operators.graph import _checkpoint
-
     eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
     return coengagement_edges_bitmap(eng, num_slots=None)
 
 
+@_owns_checkpoints
 def _post_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from echo_chambers_detection_spark.operators.coengagement import (
         coengagement_edges_bitmap,
@@ -61,19 +64,11 @@ def _post_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint the parsed engagement relation: the bitmap path reads it
     # twice (max-key probe + mask build), and JSON extraction over the
     # events scan is the expensive part of this query at any scale.
-    from echo_chambers_detection_spark.operators.graph import (
-        _checkpoint,
-        carry_ckpt,
-    )
-
     eng = _checkpoint(
         engagements_from_events(_t(spark, sf_dir, "events"))
     )
-    return carry_ckpt(
-        coengagement_edges_bitmap(
-            eng, user_col="post_uri", post_col="user_did", num_slots=None
-        ),
-        eng,
+    return coengagement_edges_bitmap(
+        eng, user_col="post_uri", post_col="user_did", num_slots=None
     )
 
 

@@ -22,6 +22,7 @@ from echo_chambers_detection_spark.catalog.flagship import (
 from echo_chambers_detection_spark.catalog.graph import (
     _post_graph,
 )
+from echo_chambers_detection_spark.operators.graph import _owns_checkpoints
 from echo_chambers_detection_spark.session import driver_frame, driver_table
 
 # ===========================================================================
@@ -314,6 +315,7 @@ def _rounded() -> list:
     ]
 
 
+@_owns_checkpoints
 def _mint_and_metrics(
     edges: DataFrame, labels: DataFrame, emb: DataFrame, run_key: str
 ) -> DataFrame:
@@ -333,22 +335,19 @@ def _mint_and_metrics(
     `community_table` leaves them dead, so any checkpoint blocks the
     CALLER threaded onto them (the projection's engagement frame,
     fastrp/hdbscan/CC internals) are released immediately; the result
-    carries only the table's own blocks."""
-    from echo_chambers_detection_spark.operators.graph import (
-        _release_checkpoint,
-        carry_ckpt,
-    )
+    owns only the table's own blocks."""
+    from echo_chambers_detection_spark.operators.graph import _release_checkpoint
     from echo_chambers_detection_spark.operators.metrics import community_table
 
     t = community_table(edges, labels, emb)
     _release_checkpoint(edges, labels)
-    return carry_ckpt(t.select(
+    return t.select(
         F.md5(F.concat(F.lit("community:"), F.col("label"))).alias(
             "community_id"
         ),
         *_rounded(),
         F.md5(F.lit(run_key)).alias("run_id"),
-    ), t)
+    )
 
 
 def _on_driver(spark, sf_dir, pg, kernel, row_bytes, labels_of, run_key):

@@ -30,8 +30,8 @@ from echo_chambers_detection_spark.operators.graph import (
     _checkpoint,
     _generations,
     _materialize,
+    _owns_checkpoints,
     _release_checkpoint,
-    carry_ckpt,
 )
 from echo_chambers_detection_spark.session import driver_frame
 
@@ -283,6 +283,7 @@ def lsh_topk(
     return rescored.orderBy(F.desc("score"), id_col).limit(k)
 
 
+@_owns_checkpoints
 def lsh_near_dup_pairs(
     embeddings: DataFrame,
     dim: int,
@@ -320,7 +321,6 @@ def lsh_near_dup_pairs(
     scores the whole set, so this is for verification scale only."""
     import pandas as pd
 
-    sigs = None
     if band_bits == 0:
         bands = embeddings.select(
             F.col(id_col),
@@ -332,8 +332,7 @@ def lsh_near_dup_pairs(
         mask = (1 << band_bits) - 1
         # materialize: the signature frame feeds every band expansion
         # below — without this the per-plane projection folds run once
-        # per reference. Tracked so the result carries block ownership
-        # (leak census r10: this was the last untracked ann checkpoint).
+        # per reference
         sigs = _checkpoint(
             hyperplane_signatures(
                 embeddings, dim, num_planes, id_col=id_col, vec_col=vec_col
@@ -382,11 +381,10 @@ def lsh_near_dup_pairs(
         return pd.DataFrame({"v1": v1, "v2": v2, "score": sc})
 
     id_type = dict(embeddings.dtypes)[id_col]
-    return carry_ckpt(
+    return (
         withvec.groupBy("band", "bval")
         .applyInPandas(bucket_gemm, schema=f"v1 {id_type}, v2 {id_type}, score double")
-        .distinct(),
-        sigs,
+        .distinct()
     )
 
 
@@ -981,6 +979,7 @@ def pq_train(
         return books, g.result(codes, norm)
 
 
+@_owns_checkpoints
 def pq_topk(
     embeddings: DataFrame,
     query: DataFrame,
@@ -1007,15 +1006,10 @@ def pq_topk(
         embeddings, m=m, k=n_centroids, iters=iters,
         id_col=id_col, vec_col=vec_col, train_cap=train_cap,
     )
-    # codes rides the pq_train build checkpoint (norm leaf); carry it
-    # so a caller-side release frees the build blocks
-    return carry_ckpt(
-        _pq_adc_rerank(
-            embeddings, books, codes, query,
-            k_results=k_results, refine=refine,
-            id_col=id_col, vec_col=vec_col, query_col=query_col,
-        ),
-        codes,
+    return _pq_adc_rerank(
+        embeddings, books, codes, query,
+        k_results=k_results, refine=refine,
+        id_col=id_col, vec_col=vec_col, query_col=query_col,
     )
 
 
@@ -1172,6 +1166,7 @@ def pq_topk_from_index(
     )
 
 
+@_owns_checkpoints
 def ivf_topk(
     embeddings: DataFrame,
     query: DataFrame,
@@ -1216,16 +1211,10 @@ def ivf_topk(
         id_col,
         "leftsemi",
     )
-    # assignments rides the ivf_index build checkpoint (norm leaf, on
-    # the distributed placement); carry it so a caller-side release
-    # frees the build blocks
-    return carry_ckpt(
-        cosine_topk(
-            pruned,
-            query.select(F.col(query_col).alias("qvec")),
-            k=k_results,
-            vec_col=vec_col,
-            id_col=id_col,
-        ),
-        assignments,
+    return cosine_topk(
+        pruned,
+        query.select(F.col(query_col).alias("qvec")),
+        k=k_results,
+        vec_col=vec_col,
+        id_col=id_col,
     )

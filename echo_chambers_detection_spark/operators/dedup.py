@@ -30,6 +30,11 @@ from echo_chambers_detection_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
+from echo_chambers_detection_spark.operators.graph import (
+    _materialize,
+    _owns_checkpoints,
+    connected_components,
+)
 
 
 def exact_dedup_groups(
@@ -427,6 +432,7 @@ def simhash64_rowwise(text_col) -> "F.Column":
     ).otherwise(sig)
 
 
+@_owns_checkpoints
 def simhash_candidate_pairs_banded(
     signatures: DataFrame,
     max_hamming: int = 3,
@@ -452,8 +458,6 @@ def simhash_candidate_pairs_banded(
     # construction (verified — eager=False saved nothing), so we take
     # the construction-time job like every other catalog barrier and
     # use graph._materialize for its ckpt-id tagging convention.
-    from echo_chambers_detection_spark.operators.graph import _materialize
-
     signatures = _materialize(signatures)
     keyed = None
     for i in range(bands):
@@ -488,18 +492,14 @@ def simhash_candidate_pairs_banded(
         .select("d1", "d2", "s1", "s2")
         .distinct()
     )
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-    return carry_ckpt(
-        cands.select(
-            "d1",
-            "d2",
-            F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"),
-        ).where(F.col("hamming") <= max_hamming),
-        signatures,
-    )
+    return cands.select(
+        "d1",
+        "d2",
+        F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"),
+    ).where(F.col("hamming") <= max_hamming)
 
 
+@_owns_checkpoints
 def simhash_candidate_pairs(
     signatures: DataFrame, max_hamming: int = 1
 ) -> DataFrame:
@@ -510,8 +510,6 @@ def simhash_candidate_pairs(
     # same re-execution barrier as simhash_candidate_pairs_banded
     # (see the AQE note there): the signature aggregation feeds 4
     # union branches
-    from echo_chambers_detection_spark.operators.graph import _materialize
-
     signatures = _materialize(signatures)
     halves = signatures.select(
         "doc_id",
@@ -540,11 +538,7 @@ def simhash_candidate_pairs(
         "d2",
         F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"),
     )
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-    return carry_ckpt(
-        verified.where(F.col("hamming") <= max_hamming), signatures
-    )
+    return verified.where(F.col("hamming") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -556,6 +550,7 @@ def simhash_candidate_pairs(
 # ---------------------------------------------------------------------------
 
 
+@_owns_checkpoints
 def semantic_clusters(
     embeddings: DataFrame,
     mode: str = "kmeans",
@@ -574,10 +569,9 @@ def semantic_clusters(
     equals the exact GEMM self-join."""
     if mode == "kmeans":
         from echo_chambers_detection_spark.operators.ann import ivf_index
-        from echo_chambers_detection_spark.operators.graph import carry_ckpt
 
         assign, _ = ivf_index(embeddings, k=k, id_col=id_col)
-        return carry_ckpt(assign.select(id_col, "cluster"), assign)
+        return assign.select(id_col, "cluster")
     if mode == "md5":
         if not 1 <= k <= 16:
             raise ValueError(f"md5 mode uses one nibble: k in 1..16, got {k}")
@@ -592,6 +586,7 @@ def semantic_clusters(
     raise ValueError(f"mode must be kmeans|md5|exhaustive, got {mode!r}")
 
 
+@_owns_checkpoints
 def semantic_dedup_keep_list(
     embeddings: DataFrame,
     threshold: float = 0.7,
@@ -673,17 +668,7 @@ def semantic_dedup_keep_list(
         .groupBy("cluster")
         .applyInPandas(cluster_gemm, schema=f"u1 {id_type}, u2 {id_type}")
     )
-    from echo_chambers_detection_spark.operators.graph import (
-        connected_components,
-    )
-
     comps = connected_components(pairs)
-    from echo_chambers_detection_spark.operators.graph import carry_ckpt
-
-    return carry_ckpt(
-        comps.where(F.col("node") != F.col("component")).select(
-            F.col("node").alias(id_col), F.col("component").alias("keeper")
-        ),
-        comps,
-        cl,
+    return comps.where(F.col("node") != F.col("component")).select(
+        F.col("node").alias(id_col), F.col("component").alias("keeper")
     )

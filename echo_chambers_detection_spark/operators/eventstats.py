@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from echo_chambers_detection_spark.operators.graph import (
+    _checkpoint,
+    _owns_checkpoints,
+)
+
 
 def interarrival_gap_stats(
     events: DataFrame,
@@ -98,6 +103,7 @@ def user_session_stats(
     )
 
 
+@_owns_checkpoints
 def misra_gries_heavy_hitters(
     df: DataFrame, col: str, k: int = 256
 ) -> DataFrame:
@@ -154,18 +160,11 @@ def misra_gries_heavy_hitters(
         frames.append(pd.DataFrame({"value": [None], "est": [dec]}))
         yield pd.concat(frames, ignore_index=True)
 
-    from echo_chambers_detection_spark.operators.graph import (
-        _checkpoint,
-        carry_ckpt,
-    )
-
     # checkpoint the summary: it feeds FOUR consumers (merge, decrement
     # total, cut scalar, final projection) and without the cut each one
     # would re-execute the Arrow pass over the full input (caught by
     # tests/test_plans.py::test_heavy_hitters_single_arrow_pass). The
-    # checkpointed frames are <= P*k + P rows — tiny by construction —
-    # and their block ownership rides the returned frame (carry_ckpt),
-    # so a caller releasing what it consumes leaks nothing.
+    # checkpointed frames are <= P*k + P rows — tiny by construction.
     sk = _checkpoint(
         df.select(F.col(col).cast("string").alias("value"))
         .where(F.col("value").isNotNull())
@@ -188,7 +187,7 @@ def misra_gries_heavy_hitters(
     errf = base_dec.crossJoin(F.broadcast(cutv)).select(
         (F.col("d") + F.col("cut")).cast("bigint").alias("max_err")
     )
-    out = (
+    return (
         ranked.crossJoin(F.broadcast(cutv))
         .select(
             "value", (F.col("est") - F.col("cut")).cast("bigint").alias("est")
@@ -196,4 +195,3 @@ def misra_gries_heavy_hitters(
         .where(F.col("est") > 0)
         .crossJoin(F.broadcast(errf))
     )
-    return carry_ckpt(out, sk, ranked)

@@ -11,8 +11,8 @@ distributed joins/aggregations:
   truncates lineage so plans don't grow unboundedly (the classic
   iterative-Spark failure mode). One ownership rule covers its blocks:
   a loop's generations belong to its scope (`_generations`); only what
-  `result()` hands over outlives it, and inside a catalog query that
-  falls to the query's scope (`_query_scope`);
+  `result()` hands over outlives it, and inside a public operator or a
+  catalog query that falls to its scope (`_owns_checkpoints`);
 - driver-side state is O(1) scalars (round counters, change counts) —
   never node/edge collections.
 
@@ -248,16 +248,17 @@ def _pinned_ids(sc) -> list[int]:
 
 def tracked_checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint with its block ids recorded on the result
-    (so `_release_checkpoint`/`carry_ckpt` can free it), but WITHOUT
-    `_materialize`'s stats-free leaf rebuild — for one-shot frames whose
-    Catalyst size estimate should keep steering downstream join
-    planning. Loops must keep using `_materialize` (the stats rebuild is
-    what stops checkpoint-stat compounding there).
+    (so `_release_checkpoint` can free it), but WITHOUT `_materialize`'s
+    stats-free leaf rebuild — for one-shot frames whose Catalyst size
+    estimate should keep steering downstream join planning. Loops must
+    keep using `_materialize` (the stats rebuild is what stops
+    checkpoint-stat compounding there).
 
-    It never records into a query scope: engine code checkpoints through
-    `_checkpoint`, and this public name stays for a caller that must own
-    a checkpoint beyond the query it runs in (perfbench's save step,
-    which reads its labels after releasing the query's result)."""
+    It never records into an ownership scope. Its one caller in the
+    package is `_checkpoint`, which every engine checkpoint goes
+    through; the public name stays for perfbench, whose save step must
+    own a checkpoint beyond the query it runs in (it reads its labels
+    after releasing the query's result)."""
     sc = df.sparkSession.sparkContext
     before = set(_pinned_ids(sc))
     out = df.localCheckpoint(eager=True)
@@ -265,17 +266,20 @@ def tracked_checkpoint(df: DataFrame) -> DataFrame:
     return out
 
 
-# the ids `_checkpoint` made in the running catalog query (`_query_scope`)
-_QUERY_CKPTS: ContextVar[list | None] = ContextVar("query_ckpts", default=None)
+# the ids `_checkpoint` made in the innermost running operator or query
+# (`_owns_checkpoints`)
+_SCOPE_CKPTS: ContextVar[list | None] = ContextVar("scope_ckpts", default=None)
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:
     """`tracked_checkpoint`, with the new block ids also recorded in the
-    running query's scope (`_query_scope`), which hands what is still
-    pinned when the query returns to its result. Outside a query it is
-    `tracked_checkpoint`. Every engine checkpoint goes through here."""
+    innermost running ownership scope (`_owns_checkpoints`: a public
+    operator or a catalog query), which hands what is still pinned when
+    it returns to its result. Outside any scope it is
+    `tracked_checkpoint`. Every engine checkpoint goes through here, so
+    operators own what they make and hand no blocks along by hand."""
     out = tracked_checkpoint(df)
-    made = _QUERY_CKPTS.get()
+    made = _SCOPE_CKPTS.get()
     if made is not None:
         made += out._ckpt_rdd_ids
     return out
@@ -358,17 +362,14 @@ def carry_ckpt(out: DataFrame, *inners: DataFrame) -> DataFrame:
     frame a function RETURNS, so a caller's single
     `_release_checkpoint(result)` frees the whole chain. Plain column
     ops (select/withColumn/alias) mint new DataFrame objects and drop
-    the `_ckpt_rdd_ids` attribute — every wrapper that post-processes an
-    operator result needs this to stay release-clean (round 9 leak
-    census: 37/134 catalog queries left pinned blocks behind). Inside a
-    loop the same hand-over is `_generations.result`: a loop's
-    generations belong to its scope; only what `result()` hands over
-    outlives it. A catalog query needs neither: its scope
-    (`_query_scope`) hands the result everything still pinned. What
-    still needs this: operator results and catalog helpers that run
-    outside any query (`_post_graph`, which tests call, and
-    `_mint_and_metrics`, which perfbench calls), a hand-over some
-    release inside the query reads, and perfbench's traced pass."""
+    the `_ckpt_rdd_ids` attribute. Operators and catalog queries need
+    none of it: their scope (`_owns_checkpoints`) hands the result
+    everything still pinned, and inside a loop the hand-over is
+    `_generations.result`. What still calls this: this module's
+    machinery (`_materialize`, `_Generations.step` and `result`), the
+    analysis chains' four hand-offs in `catalog/metrics.py`, which a
+    release inside the query reads (`_mint_and_metrics` frees what its
+    edges and labels own), and perfbench's traced pass."""
     ids = list(getattr(out, "_ckpt_rdd_ids", []))
     for f in inners:
         if f is None:
@@ -440,10 +441,15 @@ class _Generations:
         and own it until the scope exits or a step() supersedes it."""
         return self.adopt((_materialize_wide if wide else _materialize)(df))
 
-    def adopt(self, df: DataFrame) -> DataFrame:
+    def adopt(
+        self, df: DataFrame, prev: DataFrame | tuple | None = None
+    ) -> DataFrame:
         """Own `df`, a frame another operator or scope handed over with
-        its blocks (its `result()`), as if this scope had kept it."""
+        its blocks (its `result()`) or a `_checkpoint` whose planner
+        statistics the loop keeps, as if this scope had kept it; free
+        `prev` as step() does."""
         self._owned.append(df)
+        self._free(prev)
         return df
 
     def step(
@@ -461,9 +467,9 @@ class _Generations:
         one `_scalars` job. Returns the frame, or (frame, *scalars) when
         aggs are given."""
         leaf = (_materialize_wide if wide else _materialize)(df)
-        out = leaf if cols is None else carry_ckpt(leaf.select(*cols), leaf)
-        self._owned.append(out)
-        self._free(prev)
+        out = self.adopt(
+            leaf if cols is None else carry_ckpt(leaf.select(*cols), leaf), prev
+        )
         return (out, *_scalars(leaf, **aggs)) if aggs else out
 
     def result(self, out: DataFrame, *frames: DataFrame) -> DataFrame:
@@ -485,8 +491,10 @@ def _generations():
     hands generations to the returned frame. A loop's generations
     belong to its scope; only what `result()` hands over outlives it —
     on normal exit, early return and exception alike (a raise mid-loop
-    pins nothing). Inside a catalog query, what `result()` hands over
-    falls to the query's scope (`_query_scope`), the outer owner."""
+    pins nothing). Inside a public operator or a catalog query, what
+    `result()` hands over falls to its scope (`_owns_checkpoints`), the
+    outer owner. Loop operators that return `g.result(...)` need no
+    scope of their own."""
     g = _Generations()
     try:
         yield g
@@ -495,21 +503,22 @@ def _generations():
         g._owned = []
 
 
-def _query_scope(fn):
-    """Make the catalog query `fn` the one owner of the checkpoints it
-    makes (`catalog._core.register` wraps every query in it). When `fn`
-    returns, every id `_checkpoint` recorded during the call that is
-    still pinned joins the result's `_ckpt_rdd_ids` (one
+def _owns_checkpoints(fn):
+    """Make `fn`, a public operator or a catalog query
+    (`catalog._core.register` applies it to every query), the one owner
+    of the checkpoints it makes, so its body returns a bare frame. When
+    `fn` returns, every id `_checkpoint` recorded during the call that
+    is still pinned joins the result's `_ckpt_rdd_ids` (one
     `getPersistentRDDs` read, no job), so the caller's
-    `_release_checkpoint(result)` frees the query whole; what the query
-    freed itself is not freed twice. A query called inside another
-    passes its result's ids to the outer scope too. On a raise, what
-    the call recorded is freed."""
+    `_release_checkpoint(result)` frees the call whole; what the call
+    freed itself is not freed twice. A scope run inside another passes
+    its result's ids to the outer one. On a raise, what the call
+    recorded is freed."""
 
     @wraps(fn)
     def run(*args, **kwargs):
         made: list[int] = []
-        token = _QUERY_CKPTS.set(made)
+        token = _SCOPE_CKPTS.set(made)
         try:
             out = fn(*args, **kwargs)
         except BaseException:
@@ -517,14 +526,14 @@ def _query_scope(fn):
                 _unpersist(SparkContext._active_spark_context, made)
             raise
         finally:
-            _QUERY_CKPTS.reset(token)
+            _SCOPE_CKPTS.reset(token)
         if made:
             pinned = set(_pinned_ids(SparkContext._active_spark_context))
             out._ckpt_rdd_ids = list(dict.fromkeys([
                 *getattr(out, "_ckpt_rdd_ids", []),
                 *(i for i in made if i in pinned),
             ]))
-            outer = _QUERY_CKPTS.get()
+            outer = _SCOPE_CKPTS.get()
             if outer is not None:
                 outer += out._ckpt_rdd_ids
         return out
@@ -973,6 +982,7 @@ def bfs_landmark_distances(
         return _frontier_loop(g, sym, dist, ["seed", "node"], max_iter)
 
 
+@_owns_checkpoints
 def landmark_closeness(
     edges: DataFrame, n_landmarks: int = 4, max_iter: int = 30
 ) -> DataFrame:
@@ -998,7 +1008,7 @@ def landmark_closeness(
     d = bfs_landmark_distances(
         edges, n_landmarks=n_landmarks, max_iter=max_iter
     )
-    out = (
+    return (
         d.groupBy("node")
         .agg(
             F.count("*").alias("n_landmarks_reached"),
@@ -1021,7 +1031,6 @@ def landmark_closeness(
             ),
         )
     )
-    return carry_ckpt(out, d)
 
 
 def _min_plus_loop(g, sym, dist, keys, k):

@@ -115,12 +115,10 @@ def graph_ann_topk(
     query enters at the globally smallest node id). Deterministic:
     ties break on node id everywhere. `hops` defaults to
     ceil(log2(n)) + beam (convergence + side coverage on chain-like
-    graphs); each hop materializes the frontier so the plan stays one
-    join deep regardless of hop count."""
-    from echo_chambers_detection_spark.operators.graph import (
-        _materialize,
-        _release_checkpoint,
-    )
+    graphs); each hop is one `_generations` step, so the plan stays one
+    join deep regardless of hop count and a raise mid-walk pins
+    nothing."""
+    from echo_chambers_detection_spark.operators.graph import _generations
 
     emb = embeddings.select(
         F.col(id_col).cast("string").alias("node"), F.col(vec_col).alias("_vec")
@@ -150,54 +148,49 @@ def graph_ann_topk(
         )
 
     wq = Window.partitionBy("qid")
-    frontier = _materialize(
-        score(entries.select("qid", "node").distinct())
-    )
-    for hop in range(hops):
-        prev = frontier
-        expanded = (
-            frontier.select("qid", F.col("node").alias("src"))
-            .join(sym, "src")
-            .select("qid", F.col("dst").alias("node"))
-            .distinct()
-            .join(frontier.select("qid", "node"), ["qid", "node"], "left_anti")
-        )
-        merged = frontier.unionByName(score(expanded))
-        frontier = _materialize(
-            merged.withColumn(
-                "_rk",
-                F.row_number().over(wq.orderBy(F.desc("sim"), "node")),
+    cols = ["qid", "node", "sim"]
+    with _generations() as g:
+        frontier = g.keep(score(entries.select("qid", "node").distinct()))
+        for hop in range(hops):
+            expanded = (
+                frontier.select("qid", F.col("node").alias("src"))
+                .join(sym, "src")
+                .select("qid", F.col("dst").alias("node"))
+                .distinct()
+                .join(frontier.select("qid", "node"), ["qid", "node"], "left_anti")
             )
-            .where(F.col("_rk") <= beam)
-            .drop("_rk")
-        )
-        # early exit: if no query's top-beam set changed this hop, the
-        # next expansion explores exactly the same neighborhoods —
-        # fixpoint. `hops` stays the worst-case bound; real walks
-        # converge in far fewer rounds (the planted 512-arc in ~half),
-        # and each skipped hop saves a full materialize round-trip.
-        changed = (
-            frontier.join(
-                prev.select("qid", "node"), ["qid", "node"], "left_anti"
+            # `_new` marks the rows the hop found: `expanded` excludes
+            # the frontier, so a kept `_new` row is one the old frontier
+            # lacked
+            merged = frontier.withColumn("_new", F.lit(False)).unionByName(
+                score(expanded).withColumn("_new", F.lit(True))
             )
-            .limit(1)
-            .count()
-        )
-        _release_checkpoint(prev)
-        if changed == 0:
-            import logging
+            # early exit: if no query's top-beam set changed this hop, the
+            # next expansion explores exactly the same neighborhoods —
+            # fixpoint. `hops` stays the worst-case bound; real walks
+            # converge in far fewer rounds (the planted 512-arc in ~half),
+            # and each skipped hop saves a full materialize round-trip.
+            frontier, changed = g.step(
+                merged.withColumn(
+                    "_rk",
+                    F.row_number().over(wq.orderBy(F.desc("sim"), "node")),
+                ).where(F.col("_rk") <= beam),
+                cols,
+                prev=frontier,
+                changed=F.count(F.when(F.col("_new"), 1)),
+            )
+            if changed == 0:
+                import logging
 
-            logging.getLogger(__name__).info(
-                "graph_ann converged after %d/%d hops", hop + 1, hops
+                logging.getLogger(__name__).info(
+                    "graph_ann converged after %d/%d hops", hop + 1, hops
+                )
+                break
+        return g.result(
+            frontier.withColumn(
+                "_rk", F.row_number().over(wq.orderBy(F.desc("sim"), "node"))
             )
-            break
-    out = (
-        frontier.withColumn(
-            "_rk", F.row_number().over(wq.orderBy(F.desc("sim"), "node"))
+            .where(F.col("_rk") <= k)
+            .select("qid", "node", F.round("sim", 6).alias("sim")),
+            frontier,
         )
-        .where(F.col("_rk") <= k)
-        .select("qid", "node", F.round("sim", 6).alias("sim"))
-    )
-    out._ckpt_rdd_ids = getattr(frontier, "_ckpt_rdd_ids", [])
-    frontier._ckpt_rdd_ids = []
-    return out

@@ -39,7 +39,7 @@ from echo_chambers_detection_spark.functions.vector import cosine_similarity
 from echo_chambers_detection_spark.operators.graph import (
     _checkpoint,
     _exceeds_rows,
-    carry_ckpt,
+    _owns_checkpoints,
 )
 from echo_chambers_detection_spark.session import driver_frame, driver_table
 
@@ -191,6 +191,7 @@ def modularity(edges_m: DataFrame, members: DataFrame) -> DataFrame:
     )
 
 
+@_owns_checkpoints
 def community_metrics(
     edges_m: DataFrame, members: DataFrame, embeddings: DataFrame
 ) -> DataFrame:
@@ -285,26 +286,24 @@ def community_metrics(
     )
     min_vol = F.least(F.col("vol_c"), F.col("total_deg") - F.col("vol_c"))
     possible = F.col("size") * (F.col("size") - 1) / 2
-    return carry_ckpt(
-        out.select(
-            "label",
-            "size",
-            "cohesion",
-            (1 - F.col("_mean_ext_sim")).alias("separation"),
-            (F.col("cohesion") * (1 - F.col("_mean_ext_sim"))).alias("ecs"),
-            F.when(min_vol > 0, F.col("cut_edges") / min_vol).alias(
-                "conductance"
-            ),
-            "variance",
-            F.col("cohesion").alias("homophily"),
-            F.when(possible > 0, F.col("internal_edge_count") / possible)
-            .alias("density_internal"),
-            "internal_edge_count",
-        ).orderBy(F.desc_nulls_last("ecs"), "label"),
-        we,
-    )
+    return out.select(
+        "label",
+        "size",
+        "cohesion",
+        (1 - F.col("_mean_ext_sim")).alias("separation"),
+        (F.col("cohesion") * (1 - F.col("_mean_ext_sim"))).alias("ecs"),
+        F.when(min_vol > 0, F.col("cut_edges") / min_vol).alias(
+            "conductance"
+        ),
+        "variance",
+        F.col("cohesion").alias("homophily"),
+        F.when(possible > 0, F.col("internal_edge_count") / possible)
+        .alias("density_internal"),
+        "internal_edge_count",
+    ).orderBy(F.desc_nulls_last("ecs"), "label")
 
 
+@_owns_checkpoints
 def community_table(
     edges: DataFrame, labels: DataFrame, embeddings: DataFrame
 ) -> DataFrame:
@@ -376,10 +375,8 @@ def community_table(
     if _exceeds_rows(members, 0):
         edges_m = _checkpoint(edges_m.coalesce(1))
         if _exceeds_rows(edges_m, 0):
-            return carry_ckpt(
-                community_metrics(edges_m, members, embeddings), edges_m, members
-            )
-    return carry_ckpt(driver_frame(spark, [], schema), edges_m, members)
+            return community_metrics(edges_m, members, embeddings)
+    return driver_frame(spark, [], schema)
 
 
 def _joined_members(lab_t, emb_t):

@@ -37,8 +37,8 @@ from pyspark.sql.types import LongType
 from echo_chambers_detection_spark.operators.graph import (
     _generations,
     _materialize,
+    _owns_checkpoints,
     _traversal_mirror,
-    carry_ckpt,
 )
 
 log = logging.getLogger(__name__)
@@ -74,6 +74,7 @@ def _oriented(edges: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
+@_owns_checkpoints
 def triangle_vertices(edges: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     """One row (a, b, c) per triangle in the undirected graph; each
     triangle appears exactly once (a = apex of the oriented wedge, b/c
@@ -81,9 +82,8 @@ def triangle_vertices(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
     needs degrees: Catalyst does not reuse common subplans, so a lazy
     deg referenced from both orientation joins and the caller's output
     would re-run its groupBy per reference."""
-    own_deg = None
     if deg is None:
-        deg = own_deg = _materialize(node_degrees(edges))
+        deg = _materialize(node_degrees(edges))
     oe = _oriented(edges, deg)
     l = oe.select(
         F.col("src").alias("a"), F.col("dst").alias("b"),
@@ -98,10 +98,10 @@ def triangle_vertices(edges: DataFrame, deg: DataFrame | None = None) -> DataFra
         | ((F.col("bd") == F.col("cd")) & (F.col("b") < F.col("c")))
     )
     closure = oe.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    out = wedges.join(closure, ["b", "c"]).select("a", "b", "c")
-    return carry_ckpt(out, own_deg)
+    return wedges.join(closure, ["b", "c"]).select("a", "b", "c")
 
 
+@_owns_checkpoints
 def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node (node, triangles, deg, wedges): triangle membership
     count, degree, and deg*(deg-1)/2 open-wedge capacity — the local
@@ -131,15 +131,15 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .groupBy("node")
         .agg(F.count("*").alias("t"))
     )
-    out = deg.join(per_node, "node", "left").select(
+    return deg.join(per_node, "node", "left").select(
         "node",
         F.coalesce(F.col("t"), F.lit(0)).alias("triangles"),
         "deg",
         F.expr("deg * (deg - 1) DIV 2").alias("wedges"),
     )
-    return carry_ckpt(out, deg)
 
 
+@_owns_checkpoints
 def transitivity_stats(edges: DataFrame) -> DataFrame:
     """One-row global summary: n_nodes, n_edges, n_triangles, n_wedges
     (global transitivity = 3*n_triangles/n_wedges, derivable from the
@@ -160,12 +160,12 @@ def transitivity_stats(edges: DataFrame) -> DataFrame:
         F.expr("CAST(sum(deg) AS BIGINT) DIV 2").alias("n_edges"),
         F.sum(F.expr("deg * (deg - 1) DIV 2")).alias("n_wedges"),
     )
-    out = base.crossJoin(tri_n).select(
+    return base.crossJoin(tri_n).select(
         "n_nodes", "n_edges", "n_triangles", "n_wedges"
     )
-    return carry_ckpt(out, deg)
 
 
+@_owns_checkpoints
 def degree_assortativity_moments(edges: DataFrame) -> DataFrame:
     """Exact integer moments of the degree-degree joint distribution at
     edge endpoints, over BOTH orientations of every undirected edge (the
@@ -183,13 +183,12 @@ def degree_assortativity_moments(edges: DataFrame) -> DataFrame:
         both.join(deg.withColumnRenamed("node", "u1").withColumnRenamed("deg", "dx"), "u1")
         .join(deg.withColumnRenamed("node", "u2").withColumnRenamed("deg", "dy"), "u2")
     )
-    out = e.agg(
+    return e.agg(
         F.count("*").alias("m2"),
         F.sum("dx").alias("s_x"),
         F.sum(F.expr("dx * dx")).alias("s_xx"),
         F.sum(F.expr("dx * dy")).alias("s_xy"),
     )
-    return carry_ckpt(out, deg)
 
 
 def strong_tie_backbone(

@@ -15,7 +15,10 @@ Spark-first shape:
   driver-side sets would die at crawl scale.
 - Every wave is eagerly checkpointed the moment it is fetched: the
   fetch is a SIDE EFFECT, and a lazy plan would re-issue every HTTP
-  call on each downstream action.
+  call on each downstream action. One `_generations` scope owns the
+  crawl's checkpoints: the visited sets and the frontier retire their
+  dead generations each wave, and only the fetched waves the results
+  read outlive it, owned by the `CrawlResult` frames.
 - Transport is a factory of plain-Python clients so executors can
   build their own (no driver connection is ever pickled): `
   HttpXrpcTransport` speaks the public XRPC GET endpoints the
@@ -35,6 +38,10 @@ from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from echo_chambers_detection_spark.operators.graph import (
+    _checkpoint,
+    _generations,
+)
 from echo_chambers_detection_spark.session import driver_frame
 
 PROFILE_SCHEMA = "did string, handle string, display_name string, description string"
@@ -162,10 +169,10 @@ def _fetch_users_wave(
     frontier: DataFrame,
     transport_factory: Callable[[], object],
     cfg: CrawlConfig,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """One mapInPandas pass over the user frontier: profile + authored
-    posts per did (reference crawl() step 2 body). Returns (profiles,
-    posts) — materialized by the caller."""
+    posts per did (reference crawl() step 2 body), one row per profile
+    (`kind` 'profile') or post ('post'). Materialized by the caller."""
     import pandas as pd
 
     def fn(batches):
@@ -194,19 +201,12 @@ def _fetch_users_wave(
                     }
                 )
 
-    rows = frontier.mapInPandas(
+    return frontier.mapInPandas(
         fn,
         schema="kind string, did string, handle string, "
         "display_name string, description string, uri string, "
         "cid string, text string, author string",
-    ).localCheckpoint(eager=True)
-    profiles = rows.where(F.col("kind") == "profile").select(
-        "did", "handle", "display_name", "description"
     )
-    posts = rows.where(F.col("kind") == "post").select(
-        "uri", "cid", "text", "author"
-    )
-    return profiles, posts
 
 
 def _fetch_likers(
@@ -234,9 +234,7 @@ def _fetch_likers(
                         }
                     )
 
-    return posts.select("uri").mapInPandas(
-        fn, schema=LIKE_SCHEMA
-    ).localCheckpoint(eager=True)
+    return posts.select("uri").mapInPandas(fn, schema=LIKE_SCHEMA)
 
 
 @dataclass
@@ -277,7 +275,11 @@ def crawl_like_graph(
     INTERSECTION over the reference's possible orderings. The crawl
     set itself is unaffected (those users are already being crawled),
     likes ⊆ posts holds, and every liked user in `likes` is a
-    next-wave discovery — the reference's invariants."""
+    next-wave discovery — the reference's invariants.
+
+    The three frames own the crawl's checkpoints: a caller's
+    `_release_checkpoint(res.profiles, res.posts, res.likes)` frees it
+    whole."""
     import pandas as pd  # noqa: F401  (executor dependency, fail fast)
 
     seeds = driver_frame(spark, [(d,) for d in seed_dids], "did string").distinct()
@@ -304,60 +306,74 @@ def crawl_like_graph(
                             }
                         )
 
-    seed_likes = seeds.mapInPandas(seed_fn, LIKE_SCHEMA).localCheckpoint(
-        eager=True
-    )
+    profiles_acc = driver_frame(spark, [], PROFILE_SCHEMA)
+    posts_acc = driver_frame(spark, [], POST_SCHEMA)
+    likes_acc = driver_frame(spark, [], LIKE_SCHEMA)
+    # each wave's fetched rows, new posts and likes: the results read them
+    waves_rows, waves_posts, waves_likes = [], [], []
 
-    seen_users = seeds
-    seen_posts = seed_likes.select("uri").distinct().localCheckpoint(eager=True)
-    frontier = (
-        seed_likes.select(F.col("user_did").alias("did"))
-        .distinct()
-        .join(seen_users, "did", "left_anti")
-        .localCheckpoint(eager=True)
-    )
+    with _generations() as g:
 
-    empty_prof = driver_frame(spark, [], PROFILE_SCHEMA)
-    empty_post = driver_frame(spark, [], POST_SCHEMA)
-    empty_like = driver_frame(spark, [], LIKE_SCHEMA)
-    profiles_acc, posts_acc, likes_acc = empty_prof, empty_post, empty_like
+        def ckpt(df, prev=None):
+            # `_checkpoint`, not a loop `step`: a crawl runs a few waves,
+            # and its joins plan from the checkpoints' size estimates
+            return g.adopt(_checkpoint(df), prev)
 
-    for _ in range(cfg.max_iterations):
-        if frontier.limit(1).count() == 0:
-            break
-        seen_users = seen_users.unionByName(frontier).localCheckpoint(eager=True)
-        profiles, posts = _fetch_users_wave(frontier, transport_factory, cfg)
-        new_posts = (
-            posts.join(seen_posts, "uri", "left_anti")
-            .dropDuplicates(["uri"])
-            .localCheckpoint(eager=True)
-        )
-        seen_posts = seen_posts.unionByName(
-            new_posts.select("uri")
-        ).localCheckpoint(eager=True)
-        # reference: edges only for likers NOT already seen
-        # (producer_main.py:170-177) — see docstring on ordering
-        likes = (
-            _fetch_likers(new_posts, transport_factory, cfg)
-            .join(
-                seen_users.select(F.col("did").alias("user_did")),
-                "user_did",
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-        profiles_acc = profiles_acc.unionByName(profiles)
-        posts_acc = posts_acc.unionByName(new_posts)
-        likes_acc = likes_acc.unionByName(likes)
-        # likes are pre-filtered to unseen users, so they ARE the frontier
-        frontier = (
-            likes.select(F.col("user_did").alias("did"))
+        seed_likes = ckpt(seeds.mapInPandas(seed_fn, LIKE_SCHEMA))
+        seen_users = seeds
+        seen_posts = ckpt(seed_likes.select("uri").distinct())
+        frontier = ckpt(
+            seed_likes.select(F.col("user_did").alias("did"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .join(seen_users, "did", "left_anti"),
+            prev=seed_likes,
         )
 
-    return CrawlResult(
-        profiles=profiles_acc.dropDuplicates(["did"]),
-        posts=posts_acc.dropDuplicates(["uri"]),
-        likes=likes_acc.dropDuplicates(["user_did", "uri"]),
-    )
+        for _ in range(cfg.max_iterations):
+            if frontier.limit(1).count() == 0:
+                break
+            seen_users = ckpt(seen_users.unionByName(frontier), prev=seen_users)
+            rows = ckpt(_fetch_users_wave(frontier, transport_factory, cfg))
+            new_posts = ckpt(
+                rows.where(F.col("kind") == "post")
+                .select("uri", "cid", "text", "author")
+                .join(seen_posts, "uri", "left_anti")
+                .dropDuplicates(["uri"])
+            )
+            seen_posts = ckpt(
+                seen_posts.unionByName(new_posts.select("uri")), prev=seen_posts
+            )
+            fetched = ckpt(_fetch_likers(new_posts, transport_factory, cfg))
+            # reference: edges only for likers NOT already seen
+            # (producer_main.py:170-177) — see docstring on ordering
+            likes = ckpt(
+                fetched.join(
+                    seen_users.select(F.col("did").alias("user_did")),
+                    "user_did",
+                    "left_anti",
+                ),
+                prev=fetched,
+            )
+            profiles_acc = profiles_acc.unionByName(
+                rows.where(F.col("kind") == "profile").select(
+                    "did", "handle", "display_name", "description"
+                )
+            )
+            posts_acc = posts_acc.unionByName(new_posts)
+            likes_acc = likes_acc.unionByName(likes)
+            waves_rows.append(rows)
+            waves_posts.append(new_posts)
+            waves_likes.append(likes)
+            # likes are pre-filtered to unseen users, so they ARE the frontier
+            frontier = ckpt(
+                likes.select(F.col("user_did").alias("did")).distinct(),
+                prev=frontier,
+            )
+
+        return CrawlResult(
+            profiles=g.result(profiles_acc.dropDuplicates(["did"]), *waves_rows),
+            posts=g.result(posts_acc.dropDuplicates(["uri"]), *waves_posts),
+            likes=g.result(
+                likes_acc.dropDuplicates(["user_did", "uri"]), *waves_likes
+            ),
+        )

@@ -6,8 +6,8 @@ every query runs inside a pinned-RDD diff — after a caller-side
 `_release_checkpoint(result)`, the session's pinned-RDD set must return
 to its pre-query baseline. The `_ckpt_rdd_ids` ownership protocol lives
 in a dynamically attached attribute that any select/withColumn silently
-drops; the query scope `register` wraps every query in
-(`operators/graph.py::_query_scope`) puts back on the result whatever
+drops; the ownership scope `register` wraps every query in
+(`operators/graph.py::_owns_checkpoints`) puts back on the result whatever
 `_checkpoint` made during the call and left pinned. A checkpoint that
 bypasses `_checkpoint` (a raw `localCheckpoint`, a cache) or a scope
 that loses the hand-over fails HERE instead of leaking silently in

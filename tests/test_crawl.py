@@ -101,6 +101,31 @@ def test_crawl_bfs_two_waves(spark):
     assert res.profiles.count() == 3
 
 
+def test_crawl_results_own_every_checkpoint(spark):
+    """One crawl's checkpoints (visited sets, frontiers, fetched waves)
+    are owned by its three result frames: once a caller has read and
+    released them, no RDD the crawl pinned is left behind."""
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+    )
+
+    def pinned():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i in jmap.keySet().toArray()}
+
+    base = pinned()
+    res = crawl_like_graph(
+        spark,
+        ["did:seed"],
+        _make_mock_transport(),
+        CrawlConfig(max_iterations=2, rate_per_sec=10_000.0),
+    )
+    frames = (res.profiles, res.posts, res.likes)
+    assert [f.count() for f in frames] == [3, 3, 2]
+    _release_checkpoint(*frames)
+    assert pinned() - base == set()
+
+
 def test_crawl_depth_limit(spark):
     res = crawl_like_graph(
         spark,

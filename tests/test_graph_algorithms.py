@@ -849,3 +849,96 @@ def test_loop_operators_release_all_checkpoints(spark):
             assert not leaked, f"{name} leaked pinned RDDs: {sorted(leaked)}"
             if name == "condense_two_level":
                 _release_checkpoint(c_e, c_n, mm)
+
+
+def test_operators_release_all_checkpoints(spark):
+    """The sibling of the loop-operator leak check for the public
+    operators that own their checkpoints through `_owns_checkpoints`
+    (and `graph_ann_topk`, a `_generations` loop): on tiny inputs with
+    every kernel forced distributed, so their checkpoints happen, the
+    pinned-RDD set returns to baseline once the caller releases the
+    result. Every leaking operator is named in the failure."""
+    from echo_chambers_detection_spark import placement
+    from echo_chambers_detection_spark.catalog.graph import _post_graph
+    from echo_chambers_detection_spark.catalog.metrics import _mint_and_metrics
+    from echo_chambers_detection_spark.operators import (
+        ann as A,
+        dedup as D,
+        metrics as M,
+        triangles as T,
+    )
+    from echo_chambers_detection_spark.operators.eventstats import (
+        misra_gries_heavy_hitters,
+    )
+    from echo_chambers_detection_spark.operators.graph import (
+        _release_checkpoint,
+        landmark_closeness,
+    )
+    from echo_chambers_detection_spark.operators.graphann import (
+        graph_ann_topk,
+        skiplist_edges,
+    )
+    from echo_chambers_detection_spark.operators.planted import (
+        planted_arc_embeddings,
+    )
+    from tests.conftest import SF_ORACLE
+
+    pairs = _clique([f"a{i}" for i in range(4)]) + _clique(
+        [f"b{i}" for i in range(4)]
+    ) + [("a0", "b0")]
+    u = spark.createDataFrame(pairs, "u1 string, u2 string")
+    arcs = planted_arc_embeddings(spark, 2, 12)
+    labels = arcs.select("node", F.substring("node", 1, 2).alias("label"))
+    emb = arcs.select(F.col("node").alias("post_cid"), "vector")
+    query = spark.createDataFrame([([1.0, 0.0],)], "qvec array<double>")
+    sigs = spark.range(24).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 5 * 257).alias("simhash"),
+    )
+    arc_q = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "qid long, qvec array<double>"
+    )
+    leaks = {}
+    with placement.distributed():
+        for name, fn in [
+            ("triangle_vertices", lambda: T.triangle_vertices(u)),
+            ("triangle_counts", lambda: T.triangle_counts(u)),
+            ("transitivity_stats", lambda: T.transitivity_stats(u)),
+            ("degree_assortativity_moments",
+             lambda: T.degree_assortativity_moments(u)),
+            ("simhash_candidate_pairs_banded",
+             lambda: D.simhash_candidate_pairs_banded(sigs, max_hamming=3)),
+            ("simhash_candidate_pairs", lambda: D.simhash_candidate_pairs(sigs)),
+            ("semantic_clusters", lambda: D.semantic_clusters(emb, k=2)),
+            ("semantic_dedup_keep_list",
+             lambda: D.semantic_dedup_keep_list(emb, threshold=0.99, k=2)),
+            ("lsh_near_dup_pairs", lambda: A.lsh_near_dup_pairs(
+                emb, 2, 0.99, num_planes=8, band_bits=4
+            )),
+            ("pq_topk", lambda: A.pq_topk(
+                emb, query, k_results=3, m=2, n_centroids=4, iters=2
+            )),
+            ("ivf_topk", lambda: A.ivf_topk(
+                emb, query, k_results=3, n_cells=2, nprobe=1, iters=2
+            )),
+            ("community_metrics", lambda: M.community_metrics(u, labels, arcs)),
+            ("community_table", lambda: M.community_table(u, labels, arcs)),
+            ("misra_gries_heavy_hitters",
+             lambda: misra_gries_heavy_hitters(u, "u1", k=2)),
+            ("landmark_closeness",
+             lambda: landmark_closeness(u, n_landmarks=2, max_iter=3)),
+            ("graph_ann_topk", lambda: graph_ann_topk(
+                skiplist_edges(spark, 24), arcs, arc_q, k=3, beam=4
+            )),
+            ("_post_graph", lambda: _post_graph(spark, SF_ORACLE)),
+            ("_mint_and_metrics",
+             lambda: _mint_and_metrics(u, labels, arcs, "k")),
+        ]:
+            base = _pinned(spark)
+            out = fn()
+            out.count()  # materialize like a caller would
+            _release_checkpoint(out)
+            leaked = _pinned(spark) - base
+            if leaked:
+                leaks[name] = sorted(leaked)
+    assert not leaks, f"operators leaked pinned RDDs: {leaks}"

@@ -1,10 +1,11 @@
-"""The query scope `catalog._core.register` wraps every catalog query in
-(`operators/graph.py::_query_scope`): the returned frame owns every
-checkpoint the query made through `_checkpoint` and left pinned, a raise
-pins nothing, nested queries hand their blocks outward, and a public
+"""The ownership scope (`operators/graph.py::_owns_checkpoints`) that
+`catalog._core.register` wraps every catalog query in and every public
+operator that checkpoints carries: the returned frame owns every
+checkpoint the call made through `_checkpoint` and left pinned, a raise
+pins nothing, nested scopes hand their blocks outward, and a public
 `tracked_checkpoint` taken inside a query (perfbench's save step) stays
 its caller's. Toy queries are registered under test names and removed
-afterwards."""
+afterwards; toy operators are decorated, not registered."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ from echo_chambers_detection_spark import placement
 from echo_chambers_detection_spark.catalog import QUERY_REGISTRY, register
 from echo_chambers_detection_spark.operators.graph import (
     _checkpoint,
+    _owns_checkpoints,
     _release_checkpoint,
     connected_components,
     tracked_checkpoint,
@@ -179,4 +181,71 @@ def test_tracked_checkpoint_in_a_query_outlives_its_release(spark, toy):
     assert _pinned(spark) - base == mine
     assert sorted(saved["labels"].toPandas()["u1"]) == list("abdef")
     _release_checkpoint(saved["labels"])
+    assert _pinned(spark) - base == set()
+
+
+@_owns_checkpoints
+def _op_two(df):
+    """A toy operator: a bare projection of two checkpoints."""
+    a = _checkpoint(df)
+    return _checkpoint(a.select("u1")).select("u1")
+
+
+@_owns_checkpoints
+def _op_fail(df):
+    _checkpoint(df)
+    _checkpoint(df.select("u2"))
+    raise RuntimeError("boom")
+
+
+def test_operator_outside_a_query_owns_what_it_pinned(spark):
+    base = _pinned(spark)
+    out = _op_two(_edges(spark))
+    assert len(out._ckpt_rdd_ids) == 2
+    assert set(out._ckpt_rdd_ids) <= _pinned(spark) - base
+    assert sorted(r["u1"] for r in out.collect()) == list("abdef")
+    _release_checkpoint(out)
+    assert _pinned(spark) - base == set()
+
+
+def test_operator_raise_pins_nothing(spark):
+    base = _pinned(spark)
+    with pytest.raises(RuntimeError, match="boom"):
+        _op_fail(_edges(spark))
+    assert _pinned(spark) - base == set()
+
+
+def test_operator_result_freed_mid_query_is_not_handed_over(spark, toy):
+    op_ids = []
+
+    @toy
+    def q_uses_op(spark, sf_dir):
+        op = _op_two(_edges(spark))
+        op_ids.extend(op._ckpt_rdd_ids)
+        mine = _checkpoint(op.select(F.upper("u1").alias("u")))
+        _release_checkpoint(op)
+        return mine.select("u")
+
+    base = _pinned(spark)
+    out = QUERY_REGISTRY["_test_scope_q_uses_op"].spark(spark, "")
+    assert op_ids and not set(op_ids) & set(out._ckpt_rdd_ids)
+    assert out._ckpt_rdd_ids
+    assert out.count() == 5
+    _release_checkpoint(out)
+    assert _pinned(spark) - base == set()
+
+
+def test_operator_scope_runs_no_job(spark):
+    base = _pinned(spark)
+    j0 = _jobs_so_far(spark)
+    bare = _op_two.__wrapped__(_edges(spark))
+    j1 = _jobs_so_far(spark)
+    assert not getattr(bare, "_ckpt_rdd_ids", None)
+    bare._ckpt_rdd_ids = sorted(_pinned(spark) - base)
+    _release_checkpoint(bare)
+    j2 = _jobs_so_far(spark)
+    out = _op_two(_edges(spark))
+    j3 = _jobs_so_far(spark)
+    assert j3 - j2 == j1 - j0 == 2
+    _release_checkpoint(out)
     assert _pinned(spark) - base == set()
