@@ -106,9 +106,9 @@ def _synth_clustered(spark, n: int, d: int = 16, kc: int = 50):
 def _at_scale_probes(spark, timings: dict) -> None:
     """Bench-only synthetic rows ABOVE the measured crossovers, so the
     auto-switch paths run in the timed bench rather than only in unit
-    tests (VERDICT r4 #7): hdbscan_cluster(knn_mode='auto') at 40k
-    nodes takes the IVF-candidate k-NN branch (crossover 32k) and the
-    contracted-forest condense. Keys are prefixed bench_ and excluded
+    tests (VERDICT r4 #7): hdbscan_cluster at 40k nodes takes the
+    IVF-candidate k-NN branch (crossover 32k) and the contracted-forest
+    condense. Keys are prefixed bench_ and excluded
     from the catalog total (they have no sf-scaled input)."""
     import time
 
@@ -119,7 +119,7 @@ def _at_scale_probes(spark, timings: dict) -> None:
     emb = _synth_clustered(spark, n=40_000)
     t0 = time.perf_counter()
     hdbscan_cluster(
-        emb, min_pts=4, min_cluster_size=4, k=8, knn_mode="auto", nprobe=4
+        emb, min_pts=4, min_cluster_size=4, k=8, nprobe=4
     ).write.format("noop").mode("overwrite").save()
     timings["bench_hdbscan_auto_40k"] = round(time.perf_counter() - t0, 3)
 

@@ -27,14 +27,9 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
-from echo_chambers_detection_spark.operators.coengagement import coengagement_edges
-from echo_chambers_detection_spark.operators.graph import _owns_checkpoints
-from echo_chambers_detection_spark.sources.domain import (
-    engagements_from_events,
-    users_from_events,
-)
+from echo_chambers_detection_spark.operators.graph import _checkpoint, _owns_checkpoints
+from echo_chambers_detection_spark.sources.domain import engagements_from_events
 from echo_chambers_detection_spark.sources.tables import load_table
 
 
@@ -63,6 +58,13 @@ def register(name: str, oracle: Optional[str], doc: str = ""):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
+
+
+def _engagements(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The engagement relation parsed from the events table, checkpointed:
+    the co-engagement probes and the join read it more than once, and
+    JSON extraction over the events scan is the expensive part to repeat."""
+    return _checkpoint(engagements_from_events(_t(spark, sf_dir, "events")))
 
 
 def _dec_sum(col, scale: int = 2):

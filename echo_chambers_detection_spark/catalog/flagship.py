@@ -8,12 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from echo_chambers_detection_spark.operators.coengagement import coengagement_edges
-from echo_chambers_detection_spark.sources.domain import (
-    engagements_from_events,
-    users_from_events,
-)
 
 from echo_chambers_detection_spark.catalog._core import (
+    _engagements,
     _t,
     register,
 )
@@ -45,16 +42,7 @@ GROUP BY 1, 2
     "(reference project/metrics/community_detection.py:22-38)",
 )
 def q_coengagement_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from echo_chambers_detection_spark.operators.graph import _checkpoint
-
-    # Checkpoint the parsed engagement relation: the general self-join
-    # reads it twice, and the user-encode auto-probe + dictionary build
-    # (operators/coengagement.py) add two more passes — JSON extraction
-    # over the events scan is the expensive part to repeat.
-    eng = _checkpoint(
-        engagements_from_events(_t(spark, sf_dir, "events"))
-    )
-    return coengagement_edges(eng)
+    return coengagement_edges(_engagements(spark, sf_dir))
 
 
 @register(
@@ -80,13 +68,8 @@ def q_coengagement_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         coengagement_edges_bitmap,
     )
 
-    from echo_chambers_detection_spark.operators.graph import _checkpoint
-
-    eng = _checkpoint(
-        engagements_from_events(_t(spark, sf_dir, "events"))
-    )
     return (
-        coengagement_edges_bitmap(eng, num_slots=None)
+        coengagement_edges_bitmap(_engagements(spark, sf_dir), num_slots=None)
         .orderBy(F.desc("weight"), "u1", "u2")
         .limit(20)
     )

@@ -7,12 +7,10 @@ are verbatim from that file — see its git history for provenance.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from echo_chambers_detection_spark.sources.domain import (
-    engagements_from_events,
-    users_from_events,
-)
+from echo_chambers_detection_spark.sources.domain import engagements_from_events
 
 from echo_chambers_detection_spark.catalog._core import (
+    _engagements,
     _t,
     register,
 )
@@ -23,10 +21,7 @@ from echo_chambers_detection_spark.catalog.vector import (
     _ORACLE_EMB_EXPLODED,
     _emb,
 )
-from echo_chambers_detection_spark.operators.graph import (
-    _checkpoint,
-    _owns_checkpoints,
-)
+from echo_chambers_detection_spark.operators.graph import _owns_checkpoints
 
 # ===========================================================================
 # Graph algorithms (SURVEY.md M3: G2, G4-G8) — iterative, not SQL-
@@ -40,19 +35,18 @@ def _user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted user co-engagement graph — the reference's userGraph
     projection (project/metrics/community_detection.py:22-38).
 
-    Built with the bitmap formulation (items here are the bounded props.k
-    vocabulary — auto-probed, falling back to the general self-join if
-    unbounded): identical output to `coengagement_edges`, ~13x faster at
-    sf0.1. The flagship `coengagement_edges` query keeps the general
-    self-join, which is the right default for open-ended post ids."""
+    Built with the bitmap formulation: items here are the bounded props.k
+    vocabulary, and its one probe falls back to the general self-join
+    when they are not (non-integer ids such as AT-URIs, an unbounded
+    vocabulary, too many users, or a sparse matrix). Identical output to
+    `coengagement_edges`, ~13x faster at sf0.1. The flagship
+    `coengagement_edges` query keeps the general self-join, which is the
+    right default for open-ended post ids."""
     from echo_chambers_detection_spark.operators.coengagement import (
         coengagement_edges_bitmap,
     )
 
-    eng = _checkpoint(
-        engagements_from_events(_t(spark, sf_dir, "events"))
-    )
-    return coengagement_edges_bitmap(eng, num_slots=None)
+    return coengagement_edges_bitmap(_engagements(spark, sf_dir), num_slots=None)
 
 
 @_owns_checkpoints
@@ -61,14 +55,11 @@ def _post_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         coengagement_edges_bitmap,
     )
 
-    # Checkpoint the parsed engagement relation: the bitmap path reads it
-    # twice (max-key probe + mask build), and JSON extraction over the
-    # events scan is the expensive part of this query at any scale.
-    eng = _checkpoint(
-        engagements_from_events(_t(spark, sf_dir, "events"))
-    )
     return coengagement_edges_bitmap(
-        eng, user_col="post_uri", post_col="user_did", num_slots=None
+        _engagements(spark, sf_dir),
+        user_col="post_uri",
+        post_col="user_did",
+        num_slots=None,
     )
 
 
@@ -886,7 +877,7 @@ SELECT src, dst, dist FROM ranked WHERE rn <= 5
     "to the exact path — so the approximate operator itself is "
     "oracle-checked (same SQL as knn_graph_topk). The pruned "
     "configuration (nprobe << n_cells, the 100 TB default inside "
-    "hdbscan_cluster's auto mode) has a measured >=0.95 recall test "
+    "hdbscan_cluster above its crossover) has a measured >=0.95 recall test "
     "in tests/test_hdbscan.py instead.",
 )
 def q_knn_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2109,13 +2100,7 @@ def q_user_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         coengagement_edges_bitmap,
     )
 
-    from echo_chambers_detection_spark.operators.graph import (
-        _checkpoint,
-    )
-
-    eng = _checkpoint(
-        engagements_from_events(_t(spark, sf_dir, "events"))
-    )
+    eng = _engagements(spark, sf_dir)
     co = coengagement_edges_bitmap(eng, num_slots=None)
     deg = eng.select("user_did", "post_uri").distinct().groupBy(
         "user_did"

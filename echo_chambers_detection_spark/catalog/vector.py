@@ -7,10 +7,7 @@ are verbatim from that file — see its git history for provenance.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from echo_chambers_detection_spark.sources.domain import (
-    engagements_from_events,
-    users_from_events,
-)
+from echo_chambers_detection_spark.sources.domain import engagements_from_events
 
 from echo_chambers_detection_spark.catalog._core import (
     _t,

@@ -98,9 +98,3 @@ def uuid3_url(col: Column | str) -> Column:
         )
     )
     return _rfc4122_from_hex(digest, 3)
-
-
-def run_description() -> Column:
-    """'Run <Mon dd>' description string (reference
-    project/metrics/community_detection.py:87-88; SURVEY.md F4/F6)."""
-    return F.concat(F.lit("Run "), F.date_format(F.current_timestamp(), "MMM dd"))

@@ -71,10 +71,6 @@ def tokenize(col: Column | str) -> Column:
     )
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
 def word_ngrams(tokens: Column | str, n: int) -> Column:
     """Word n-grams as space-joined strings; empty array when the doc has
     fewer than n tokens.
@@ -92,13 +88,6 @@ def word_ngrams(tokens: Column | str, n: int) -> Column:
             lambda i: F.array_join(F.slice(t, i, n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def stopword_ratio(tokens: Column | str, lang: str = "en") -> Column:
-    t = _c(tokens)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
-    return F.when(F.size(t) > 0, hits / F.size(t)).otherwise(F.lit(0.0))
 
 
 def punct_ratio(col: Column | str) -> Column:
@@ -139,39 +128,6 @@ def _lang_case_chain(hits: dict, order: tuple[str, ...]) -> Column:
             cond = c if cond is None else (cond & c)
         expr = F.when(cond, F.lit(lang)).otherwise(expr)
     return expr
-
-
-def language_id(col: Column | str) -> Column:
-    """Stopword-hit language ID over LANG_ORDER (10 languages) with the
-    deterministic CASE-chain tie-break — the same chain the oracle SQL
-    uses."""
-    t = tokenize(col)
-    hits = {}
-    for lang in LANG_ORDER:
-        sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        hits[lang] = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
-    return _lang_case_chain(hits, LANG_ORDER)
-
-
-def language_id_trigram(col: Column | str) -> Column:
-    """Character-profile language ID over TRIGRAM_ORDER (11 languages
-    incl. zh): score = total occurrences of the language's profile
-    substrings in the lowercased text (each counted as
-    (len - len(remove(sub))) / len(sub) — pure codegen string ops, no
-    Python, identical closed form in DuckDB). Scripts the word
-    tokenizer cannot segment still classify, which is why this variant
-    exists next to the stopword one."""
-    t = F.concat(F.lit(" "), F.lower(_c(col)), F.lit(" "))
-    hits = {}
-    for lang in TRIGRAM_ORDER:
-        score = F.lit(0)
-        for sub in TRIGRAM_PROFILES[lang]:
-            occ = (
-                F.length(t) - F.length(F.replace(t, F.lit(sub), F.lit("")))
-            ) / F.lit(len(sub))
-            score = score + occ.cast("int")
-        hits[lang] = score
-    return _lang_case_chain(hits, TRIGRAM_ORDER)
 
 
 # GPT-2-style pre-tokenizer shape, restricted to the regex subset Java

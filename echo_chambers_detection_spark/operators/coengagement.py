@@ -7,13 +7,21 @@ The reference projects a weighted, undirected user-user graph inside Neo4j:
     WITH u1, u2, count(p) AS weight
     (project/metrics/community_detection.py:22-38; SURVEY.md J3/G1/A1)
 
-Spark-first formulation: a self-join of the engagement relation on the
-post key, ordered-pair dedup (u1 < u2), then a group-count. Catalyst plans
-a shuffle-hash / sort-merge join partitioned on post_uri — at 100 TB that
-is exactly the partitioning you want: each post's engagement list is
-co-located, pairs are generated locally, and the only other shuffle is the
-final groupBy on (u1, u2), which AQE skew-splits if a celebrity post
-produces a hot pair block.
+Two formulations, one result (oracle-checked through the same queries):
+
+- `coengagement_edges`, the general one: a self-join of the engagement
+  relation on the post key, ordered-pair dedup (u1 < u2), then a
+  group-count. Catalyst plans a shuffle-hash join partitioned on the post
+  key — at 100 TB that is exactly the partitioning you want: each post's
+  engagement list is co-located, pairs are generated locally, and the
+  only other shuffle is the final groupBy on (u1, u2), which AQE
+  skew-splits if a celebrity post produces a hot pair block.
+- `coengagement_edges_bitmap`, for bounded item vocabularies: one bit
+  mask per user and a masked cross join of users. It probes its input
+  once and falls back to the self-join wherever the bitmap is the wrong
+  plan.
+
+No argument picks a plan: each formulation picks it from what it probed.
 
 Scale notes:
 - Engagements are deduplicated on (user, post) BEFORE the self-join: the
@@ -27,7 +35,107 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import logging
+
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StringType
+
+# String user keys are dictionary-encoded while their approx distinct
+# count is at most this: the dictionary must stay broadcast-small, which
+# is also what keeps its rank sort a single comfortable partition.
+ENCODE_USER_LIMIT = 1_000_000
+
+# The bitmap's hard cap on users: its mask join is Θ(users²), and 65,536
+# users is already 2.1G mask pairs (~2 min on local[32] at the measured
+# ~1.8µs/pair) — the measured crossover regime, and past it the broadcast
+# probe side stops being comfortably small too.
+MAX_BITMAP_USERS = 65_536
+
+
+def _encodes(e: DataFrame, user_col: str, n_users: int | None) -> bool:
+    """Whether the self-join dictionary-encodes its user keys: string keys
+    whose approx distinct count `n_users` fits ENCODE_USER_LIMIT. With
+    n_users None it is probed here: an EAGER approx_count_distinct job
+    that re-executes the input plan, so callers feeding an expensive
+    upstream plan should checkpoint it first (the catalog does)."""
+    if not isinstance(e.schema[user_col].dataType, StringType):
+        return False
+    if n_users is None:
+        n_users = e.agg(F.approx_count_distinct(user_col).alias("n")).first()["n"]
+    return n_users <= ENCODE_USER_LIMIT
+
+
+def _self_join(e: DataFrame, user_col: str, post_col: str, encode: bool) -> DataFrame:
+    """Weighted pairs from the shared-post self-join of the deduplicated
+    engagements `e`.
+
+    The join output (Σ deg² rows) dwarfs its input, so sorting the input
+    buys nothing: the shuffle_hash hint skips both sorts (measured 30%
+    faster at sf0.1). The hash table holds one partition of the deduped
+    engagement list, the small side of this query by construction.
+
+    encode: dictionary-encode the user keys to dense ints before the pair
+    explosion, so the Σ deg² generated rows carry ONE packed 8-byte long
+    (uid1 << 32 | uid2) instead of two strings through codegen and the
+    hash aggregate — measured 1.45x on the whole query at sf0.1 (26.6M
+    generated pairs: 14.6s -> 10.0s). The id is the rank over sorted
+    users, so uid order IS the string order and the u1 < u2 predicate is
+    exactly preserved; two broadcast dim joins restore the originals.
+    Beyond the encode gate the two-string pair key is the honest plan;
+    everything else about it (post-key co-location, AQE skew-split on
+    hot pairs) is shared, encoding only narrows the bytes."""
+    key = user_col
+    if encode:
+        # NULL users/posts never survive the plain path (NULL post never
+        # equi-joins; NULL user fails u1 < u2), so dropping them up front
+        # is semantics-preserving, and it keeps NULL out of the rank.
+        e = e.where(F.col(user_col).isNotNull() & F.col(post_col).isNotNull())
+        dim = (
+            e.select(user_col)
+            .distinct()
+            .withColumn("_uid", F.row_number().over(Window.orderBy(user_col)))
+        )
+        e = e.join(F.broadcast(dim), user_col).select("_uid", post_col)
+        key = "_uid"
+    pairs = (
+        e.alias("a")
+        .join(
+            e.hint("shuffle_hash").alias("b"),
+            F.col(f"a.{post_col}") == F.col(f"b.{post_col}"),
+        )
+        .where(F.col(f"a.{key}") < F.col(f"b.{key}"))
+    )
+    if not encode:
+        return pairs.groupBy(
+            F.col(f"a.{user_col}").alias("u1"),
+            F.col(f"b.{user_col}").alias("u2"),
+        ).agg(F.count("*").alias("weight"))
+    wts = (
+        pairs.select(
+            (F.shiftleft(F.col("a._uid").cast("long"), 32) + F.col("b._uid")).alias("_pk")
+        )
+        .groupBy("_pk")
+        .agg(F.count("*").alias("weight"))
+    )
+    d1 = dim.select(F.col("_uid").alias("_i1"), F.col(user_col).alias("u1"))
+    d2 = dim.select(F.col("_uid").alias("_i2"), F.col(user_col).alias("u2"))
+    return (
+        wts.withColumn("_i1", F.shiftright("_pk", 32).cast("int"))
+        .withColumn("_i2", F.col("_pk").bitwiseAND(F.lit(0xFFFFFFFF)).cast("int"))
+        .join(F.broadcast(d1), "_i1")
+        .join(F.broadcast(d2), "_i2")
+        .select("u1", "u2", "weight")
+    )
+
+
+def _fallback(
+    engagements: DataFrame, user_col: str, post_col: str, n_users: int
+) -> DataFrame:
+    """The bitmap's fallback: the general self-join, encoded or not by the
+    user count its probe already read — the same HLL estimate a second
+    probe of the same user values would return."""
+    e = engagements.select(user_col, post_col).dropDuplicates([user_col, post_col])
+    return _self_join(e, user_col, post_col, _encodes(e, user_col, n_users))
 
 
 def coengagement_edges(
@@ -35,50 +143,19 @@ def coengagement_edges(
     user_col: str = "user_did",
     post_col: str = "post_uri",
     max_post_degree: int | None = None,
-    prefer_shuffle_hash: bool = True,
     log_dropped: bool = False,
-    encode_users: bool | None = None,
-    encode_user_limit: int = 1_000_000,
 ) -> DataFrame:
     """Weighted undirected co-engagement edges (u1 < u2, weight = #shared posts).
 
     Returns DataFrame[u1: <user type>, u2: <user type>, weight: long].
 
-    prefer_shuffle_hash: the join output (Σ deg² rows) dwarfs the join
-    input, so sorting the input buys nothing — a shuffled hash join skips
-    both sorts (measured 30% faster at sf0.1). The hash table holds one
-    partition of the deduped engagement list, which is the SMALL side of
-    this query by construction; set False to let Catalyst fall back to
-    sort-merge where executor memory is tighter than that.
+    One approx-distinct probe of the users decides whether the self-join
+    dictionary-encodes them (`_encodes`, `_self_join`).
 
     log_dropped: when the max_post_degree guard is on, eagerly count the
     posts it drops and log them at INFO — silent truncation reads as
     full coverage (VERDICT r5 #6). Opt-in because the count is an extra
     job at plan-construction time; production ingest turns it on.
-
-    encode_users: dictionary-encode string user keys to dense ints
-    before the pair explosion, so the Σ deg² generated rows carry ONE
-    packed 8-byte long (uid1 << 32 | uid2) instead of two strings
-    through codegen and the hash aggregate — measured 1.45x on the
-    whole query at sf0.1 (26.6M generated pairs: 14.6s -> 10.0s). The
-    id assignment is rank-over-sorted-users, so uid order IS the
-    original string order and the u1 < u2 dedup predicate is exactly
-    preserved; originals are restored by two broadcast dim joins on the
-    1M-row-capped dictionary. None (default) auto-enables for string
-    user keys whose approx distinct count fits `encode_user_limit`.
-    NOTE: that auto-probe is an EAGER approx_count_distinct job at
-    plan-construction time, which re-executes the input plan — cheap
-    for a parquet scan, but callers feeding an expensive upstream plan
-    should localCheckpoint it first (the flagship does) or pass an
-    explicit encode_users bool to skip the probe entirely. The
-    distinct-count gate itself is load-bearing:
-    the dictionary must stay broadcast-small, which is also what keeps
-    the rank sort a single comfortable partition. Beyond the gate (or
-    for non-string keys) the plain path runs: at 100 TB with an open
-    user population the two-string pair key is the honest plan, and
-    everything else about it (post-key co-location, AQE skew-split on
-    hot pairs) is unchanged — the encode path shares that shape, it
-    only narrows the bytes.
     """
     e = engagements.select(user_col, post_col).dropDuplicates([user_col, post_col])
 
@@ -86,8 +163,6 @@ def coengagement_edges(
         degrees = e.groupBy(post_col).agg(F.count("*").alias("_deg"))
         if log_dropped:
             dropped = degrees.where(F.col("_deg") > max_post_degree).count()
-            import logging
-
             logging.getLogger(__name__).info(
                 "coengagement: max_post_degree=%d dropped %d post(s) — "
                 "each would have generated >%d pairs",
@@ -100,116 +175,7 @@ def coengagement_edges(
             .drop("_deg")
         )
 
-    enc = encode_users
-    if enc is None:
-        from pyspark.sql.types import StringType
-
-        enc = isinstance(e.schema[user_col].dataType, StringType) and (
-            e.agg(F.approx_count_distinct(user_col).alias("n")).first()["n"]
-            <= encode_user_limit
-        )
-    if enc:
-        from pyspark.sql import Window
-
-        # NULL users/posts never survive the plain path (NULL post never
-        # equi-joins; NULL user fails u1 < u2), so dropping them up front
-        # is semantics-preserving, and it keeps NULL out of the rank.
-        e = e.where(F.col(user_col).isNotNull() & F.col(post_col).isNotNull())
-        dim = (
-            e.select(user_col)
-            .distinct()
-            .withColumn("_uid", F.row_number().over(Window.orderBy(user_col)))
-        )
-        ee = e.join(F.broadcast(dim), user_col).select("_uid", post_col)
-        a = ee.alias("a")
-        b = (ee.hint("shuffle_hash") if prefer_shuffle_hash else ee).alias("b")
-        wts = (
-            a.join(b, F.col(f"a.{post_col}") == F.col(f"b.{post_col}"))
-            .where(F.col("a._uid") < F.col("b._uid"))
-            .select(
-                (
-                    F.shiftleft(F.col("a._uid").cast("long"), 32)
-                    + F.col("b._uid")
-                ).alias("_pk")
-            )
-            .groupBy("_pk")
-            .agg(F.count("*").alias("weight"))
-        )
-        d1 = dim.select(F.col("_uid").alias("_i1"), F.col(user_col).alias("u1"))
-        d2 = dim.select(F.col("_uid").alias("_i2"), F.col(user_col).alias("u2"))
-        return (
-            wts.withColumn("_i1", F.shiftright("_pk", 32).cast("int"))
-            .withColumn(
-                "_i2", F.col("_pk").bitwiseAND(F.lit(0xFFFFFFFF)).cast("int")
-            )
-            .join(F.broadcast(d1), "_i1")
-            .join(F.broadcast(d2), "_i2")
-            .select("u1", "u2", "weight")
-        )
-
-    a = e.alias("a")
-    b = (e.hint("shuffle_hash") if prefer_shuffle_hash else e).alias("b")
-    return (
-        a.join(b, F.col(f"a.{post_col}") == F.col(f"b.{post_col}"))
-        .where(F.col(f"a.{user_col}") < F.col(f"b.{user_col}"))
-        .groupBy(
-            F.col(f"a.{user_col}").alias("u1"),
-            F.col(f"b.{user_col}").alias("u2"),
-        )
-        .agg(F.count("*").alias("weight"))
-    )
-
-
-def coengagement_edges_grouped(
-    engagements: DataFrame,
-    user_col: str = "user_did",
-    post_col: str = "post_uri",
-    max_post_degree: int | None = None,
-) -> DataFrame:
-    """Alternative formulation of `coengagement_edges`: aggregate each
-    post's (sorted, distinct) engager list, generate ordered pairs with a
-    nested array transform (pure codegen — no join), explode, group-count.
-
-    Same semantics, different shuffle profile: ONE exchange on post_col
-    (the self-join needs the same exchange but adds join machinery) plus
-    the unavoidable exchange on the pair key. Wins when posts are small
-    and numerous; loses to the join when single posts are huge (a 1M-user
-    post materializes a 1M-element array on one task — use
-    max_post_degree there, or prefer the join form which AQE skew-splits).
-    Benchmarked against the join form in bench.py; both are oracle-equal.
-    """
-    e = engagements.select(user_col, post_col).dropDuplicates(
-        [user_col, post_col]
-    )
-    grouped = e.groupBy(post_col).agg(
-        F.array_sort(F.collect_set(user_col)).alias("_users")
-    )
-    if max_post_degree is not None:
-        grouped = grouped.where(F.size("_users") <= max_post_degree)
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("_users"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("_users"),
-                            i + 2,
-                            F.greatest(
-                                F.size("_users") - i - 1, F.lit(0)
-                            ),
-                        ),
-                        lambda y: F.struct(
-                            x.alias("u1"), y.alias("u2")
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.groupBy(
-        F.col("p.u1").alias("u1"), F.col("p.u2").alias("u2")
-    ).agg(F.count("*").alias("weight"))
+    return _self_join(e, user_col, post_col, _encodes(e, user_col, None))
 
 
 def coengagement_edges_bitmap(
@@ -217,7 +183,6 @@ def coengagement_edges_bitmap(
     user_col: str = "user_did",
     post_col: str = "post_uri",
     num_slots: int | None = 2,
-    max_users: int | None = 65_536,
 ) -> DataFrame:
     """Bitmap-index formulation for BOUNDED item spaces: when the post/item
     key is an integer < 64*num_slots, each user's engagement set packs
@@ -225,52 +190,37 @@ def coengagement_edges_bitmap(
     bit_count(mask1 & mask2) — a cross join of users instead of a
     shared-item row explosion.
 
-    Cost model: users n, items m, engagements E. The self-join streams
-    Σ_item deg² rows (26M at sf0.1); this streams n²/2 pairs of fixed-width
-    masks (1.1M at sf0.1) — a ~20x row reduction when items are dense.
     The classic bitmap-join-index trade: only valid for small item
-    vocabularies (here catalogs/taxonomies, not open post ids) AND a
-    user population whose pair stream is tractable — the mask join is
-    Θ(n²) in users regardless of item density. Two guards pick the plan:
+    vocabularies (catalogs/taxonomies, not open post ids) AND a user
+    population whose pair stream is tractable — the mask join is Θ(n²)
+    in users regardless of item density. Guards pick the plan:
 
-    - a COST COMPARE (auto path, num_slots=None): the bitmap streams
-      n²/2 fixed-width mask pairs; the general self-join streams
-      Σ_item deg² shared-item rows. Both are estimated from one probe
-      pass; the bitmap runs only when n²/2 < Σ deg². Measured per-row
-      costs are within 2x of each other (sf0.1: self-join 26M rows /
-      ~24s vs bitmap 1.1M pairs / ~2s on local[32]), so raw stream size
-      is the decision variable.
-    - `max_users` is a hard cap on n regardless of the compare: 65_536
-      users is already 2.1G mask pairs (~2 min on local[32] at the
-      measured ~1.8µs/pair) — the measured crossover regime, and past
-      it the broadcast probe side stops being comfortably small too.
-      The reference's Cypher projection
-      (project/metrics/community_detection.py:22-38) is linear in
-      co-engagement pairs, never users².
+    - the key domain (auto path, num_slots=None): every item key must be
+      a non-negative integer below 64*64; anything else (DIDs, AT-URIs,
+      integer strings past the int range) is a bad key;
+    - a COST COMPARE (auto path): the bitmap streams n²/2 fixed-width
+      mask pairs (1.1M at sf0.1), the self-join Σ_item deg² shared-item
+      rows (26M). Measured per-row costs are within 2x (sf0.1: 26M rows
+      / ~24s vs 1.1M pairs / ~2s on local[32]), so the bitmap runs only
+      when n²/2 < Σ deg²;
+    - MAX_BITMAP_USERS caps n on both paths. The reference's Cypher
+      projection is linear in co-engagement pairs, never users².
 
-    Anything failing either guard falls back to the general self-join
-    (`coengagement_edges`). Results are identical (oracle-checked
-    through the same queries).
+    Failing a guard falls back to the self-join, encoded or not by the
+    user count the probe already read. An explicit num_slots trusts the
+    caller's key domain: keys outside it are dropped.
     """
-    item = F.col(post_col).cast("int")
+    # try_cast: under ANSI a plain cast raises on a non-integer key
+    # instead of reading NULL, the bad-key signal the guards rely on.
+    item = F.col(post_col).try_cast("int")
     if num_slots is None:
-        # Cost-based strategy choice, one probe pass: key-domain bounds
-        # (non-integer keys or a vocabulary beyond max_auto_slots*64 items
-        # means the bitmap form is the wrong plan) AND the user-count
-        # bound (a bounded item vocabulary with 100M users would still
-        # stream n²/2 mask pairs). Fall back to the general self-join
-        # rather than silently dropping items or exploding pairs.
+        # One probe pass: rollup(k) computes the per-item groups AND the
+        # grand-total row in one shuffle. The per-item approx-distinct
+        # user counts price the self-join stream (Σ deg²; ±2% sketch
+        # error is irrelevant against the decision's dynamic range); the
+        # grand-total row carries max/min key, the bad-key count and the
+        # global user estimate.
         max_auto_slots = 64
-        # ONE probe pass for every guard quantity (round 12; this used
-        # to be two full passes — a plain agg for the key-domain/user
-        # bounds plus a dedup+groupBy for Σ deg² — costing ~2 job
-        # rounds per construction, paid by every graph-family query):
-        # rollup(k) computes the per-item groups AND the grand-total
-        # row in one shuffle, the per-item approx-distinct-user counts
-        # price the self-join stream (Σ deg²; ±2% sketch error is
-        # irrelevant against the n²/2-vs-Σdeg² decision's dynamic
-        # range), and the grand-total row carries max/min key, the
-        # bad-cast count, and the global user estimate.
         probe = (
             engagements.select(
                 F.col(user_col).alias("u"),
@@ -300,31 +250,26 @@ def coengagement_edges_bitmap(
                 )
             ).alias("s"),
         ).first()
+        nu = int(row["nu"] or 0)  # an empty input has no grand-total row
+        # key domain, user cap, then the stream-size compare (docstring)
         if (
             row["mx"] is None
             or row["bad"]
             or row["mn"] < 0
             or int(row["mx"]) >= 64 * max_auto_slots
-            or (max_users is not None and int(row["nu"]) > max_users)
+            or nu > MAX_BITMAP_USERS
+            or nu * nu / 2 >= int(row["s"] or 0)
         ):
-            return coengagement_edges(engagements, user_col, post_col)
-        # Stream-size compare: bitmap emits n²/2 mask pairs no matter how
-        # sparse the engagement matrix is; the self-join emits Σ_item deg²
-        # shared-item rows; per-row costs are within 2x (docstring), so
-        # the smaller stream wins.
-        sum_deg2 = int(row["s"] or 0)
-        n_users = int(row["nu"])
-        if n_users * n_users / 2 >= sum_deg2:
-            return coengagement_edges(engagements, user_col, post_col)
+            return _fallback(engagements, user_col, post_col, nu)
         num_slots = (int(row["mx"]) // 64) + 1
-    elif max_users is not None:
+    else:
         nu = int(
             engagements.agg(
                 F.approx_count_distinct(user_col).alias("nu")
             ).first()["nu"]
         )
-        if nu > max_users:
-            return coengagement_edges(engagements, user_col, post_col)
+        if nu > MAX_BITMAP_USERS:
+            return _fallback(engagements, user_col, post_col, nu)
     e = (
         engagements.select(F.col(user_col).alias("u"), item.alias("k"))
         .where(F.col("k").isNotNull() & (F.col("k") >= 0) & (F.col("k") < 64 * num_slots))
@@ -356,17 +301,3 @@ def coengagement_edges_bitmap(
         .select("u1", "u2", weight.cast("long").alias("weight"))
         .where(F.col("weight") > 0)
     )
-
-
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected edge list (u1<u2 canonical form) -> both directions
-    (src, dst, weight), for algorithms that iterate over neighbors.
-    Mirrors GDS `undirectedRelationshipTypes: ['*']`
-    (project/metrics/community_detection.py:33-37)."""
-    fwd = edges.select(
-        F.col("u1").alias("src"), F.col("u2").alias("dst"), "weight"
-    )
-    rev = edges.select(
-        F.col("u2").alias("src"), F.col("u1").alias("dst"), "weight"
-    )
-    return fwd.unionByName(rev)

@@ -2070,7 +2070,7 @@ def condense_two_level(
         return g.result(out, node_comp, comp_out)
 
 
-# Measured crossover for hdbscan_cluster's knn_mode="auto" (local[32],
+# Measured crossover for hdbscan_cluster's k-NN kernel (local[32],
 # d=64 clustered vectors, k=10, √n cells, nprobe=4 — COVERAGE.md round-4
 # table): exact wins at 20k (10.3s vs 15.5s — the quantizer build
 # dominates), ANN wins at 50k (34.8s vs 47.7s) and the gap widens as
@@ -2184,46 +2184,36 @@ def hdbscan_cluster(
     min_cluster_size: int = 5,
     k: int | None = None,
     num_blocks: int | None = 8,
-    knn_mode: str = "auto",
     n_cells: int | None = None,
     nprobe: int = 4,
     id_col: str = "node",
     vec_col: str = "vector",
-    condense_mode: str = "auto",
     carry_input_ckpt: bool = False,
 ) -> DataFrame:
     """Full pipeline: k-NN graph -> core distances -> mutual
     reachability -> spanning forest -> condensed-tree stability
     selection. Returns (node string, cluster string); noise = '-1'.
 
-    knn_mode picks the k-NN kernel: "exact" (tiled GEMM, O(n²) FLOPs),
-    "ann" (IVF-candidate `knn_graph_ann`, the 100 TB path), or "auto"
-    (one count job, then exact below KNN_ANN_CROSSOVER nodes, ann with
-    n_cells = √n above — the same measured dual-path pattern as
-    LSH-vs-exact in density_cluster). The standard distributed-HDBSCAN
-    approximation is already a k-NN-graph MST, so swapping the k-NN
-    kernel changes recall, not semantics; the pruned kernel holds
-    >= 0.95 neighbor recall at this operating point (tests).
+    One count job sizes the input. Up to KNN_ANN_CROSSOVER nodes the
+    k-NN kernel is the exact tiled GEMM, above it the IVF-candidate
+    `knn_graph_ann` with n_cells = √n unless given. The standard
+    distributed-HDBSCAN approximation is already a k-NN-graph MST, so
+    the swap changes recall, not semantics (>= 0.95 neighbor recall,
+    tests). Above the contraction gate, a contracted forest of at least
+    TWO_LEVEL_MIN_EDGES edges condenses two-level (VERDICT r5 #3), a
+    smaller one through one collect.
 
     Node ids are cast to string up front: the forest/condense layers key
     by string (string order drives the min-member labels, matching every
     other graph operator), so a numeric id column comes back stringified
     rather than crashing in the driver-side tail.
 
-    condense_mode picks the condense tail above the contraction gate:
-    "driver" (classic single collect of the contracted forest),
-    "two_level" (θ-cut + per-component executor condense, driver sees a
-    constant ~TWO_LEVEL_DRIVER_ROWS budget — VERDICT r5 #3), or "auto"
-    (two_level once the contracted forest exceeds TWO_LEVEL_MIN_EDGES,
-    else driver; two_level quietly falls back to driver when no
-    feasible θ exists).
-
-    Placement: in "auto" mode, when the sized input is at most
-    KNN_ANN_CROSSOVER rows and its k-NN tiles fit the driver
-    (`placement` kernel "knn"), it is pulled once and
-    the whole chain runs in `hdbscan_local`, the same kernel the
-    analysis press runs; the Spark steps below take over wherever that
-    kernel declines (a later step's bound, unreproducible input).
+    Placement: when the sized input is at most KNN_ANN_CROSSOVER rows
+    and its k-NN tiles fit the driver (`placement` kernel "knn"), it is
+    pulled once and the whole chain runs in `hdbscan_local`, the same
+    kernel the analysis press runs; the Spark steps below take over
+    wherever that kernel declines (a later step's bound, unreproducible
+    input).
 
     carry_input_ckpt=True also hands the caller-supplied `embeddings`
     frame's checkpoint blocks to the result (opt-in, ADVICE r9); leave
@@ -2232,11 +2222,6 @@ def hdbscan_cluster(
     only what backs the result outlives it, on every return path."""
     from echo_chambers_detection_spark.operators.graph import _generations
 
-    if condense_mode not in ("auto", "driver", "two_level"):
-        raise ValueError(
-            f"condense_mode must be auto|driver|two_level, got "
-            f"{condense_mode!r}"
-        )
     if k is None:
         k = max(min_pts + 1, 10)
     spark = embeddings.sparkSession
@@ -2244,18 +2229,13 @@ def hdbscan_cluster(
         emb = embeddings.select(
             F.col(id_col).cast("string").alias(id_col), F.col(vec_col)
         )
-        n: int | None = None
-        if knn_mode == "auto" or (knn_mode == "ann" and n_cells is None):
-            # the input is typically an expensive lazy plan (FastRP); cut
-            # it to a leaf BEFORE counting so the count doesn't execute
-            # the whole pipeline once for sizing and again for the k-NN
-            # build
-            emb = g.keep(emb)
-            n = emb.count()
-        if (
-            knn_mode == "auto"
-            and n <= KNN_ANN_CROSSOVER
-            and placement.on_driver(spark, "knn", n * n * placement.KNN_PAIR_BYTES)
+        # the input is typically an expensive lazy plan (FastRP); cut it
+        # to a leaf BEFORE counting so the count doesn't execute the whole
+        # pipeline once for sizing and again for the k-NN build
+        emb = g.keep(emb)
+        n = emb.count()
+        if n <= KNN_ANN_CROSSOVER and placement.on_driver(
+            spark, "knn", n * n * placement.KNN_PAIR_BYTES
         ):
             # every step fits the driver: one pull, one kernel
             tbl = emb.toArrow()
@@ -2276,9 +2256,7 @@ def hdbscan_cluster(
                 return g.result(
                     out, embeddings if carry_input_ckpt else None
                 )
-        if knn_mode == "auto":
-            knn_mode = "ann" if n > KNN_ANN_CROSSOVER else "exact"
-        if knn_mode == "ann":
+        if n > KNN_ANN_CROSSOVER:
             cells = n_cells if n_cells is not None else max(16, int(n ** 0.5))
             knn = g.keep(
                 knn_graph_ann(
@@ -2321,10 +2299,7 @@ def hdbscan_cluster(
                 g.adopt(f)
                 for f in contract_runt_fringes(forest, min_cluster_size)
             )
-            if condense_mode == "two_level" or (
-                condense_mode == "auto"
-                and c_edges.count() >= TWO_LEVEL_MIN_EDGES
-            ):
+            if c_edges.count() >= TWO_LEVEL_MIN_EDGES:
                 lab_sn = condense_two_level(c_edges, c_nodes, min_cluster_size)
             if lab_sn is None:
                 f_rows = [

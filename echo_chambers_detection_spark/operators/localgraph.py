@@ -209,7 +209,7 @@ def _segment_argmax(g_src, score, g_nbr):
     return g_src[starts], np.maximum.reduceat(cand, starts)
 
 
-def local_moves_np(n, e_src, e_dst, e_w, selfw, comm_ids, comm, m, max_rounds, h=None):
+def local_moves_np(n, e_src, e_dst, e_w, selfw, comm_ids, comm, m, max_rounds):
     """Mirror of graph._local_moves. `comm` holds indices into `comm_ids`
     (sorted strings, index order == string order); node indices 0..n-1
     are positions in the level's sorted node-id list. ADAPTIVE
@@ -219,9 +219,8 @@ def local_moves_np(n, e_src, e_dst, e_w, selfw, comm_ids, comm, m, max_rounds, h
     below the 0.1% tolerance) — index order == string order, so the
     direction test matches the distributed loop's string comparison
     exactly, and the up/dn counts it majorities on are the same exact
-    integers. `h` is accepted for caller compatibility but unused since
-    the hash-parity schedule was retired (it let same-parity symmetric
-    pairs swap forever)."""
+    integers. (An earlier hash-parity schedule let same-parity symmetric
+    pairs swap forever.)"""
     np = _np()
     n_comm = len(comm_ids)
     k = np.bincount(e_src, weights=e_w, minlength=n) + 2.0 * selfw

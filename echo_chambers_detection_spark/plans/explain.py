@@ -58,9 +58,3 @@ def has_python_stage(df: DataFrame) -> bool:
     evaluation (BatchEvalPython / ArrowEvalPython / mapInPandas stages)."""
     plan = formatted_plan(df)
     return bool(re.search(r"BatchEvalPython|ArrowEvalPython|PythonUDF", plan))
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (wider is generally better —
-    fewer pipeline breakers)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))

@@ -35,10 +35,7 @@ from echo_chambers_detection_spark.operators.graph import (
     _checkpoint,
     _generations,
 )
-from echo_chambers_detection_spark.schemas import (
-    POST_TOPIC_MESSAGE,
-    USER_TOPIC_MESSAGE,
-)
+from echo_chambers_detection_spark.schemas import USER_TOPIC_MESSAGE
 
 
 def kafka_reader_options(
@@ -176,17 +173,6 @@ def fork_user_topic(msgs: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("user_did"), F.col("uri").alias("post_uri")
     )
     return profiles, likes
-
-
-def parse_post_topic(msgs: DataFrame) -> DataFrame:
-    """posts topic -> posts(uri, cid, text, author_did) with the presence
-    filter (reference skips empty text / missing cid,
-    consumer_post.py:79-87; SURVEY.md P2)."""
-    from echo_chambers_detection_spark.functions.cleaning import presence_filter
-
-    return msgs.where(presence_filter("text", "cid")).select(
-        "uri", "cid", "text", F.col("author").alias("author_did")
-    )
 
 
 def upsert_parquet(

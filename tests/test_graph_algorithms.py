@@ -682,21 +682,6 @@ def test_zero_weight_graph_pins_nothing(spark, fn):
     assert _pinned(spark) == base
 
 
-def test_hdbscan_rejects_condense_mode_before_any_job(spark):
-    from echo_chambers_detection_spark.operators.hdbscan import hdbscan_cluster
-    from echo_chambers_detection_spark.operators.planted import (
-        planted_arc_embeddings,
-    )
-
-    emb = planted_arc_embeddings(spark, 2, 10)
-    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
-    base, j0 = _pinned(spark), jobs()
-    with pytest.raises(ValueError, match="condense_mode"):
-        hdbscan_cluster(emb, condense_mode="bogus")
-    assert jobs() == j0
-    assert _pinned(spark) == base
-
-
 def test_leiden_raise_mid_level_pins_nothing(spark, planted, monkeypatch):
     """An exception in Leiden's second level frees every generation the
     call had checkpointed, and nothing it does not own. The test holds
@@ -829,8 +814,9 @@ def test_loop_operators_release_all_checkpoints(spark):
             ("hdbscan_cluster", lambda: H.hdbscan_cluster(
                 arcs, min_pts=3, min_cluster_size=5
             )),
+            # (a contracted forest this small condenses in one collect)
             ("hdbscan_cluster contracted", lambda: contracted(
-                arcs, min_pts=3, min_cluster_size=5, condense_mode="driver"
+                arcs, min_pts=3, min_cluster_size=5
             )),
         ]:
             if name == "condense_two_level":

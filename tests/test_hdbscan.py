@@ -319,18 +319,22 @@ def test_knn_graph_ann_pruned_recall(spark):
     assert recall >= 0.95, f"recall {recall:.3f}"
 
 
-def test_hdbscan_ann_mode_end_to_end(spark):
-    """hdbscan_cluster(knn_mode='ann') recovers the same blob clusters
-    as the exact kernel — the k-NN kernel swap changes recall, not
-    semantics, and on well-separated blobs the pruned candidates
-    contain every MST edge."""
+def test_hdbscan_ann_mode_end_to_end(spark, monkeypatch):
+    """hdbscan_cluster's IVF-candidate k-NN branch recovers the same blob
+    clusters as the exact kernel — the k-NN kernel swap changes recall,
+    not semantics, and on well-separated blobs the pruned candidates
+    contain every MST edge. A zero crossover sends this small input
+    down the branch it takes above KNN_ANN_CROSSOVER nodes."""
+    import echo_chambers_detection_spark.operators.hdbscan as H
+
     emb, blobs = _blob_embeddings(spark, n_per=12, n_noise=4)
     exact = {
         r["node"]: r["cluster"]
         for r in hdbscan_cluster(
-            emb, min_pts=3, min_cluster_size=5, k=8, knn_mode="exact"
+            emb, min_pts=3, min_cluster_size=5, k=8
         ).collect()
     }
+    monkeypatch.setattr(H, "KNN_ANN_CROSSOVER", 0)
     ann = {
         r["node"]: r["cluster"]
         for r in hdbscan_cluster(
@@ -338,7 +342,6 @@ def test_hdbscan_ann_mode_end_to_end(spark):
             min_pts=3,
             min_cluster_size=5,
             k=8,
-            knn_mode="ann",
             n_cells=6,
             nprobe=3,
         ).collect()

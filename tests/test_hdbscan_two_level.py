@@ -92,10 +92,12 @@ def test_two_level_rejects_mcs_one(spark):
     assert condense_two_level(c_e, c_n, 1) is None
 
 
-def test_hdbscan_two_level_mode_matches_driver_mode(spark):
-    """End-to-end through hdbscan_cluster: condense_mode='two_level'
+def test_hdbscan_two_level_mode_matches_driver_mode(spark, monkeypatch):
+    """End-to-end through hdbscan_cluster: the two-level condense
     (budget at its default) labels the 3-blob fixture identically to
-    the classic path."""
+    the classic single-collect path."""
+    import echo_chambers_detection_spark.operators.hdbscan as H
+
     rng = np.random.default_rng(7)
     rows = []
     for b in range(3):
@@ -105,20 +107,19 @@ def test_hdbscan_two_level_mode_matches_driver_mode(spark):
             v = center + rng.normal(0, 0.15, 4)
             rows.append((f"b{b}_{i:02d}", [float(x) for x in v]))
     df = spark.createDataFrame(rows, "node string, vector array<double>")
-    kw = dict(min_pts=3, min_cluster_size=4, k=8, knn_mode="exact")
+    kw = dict(min_pts=3, min_cluster_size=4, k=8)
     classic = {
         r["node"]: r["cluster"]
-        for r in hdbscan_cluster(df, condense_mode="driver", **kw).collect()
+        for r in hdbscan_cluster(df, **kw).collect()
     }
     from echo_chambers_detection_spark import placement
 
     # force the scale path end to end: contraction + two-level condense
+    monkeypatch.setattr(H, "TWO_LEVEL_MIN_EDGES", 0)
     with placement.distributed("condense"):
         two = {
             r["node"]: r["cluster"]
-            for r in hdbscan_cluster(
-                df, condense_mode="two_level", **kw
-            ).collect()
+            for r in hdbscan_cluster(df, **kw).collect()
         }
     assert two == classic
     assert len({v for v in two.values() if v != "-1"}) == 3

@@ -76,19 +76,17 @@ def test_ann_topk_is_top_k(spark):
     assert count_operator(df, "TakeOrderedAndProject") >= 1
 
 
-def test_bitmap_coengagement_guards_user_count(spark):
+def test_bitmap_coengagement_guards_user_count(spark, monkeypatch):
     """The bitmap mask join is Θ(users²): with a bounded item vocabulary
-    but a user population above max_users it must fall back to the
+    but a user population above MAX_BITMAP_USERS it must fall back to the
     general self-join (linear in Σ_item deg²) — no
     BroadcastNestedLoopJoin may survive in the plan (VERDICT r1 #3)."""
     from pyspark.sql import functions as F
 
-    from echo_chambers_detection_spark.operators.coengagement import (
-        coengagement_edges_bitmap,
-    )
-
+    from echo_chambers_detection_spark.operators import coengagement
     from echo_chambers_detection_spark.operators.coengagement import (
         coengagement_edges,
+        coengagement_edges_bitmap,
     )
 
     # SPARSE fixture: 500 users each engaging ONE of 7 items.
@@ -98,14 +96,16 @@ def test_bitmap_coengagement_guards_user_count(spark):
         F.concat(F.lit("u"), F.col("id").cast("string")).alias("user_did"),
         F.pmod(F.col("id"), F.lit(7)).cast("string").alias("post_uri"),
     )
-    by_cost = coengagement_edges_bitmap(sparse, num_slots=None, max_users=10_000)
+    by_cost = coengagement_edges_bitmap(sparse, num_slots=None)
     assert count_operator(by_cost, "BroadcastNestedLoopJoin") == 0
-    # The user-count hard cap fires independently of density.
-    guarded = coengagement_edges_bitmap(sparse, num_slots=None, max_users=100)
-    assert count_operator(guarded, "BroadcastNestedLoopJoin") == 0
-    # Explicit-slots callers get the same cap.
-    guarded2 = coengagement_edges_bitmap(sparse, num_slots=1, max_users=100)
-    assert count_operator(guarded2, "BroadcastNestedLoopJoin") == 0
+    with monkeypatch.context() as m:
+        m.setattr(coengagement, "MAX_BITMAP_USERS", 100)
+        # The user-count hard cap fires independently of density.
+        guarded = coengagement_edges_bitmap(sparse, num_slots=None)
+        assert count_operator(guarded, "BroadcastNestedLoopJoin") == 0
+        # Explicit-slots callers get the same cap.
+        guarded2 = coengagement_edges_bitmap(sparse, num_slots=1)
+        assert count_operator(guarded2, "BroadcastNestedLoopJoin") == 0
 
     # DENSE fixture: 60 users each engaging ALL 7 items.
     # n²/2 = 1.8k pairs vs Σ deg² = 25.2k rows — bitmap wins the compare.
@@ -113,15 +113,52 @@ def test_bitmap_coengagement_guards_user_count(spark):
         F.concat(F.lit("u"), (F.col("id") % 60).cast("string")).alias("user_did"),
         (F.col("id") / 60).cast("int").cast("string").alias("post_uri"),
     )
-    bitmap = coengagement_edges_bitmap(dense, num_slots=None, max_users=10_000)
+    bitmap = coengagement_edges_bitmap(dense, num_slots=None)
     assert count_operator(bitmap, "BroadcastNestedLoopJoin") >= 1
+    # Where the bitmap wins the compare, the cap alone turns it away.
+    with monkeypatch.context() as m:
+        m.setattr(coengagement, "MAX_BITMAP_USERS", 50)
+        capped = coengagement_edges_bitmap(dense, num_slots=None)
+        assert count_operator(capped, "BroadcastNestedLoopJoin") == 0
 
-    assert {tuple(r) for r in bitmap.collect()} == {
-        tuple(r) for r in coengagement_edges(dense).collect()
-    }
+    dense_pairs = {tuple(r) for r in coengagement_edges(dense).collect()}
+    assert {tuple(r) for r in bitmap.collect()} == dense_pairs
+    assert {tuple(r) for r in capped.collect()} == dense_pairs
     assert {tuple(r) for r in by_cost.collect()} == {
         tuple(r) for r in coengagement_edges(sparse).collect()
     }
+
+
+def test_bitmap_coengagement_falls_back_on_did_and_uri_keys(spark):
+    """The paper's own id shapes: DID users, AT-URI posts, plus one
+    integer string past the int range in each key column. Under ANSI a
+    plain int cast raises on them; the bitmap's key probe must read them
+    as bad keys and fall back to the self-join, in the user-graph
+    direction and in the post-graph direction (users and posts
+    swapped), with the general operator's result."""
+    from echo_chambers_detection_spark.operators.coengagement import (
+        coengagement_edges,
+        coengagement_edges_bitmap,
+    )
+
+    a, b, c, d = "did:plc:aaa", "did:plc:bbb", "did:plc:ccc", "4000000000"
+    p1 = "at://did:plc:aaa/app.bsky.feed.post/3kabc"
+    p2 = "at://did:plc:bbb/app.bsky.feed.post/3kdef"
+    p3 = "3000000000"
+    eng = spark.createDataFrame(
+        [(u, p1) for u in (a, b, c, d)]
+        + [(a, p2), (b, p2), (c, p3), (d, p3)],
+        "user_did string, post_uri string",
+    )
+    for cols, n_edges in (
+        (dict(user_col="user_did", post_col="post_uri"), 6),
+        (dict(user_col="post_uri", post_col="user_did"), 2),
+    ):
+        got = coengagement_edges_bitmap(eng, num_slots=None, **cols)
+        assert count_operator(got, "BroadcastNestedLoopJoin") == 0
+        want = {tuple(r) for r in coengagement_edges(eng, **cols).collect()}
+        assert len(want) == n_edges
+        assert {tuple(r) for r in got.collect()} == want
 
 
 def test_max_post_degree_guard_logs_drop_count(spark, caplog):

@@ -228,11 +228,12 @@ def test_landmark_bfs_shared_loop(spark):
     }
 
 
-def test_coengagement_encode_paths_identical(spark):
+def test_coengagement_encode_paths_identical(spark, monkeypatch):
     # The dictionary-encode path must be value-identical to the plain
     # two-string path (the 100 TB default beyond the user gate),
     # including on mixed-degree fixtures with a duplicate engagement
     # and users whose string order differs from insertion order.
+    from echo_chambers_detection_spark.operators import coengagement
     from echo_chambers_detection_spark.operators.coengagement import (
         coengagement_edges,
     )
@@ -245,14 +246,14 @@ def test_coengagement_encode_paths_identical(spark):
         ],
         "user_did string, post_uri string",
     )
-    plain = {
-        (r["u1"], r["u2"]): r["weight"]
-        for r in coengagement_edges(eng, encode_users=False).collect()
-    }
-    enc = {
-        (r["u1"], r["u2"]): r["weight"]
-        for r in coengagement_edges(eng, encode_users=True).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(coengagement, "ENCODE_USER_LIMIT", 0)  # 3 users: plain
+        plain_df = coengagement_edges(eng)
+    assert "_uid" not in plain_df._jdf.queryExecution().analyzed().toString()
+    plain = {(r["u1"], r["u2"]): r["weight"] for r in plain_df.collect()}
+    enc_df = coengagement_edges(eng)  # 3 users fit the default gate
+    assert "_uid" in enc_df._jdf.queryExecution().analyzed().toString()
+    enc = {(r["u1"], r["u2"]): r["weight"] for r in enc_df.collect()}
     assert plain == enc
     assert plain[("alpha", "zeta")] == 2
     assert plain[("alpha", "mike")] == 2

@@ -323,6 +323,26 @@ def test_minimum_spanning_forest_distributed_job_count(spark, distributed):
     assert n <= 271, f"distributed Borůvka grew to {n} jobs (was 266-268)"
 
 
+def test_bitmap_coengagement_fallback_job_count(spark):
+    """The bitmap's fallback reuses what its one probe read: building the
+    self-join frame on a sparse 500-user × 7-item fixture (the cost
+    compare declines the bitmap) runs the probe's jobs and no second
+    user-count probe (was 6: 3 for the rollup probe, 3 for the
+    self-join's own approx-distinct probe)."""
+    from echo_chambers_detection_spark.operators.coengagement import (
+        coengagement_edges_bitmap,
+    )
+
+    sparse = spark.range(500).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("user_did"),
+        F.pmod(F.col("id"), F.lit(7)).cast("string").alias("post_uri"),
+    )
+    n = _count_jobs(
+        spark, lambda: coengagement_edges_bitmap(sparse, num_slots=None)
+    )
+    assert n <= 3, f"bitmap fallback build ran {n} jobs (pinned <= 3)"
+
+
 # The paper's Run-analysis press, on the oracle tables. Below every
 # step's bound each chain runs from one Arrow pull of the post graph
 # (catalog.metrics._on_driver): 5 projection jobs, 5 for the pull, the
